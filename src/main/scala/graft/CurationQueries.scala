@@ -93,10 +93,6 @@ object CurationQueries {
             1L).otherwise(0L)).as("n_after_gopher"),
           sum(when(col("s_dedup") === 1 && col("contaminated") === 0 && col("pass") === 1,
             col("n_tokens").cast("long")).otherwise(0L)).as("tokens_final"))
-        // round 15: ≤ sources rows — collapse before the final sort;
-        // probe the documents scan (the agg sits above the funnel joins)
-        .transform(graft.core.Spread.collapseBounded(
-          _, "pipelineFull.collapse", probe = Some(docs)))
         .orderBy(col("source"))
     }))
 

@@ -152,10 +152,6 @@ object DedupQueries {
         .agg(count(col("node")).as("degree"))
         .groupBy(col("degree"))
         .agg(count(lit(1)).as("n_nodes"))
-        // round 15: ≤ #degrees rows — collapse before the final sort;
-        // probe the documents scan (the rollup sits above the pair join)
-        .transform(graft.core.Spread.collapseBounded(
-          _, "graphDegreeHist.collapse", probe = Some(docs)))
         .orderBy(col("degree"))
     }))
 

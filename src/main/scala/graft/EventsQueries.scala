@@ -115,35 +115,28 @@ object EventsQueries {
     // identical groupBy runs incrementally under Structured Streaming
     // (StreamingHistogram.windowed); counts merge by A4 associativity.
     "events_hourly_hist" -> ((s, dir) =>
-      // round 15: bounded hour×bin grid — collapse so the final sort runs
-      // exchange-free (no range-sampling job; see Spread.collapseBounded)
-      graft.core.Spread.collapseBounded(
-        Tables
-          .events(s, dir)
-          .filter(col("value").isNotNull && !isnan(col("value")))
-          .select(
-            date_trunc("hour", col("ts")).as("hour"),
-            (col("value") / lit(10.0)).cast("int").as("bin"))
-          .groupBy(col("hour"), col("bin"))
-          .agg(count(lit(1)).as("cnt")),
-        "eventsHourlyHist.collapse")
+      Tables
+        .events(s, dir)
+        .filter(col("value").isNotNull && !isnan(col("value")))
+        .select(
+          date_trunc("hour", col("ts")).as("hour"),
+          (col("value") / lit(10.0)).cast("int").as("bin"))
+        .groupBy(col("hour"), col("bin"))
+        .agg(count(lit(1)).as("cnt"))
         .orderBy(col("hour"), col("bin"))),
     // JSON prop extraction + per-type aggregate (counts and integer sums
     // are exact; avg is a single division).
     "events_json_stats" -> ((s, dir) =>
-      // round 15: ≤ event-types rows — collapse before the final sort
-      graft.core.Spread.collapseBounded(
-        Tables
-          .events(s, dir)
-          .select(col("event_type"), get_json_object(col("props"), "$.k").cast("int").as("k"))
-          .groupBy(col("event_type"))
-          .agg(
-            count(lit(1)).as("n"),
-            sum(col("k")).as("sum_k"),
-            min(col("k")).as("min_k"),
-            max(col("k")).as("max_k"),
-            round(sum(col("k")).cast("double") / count(lit(1)).cast("double"), 6).as("avg_k")),
-        "eventsJsonStats.collapse")
+      Tables
+        .events(s, dir)
+        .select(col("event_type"), get_json_object(col("props"), "$.k").cast("int").as("k"))
+        .groupBy(col("event_type"))
+        .agg(
+          count(lit(1)).as("n"),
+          sum(col("k")).as("sum_k"),
+          min(col("k")).as("min_k"),
+          max(col("k")).as("max_k"),
+          round(sum(col("k")).cast("double") / count(lit(1)).cast("double"), 6).as("avg_k"))
         .orderBy(col("event_type"))),
     // Gap-based sessionization (30-minute gap), batch window-function form;
     // the stateful streaming twin is SessionOps.sessionizeStateful
@@ -356,8 +349,6 @@ object EventsQueries {
         .groupBy(date_trunc("hour", col("ts")).as("hour"))
         .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
         .agg(count(lit(1)))
-        // round 15: bounded hour×type grid — collapse before the final sort
-        .transform(graft.core.Spread.collapseBounded(_, "eventsPivot.collapse"))
         .select(
           col("hour"),
           coalesce(col("click"), lit(0L)).as("n_click"),
@@ -393,8 +384,6 @@ object EventsQueries {
         .select(col("event_type"), hour(col("ts")).as("hod"), col("user_id"))
         .cube(col("event_type"), col("hod"))
         .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"))
-        // round 15: ≤ (types+1)×(hours+1) cells — collapse before the sort
-        .transform(graft.core.Spread.collapseBounded(_, "eventsCube.collapse"))
         .select(
           coalesce(col("event_type"), lit("ALL")).as("event_type"),
           coalesce(col("hod"), lit(-1)).as("hod"),
@@ -413,8 +402,6 @@ object EventsQueries {
         .filter(col("prev_type").isNotNull)
         .groupBy(col("prev_type"), col("event_type"))
         .agg(count(lit(1)).as("n"))
-        // round 15: ≤ types² rows — collapse before the final sort
-        .transform(graft.core.Spread.collapseBounded(_, "eventsTransitions.collapse"))
         .orderBy(col("prev_type"), col("event_type"))
     }),
     // Per-state predictability of the behavior Markov chain: Shannon
@@ -430,17 +417,13 @@ object EventsQueries {
     // the ≤ |types|² transition relation as transition_entropy.
     "entropy_rate" -> ((s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-      // round 15: ≤ types² rows — collapse so the total rollup, compare
-      // join and scalar fold run exchange-free
-      val tc = graft.core.Spread.collapseBounded(
-        Tables
-          .events(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
-          .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-          .filter(col("prev_type").isNotNull)
-          .groupBy(col("prev_type"), col("event_type"))
-          .agg(count(lit(1)).as("n")),
-        "entropyRate.collapse")
+      val tc = Tables
+        .events(s, dir)
+        .select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
+        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
+        .filter(col("prev_type").isNotNull)
+        .groupBy(col("prev_type"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
       val tot = tc.groupBy(col("prev_type")).agg(sum(col("n")).as("tot"))
       val f = tc.join(broadcast(tot), Seq("prev_type"))
         .agg(
@@ -460,17 +443,13 @@ object EventsQueries {
     }),
     "transition_entropy" -> ((s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-      // round 15: ≤ types² rows — collapse so the total rollup, compare
-      // join, entropy fold and final sort all run exchange-free
-      val tc = graft.core.Spread.collapseBounded(
-        Tables
-          .events(s, dir)
-          .select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
-          .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-          .filter(col("prev_type").isNotNull)
-          .groupBy(col("prev_type"), col("event_type"))
-          .agg(count(lit(1)).as("n")),
-        "transitionEntropy.collapse")
+      val tc = Tables
+        .events(s, dir)
+        .select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
+        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
+        .filter(col("prev_type").isNotNull)
+        .groupBy(col("prev_type"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
       val tot = tc.groupBy(col("prev_type")).agg(sum(col("n")).as("tot"))
       tc.join(broadcast(tot), Seq("prev_type"))
         .groupBy(col("prev_type"))
@@ -559,17 +538,13 @@ object EventsQueries {
     // order isn't cross-engine-deterministic; the uncentered index is
     // the same information shifted by one constant.
     "seasonal_decompose" -> ((s, dir) => {
-      // round 15: bounded day grid — collapse so the MA window, dow rollup
-      // and final sort all run exchange-free (see Spread.collapseBounded)
-      val daily = graft.core.Spread.collapseBounded(
-        Tables.events(s, dir)
-          .select(
-            col("ts").cast("date").as("k"),
-            when(col("value").isNotNull && !isnan(col("value")),
-              (col("value") * lit(100.0)).cast("bigint")).as("cents"))
-          .groupBy(col("k"))
-          .agg(coalesce(sum(col("cents")), lit(0L)).as("xs")),
-        "seasonalDecompose.collapse")
+      val daily = Tables.events(s, dir)
+        .select(
+          col("ts").cast("date").as("k"),
+          when(col("value").isNotNull && !isnan(col("value")),
+            (col("value") * lit(100.0)).cast("bigint")).as("cents"))
+        .groupBy(col("k"))
+        .agg(coalesce(sum(col("cents")), lit(0L)).as("xs"))
       val w7 = Window.orderBy(col("k")).rowsBetween(-3, 3)
       val det = daily
         .select(
@@ -585,17 +560,14 @@ object EventsQueries {
         .orderBy(col("iso_dow"))
     }),
     "dow_seasonality" -> ((s, dir) =>
-      // round 15: 7×24 grid — collapse before the final sort
-      graft.core.Spread.collapseBounded(
-        Tables.events(s, dir)
-          .select(
-            (weekday(col("ts")) + lit(1)).as("iso_dow"),
-            hour(col("ts")).as("hour_of_day"),
-            when(col("value").isNotNull && !isnan(col("value")),
-              (col("value") * lit(100.0)).cast("bigint")).as("cents"))
-          .groupBy(col("iso_dow"), col("hour_of_day"))
-          .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("rev_c")),
-        "dowSeasonality.collapse")
+      Tables.events(s, dir)
+        .select(
+          (weekday(col("ts")) + lit(1)).as("iso_dow"),
+          hour(col("ts")).as("hour_of_day"),
+          when(col("value").isNotNull && !isnan(col("value")),
+            (col("value") * lit(100.0)).cast("bigint")).as("cents"))
+        .groupBy(col("iso_dow"), col("hour_of_day"))
+        .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("rev_c"))
         .orderBy(col("iso_dow"), col("hour_of_day"))),
     // Time-series resample + gap fill: per-minute event counts over the
     // full calendar (sequence join marks empty minutes), revenue carried
@@ -605,15 +577,11 @@ object EventsQueries {
     // as the deciles.
     "minute_gapfill" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
-      // round 15: bounded minute grid — collapse so the calendar join and
-      // gap-fill window run exchange-free (see Spread.collapseBounded)
-      val perMin = graft.core.Spread.collapseBounded(
-        ev.groupBy(date_trunc("minute", col("ts")).as("minute"))
-          .agg(
-            count(lit(1)).as("n_events"),
-            sum(when(col("value").isNotNull && !isnan(col("value")),
-              (col("value") * lit(100.0)).cast("bigint"))).as("rev_c")),
-        "minuteGapfill.collapse")
+      val perMin = ev.groupBy(date_trunc("minute", col("ts")).as("minute"))
+        .agg(
+          count(lit(1)).as("n_events"),
+          sum(when(col("value").isNotNull && !isnan(col("value")),
+            (col("value") * lit(100.0)).cast("bigint"))).as("rev_c"))
       val calendar = perMin
         .agg(min(col("minute")).as("lo"), max(col("minute")).as("hi"))
         .select(explode(sequence(col("lo"), col("hi"), expr("interval 1 minute")))
@@ -652,15 +620,9 @@ object EventsQueries {
           // no float enters the bin assignment
           expr("((c - minc) * 256) DIV (maxc - minc + 1)").as("bin"),
           col("a"))
-      // round 15: ≤ 256-row bin grid — collapse so the ECDF windows and
-      // final fold run exchange-free; probe the scan-backed e (the agg
-      // sits above the broadcast stat join)
-      val g = graft.core.Spread.collapseBounded(
-        binned
-          .groupBy(col("bin"))
-          .agg(sum(col("a")).as("n_a"), sum(lit(1L) - col("a")).as("n_b")),
-        "driftKs.collapse",
-        probe = Some(e))
+      val g = binned
+        .groupBy(col("bin"))
+        .agg(sum(col("a")).as("n_a"), sum(lit(1L) - col("a")).as("n_b"))
       val cum = Window.orderBy(col("bin"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val all = Window.orderBy(col("bin"))
@@ -696,16 +658,11 @@ object EventsQueries {
       val e = Tables.events(s, dir).select(col("ts_us"), col("event_type"))
       val st = e.agg(min(col("ts_us")).as("lo"), max(col("ts_us")).as("hi"))
         .select(expr("(lo + hi) DIV 2").as("mid"))
-      // round 15: ≤ event-types rows — collapse so the total window and
-      // final sort run exchange-free; probe the scan-backed e
-      val g = graft.core.Spread.collapseBounded(
-        e.crossJoin(st)
-          .select(col("event_type"),
-            when(col("ts_us") <= col("mid"), 1L).otherwise(0L).as("early"))
-          .groupBy(col("event_type"))
-          .agg(sum(col("early")).as("n_early"), sum(lit(1L) - col("early")).as("n_late")),
-        "chi2Drift.collapse",
-        probe = Some(e))
+      val g = e.crossJoin(st)
+        .select(col("event_type"),
+          when(col("ts_us") <= col("mid"), 1L).otherwise(0L).as("early"))
+        .groupBy(col("event_type"))
+        .agg(sum(col("early")).as("n_early"), sum(lit(1L) - col("early")).as("n_late"))
       val all = Window.orderBy(col("event_type"))
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
       val dbl = (c: Column) => c.cast("double")
@@ -749,8 +706,6 @@ object EventsQueries {
           count(lit(1)).as("n_intervals"),
           sum(col("gap_us")).as("span_us"),
           sum((col("cents") * col("gap_us")).cast("decimal(38,0)")).as("wsum"))
-        // round 15: ≤ event-types rows — collapse before the final sort
-        .transform(graft.core.Spread.collapseBounded(_, "eventsTwap.collapse"))
         .select(
           col("event_type"), col("n_intervals"), col("span_us"),
           round(col("wsum").cast("double") / col("span_us").cast("double"), 6).as("twap_c"))
@@ -770,8 +725,6 @@ object EventsQueries {
         .agg(
           count(lit(1)).as("n_total"),
           sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"))
-        // round 15: ≤ event-types rows — collapse before the final sort
-        .transform(graft.core.Spread.collapseBounded(_, "eventsDebounce.collapse"))
         .orderBy(col("event_type"))
     }),
     // Interarrival-time histogram: per-user gaps between consecutive
@@ -780,18 +733,15 @@ object EventsQueries {
     // length — no float log). Bounded ≤ 64-row output.
     "interarrival_hist" -> ((s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-      // round 15: ≤ 64-row bucket relation — collapse before the final sort
-      graft.core.Spread.collapseBounded(
-        Tables.events(s, dir)
-          .withColumn("d_us", col("ts_us") - lag(col("ts_us"), 1).over(w))
-          .filter(col("d_us").isNotNull)
-          .select(length(bin(col("d_us"))).cast("int").as("bucket"), col("d_us"))
-          .groupBy(col("bucket"))
-          .agg(
-            count(lit(1)).as("n_gaps"),
-            min(col("d_us")).as("min_gap_us"),
-            max(col("d_us")).as("max_gap_us")),
-        "interarrivalHist.collapse")
+      Tables.events(s, dir)
+        .withColumn("d_us", col("ts_us") - lag(col("ts_us"), 1).over(w))
+        .filter(col("d_us").isNotNull)
+        .select(length(bin(col("d_us"))).cast("int").as("bucket"), col("d_us"))
+        .groupBy(col("bucket"))
+        .agg(
+          count(lit(1)).as("n_gaps"),
+          min(col("d_us")).as("min_gap_us"),
+          max(col("d_us")).as("max_gap_us"))
         .orderBy(col("bucket"))
     }),
     // Goh–Barabási burstiness per event type: B = (σ − μ)/(σ + μ) of the
@@ -806,18 +756,14 @@ object EventsQueries {
         .orderBy(col("ts_us"), col("event_id"))
       val dec = (c: Column) => c.cast("decimal(38,0)")
       val dbl = (c: Column) => c.cast("double")
-      // round 15: ≤ event-types rows — collapse so the scalar chain and
-      // final sort run exchange-free
-      val g = graft.core.Spread.collapseBounded(
-        Tables.events(s, dir)
-          .withColumn("d_us", col("ts_us") - lag(col("ts_us"), 1).over(w))
-          .filter(col("d_us").isNotNull)
-          .groupBy(col("event_type"))
-          .agg(
-            count(lit(1)).as("n_gaps"),
-            sum(col("d_us")).as("s"),
-            sum(dec(col("d_us")) * dec(col("d_us"))).as("q")),
-        "eventBurstiness.collapse")
+      val g = Tables.events(s, dir)
+        .withColumn("d_us", col("ts_us") - lag(col("ts_us"), 1).over(w))
+        .filter(col("d_us").isNotNull)
+        .groupBy(col("event_type"))
+        .agg(
+          count(lit(1)).as("n_gaps"),
+          sum(col("d_us")).as("s"),
+          sum(dec(col("d_us")) * dec(col("d_us"))).as("q"))
       val mu = dbl(col("s")) / dbl(col("n_gaps"))
       val sigma = sqrt(
         dbl(dec(col("n_gaps")) * col("q") - dec(col("s")) * dec(col("s"))) /
@@ -835,17 +781,13 @@ object EventsQueries {
     // (a ROWS frame would silently span them). The window runs on the
     // per-DAY aggregate (bounded by days in range), never raw events.
     "rolling_7d" -> ((s, dir) =>
-      // round 15: bounded day grid — collapse so both RANGE windows and
-      // the final sort run exchange-free (see Spread.collapseBounded)
-      graft.core.Spread.collapseBounded(
-        Tables.events(s, dir)
-          .select(
-            expr("ts_us DIV 86400000000").as("day"),
-            when(col("value").isNotNull && !isnan(col("value")),
-              (col("value") * lit(100.0)).cast("bigint")).as("cents"))
-          .groupBy(col("day"))
-          .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("rev_c")),
-        "rolling7d.collapse")
+      Tables.events(s, dir)
+        .select(
+          expr("ts_us DIV 86400000000").as("day"),
+          when(col("value").isNotNull && !isnan(col("value")),
+            (col("value") * lit(100.0)).cast("bigint")).as("cents"))
+        .groupBy(col("day"))
+        .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("rev_c"))
         .select(
           col("day"), col("n_events"), col("rev_c"),
           sum(col("n_events")).over(
@@ -906,8 +848,6 @@ object EventsQueries {
         .select(coalesce(col("chan"), lit("none")).as("channel"), col("cents"))
         .groupBy(col("channel"))
         .agg(count(lit(1)).as("n_purchases"), sum(col("cents")).as("rev_c"))
-        // round 15: ≤ channels rows — collapse before the final sort
-        .transform(graft.core.Spread.collapseBounded(_, "attribution.collapse"))
         .orderBy(col("channel"))
     }),
     // Per-user truncated EWMA (α=1/2, 8-lag window) of the value series —

@@ -16,7 +16,10 @@ import graft.functions.CosineSimilarity
   *
   * and injects [[graft.plans.KernelRewrite]] into the optimizer, so even
   * the textbook HOF formulation (`aggregate(zip_with(...))`) silently runs
-  * on the fused codegen kernels (gate: `spark.graft.kernelRewrite`).
+  * on the fused codegen kernels (gate: `spark.graft.kernelRewrite`), and
+  * injects the [[graft.core.CollapseSmallStages]] planner strategy, so a
+  * small shuffle stage reaches its downstream windows and sorts as one
+  * partition without another exchange.
   *
   * The Scala API path (GraftFunctions.register via SparkEntry.tune) covers
   * programmatic sessions; this covers spark-sql / JDBC / notebook sessions
@@ -33,5 +36,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
           CosineSimilarity(exprs(0), exprs(1))))
     extensions.injectOptimizerRule(_ => graft.plans.KernelRewrite)
+    extensions.injectPlannerStrategy(_ => graft.core.CollapseSmallStages)
   }
 }

@@ -122,18 +122,22 @@ object HistogramRunner {
     var maxV: Option[Double] = None
     var minmaxOnly = false
     val pos = scala.collection.mutable.ArrayBuffer.empty[String]
+    val usage = "usage: <source> [valueCol] [outDir] " +
+      "[-m linear|log] [-w N] [--min_value X] [--max_value Y] [--minmax_only]"
+    // the flag's value; a flag as the last token is a usage error
+    def value(i: Int): String =
+      if (i + 1 < args.length) args(i + 1)
+      else throw new IllegalArgumentException(s"flag ${args(i)} needs a value; $usage")
     var i = 0
     while (i < args.length) {
       args(i) match {
-        case "-m" | "--method" => method = Some(BinMethod.parse(args(i + 1))); i += 2
-        case "-w" | "--workers" => workers = args(i + 1).toInt; i += 2
-        case "--min_value" => minV = Some(args(i + 1).toDouble); i += 2
-        case "--max_value" => maxV = Some(args(i + 1).toDouble); i += 2
+        case "-m" | "--method" => method = Some(BinMethod.parse(value(i))); i += 2
+        case "-w" | "--workers" => workers = value(i).toInt; i += 2
+        case "--min_value" => minV = Some(value(i).toDouble); i += 2
+        case "--max_value" => maxV = Some(value(i).toDouble); i += 2
         case "--minmax_only" => minmaxOnly = true; i += 1
         case other if other.startsWith("--") =>
-          throw new IllegalArgumentException(
-            s"unknown flag $other; usage: <source> [valueCol] [outDir] " +
-              "[-m linear|log] [-w N] [--min_value X] [--max_value Y] [--minmax_only]")
+          throw new IllegalArgumentException(s"unknown flag $other; $usage")
         case p => pos += p; i += 1
       }
     }

@@ -53,8 +53,6 @@ object MediaQueries {
             .as("ph"))
         .groupBy(col("size_bucket"), col("ph"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_items"))
-        // round 15: bounded bucket×phash grid — collapse before the sort
-        .transform(graft.core.Spread.collapseBounded(_, "mediaDedup.collapse"))
         .orderBy(col("size_bucket"), col("ph"))))
 
   val oracle: Map[String, String] = Map(

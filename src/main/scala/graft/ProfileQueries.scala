@@ -197,10 +197,6 @@ object ProfileQueries {
           count(lit(1)).as("n_rows"),
           sum(col("k")).as("key_checksum"),
           sum(coalesce(col("valid_to"), lit(0L)) - col("valid_from")).as("span_checksum"))
-        // round 15: ≤ actions×2 rows — collapse before the final sort;
-        // probe the scan-derived dim (the agg sits above the merge join)
-        .transform(graft.core.Spread.collapseBounded(
-          _, "scd2Apply.collapse", probe = Some(dim)))
         .orderBy(col("action"), col("is_current"))
     }),
     // Pairwise Pearson correlations of the profiled lineitem columns from
@@ -512,15 +508,9 @@ object ProfileQueries {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       val cohorts = o.groupBy(col("o_custkey")).agg(min(col("wk")).as("cw"))
       val sizes = cohorts.groupBy(col("cw")).agg(count(lit(1)).as("n_customers"))
-      // round 15: ≤ weeks² cells — collapse so the size join, cumulative
-      // window and final sort run exchange-free; probe the cached scan
-      // projection (the cell agg sits above the cohort join)
-      val cells = graft.core.Spread.collapseBounded(
-        o.join(cohorts, Seq("o_custkey"))
-          .groupBy(col("cw"), (col("wk") - col("cw")).as("woff"))
-          .agg(sum(col("cents")).as("rev_c")),
-        "cohortLtv.collapse",
-        probe = Some(o))
+      val cells = o.join(cohorts, Seq("o_custkey"))
+        .groupBy(col("cw"), (col("wk") - col("cw")).as("woff"))
+        .agg(sum(col("cents")).as("rev_c"))
       val wcum = org.apache.spark.sql.expressions.Window
         .partitionBy(col("cw")).orderBy(col("woff"))
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -562,14 +552,9 @@ object ProfileQueries {
         .select(col("o_custkey"), col("qb").as("from_q"))
       val late = b.filter(col("half") === 1)
         .select(col("o_custkey"), col("qb").as("to_q"))
-      // round 15: ≤ 5×5 matrix — collapse so the row-share window and
-      // final sort run exchange-free; probe the cached half-spend base
-      val m = graft.core.Spread.collapseBounded(
-        early.join(late, Seq("o_custkey"))
-          .groupBy(col("from_q"), col("to_q"))
-          .agg(count(lit(1)).as("n_customers")),
-        "customerMigration.collapse",
-        probe = Some(base))
+      val m = early.join(late, Seq("o_custkey"))
+        .groupBy(col("from_q"), col("to_q"))
+        .agg(count(lit(1)).as("n_customers"))
       val wf = org.apache.spark.sql.expressions.Window.partitionBy(col("from_q"))
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
           org.apache.spark.sql.expressions.Window.unboundedFollowing)

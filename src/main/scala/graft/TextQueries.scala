@@ -47,10 +47,6 @@ object TextQueries {
       ranked.crossJoin(broadcast(ks)).filter(col("rank") <= col("k"))
         .groupBy(col("k"))
         .agg(count(lit(1)).as("n_terms"), sum(col("n")).as("covered_tokens"))
-        // round 15: ≤ |ks| rows — collapse before the totals join and
-        // final sort; probe the cached vocab (the agg sits above a join)
-        .transform(graft.core.Spread.collapseBounded(
-          _, "vocabCoverage.collapse", probe = Some(vocab)))
         .crossJoin(broadcast(tot))
         .select(col("k"), col("n_terms"), col("covered_tokens"),
           col("total_tokens"), col("n_vocab"),
@@ -104,9 +100,6 @@ object TextQueries {
         .select(expr("first_doc DIV 50").as("bucket"))
         .groupBy(col("bucket"))
         .agg(count(lit(1)).as("new_terms"))
-        // round 15: doc-bucket grid — collapse so the cumulative window
-        // and final sort run exchange-free
-        .transform(graft.core.Spread.collapseBounded(_, "vocabGrowth.collapse"))
         .select(
           col("bucket"), col("new_terms"),
           sum(col("new_terms")).over(
@@ -131,8 +124,6 @@ object TextQueries {
           sum(when(col("quality_bucket") === "low", 1).otherwise(0)).as("n_low"),
           round(avg(col("quality_score")), 6).as("avg_score"),
           sum(col("n_tokens")).as("sum_tokens"))
-        // round 15: ≤ sources rows — collapse before the final sort
-        .transform(graft.core.Spread.collapseBounded(_, "sourceQuality.collapse"))
         .orderBy(col("source"))
     }),
     // The composed training-data pipeline: fingerprint dedup (keep lowest
@@ -155,10 +146,6 @@ object TextQueries {
         .join(passing, Seq("doc_id"))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens"))
-        // round 15: ≤ languages rows — collapse before the final sort;
-        // probe the documents scan (the agg sits above the gate join)
-        .transform(graft.core.Spread.collapseBounded(
-          _, "pipelineClean.collapse", probe = Some(docs)))
         .orderBy(col("lang"))
     }),
     // Top adjacent-bigram collocations by PMI (min-count 5, top 20).

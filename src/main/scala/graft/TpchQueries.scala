@@ -113,11 +113,7 @@ object TpchQueries {
       val all = org.apache.spark.sql.expressions.Window
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
           org.apache.spark.sql.expressions.Window.unboundedFollowing)
-      // round 15: ≤ #counts rows — collapse so the share window and final
-      // sort run exchange-free (the per-part relation above stays spread)
-      graft.core.Spread.collapseBounded(
-        perPart.groupBy(col("n_suppliers")).agg(count(lit(1)).as("n_parts")),
-        "supplyRedundancy.collapse")
+      perPart.groupBy(col("n_suppliers")).agg(count(lit(1)).as("n_parts"))
         .select(col("n_suppliers"), col("n_parts"),
           round(col("n_parts").cast("double") /
             sum(col("n_parts")).over(all).cast("double"), 6).as("part_share"))
@@ -145,15 +141,9 @@ object TpchQueries {
           (round(col("l_extendedprice") * lit(100), 0).cast("long") *
             (lit(100L) - round(col("l_discount") * lit(100), 0).cast("long")))
             .as("rev_c2"))
-      // round 15: ≤ suppliers rows — collapse so the region rollup and
-      // final sort run exchange-free; probe the scan-backed lineitem side
-      // (the agg sits above the geo join — Spread.collapseBounded rule b)
-      val rs = graft.core.Spread.collapseBounded(
-        li.join(geo, col("l_suppkey") === col("s_suppkey"))
-          .groupBy(col("r_name"), col("s_suppkey"))
-          .agg(sum(col("rev_c2")).as("rs")),
-        "regionHhi.collapse",
-        probe = Some(li))
+      val rs = li.join(geo, col("l_suppkey") === col("s_suppkey"))
+        .groupBy(col("r_name"), col("s_suppkey"))
+        .agg(sum(col("rev_c2")).as("rs"))
       rs.groupBy(col("r_name"))
         .agg(
           count(lit(1)).as("n_suppliers"),
@@ -187,8 +177,6 @@ object TpchQueries {
             .as("sum_charge_c3"),
           count(lit(1)).as("count_order"),
           round(sum(col("l_quantity")) / count(lit(1)).cast("double"), 6).as("avg_qty"))
-        // round 15: ≤ flag×status rows — collapse before the final sort
-        .transform(graft.core.Spread.collapseBounded(_, "q1Pricing.collapse"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
     }),
     // Forecast-revenue (TPC-H Q6 shape): pure filter + single aggregate —
@@ -312,14 +300,10 @@ object TpchQueries {
     // scale the day axis could be range-partitioned with boundary overlap
     // if #days ever mattered.
     "daily_revenue_ma" -> ((s, dir) => {
-      // round 15: bounded day grid — collapse so the MA window and final
-      // sort run exchange-free (see Spread.collapseBounded)
-      val daily = graft.core.Spread.collapseBounded(
-        Tables
-          .orders(s, dir)
-          .groupBy(date_trunc("day", col("o_orderdate")).as("day"))
-          .agg(sum(cents(col("o_totalprice"))).as("revenue_c")),
-        "dailyRevenueMa.collapse")
+      val daily = Tables
+        .orders(s, dir)
+        .groupBy(date_trunc("day", col("o_orderdate")).as("day"))
+        .agg(sum(cents(col("o_totalprice"))).as("revenue_c"))
         .withColumn("day_num", (col("day").cast("long") / lit(86400L)).cast("long"))
       val w = Window.orderBy(col("day_num")).rangeBetween(-6, 0)
       daily
@@ -378,9 +362,6 @@ object TpchQueries {
           "left_semi")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"))
-        // round 15: ≤ priorities rows — collapse before the final sort;
-        // probe the scan side (the agg sits above the semi-join)
-        .transform(graft.core.Spread.collapseBounded(_, "q4Priority.collapse", probe = Some(ord)))
         .orderBy(col("o_orderpriority"))
     }),
     // Rank-function breadth: percent_rank + ntile quartiles of customer
@@ -434,10 +415,6 @@ object TpchQueries {
         .join(ord98, col("c_custkey") === col("o_custkey"), "left_anti")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_inactive"))
-        // round 15: ≤ segments rows — collapse before the final sort;
-        // probe the scan side (the agg sits above the anti-join)
-        .transform(graft.core.Spread.collapseBounded(
-          _, "qNoOrders.collapse", probe = Some(ord98)))
         .orderBy(col("c_mktsegment"))
     }),
     // Set operations: viewer/purchaser audience overlap (EXCEPT /
@@ -486,10 +463,6 @@ object TpchQueries {
         .join(nation, col("s_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"))
         .agg(sum(col("rev_c2")).as("revenue_c2"))
-        // round 15: ≤ nations rows — collapse before the final sort;
-        // probe the lineitem scan side (the agg sits above the join tree)
-        .transform(graft.core.Spread.collapseBounded(
-          _, "q5RegionVolume.collapse", probe = Some(li)))
         .orderBy(col("revenue_c2").desc, col("n_name"))
     }),
     // National market share (TPC-H Q8 shape): the deepest join tree in the
@@ -534,10 +507,6 @@ object TpchQueries {
           sum(col("rev_c2")).as("total_c2"),
           sum(when(col("supp_nation") === "NATION_2", col("rev_c2")).otherwise(0L))
             .as("nation_c2"))
-        // round 15: ≤ years rows — collapse before the final sort; probe
-        // the lineitem scan side (the agg sits above the 8-relation tree)
-        .transform(graft.core.Spread.collapseBounded(
-          _, "q8MarketShare.collapse", probe = Some(li)))
         .select(
           col("o_year"), col("total_c2"), col("nation_c2"),
           round(col("nation_c2").cast("double") / col("total_c2").cast("double"), 6)
@@ -548,14 +517,10 @@ object TpchQueries {
     // queries return numerics/strings/timestamps/arrays): monthly revenue
     // calendar with a peak-month flag.
     "monthly_revenue" -> ((s, dir) => {
-      // round 15: bounded month grid — collapse so the peak join and final
-      // sort run exchange-free on both consumers
-      val monthly = graft.core.Spread.collapseBounded(
-        Tables
-          .orders(s, dir)
-          .groupBy(date_trunc("month", col("o_orderdate")).cast("date").as("month"))
-          .agg(sum(cents(col("o_totalprice"))).as("revenue_c")),
-        "monthlyRevenue.collapse")
+      val monthly = Tables
+        .orders(s, dir)
+        .groupBy(date_trunc("month", col("o_orderdate")).cast("date").as("month"))
+        .agg(sum(cents(col("o_totalprice"))).as("revenue_c"))
       val mx = monthly.agg(max(col("revenue_c")).as("mx"))
       monthly
         .crossJoin(broadcast(mx))
@@ -613,10 +578,6 @@ object TpchQueries {
         .filter(col("supp_nation") =!= col("cust_nation"))
         .groupBy(col("supp_nation"), col("cust_nation"), col("l_year"))
         .agg(sum(col("rev_c2")).as("revenue_c2"), count(lit(1)).as("n_lines"))
-        // round 15: ≤ nation²×years rows — collapse before the final sort;
-        // probe the lineitem scan side (the agg sits above the join tree)
-        .transform(graft.core.Spread.collapseBounded(
-          _, "q7Volume.collapse", probe = Some(li)))
         .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
     }),
     // Q12-flavored lateness analysis (this schema has no commit/receipt
@@ -638,10 +599,6 @@ object TpchQueries {
           count(lit(1)).as("n_lines"),
           sum(when(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 90 DAYS"), 1L)
             .otherwise(0L)).as("n_late"))
-        // round 15: ≤ priorities rows — collapse before the final sort;
-        // probe the lineitem scan side (the agg sits above the join)
-        .transform(graft.core.Spread.collapseBounded(
-          _, "q12Late.collapse", probe = Some(li)))
         .withColumn(
           "late_frac",
           round(col("n_late").cast("double") / col("n_lines").cast("double"), 6))
@@ -660,10 +617,6 @@ object TpchQueries {
         .agg(count(col("o_orderkey")).as("c_count"))
         .groupBy(col("c_count"))
         .agg(count(lit(1)).as("custdist"))
-        // round 15: ≤ #counts rows — collapse before the final sort; probe
-        // the customer scan (the rollup sits above the left join)
-        .transform(graft.core.Spread.collapseBounded(
-          _, "q13Custdist.collapse", probe = Some(cust)))
         .orderBy(col("custdist").desc, col("c_count").desc)
     }),
     // TPC-H Q15 top supplier: quarterly revenue per supplier, argmax via a
@@ -759,10 +712,6 @@ object TpchQueries {
           col("c_custkey") === col("o_custkey"), "left_anti")
         .groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n_cust"), sum(col("bal_c")).as("total_bal_c"))
-        // round 15: ≤ nations rows — collapse before the final sort; probe
-        // the customer scan side (the agg sits above the anti-join)
-        .transform(graft.core.Spread.collapseBounded(
-          _, "q22Idle.collapse", probe = Some(cust)))
         .orderBy(col("c_nationkey"))
     }),
     // Market-basket co-occurrence (frequent itemsets, size 2): top-20
@@ -961,10 +910,6 @@ object TpchQueries {
         .agg(sum(
           col("ext_c") * (lit(100L) - col("disc_c")) -
             col("qty") * col("retail_c") * lit(20L)).as("profit_c2"))
-        // round 15: ≤ nations×years rows — collapse before the final sort;
-        // probe the lineitem scan side (the agg sits above the join tree)
-        .transform(graft.core.Spread.collapseBounded(
-          _, "q9Profit.collapse", probe = Some(li)))
         .orderBy(col("n_name"), col("o_year"))
     }),
     // Important-part value report (TPC-H Q11 shape): the scalar-subquery

@@ -56,21 +56,35 @@ object BinSpec {
     * semantics — the computed `offset` is used everywhere. Pass
     * `legacyLogOffset100 = true` to [[graft.operators.HistogramOps.quantize]]
     * for bug-compatible behavior.
+    *
+    * A non-finite min/max, or one whose padded bin code does not fit an
+    * `Int` (linear: |v| above ~2.1·10⁷), throws `IllegalArgumentException`
+    * naming the value and the method — the reference fails here too
+    * (Python `int(inf)` raises).
     */
   def derive(minValue: Double, maxValue: Double, method: BinMethod): BinSpec =
     method match {
       case BinMethod.Linear =>
         BinSpec(
-          (minValue * 100).toInt - 10,
-          (maxValue * 100).toInt + 10,
+          code("min", minValue, minValue * 100, method) - 10,
+          code("max", maxValue, maxValue * 100, method) + 10,
           0.0,
           BinMethod.Linear)
       case BinMethod.Log =>
         val offset = if (minValue <= 0) math.abs(minValue) + 1 else 0.0
         BinSpec(
-          (math.log(minValue + offset) * 1000).toInt,
-          (math.log(maxValue + offset) * 1000).toInt,
+          code("min", minValue, math.log(minValue + offset) * 1000, method),
+          code("max", maxValue, math.log(maxValue + offset) * 1000, method),
           offset,
           BinMethod.Log)
     }
+
+  /** `c.toInt` (truncating, like Python `int()`) when `v` is finite and
+    * `c` leaves room for the linear ±10 padding in an `Int`. */
+  private def code(which: String, v: Double, c: Double, method: BinMethod): Int = {
+    if (!v.isFinite || !c.isFinite || math.abs(c) + 10 > Int.MaxValue)
+      throw new IllegalArgumentException(
+        s"cannot derive ${method.name} bins: $which value $v has no Int bin code")
+    c.toInt
+  }
 }

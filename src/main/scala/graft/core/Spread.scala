@@ -31,6 +31,10 @@ import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
   * pass or extra shuffle over a 100 TB corpus, ever. A garbage-high
   * size estimate (filters inherit their child's sizeInBytes) errs
   * toward `false`, i.e. toward the scale shape.
+  *
+  * The opposite direction, narrowing a small relation to one partition
+  * so the windows and sorts above it need no exchange, is decided at
+  * runtime from measured shuffle bytes by [[CollapseSmallStages]].
   */
 object Spread {
 
@@ -105,35 +109,5 @@ object Spread {
         s"starved scan — keyed respread on (${keys.mkString(", ")}) over " +
           s"$cores pinned partitions; downstream clustered ops reuse it")
       rel.repartition(cores, keys: _*)
-    } else rel
-
-  /** The opposite escape (round 15): a BOUNDED relation (binned
-    * aggregate, look state, boundary slice — the "windows ride bounded
-    * aggregates" family) that several keyed operators consume pays one
-    * exchange + AQE round PER operator, each over a handful of rows.
-    * When starved, narrow it to one partition: a single partition
-    * satisfies every downstream ClusteredDistribution, so the windows,
-    * re-aggregations and final sorts above it run exchange-free in one
-    * task. `coalesce` (not repartition) — it narrows the producing
-    * aggregation's reduce side instead of adding a shuffle, and the
-    * map-side partial aggregation over the big input keeps full
-    * parallelism. The not-starved branch keeps the distributed shape
-    * (plan-stats overestimates err toward it, the safe direction).
-    */
-  def collapseBounded(
-      rel: DataFrame,
-      route: String,
-      probe: Option[DataFrame] = None): DataFrame =
-    // `probe` (default: rel itself) supplies the starvation signal — pass
-    // the operator's SCAN-BACKED input when `rel` sits above a join,
-    // whose inflated size estimate would otherwise veto the collapse at
-    // bench scale (estimates err high = err toward the distributed
-    // shape, so the probe must be a relation with honest stats)
-    if (isStarved(probe.getOrElse(rel))) {
-      RouteLog.costRoute(
-        route,
-        "starved bounded relation — one partition; downstream windows/" +
-          "aggregates run exchange-free")
-      rel.coalesce(1)
     } else rel
 }

@@ -23,9 +23,14 @@ object GraftFunctions {
 
   /** Idempotent per-session registration (called from SparkEntry.tune) —
     * skips names already present so repeated tune() calls (one per query
-    * in Verify/Bench) don't spam "function replaced" warnings.
+    * in Verify/Bench) don't spam "function replaced" warnings. Also
+    * installs the [[graft.core.CollapseSmallStages]] planner strategy
+    * once per session.
     */
   def register(spark: SparkSession): Unit = {
+    val strategies = spark.experimental.extraStrategies
+    if (!strategies.contains(graft.core.CollapseSmallStages))
+      spark.experimental.extraStrategies = strategies :+ graft.core.CollapseSmallStages
     val registry = spark.sessionState.functionRegistry
     def registerOnce(name: String, builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] => org.apache.spark.sql.catalyst.expressions.Expression): Unit =
       if (!registry.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))

@@ -237,13 +237,9 @@ object CurationOps {
     * of exact integers. Scale: one count aggregation + a 1-row broadcast.
     */
   def sourceMixture(docs: DataFrame, budget: Int = 1000): DataFrame = {
-    // round 15: ≤ sources rows — collapse so the total join and final
-    // sort run exchange-free (see Spread.collapseBounded)
-    val counts = graft.core.Spread.collapseBounded(
-      docs
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs")),
-      "sourceMixture.collapse")
+    val counts = docs
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_docs"))
       .withColumn("q_nano", round(sqrt(col("n_docs").cast("double")) * lit(1e9)).cast("long"))
     val total = counts.agg(sum(col("q_nano")).as("q_total"))
     counts
@@ -396,8 +392,6 @@ object CurationOps {
         count(lit(1)).as("n_docs"),
         sum(when(col("cnt") > 0, 1L).otherwise(0L)).as("n_docs_hit"),
         sum(col("cnt")).as("n_matches"))
-      // round 15: ≤ sources×patterns rows — collapse before the final sort
-      .transform(graft.core.Spread.collapseBounded(_, "patternScan.collapse"))
       .withColumn(
         "hit_rate",
         round(col("n_docs_hit").cast("double") / col("n_docs").cast("double"), 6))

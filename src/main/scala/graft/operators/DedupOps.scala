@@ -68,10 +68,6 @@ object DedupOps {
         sum(col("c_sh")).as("n_docs"),
         sum(col("c_sh") - lit(1L)).as("n_internal_excess"),
         sum(when(col("n_src") > 1L, col("c_sh")).otherwise(0L)).as("n_cross"))
-      // round 15: ≤ sources rows — collapse before the final sort; probe
-      // the cached (source, h) relation (the agg sits above the hh join)
-      .transform(graft.core.Spread.collapseBounded(
-        _, "dupRateBySource.collapse", probe = Some(sh)))
       .select(
         col("source"), col("n_docs"), col("n_internal_excess"), col("n_cross"),
         round(dbl(col("n_internal_excess")) / dbl(col("n_docs")), 6).as("internal_share"),

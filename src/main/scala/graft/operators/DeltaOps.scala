@@ -91,9 +91,6 @@ object DeltaOps {
           .otherwise(lit("unchanged")).as("status"))
       .groupBy(col("status"))
       .agg(count(lit(1)).as("n_keys"), sum(col("k")).as("key_checksum"))
-      // round 15: a collapse was tried here and REVERTED — measured
-      // +0.12 s/rep (probe planning cost over the snapshot subtrees
-      // exceeds the one 4-row exchange it removes)
       .orderBy(col("status"))
   }
 }

@@ -56,14 +56,10 @@ object EvalOps {
                 bins: Int = 256): DataFrame = {
     val e = df.select(scoreQ.cast("bigint").as("c"), posFlag.cast("bigint").as("y"))
     val st = e.agg(min(col("c")).as("minc"), max(col("c")).as("maxc"))
-    // round 15: ≤ bins rows — collapse so the ECDF window and readout
-    // aggregate run exchange-free (see Spread.collapseBounded)
-    val g = graft.core.Spread.collapseBounded(
-      e.crossJoin(st)
-        .select(expr(s"((c - minc) * $bins) DIV (maxc - minc + 1)").as("bin"), col("y"))
-        .groupBy(col("bin"))
-        .agg(sum(col("y")).as("n_pos"), sum(lit(1L) - col("y")).as("n_neg")),
-      "binnedAuc.collapse")
+    val g = e.crossJoin(st)
+      .select(expr(s"((c - minc) * $bins) DIV (maxc - minc + 1)").as("bin"), col("y"))
+      .groupBy(col("bin"))
+      .agg(sum(col("y")).as("n_pos"), sum(lit(1L) - col("y")).as("n_neg"))
     val cum = Window.orderBy(col("bin"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val dbl = (c: Column) => c.cast("double")
@@ -102,14 +98,10 @@ object EvalOps {
                   bins: Int = 256): DataFrame = {
     val e = df.select(scoreQ.cast("bigint").as("c"), posFlag.cast("bigint").as("y"))
     val st = e.agg(min(col("c")).as("minc"), max(col("c")).as("maxc"))
-    // round 15: same collapse as binnedAuc — three windows + the fold run
-    // exchange-free over the ≤ bins-row relation
-    val g = graft.core.Spread.collapseBounded(
-      e.crossJoin(st)
-        .select(expr(s"((c - minc) * $bins) DIV (maxc - minc + 1)").as("bin"), col("y"))
-        .groupBy(col("bin"))
-        .agg(sum(col("y")).as("n_pos"), sum(lit(1L) - col("y")).as("n_neg")),
-      "binnedAucCi.collapse")
+    val g = e.crossJoin(st)
+      .select(expr(s"((c - minc) * $bins) DIV (maxc - minc + 1)").as("bin"), col("y"))
+      .groupBy(col("bin"))
+      .agg(sum(col("y")).as("n_pos"), sum(lit(1L) - col("y")).as("n_neg"))
     val cum = Window.orderBy(col("bin"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val rcum = Window.orderBy(col("bin").desc)
@@ -186,19 +178,15 @@ object EvalOps {
       min(col("c1")).as("min1"), max(col("c1")).as("max1"),
       min(col("c2")).as("min2"), max(col("c2")).as("max2"))
     // the one corpus pass; ≤ bins² cells, reused by both margins + final.
-    // round 15: collapsed before the persist — every consumer (two
-    // margins, the joint fold) re-aggregates a ≤ bins²-row cache, and a
-    // 1-partition cache read beats per-consumer exchanges
-    val joint = DedupOps.registerCache(graft.core.Spread.collapseBounded(
+    val joint = DedupOps.registerCache(
       e.crossJoin(st)
         .select(
           expr(s"((c1 - min1) * $bins) DIV (max1 - min1 + 1)").as("b1"),
           expr(s"((c2 - min2) * $bins) DIV (max2 - min2 + 1)").as("b2"),
           col("y"))
         .groupBy(col("b1"), col("b2"))
-        .agg(sum(col("y")).as("n_pos"), sum(lit(1L) - col("y")).as("n_neg")),
-      "binnedAucCompare.collapse")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .agg(sum(col("y")).as("n_pos"), sum(lit(1L) - col("y")).as("n_neg"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     def margin(b: String): DataFrame = {
       val g = joint.groupBy(col(b).as("bin"))
         .agg(sum(col("n_pos")).as("mp"), sum(col("n_neg")).as("mn"))
@@ -282,15 +270,11 @@ object EvalOps {
     val e = df.select(col(groupCol).as("g"), scoreQ.cast("bigint").as("c"),
       posFlag.cast("bigint").as("y"))
     val st = e.groupBy(col("g")).agg(min(col("c")).as("minc"), max(col("c")).as("maxc"))
-    // round 15: ≤ groups·bins rows — collapse (probe on e: the grouped
-    // stats join inflates the aggregate's own estimate)
-    val binned = graft.core.Spread.collapseBounded(
-      e.join(st, "g")
-        .select(col("g"), expr(s"((c - minc) * $bins) DIV (maxc - minc + 1)").as("bin"),
-          col("y"))
-        .groupBy(col("g"), col("bin"))
-        .agg(sum(col("y")).as("n_pos"), sum(lit(1L) - col("y")).as("n_neg")),
-      "binnedAucBy.collapse", Some(e))
+    val binned = e.join(st, "g")
+      .select(col("g"), expr(s"((c - minc) * $bins) DIV (maxc - minc + 1)").as("bin"),
+        col("y"))
+      .groupBy(col("g"), col("bin"))
+      .agg(sum(col("y")).as("n_pos"), sum(lit(1L) - col("y")).as("n_neg"))
     val cum = Window.partitionBy(col("g")).orderBy(col("bin"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val dbl = (c: Column) => c.cast("double")
@@ -326,11 +310,9 @@ object EvalOps {
                 bins: Int = 10): DataFrame = {
     val e = df.select(probMicro.cast("bigint").as("pm"), posFlag.cast("bigint").as("y"))
     val width = 1000000L / bins
-    val g = graft.core.Spread.collapseBounded(
-      e.select(least(expr(s"pm DIV $width"), lit((bins - 1).toLong)).as("bin"), col("y"))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos")),
-      "liftCurve.collapse")
+    val g = e.select(least(expr(s"pm DIV $width"), lit((bins - 1).toLong)).as("bin"), col("y"))
+      .groupBy(col("bin"))
+      .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"))
     val desc = Window.orderBy(col("bin").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val all = Window.orderBy(col("bin"))
@@ -367,12 +349,10 @@ object EvalOps {
                        bins: Int = 10): DataFrame = {
     val e = df.select(probMicro.cast("bigint").as("pm"), posFlag.cast("bigint").as("y"))
     val width = 1000000L / bins
-    val g = graft.core.Spread.collapseBounded(
-      e.select(least(expr(s"pm DIV $width"), lit((bins - 1).toLong)).as("bin"),
-          col("pm"), col("y"))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"), sum(col("pm")).as("sum_pm")),
-      "calibrationTable.collapse")
+    val g = e.select(least(expr(s"pm DIV $width"), lit((bins - 1).toLong)).as("bin"),
+        col("pm"), col("y"))
+      .groupBy(col("bin"))
+      .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"), sum(col("pm")).as("sum_pm"))
     val all = Window.orderBy(col("bin"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val dbl = (c: Column) => c.cast("double")
@@ -408,12 +388,10 @@ object EvalOps {
   def binnedGini(df: DataFrame, amountQ: Column, bins: Int = 256): DataFrame = {
     val e = df.select(amountQ.cast("bigint").as("c")).filter(col("c") >= 0L)
     val st = e.agg(min(col("c")).as("minc"), max(col("c")).as("maxc"))
-    val g = graft.core.Spread.collapseBounded(
-      e.crossJoin(st)
-        .select(expr(s"((c - minc) * $bins) DIV (maxc - minc + 1)").as("bin"), col("c"))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("cnt"), min(col("c")).as("rep")),
-      "binnedGini.collapse")
+    val g = e.crossJoin(st)
+      .select(expr(s"((c - minc) * $bins) DIV (maxc - minc + 1)").as("bin"), col("c"))
+      .groupBy(col("bin"))
+      .agg(count(lit(1)).as("cnt"), min(col("c")).as("rep"))
     val cum = Window.orderBy(col("bin"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val dbl = (c: Column) => c.cast("double")
@@ -458,17 +436,15 @@ object EvalOps {
     val e = df.select(probMicro.cast("bigint").as("pm"), posFlag.cast("bigint").as("y"))
     val width = 1000000L / bins
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val g = graft.core.Spread.collapseBounded(
-      e.select(least(expr(s"pm DIV $width"), lit((bins - 1).toLong)).as("bin"),
-          col("pm"), col("y"))
-        .groupBy(col("bin"))
-        .agg(
-          count(lit(1)).as("n_b"),
-          sum(col("y")).as("s_y"),
-          sum(col("pm")).as("s_pm"),
-          sum(dec((col("pm") - col("y") * lit(1000000L)) *
-            (col("pm") - col("y") * lit(1000000L)))).as("sq")),
-      "brier.collapse")
+    val g = e.select(least(expr(s"pm DIV $width"), lit((bins - 1).toLong)).as("bin"),
+        col("pm"), col("y"))
+      .groupBy(col("bin"))
+      .agg(
+        count(lit(1)).as("n_b"),
+        sum(col("y")).as("s_y"),
+        sum(col("pm")).as("s_pm"),
+        sum(dec((col("pm") - col("y") * lit(1000000L)) *
+          (col("pm") - col("y") * lit(1000000L)))).as("sq"))
     val all = Window.orderBy(col("bin"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val dbl = (c: Column) => c.cast("double")
@@ -532,9 +508,7 @@ object EvalOps {
     val all = Window.orderBy(col("bin"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val dbl = (c: Column) => c.cast("double")
-    // round 15: g is ≤ bins rows — collapse so the totals window and the
-    // final sort run exchange-free (guide §2.4; see Spread.collapseBounded)
-    val withTot = graft.core.Spread.collapseBounded(g, "psi.collapse")
+    val withTot = g
       .select(col("bin"), col("n_early"), col("n_late"),
         sum(col("n_early")).over(all).as("te"), sum(col("n_late")).over(all).as("tl"))
     val pe = (dbl(col("n_early")) + lit(0.5)) / (dbl(col("te")) + lit(bins * 0.5))
@@ -567,9 +541,7 @@ object EvalOps {
     val all = Window.partitionBy(col("g"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val dbl = (c: Column) => c.cast("double")
-    // round 15: g is ≤ groups·bins rows — same collapse as the ungrouped
-    // form (the per-group window + ordered output run exchange-free)
-    val withTot = graft.core.Spread.collapseBounded(g, "psiBy.collapse")
+    val withTot = g
       .select(col("g"), col("bin"), col("n_early"), col("n_late"),
         sum(col("n_early")).over(all).as("te"), sum(col("n_late")).over(all).as("tl"))
     val pe = (dbl(col("n_early")) + lit(0.5)) / (dbl(col("te")) + lit(bins * 0.5))
@@ -607,17 +579,14 @@ object EvalOps {
       min(col("cy")).as("miny"), max(col("cy")).as("maxy"))
     // the cell relation feeds five branches (densify axes + grid join +
     // both tie margins) — cache it so the corpus pass runs once
-    // round 15: collapsed before the persist — all five consumers read a
-    // ≤ bins²-row cache; 1 partition beats five per-consumer exchanges
-    val cells = DedupOps.registerCache(graft.core.Spread.collapseBounded(
+    val cells = DedupOps.registerCache(
       e.crossJoin(st)
         .select(
           expr(s"((cx - minx) * $bins) DIV (maxx - minx + 1)").as("bx"),
           expr(s"((cy - miny) * $bins) DIV (maxy - miny + 1)").as("by"))
         .groupBy(col("bx"), col("by"))
-        .agg(count(lit(1)).as("n_c")),
-      "kendall.collapse")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .agg(count(lit(1)).as("n_c"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val dense = cells.select(col("bx")).distinct()
       .crossJoin(cells.select(col("by")).distinct())
       .join(cells, Seq("bx", "by"), "left")
@@ -683,9 +652,7 @@ object EvalOps {
     * contingency — shared with the streaming twin; one state relation
     * feeds kappa + chi² + MI monitors at once.
     */
-  def miFromCells(g0: DataFrame, aCol: String, bCol: String): DataFrame = {
-    // round 15: bounded contingency — see Spread.collapseBounded
-    val g = graft.core.Spread.collapseBounded(g0, "mi.collapse")
+  def miFromCells(g: DataFrame, aCol: String, bCol: String): DataFrame = {
     val byA = Window.partitionBy(col("a"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val byB = Window.partitionBy(col("b"))
@@ -764,12 +731,11 @@ object EvalOps {
   def adjustedRandIndex(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val dbl = (c: Column) => c.cast("double")
-    val cells = DedupOps.registerCache(graft.core.Spread.collapseBounded(
+    val cells = DedupOps.registerCache(
       df.select(col(aCol).as("a"), col(bCol).as("b"))
         .groupBy(col("a"), col("b"))
-        .agg(count(lit(1)).as("n_ab")),
-      "ari.collapse")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .agg(count(lit(1)).as("n_ab"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val tot = cells.agg(
       sum(col("n_ab")).as("n"),
       countDistinct(col("a")).as("ka"),
@@ -806,12 +772,11 @@ object EvalOps {
     */
   def nmiFromPartitions(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val dbl = (c: Column) => c.cast("double")
-    val cells = DedupOps.registerCache(graft.core.Spread.collapseBounded(
+    val cells = DedupOps.registerCache(
       df.select(col(aCol).as("a"), col(bCol).as("b"))
         .groupBy(col("a"), col("b"))
-        .agg(count(lit(1)).as("n_ab")),
-      "nmi.collapse")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .agg(count(lit(1)).as("n_ab"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val byA = Window.partitionBy(col("a"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val byB = Window.partitionBy(col("b"))
@@ -875,8 +840,7 @@ object EvalOps {
     */
   def chi2FromCells(rawCells: DataFrame, aCol: String, bCol: String): DataFrame = {
     val g = DedupOps.registerCache(
-      graft.core.Spread.collapseBounded(rawCells, "chi2.collapse")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      rawCells.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // fresh names on the densify legs: three branches of the same
     // relation otherwise carry identical attribute ids, which the
     // analyzer cannot always disambiguate (streaming memory-sink views)
@@ -919,12 +883,10 @@ object EvalOps {
     */
   def benfordAudit(df: DataFrame, amountQ: Column): DataFrame = {
     val e = df.select(amountQ.cast("bigint").as("c")).filter(col("c") > 0L)
-    val g = graft.core.Spread.collapseBounded(
-      e.select(expr("c DIV CAST(pow(10, length(CAST(c AS STRING)) - 1) AS BIGINT)")
-          .as("digit"))
-        .groupBy(col("digit"))
-        .agg(count(lit(1)).as("n")),
-      "benford.collapse")
+    val g = e.select(expr("c DIV CAST(pow(10, length(CAST(c AS STRING)) - 1) AS BIGINT)")
+        .as("digit"))
+      .groupBy(col("digit"))
+      .agg(count(lit(1)).as("n"))
     val all = Window.orderBy(col("digit"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val dbl = (c: Column) => c.cast("double")
@@ -958,10 +920,8 @@ object EvalOps {
   def kmSurvival(df: DataFrame, durQ: Column, eventFlag: Column): DataFrame = {
     val dbl = (c: Column) => c.cast("double")
     val e = df.select(durQ.cast("long").as("t"), eventFlag.cast("long").as("ev"))
-    val g = graft.core.Spread.collapseBounded(
-      e.groupBy(col("t"))
-        .agg(sum(col("ev")).as("d"), sum(lit(1L) - col("ev")).as("c")),
-      "km.collapse")
+    val g = e.groupBy(col("t"))
+      .agg(sum(col("ev")).as("d"), sum(lit(1L) - col("ev")).as("c"))
     val ord = Window.orderBy(col("t"))
     val prev = ord.rowsBetween(Window.unboundedPreceding, -1)
     val cum = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1016,8 +976,7 @@ object EvalOps {
     * state is a plain keyed sum (associative/commutative), the readout a
     * pure function of it.
     */
-  def cusumFromSums(g0: DataFrame): DataFrame = {
-    val g = graft.core.Spread.collapseBounded(g0, "cusum.collapse")
+  def cusumFromSums(g: DataFrame): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val dbl = (c: Column) => c.cast("double")
     val ord = Window.orderBy(col("k"))
@@ -1075,8 +1034,7 @@ object EvalOps {
     * autocorrelation monitors off one incrementally-maintained
     * aggregation.
     */
-  def acfFromSums(g0: DataFrame, maxLag: Int = 7): DataFrame = {
-    val g = graft.core.Spread.collapseBounded(g0, "acf.collapse")
+  def acfFromSums(g: DataFrame, maxLag: Int = 7): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val dbl = (c: Column) => c.cast("double")
     val ord = Window.orderBy(col("k"))
@@ -1187,8 +1145,7 @@ object EvalOps {
     // the contingency feeds three branches (totals + both margins) —
     // cache it so the upstream aggregation runs once, not per branch
     val cells = DedupOps.registerCache(
-      graft.core.Spread.collapseBounded(rawCells, "kappa.collapse")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      rawCells.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val wNum = lit((k - 1).toLong) - abs(col("a") - col("b"))
     val tot = cells.agg(
       sum(col("n_ab")).as("n"),
@@ -1249,8 +1206,7 @@ object EvalOps {
     * off its incrementally-maintained class-bin state. Windows run over
     * ≤ bins rows only.
     */
-  def prFromBins(g0: DataFrame): DataFrame = {
-    val g = graft.core.Spread.collapseBounded(g0, "pr.collapse")
+  def prFromBins(g: DataFrame): DataFrame = {
     val desc = Window.orderBy(col("bin").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val all = Window.orderBy(col("bin"))
@@ -1308,8 +1264,7 @@ object EvalOps {
     // the grid feeds three branches (pairs twice + ties + count) — cache
     // so the upstream aggregation runs once
     val g = DedupOps.registerCache(
-      graft.core.Spread.collapseBounded(g0, "trend.collapse")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      g0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val a = g.select(col("k").as("ka"), col("xs").as("xa"))
     val b = g.select(col("k").as("kb"), col("xs").as("xb"))
     // bounded-grid pair fan-out: broadcast one side so the non-equi
@@ -1543,8 +1498,7 @@ object EvalOps {
     * bin; `iso_rate` is the monotone calibrated probability PAV would
     * produce, weight = bin count.
     */
-  def isotonicFromBins(g0: DataFrame): DataFrame = {
-    val g = graft.core.Spread.collapseBounded(g0, "isotonic.collapse")
+  def isotonicFromBins(g: DataFrame): DataFrame = {
     val dbl = (c: Column) => c.cast("double")
     val wAsc = Window
       .orderBy(col("bin"))
@@ -1607,14 +1561,12 @@ object EvalOps {
       durQ.cast("long").as("t"),
       eventFlag.cast("long").as("ev"),
       grpFlag.cast("long").as("g"))
-    val cells = graft.core.Spread.collapseBounded(
-      e.groupBy(col("t"))
-        .agg(
-          sum(when(col("g") === 1L, col("ev")).otherwise(0L)).as("d1"),
-          sum(when(col("g") === 1L, lit(1L) - col("ev")).otherwise(0L)).as("c1"),
-          sum(when(col("g") === 0L, col("ev")).otherwise(0L)).as("d0"),
-          sum(when(col("g") === 0L, lit(1L) - col("ev")).otherwise(0L)).as("c0")),
-      "logrank.collapse")
+    val cells = e.groupBy(col("t"))
+      .agg(
+        sum(when(col("g") === 1L, col("ev")).otherwise(0L)).as("d1"),
+        sum(when(col("g") === 1L, lit(1L) - col("ev")).otherwise(0L)).as("c1"),
+        sum(when(col("g") === 0L, col("ev")).otherwise(0L)).as("d0"),
+        sum(when(col("g") === 0L, lit(1L) - col("ev")).otherwise(0L)).as("c0"))
     val ord = Window.orderBy(col("t")) // bounded duration grid
     val prev = ord.rowsBetween(Window.unboundedPreceding, -1)
     val all = ord.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -1722,9 +1674,7 @@ object EvalOps {
     val dbl = (c: Column) => c.cast("double")
     val wR = Window.orderBy(col("p_nano").asc, col("grp")) // bounded family
     val all = wR.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val ranked = graft.core.Spread.collapseBounded(
-      tests.select(col("grp"), col("p_nano").cast("long").as("p_nano")),
-      "bh.collapse")
+    val ranked = tests.select(col("grp"), col("p_nano").cast("long").as("p_nano"))
       .withColumn("rank", row_number().over(wR))
       .withColumn("m", count(lit(1)).over(all))
     val pass = col("p_nano") * lit(alphaDen) * col("m") <=
@@ -1758,9 +1708,7 @@ object EvalOps {
     */
   def ebShrinkRates(groups: DataFrame): DataFrame = {
     val dbl = (c: Column) => c.cast("double")
-    val g = graft.core.Spread.collapseBounded(
-      groups.select(col("grp"), col("n").cast("long").as("n"), col("x").cast("long").as("x")),
-      "ebshrink.collapse")
+    val g = groups.select(col("grp"), col("n").cast("long").as("n"), col("x").cast("long").as("x"))
     // per-group moment terms are nano/pico-quantized BIGINTs before the
     // sum, so the cross-group accumulation is exact and merge-order-free
     val stats = g.agg(

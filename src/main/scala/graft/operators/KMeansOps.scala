@@ -310,13 +310,8 @@ object KMeansOps {
           when(greatest(col("a"), col("b")) > 0.0,
             (col("b") - col("a")) / greatest(col("a"), col("b")))
             .otherwise(0.0) * lit(1e9)).cast("long").as("s_nano"))
-    // round 15: ≤ k rows — collapse before the final sort; probe the
-    // embeddings scan (the agg sits above the assignment joins)
-    graft.core.Spread.collapseBounded(
-      sv.groupBy(col("acid"))
-        .agg(count(lit(1)).as("n_vecs"), sum(col("s_nano")).as("sn")),
-      "silhouetteSummary.collapse",
-      probe = Some(embeddings))
+    sv.groupBy(col("acid"))
+      .agg(count(lit(1)).as("n_vecs"), sum(col("s_nano")).as("sn"))
       .select(col("acid").as("cluster_id"), col("n_vecs"),
         round(col("sn").cast("double") / col("n_vecs").cast("double") / lit(1e9), 6)
           .as("mean_silhouette"))
@@ -332,10 +327,6 @@ object KMeansOps {
       .agg(
         count(lit(1)).as("n_vecs"),
         sum(col("dist").cast("long")).as("inertia"))
-      // round 15: ≤ k rows — collapse before the final sort; probe the
-      // embeddings scan (the agg sits above the assignment join)
-      .transform(graft.core.Spread.collapseBounded(
-        _, "fitSummary.collapse", probe = Some(embeddings)))
       .orderBy(col("cluster_id"))
 
   /** Prototypicality pruning (SSL-prototypes, Sorscher et al. 2022,
@@ -425,10 +416,6 @@ object KMeansOps {
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= topK)
       .select(col("label"), col("rk"), col("vec_id"), col("dist"))
-      // round 15: ≤ labels×topK rows — collapse before the final sort;
-      // probe the embeddings scan (the rank sits above the centroid join)
-      .transform(graft.core.Spread.collapseBounded(
-        _, "labelOutliers.collapse", probe = Some(embeddings)))
       .orderBy(col("label"), col("rk"))
   }
 }

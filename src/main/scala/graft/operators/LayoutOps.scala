@@ -118,8 +118,6 @@ object LayoutOps {
         sum(col("bytes")).as("total_bytes"),
         min(col("id")).as("min_id"),
         max(col("id")).as("max_id"))
-      // round 15: ≤ parts×bins rows — collapse before the final sort
-      .transform(graft.core.Spread.collapseBounded(_, "compactionBins.collapse"))
       .orderBy(col("part"), col("bin"))
   }
 
@@ -186,20 +184,14 @@ object LayoutOps {
         col("l_orderkey").cast("long").as("k2"),
         col("l_linenumber").cast("long").as("k3"),
         col("ship_day")))
-    // round 15: ≤ 2×files rows — collapse so the 2-row layout rollup and
-    // final sort run exchange-free; probe the cached projection (the
-    // zone agg sits above the rank machinery's joins)
-    val zones = graft.core.Spread.collapseBounded(
-      RankOps
-        .rowsAboveRank(tagged, Seq("layout"), Seq("k1", "k2", "k3"), lit(0L))
-        .withColumn("f", expr(s"(gr_pos - 1) div $fileRows"))
-        .groupBy(col("layout"), col("f"))
-        .agg(
-          min(col("ship_day")).as("zmin"),
-          max(col("ship_day")).as("zmax"),
-          count(lit(1)).as("n")),
-      "zoneSkipping.collapse",
-      probe = Some(base))
+    val zones = RankOps
+      .rowsAboveRank(tagged, Seq("layout"), Seq("k1", "k2", "k3"), lit(0L))
+      .withColumn("f", expr(s"(gr_pos - 1) div $fileRows"))
+      .groupBy(col("layout"), col("f"))
+      .agg(
+        min(col("ship_day")).as("zmin"),
+        max(col("ship_day")).as("zmax"),
+        count(lit(1)).as("n"))
     val hit = col("zmax") >= loDay && col("zmin") <= hiDay
     zones
       .groupBy(col("layout"))

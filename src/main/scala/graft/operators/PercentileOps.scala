@@ -37,9 +37,6 @@ object PercentileOps {
     val running = sum(col("cnt")).over(Window.orderBy(col("value")))
     val total = sum(col("cnt")).over(
       Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
-    // round 15: a collapse was tried here and REVERTED — the starvation
-    // probe re-optimizes the histogram subtree per plan, costing more
-    // (~0.1 s/rep measured) than the one ≤ bins-row exchange it removes
     histo
       .select(
         col("value"),

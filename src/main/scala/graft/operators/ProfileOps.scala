@@ -79,8 +79,6 @@ object ProfileOps {
         // row-wise sum of the truncated cents (null v propagates to null
         // and is skipped, matching the row-wise form)
         sum(col("cnt") * (col("v") * lit(100.0)).cast("bigint")).as("sum_cents"))
-      // round 15: ≤ #columns rows — collapse before the final sort
-      .transform(graft.core.Spread.collapseBounded(_, "profileColumns.collapse"))
       .orderBy(col("col_name"))
   }
 
@@ -205,20 +203,13 @@ object ProfileOps {
         .cast("bigint") // floor: pos >= 0
       Seq(p * 2 -> (k + 1L), p * 2 + 1 -> (k + 2L))
     }
-    // round 15: ≤ groups×percentiles rows — collapse so the interpolation
-    // projection and final sort run exchange-free; probe the scan-backed
-    // base (the agg sits above RankOps joins, whose inflated estimates
-    // would otherwise veto the collapse — Spread.collapseBounded rule b)
-    graft.core.Spread.collapseBounded(
-      RankOps
-        .keysAtRanksBy(base, Seq("grp"), Seq("cents"), targets)
-        .groupBy(col("grp"), (col("gr_tid") / 2).cast("int").as("p"))
-        .agg(
-          max(col("gr_n")).as("gr_n"),
-          max(when(col("gr_tid") % 2 === 0, col("cents"))).as("lo_c"),
-          max(when(col("gr_tid") % 2 === 1, col("cents"))).as("hi_c")),
-      "groupQuantiles.collapse",
-      probe = Some(base))
+    RankOps
+      .keysAtRanksBy(base, Seq("grp"), Seq("cents"), targets)
+      .groupBy(col("grp"), (col("gr_tid") / 2).cast("int").as("p"))
+      .agg(
+        max(col("gr_n")).as("gr_n"),
+        max(when(col("gr_tid") % 2 === 0, col("cents"))).as("lo_c"),
+        max(when(col("gr_tid") % 2 === 1, col("cents"))).as("hi_c"))
       .withColumn(
         "pos",
         col("p").cast("double") * (col("gr_n") - 1).cast("double") / lit(100.0))
@@ -282,15 +273,9 @@ object ProfileOps {
       .withColumn("gr_bin", binCol)
       .drop("g_lo", "g_hi")
     val wPrev = Window.orderBy(col("gr_bin")).rowsBetween(Window.unboundedPreceding, -1)
-    // round 15: ≤ nBins rows — collapse so the prefix-min window runs
-    // exchange-free; probe the scan-backed df (the agg sits above the
-    // broadcast stat join)
-    val prevMin = graft.core.Spread.collapseBounded(
-      binned
-        .groupBy(col("gr_bin"))
-        .agg(min(col("y")).as("g_bin_min")),
-      "skyline2d.collapse",
-      probe = Some(df))
+    val prevMin = binned
+      .groupBy(col("gr_bin"))
+      .agg(min(col("y")).as("g_bin_min"))
       .withColumn("g_prev_min", min(col("g_bin_min")).over(wPrev))
       .select(col("gr_bin"), col("g_prev_min"))
     val pruned = binned
@@ -319,13 +304,8 @@ object ProfileOps {
   def equiDepthHistogram(cells: DataFrame, k: Int = 10): DataFrame = {
     // the cell-frequency relation feeds the window chain AND the total —
     // persist via the session registry so the corpus aggregates once
-    // round 15: collapse the bounded cell-frequency relation AT FILL so
-    // the total, cumulative window and bucket rollup all read one
-    // partition (the hllRegisters cache-fill pattern)
     val v = DedupOps.registerCache(
-      graft.core.Spread.collapseBounded(
-        cells.groupBy(col("cell")).agg(count(lit(1)).as("c")),
-        "equiDepthHistogram.collapse")
+      cells.groupBy(col("cell")).agg(count(lit(1)).as("c"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val tot = v.agg(sum(col("c")).as("n_total"))
     val w = Window.orderBy(col("cell")).rowsBetween(Window.unboundedPreceding, -1)
@@ -377,10 +357,6 @@ object ProfileOps {
         sum(when(col("cents") < col("lo_c"), 1L).otherwise(0L)).as("n_clip_lo"),
         sum(when(col("cents") > col("hi_c"), 1L).otherwise(0L)).as("n_clip_hi"),
         sum(col("clamped")).as("sum_clamped_c"))
-      // round 15: ≤ groups rows — collapse before the final sort; probe
-      // the cached base (the clamp agg sits above the threshold join)
-      .transform(graft.core.Spread.collapseBounded(
-        _, "winsorizedStats.collapse", probe = Some(base)))
       .select(
         col("grp"), col("n"), col("lo_c"), col("hi_c"),
         col("n_clip_lo"), col("n_clip_hi"),
@@ -445,12 +421,7 @@ object ProfileOps {
     val binned = base.join(broadcast(st), Seq("grp"))
       .select(col("grp"), col("v"), col("w"),
         expr(s"((v - mn) * $nBins) DIV (mx - mn + 1)").as("bin"))
-    // round 15: the weight histogram is ≤ groups·nBins rows — collapse it
-    // so the cumulative/total windows and the crossing filter run
-    // exchange-free (guide §2.4; see Spread.collapseBounded)
-    val hist = graft.core.Spread.collapseBounded(
-      binned.groupBy(col("grp"), col("bin")).agg(sum(col("w")).as("wb")),
-      "weightedQuantiles.collapse")
+    val hist = binned.groupBy(col("grp"), col("bin")).agg(sum(col("w")).as("wb"))
     val cumW = Window.partitionBy(col("grp")).orderBy(col("bin"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val allW = Window.partitionBy(col("grp"))
@@ -467,23 +438,13 @@ object ProfileOps {
       .filter(col("cum") >= col("target") && col("cum") - col("wb") < col("target"))
       .select(col("grp").as("xgrp"), col("bin").as("xbin"), col("p"),
         (col("cum") - col("wb")).as("w_before"), col("target"), col("tw"))
-    // round 15: the per-(grp, p, v) rollup of the boundary slice is a
-    // bounded relation — collapse its reduce side (the map side over the
-    // slice scan keeps full parallelism; coalesce on the JOIN itself
-    // would have narrowed that scan too) so the value window and both
-    // rollups below run exchange-free
-    val slice = graft.core.Spread.collapseBounded(
-      binned
-        .join(broadcast(crossing),
-          col("grp") === col("xgrp") && col("bin") === col("xbin"))
-        .groupBy(col("grp"), col("p"), col("v"))
-        .agg(sum(col("w")).as("wv"),
-          max(col("w_before")).as("w_before"), max(col("target")).as("target"),
-          max(col("tw")).as("tw")),
-      "weightedQuantiles.slice",
-      // probe on the cached scan-backed input: the rollup's own estimate
-      // inherits the slice join's inflation and vetoed the collapse
-      Some(base))
+    val slice = binned
+      .join(broadcast(crossing),
+        col("grp") === col("xgrp") && col("bin") === col("xbin"))
+      .groupBy(col("grp"), col("p"), col("v"))
+      .agg(sum(col("w")).as("wv"),
+        max(col("w_before")).as("w_before"), max(col("target")).as("target"),
+        max(col("tw")).as("tw"))
     val cumV = Window.partitionBy(col("grp"), col("p")).orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val answers = slice

@@ -125,8 +125,6 @@ object SimilarityOps {
         sum(col("c")).as("n_vecs"),
         sum((col("c").cast("decimal(38,0)") * col("c")).cast("decimal(38,0)"))
           .as("sum_sq"))
-      // round 15: ≤ |planes| rows — collapse before the final sort
-      .transform(graft.core.Spread.collapseBounded(_, "lshTuning.collapse"))
       .select(
         col("planes"),
         col("n_buckets_used"),
@@ -473,10 +471,6 @@ object SimilarityOps {
         count(lit(1)).as("n_probes"),
         sum(col("m")).as("sum_m"),
         sum(when(col("m") * 2 < k, 1L).otherwise(0L)).as("n_suspect"))
-      // round 15: ≤ labels rows — collapse before the final sort; probe
-      // the embeddings scan (the agg sits above the knn/label joins)
-      .transform(graft.core.Spread.collapseBounded(
-        _, "labelNoise.collapse", probe = Some(embeddings)))
       .select(
         col("label"),
         col("n_probes"),
@@ -868,9 +862,6 @@ object SimilarityOps {
     assigned
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n_vecs"))
-      // round 15: a collapse was tried here and REVERTED — the coalesce
-      // broke exchange reuse between the three cached-assignment
-      // consumers (plan gained an exchange: 156 -> 158 nodes)
       .join(nPairs, Seq("cid"), "left")
       .join(nDropped, Seq("cid"), "left")
       .select(

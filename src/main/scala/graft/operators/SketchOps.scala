@@ -102,13 +102,9 @@ object SketchOps {
     val est = estimateFromRegisters(
       hllRegisters(withHour, key, Seq(col("hour"))),
       Seq(col("hour")))
-    // round 15: both sides are ≤ hours rows — collapse so the compare
-    // join and final sort run exchange-free
-    val exact = graft.core.Spread.collapseBounded(
-      withHour
-        .groupBy(col("hour"))
-        .agg(count_distinct(key).cast("long").as("n_exact")),
-      "hourlyApproxDistinct.collapse")
+    val exact = withHour
+      .groupBy(col("hour"))
+      .agg(count_distinct(key).cast("long").as("n_exact"))
     exact.join(est, Seq("hour")).orderBy(col("hour"))
   }
 
@@ -225,12 +221,8 @@ object SketchOps {
     */
   def cumulativeDistinct(df: DataFrame, key: Column): DataFrame = {
     val withDay = df.withColumn("day", to_date(col("ts")))
-    // round 15: ≤ days·buckets rows — collapse before the persist so the
-    // grid join, the per-bucket running-max window and the estimate
-    // aggregation all read one partition (see Spread.collapseBounded)
     val regs = DedupOps.registerCache(
-      graft.core.Spread.collapseBounded(
-        hllRegisters(withDay, key, Seq(col("day"))), "cumDistinct.collapse")
+      hllRegisters(withDay, key, Seq(col("day")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val days = regs.select(col("day")).distinct()
     val grid = days.crossJoin(broadcast(regs.select(col("bucket")).distinct()))
@@ -244,13 +236,11 @@ object SketchOps {
       .select(col("day"), col("n_est").as("n_est_cum"))
     // exact cumulative distinct: count keys by FIRST day, running sum —
     // the unpartitioned window runs over the bounded day axis only
-    val firstDay = graft.core.Spread.collapseBounded(
-      withDay
-        .groupBy(key.as("k"))
-        .agg(min(col("day")).as("day"))
-        .groupBy(col("day"))
-        .agg(count(lit(1)).as("n_new")),
-      "cumDistinct.firstDay")
+    val firstDay = withDay
+      .groupBy(key.as("k"))
+      .agg(min(col("day")).as("day"))
+      .groupBy(col("day"))
+      .agg(count(lit(1)).as("n_new"))
     val wd = Window.orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val exact = days
@@ -401,9 +391,6 @@ object SketchOps {
         "left")
       .groupBy(col("term"))
       .agg(min(coalesce(col("c"), lit(0L))).as("n_cms"))
-    // round 15: a collapse was tried here and REVERTED — the estimate
-    // side drives the compare join's partitioning, so collapsing the
-    // exact side removed no exchange (plan 12 -> 12)
     val exact = df
       .select(key.cast("string").as("term"))
       .filter(col("term").isin(terms: _*))
@@ -532,11 +519,6 @@ object SketchOps {
       .groupBy(col("tok"))
       .agg(max(col("n_sample")).as("n_sample"), count(lit(1)).as("n_exact"))
       .filter(col("n_exact") >= threshold)
-      // round 15: ≤ candidates rows — collapse so the rank window and
-      // final sort run exchange-free; probe the bigram stream (the agg
-      // sits above the candidate join)
-      .transform(graft.core.Spread.collapseBounded(
-        _, "heavyHittersSampled.collapse", probe = Some(bg)))
       .withColumn("rank", row_number().over(w))
       .orderBy(col("rank"))
   }
@@ -590,10 +572,6 @@ object SketchOps {
       .join(broadcast(candidates), Seq("h"))
       .groupBy(col("term"))
       .agg(count(lit(1)).as("n_term"))
-      // round 15: ≤ MG-candidates rows — collapse before the total join
-      // and final sort; probe the token stream (agg above the join)
-      .transform(graft.core.Spread.collapseBounded(
-        _, "heavyHittersMg.collapse", probe = Some(toks)))
       .crossJoin(broadcast(tot))
       .filter(col("n_term") * lit(k.toLong + 1L) > col("n_total"))
       .select(

@@ -113,8 +113,6 @@ object TextOps {
     langId(docs)
       .groupBy(col("lang"), col("pred_lang"))
       .agg(count(lit(1)).as("n_docs"))
-      // round 15: ≤ langs² rows — collapse before the final sort
-      .transform(graft.core.Spread.collapseBounded(_, "langIdSummary.collapse"))
       .orderBy(col("lang"), col("pred_lang"))
 
   /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken MOSS
@@ -217,8 +215,6 @@ object TextOps {
       .select(col("lang"), col("split"), size(tokens(col("text"))).as("nt"))
       .groupBy(col("lang"), col("split"))
       .agg(count(lit(1)).as("n_docs"), sum(col("nt")).as("sum_tokens"))
-      // round 15: ≤ langs×3 rows — collapse before the final sort
-      .transform(graft.core.Spread.collapseBounded(_, "splitSummary.collapse"))
       .orderBy(col("lang"), col("split"))
 
   /** Train/val/test leakage audit — decontamination semantics ACROSS the
@@ -338,9 +334,6 @@ object TextOps {
       .agg(count(lit(1)).as("n"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      // round 15: ≤ langs×k rows (WindowGroupLimit pre-prunes map-side) —
-      // collapse before the final sort
-      .transform(graft.core.Spread.collapseBounded(_, "topTerms.collapse"))
       .orderBy(col("lang"), col("rank"))
   }
 
@@ -502,8 +495,6 @@ object TextOps {
       .withColumn("bin", (col("cum") / lit(binTokens)).cast("long"))
       .groupBy(col("lang"), col("shard"), col("bin"))
       .agg(count(lit(1)).as("n_docs"), sum(col("nt")).as("sum_tokens"))
-      // round 15: ≤ langs×shards×bins rows — collapse before the sort
-      .transform(graft.core.Spread.collapseBounded(_, "packSequences.collapse"))
       .orderBy(col("lang"), col("shard"), col("bin"))
   }
 
@@ -628,8 +619,6 @@ object TextOps {
         sum(col("nt")).as("total_tokens"),
         sum(col("n_seqs")).as("total_seqs"),
         sum(col("n_seqs") * lit(maxLen.toLong) - col("nt")).as("pad_tokens"))
-      // round 15: ≤ ~30 bit-length buckets — collapse before the sort
-      .transform(graft.core.Spread.collapseBounded(_, "seqLenHistogram.collapse"))
       .withColumn(
         "pad_frac",
         round(
@@ -652,8 +641,6 @@ object TextOps {
         sum(col("ws")).as("ws_tokens"),
         sum(col("alpha")).as("alpha_tokens"),
         sum(col("bpe")).as("bpe_tokens"))
-      // round 15: ≤ langs rows — collapse before the final sort
-      .transform(graft.core.Spread.collapseBounded(_, "tokenCounts.collapse"))
       .orderBy(col("lang"))
 
   /** Adjacent-token bigrams of a token array as "w1 w2" strings (empty
@@ -873,10 +860,6 @@ object TextOps {
         round(term * lit(1e9)).cast("bigint").as("nano"))
       .groupBy(col("source"))
       .agg(max(col("t_s")).as("n_tokens"), sum(col("nano")).as("jsd_n"))
-      // round 15: ≤ sources rows — collapse before the final sort; probe
-      // the documents scan (the agg sits above the mixture joins)
-      .transform(graft.core.Spread.collapseBounded(
-        _, "sourceDivergence.collapse", probe = Some(docs)))
       .select(col("source"), col("n_tokens"),
         round(dbl(col("jsd_n")) / lit(1e9), 6).as("jsd"))
       .orderBy(col("source"))
@@ -892,9 +875,6 @@ object TextOps {
         sum(col("c")).as("n_tokens"),
         count(lit(1)).as("n_terms"),
         sum(when(col("c") === 1, 1L).otherwise(0L)).as("n_hapax"))
-      // round 15: ≤ sources rows — collapse before the final sort
-      .transform(graft.core.Spread.collapseBounded(
-        _, "sourceLexicalDiversity.collapse"))
       .select(
         col("source"),
         col("n_tokens"),

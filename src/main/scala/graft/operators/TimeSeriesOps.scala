@@ -101,14 +101,10 @@ object TimeSeriesOps {
   def holtForecast(events: DataFrame, lookback: Int = 8, horizon: Int = 7): DataFrame = {
     require(lookback >= 1 && lookback <= 62, "lookback must fit a Long shift")
     val (cNum, cDen) = centerOffset(lookback, startJ = 0)
-    // round 15: bounded day grid — collapse so every ordered window
-    // below runs exchange-free (see Spread.collapseBounded)
-    val daily = graft.core.Spread.collapseBounded(
-      events
-        .filter(col("value").isNotNull && !isnan(col("value")))
-        .groupBy(date_trunc("day", col("ts")).as("day"))
-        .agg(sum(expr("CAST(value * 100.0 AS BIGINT)")).as("rev_c")),
-      "holt.collapse")
+    val daily = events
+      .filter(col("value").isNotNull && !isnan(col("value")))
+      .groupBy(date_trunc("day", col("ts")).as("day"))
+      .agg(sum(expr("CAST(value * 100.0 AS BIGINT)")).as("rev_c"))
     val w = Window.orderBy(col("day")) // bounded day grid — decile pattern
     val weightOf = (j: Int) => lit(1L << (lookback - 1 - j))
     val withDiff = daily.withColumn("diff_c", col("rev_c") - lag(col("rev_c"), 1).over(w))
@@ -167,12 +163,10 @@ object TimeSeriesOps {
       horizon: Int = 7): DataFrame = {
     require(lookback >= 1 && lookback <= 62, "lookback must fit a Long shift")
     val (cNum, cDen) = centerOffset(lookback, startJ = 0)
-    val daily = graft.core.Spread.collapseBounded(
-      events
-        .filter(col("value").isNotNull && !isnan(col("value")))
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(sum(expr("CAST(value * 100.0 AS BIGINT)")).as("rev_c")),
-      "holtSeasonal.collapse")
+    val daily = events
+      .filter(col("value").isNotNull && !isnan(col("value")))
+      .groupBy(col("ts").cast("date").as("day"))
+      .agg(sum(expr("CAST(value * 100.0 AS BIGINT)")).as("rev_c"))
     val w = Window.orderBy(col("day")) // bounded day grid
     val weightOf = (j: Int) => lit(1L << (lookback - 1 - j))
     val withDiff = daily.withColumn("diff_c", col("rev_c") - lag(col("rev_c"), 1).over(w))
@@ -245,12 +239,10 @@ object TimeSeriesOps {
     * intercept_c)`.
     */
   def theilSen(events: DataFrame): DataFrame = {
-    val daily0 = graft.core.Spread.collapseBounded(
-      events
-        .filter(col("value").isNotNull && !isnan(col("value")))
-        .groupBy(date_trunc("day", col("ts")).as("day"))
-        .agg(sum(expr("CAST(value * 100.0 AS BIGINT)")).as("y")),
-      "theilsen.collapse")
+    val daily0 = events
+      .filter(col("value").isNotNull && !isnan(col("value")))
+      .groupBy(date_trunc("day", col("ts")).as("day"))
+      .agg(sum(expr("CAST(value * 100.0 AS BIGINT)")).as("y"))
       .select(expr("unix_micros(day) DIV 86400000000").as("xd"), col("y"))
     // rebase x to days-since-first so the intercept sits at the series
     // start and slope_nano·x stays far from int64 range
@@ -313,12 +305,10 @@ object TimeSeriesOps {
       bandDen: Long = 1L,
       minPrior: Int = 3): DataFrame = {
     require(lookback >= 1 && lookback <= 20, "lookback bounded by the dec38 product budget")
-    val daily = graft.core.Spread.collapseBounded(
-      events
-        .filter(col("value").isNotNull && !isnan(col("value")))
-        .groupBy(date_trunc("day", col("ts")).as("day"))
-        .agg(sum(expr("CAST(value * 100.0 AS BIGINT)")).as("y")),
-      "dayGrid.collapse")
+    val daily = events
+      .filter(col("value").isNotNull && !isnan(col("value")))
+      .groupBy(date_trunc("day", col("ts")).as("day"))
+      .agg(sum(expr("CAST(value * 100.0 AS BIGINT)")).as("y"))
     val w = Window.orderBy(col("day")) // bounded day grid
     val weightOf = (j: Int) => lit(1L << (lookback - j)) // lags 1..K
     val lags = (1 to lookback).map(j => lag(col("y"), j).over(w).as(s"_p$j"))
@@ -385,12 +375,10 @@ object TimeSeriesOps {
     */
   def forecastBacktest(events: DataFrame, lookback: Int = 8, season: Int = 7): DataFrame = {
     require(lookback >= 1 && lookback <= 62, "lookback must fit a Long shift")
-    val daily = graft.core.Spread.collapseBounded(
-      events
-        .filter(col("value").isNotNull && !isnan(col("value")))
-        .groupBy(date_trunc("day", col("ts")).as("day"))
-        .agg(sum(expr("CAST(value * 100.0 AS BIGINT)")).as("y")),
-      "dayGrid.collapse")
+    val daily = events
+      .filter(col("value").isNotNull && !isnan(col("value")))
+      .groupBy(date_trunc("day", col("ts")).as("day"))
+      .agg(sum(expr("CAST(value * 100.0 AS BIGINT)")).as("y"))
     val w = Window.orderBy(col("day")) // bounded day grid
     val weightOf = (j: Int) => lit(1L << (lookback - j)) // prior lags 1..K
     val withDiff = daily.withColumn("d1", col("y") - lag(col("y"), 1).over(w))

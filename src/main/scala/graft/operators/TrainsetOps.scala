@@ -89,11 +89,6 @@ object TrainsetOps {
         max(col("c")).as("n_orig"),
         count(lit(1)).as("n_after"),
         sum(col("vec_id")).as("id_checksum"))
-      // round 15: ≤ labels rows — collapse before the final sort; probe
-      // the embeddings scan (the agg sits above the explode-inflated
-      // rank/offset joins, whose estimates veto the collapse)
-      .transform(graft.core.Spread.collapseBounded(
-        _, "rebalanceClasses.collapse", probe = Some(embeddings)))
       .orderBy(col("label"))
   }
 
@@ -132,8 +127,6 @@ object TrainsetOps {
         count(lit(1)).as("n"),
         sum(when(col("code") === 255L, 1L).otherwise(0L)).as("n_saturated"),
         sum(col("err_nano")).as("sum_err_nano"))
-      // round 15: ≤ dims rows — collapse before the final sort
-      .transform(graft.core.Spread.collapseBounded(_, "quantizeEmbeddings.collapse"))
       .select(
         col("dim"), col("min_v"), col("max_v"), col("n"), col("n_saturated"),
         round(col("sum_err_nano").cast("double") / lit(1e9) / col("n").cast("double"), 6)
@@ -345,15 +338,11 @@ object TrainsetOps {
       u.as("u16"),
       size(split(col("text"), " ")).cast("long").as("toks"))
     val lvl = explode(array(levels.map(l => lit(l.toLong)): _*)).as("keep16")
-    // round 15: ≤ |levels| rows — collapse so the totals join and final
-    // sort run exchange-free
-    val perLevel = graft.core.Spread.collapseBounded(
-      base
-        .select(lvl, col("u16"), col("toks"))
-        .filter(col("u16") < col("keep16"))
-        .groupBy(col("keep16"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("n_tokens")),
-      "sampleLadder.collapse")
+    val perLevel = base
+      .select(lvl, col("u16"), col("toks"))
+      .filter(col("u16") < col("keep16"))
+      .groupBy(col("keep16"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("n_tokens"))
     val totals = base.agg(
       count(lit(1)).as("t_docs"), sum(col("toks")).as("t_tokens"))
     perLevel

@@ -80,9 +80,7 @@ object StreamingQuantiles {
     val wAll = Window
       .partitionBy(grpCols.map(col): _*)
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    // round 15: ≤ bins-per-group state — collapse so both windows, the
-    // boundary explode and the final sort run exchange-free
-    graft.core.Spread.collapseBounded(state, "cutsFromStateBy.collapse")
+    state
       .withColumn("cum", sum(col("cnt")).over(wOrd))
       .withColumn("cum_prev", col("cum") - col("cnt"))
       .withColumn("n", sum(col("cnt")).over(wAll))

@@ -5,9 +5,12 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Snapshot `.explain("formatted")` of named queries into a directory —
-  * the evidence files the optimization rounds commit as
-  * `plans/r<N>/<query>_{before,after}.txt`.
+/** Snapshot the final adaptive plan (`explain("formatted")` after the
+  * query has run) of named queries into a directory — the evidence files
+  * the optimization rounds commit as `plans/r<N>/<query>_{before,after}.txt`.
+  * The query runs first because AQE decides runtime re-plans such as
+  * [[graft.core.CollapseSmallStages]] only during execution; a snapshot
+  * taken before it would show the initial plan.
   * Usage: runMain graft.tools.PlanSnap <outDir> <suffix> <q1,q2,...> [sfDir]
   */
 object PlanSnap {
@@ -28,6 +31,7 @@ object PlanSnap {
     Files.createDirectories(Paths.get(outDir))
     for (q <- qcsv.split(",").map(_.trim).filter(_.nonEmpty)) {
       val df = graft.SparkEntry.queries(q)(spark, sfDir)
+      df.queryExecution.toRdd.count()
       val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       Files.writeString(Paths.get(outDir, s"${q}_$suffix.txt"), txt)
       println(s"PLANSNAP wrote $outDir/${q}_$suffix.txt")

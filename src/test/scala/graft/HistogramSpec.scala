@@ -86,6 +86,19 @@ class HistogramSpec extends SparkSpec {
     assert(neg.lo == (math.log(-249.99 + 250.99) * 1000).toInt)
   }
 
+  test("BinSpec rejects a non-finite or Int-overflowing min/max by value and method") {
+    // neither scan path filters ±Inf; the reference fails too (int(inf))
+    val withInf = Seq(1.0, 2.5, Double.PositiveInfinity).toDF("value")
+    for (m <- Seq(BinMethod.Linear, BinMethod.Log)) {
+      val e = intercept[IllegalArgumentException](
+        HistogramRunner.run(withInf, HistogramConfig("value", m)).collect())
+      assert(e.getMessage.contains("Infinity") && e.getMessage.contains(m.name), e.getMessage)
+    }
+    // linear codes are v·100 ± 10: 3·10⁷ no longer fits an Int
+    val big = intercept[IllegalArgumentException](BinSpec.derive(0.0, 3e7, BinMethod.Linear))
+    assert(big.getMessage.contains("3.0E7"), big.getMessage)
+  }
+
   test("histogram counts sum to the number of in-range values") {
     val values = HistogramOps.validValues(
       spark.read.parquet(s"${TestSpark.sf0001}/lineitem.parquet"),

@@ -70,6 +70,9 @@ class RunnerSpec extends SparkSpec {
     assert(e.cfg.method == BinMethod.Log && e.outDir == "o" &&
       e.cfg.valueCol == "l_quantity")
     intercept[IllegalArgumentException](HistogramRunner.parseArgs(Array("s", "--bogus")))
+    // a value flag as the last token is a usage error, not an index error
+    for (flag <- Seq("-m", "-w", "--min_value", "--max_value"))
+      intercept[IllegalArgumentException](HistogramRunner.parseArgs(Array("s", flag)))
   }
 
   test("E3 CLI: --minmax_only and override paths run through the arg surface") {
