@@ -203,14 +203,21 @@ object HistogramRunner {
 
   /** The CLI body against a given session (spec-driveable). Returns the
     * written relation (stats row for `--minmax_only`, else the histogram).
+    * A `.txt` tile list takes the pushed scan unless `SPARK_GRAFT_PUSHED=0`.
     */
-  def runCli(spark: SparkSession, cli: CliArgs): DataFrame = {
+  def runCli(spark: SparkSession, cli: CliArgs): DataFrame =
+    runCli(spark, cli, pushed = !sys.env.get("SPARK_GRAFT_PUSHED").contains("0"))
+
+  /** [[runCli]] with the scan path of a `.txt` tile list given: `pushed`
+    * runs the stats/hist passes inside the raster scan, otherwise the
+    * `mode=values` scan feeds [[run]]. Other sources ignore it.
+    */
+  def runCli(spark: SparkSession, cli: CliArgs, pushed: Boolean): DataFrame = {
     val path = cli.source
     val pixels = sys.env.getOrElse("SPARK_GRAFT_PIXELS", "100000").toLong
-    val pushed = path.endsWith(".txt") &&
-      !sys.env.get("SPARK_GRAFT_PUSHED").contains("0")
+    val tileList = path.endsWith(".txt")
     val histo0 =
-      if (pushed && cli.cfg.minmaxOnly) {
+      if (tileList && pushed && cli.cfg.minmaxOnly) {
         // stats-pushed minmax: one row per tile crosses the scan boundary
         import org.apache.spark.sql.functions._
         val stats = spark.read
@@ -225,15 +232,15 @@ object HistogramRunner {
             least(col("min_value"), lit(0.0)).as("min_value"),
             greatest(col("max_value"), lit(0.0)).as("max_value"))
         else stats
-      } else if (pushed) {
+      } else if (tileList && pushed) {
         // default for tile lists: the per-tile stats/hist passes run
         // INSIDE the scan (mode=stats / mode=hist readers) — bins, not
-        // pixels, cross the scan boundary (RasterPushStress: 7.5× cold /
-        // 2× warm at 32×2M px; the gap is the pixel volume at real sizes)
+        // pixels, cross the scan boundary (perfbench: the tile_pushed job
+        // reads 0.006 scan rows per pixel, tile_values one per pixel)
         runPushed(spark, path, pixels, cli.cfg)
       } else {
         val source =
-          if (path.endsWith(".txt")) {
+          if (tileList) {
             // the list path streams straight into the DSv2 scan's partition
             // planning — no driver-side collect()-and-comma-join of URIs
             // (round-1 review: at 10⁵-10⁶ tiles that was a driver bottleneck

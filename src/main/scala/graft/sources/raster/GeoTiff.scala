@@ -30,9 +30,13 @@ import java.nio.{ByteBuffer, ByteOrder}
   * the first IFD is the full-resolution image; overview IFDs are reduced
   * copies a histogram must not double-count.
   *
-  * Scale shape: one compressed block (strip or tile) is materialized at a
-  * time — a 40000×40000 float32 tile streams through ~tile-sized buffers,
-  * never the whole band (unlike the reference's full-band ndarray).
+  * Scale shape: [[TiffBlocks]] decodes one block (strip or tile) at a
+  * time into reusable buffers and hands band 1 out in runs of whole rows
+  * of that block, as primitive samples with the edge clipped and nodata
+  * applied — a 40000×40000 float32 tile streams through ~tile-sized
+  * buffers, never the whole band (unlike the reference's full-band
+  * ndarray). The scan's aggregating readers fold those runs directly;
+  * [[PixelCursor]] is the per-pixel view of the same decoder.
   */
 object GeoTiff {
 
@@ -49,24 +53,23 @@ object GeoTiff {
 
   /** Hadoop-filesystem source: any scheme the cluster knows (file://,
     * hdfs://, s3a:// where reachable). Opened per partition on the
-    * executor; the default Hadoop configuration is overlaid with the
-    * session's `spark.hadoop.*` entries (via the executor-side SparkEnv)
-    * so filesystem credentials/endpoints configured on the session reach
-    * the scan — a bare `new Configuration()` would drop them on a real
-    * cluster.
+    * executor with the scan's Hadoop configuration (the session's, shipped
+    * once per scan — see `RasterScan.createReaderFactory`), so filesystem
+    * credentials and endpoints set on the session reach every tile without
+    * a configuration being built per tile.
+    *
+    * Reads are `seek` + `readFully`: the blocks are read in file order, and
+    * a positional read reopens the file on every call on the local
+    * checksummed filesystem.
     */
-  final class HadoopSeekable(uri: String) extends SeekableBytes {
+  final class HadoopSeekable(uri: String, conf: org.apache.hadoop.conf.Configuration)
+      extends SeekableBytes {
     private val path = new org.apache.hadoop.fs.Path(uri)
-    private val conf = {
-      val c = new org.apache.hadoop.conf.Configuration()
-      Option(org.apache.spark.SparkEnv.get).foreach {
-        _.conf.getAllWithPrefix("spark.hadoop.").foreach { case (k, v) => c.set(k, v) }
-      }
-      c
-    }
     private val in = path.getFileSystem(conf).open(path)
-    def readFully(pos: Long, dst: Array[Byte], off: Int, len: Int): Unit =
-      in.readFully(pos, dst, off, len)
+    def readFully(pos: Long, dst: Array[Byte], off: Int, len: Int): Unit = {
+      in.seek(pos)
+      in.readFully(dst, off, len)
+    }
     override def close(): Unit = in.close()
   }
 
@@ -90,7 +93,8 @@ object GeoTiff {
       blockHeight: Int, // strips: RowsPerStrip
       offsets: Array[Long], // plane-0 blocks only
       byteCounts: Array[Long],
-      nodata: Option[Double])
+      nodata: Option[Double],
+      littleEndian: Boolean)
 
   /** Parse the header + the `ifdIndex`-th image directory into a
     * normalized block layout. Index 0 is the full-resolution image; in a
@@ -246,40 +250,65 @@ object GeoTiff {
       s"block count mismatch: ${offs.length} offsets for $perPlane×$nPlanes blocks")
     Layout(
       width, height, bits, fmt, spp, planar, compression, predictor, tiled,
-      bw, bh, offs.take(perPlane), counts.take(perPlane), nodata)
+      bw, bh, offs.take(perPlane), counts.take(perPlane), nodata, le)
   }
 
-  // ---- block decompression ------------------------------------------
 
-  def inflate(src: Array[Byte], dstLen: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(src)
-    val dst = new Array[Byte](dstLen)
+  // ---- block decompression ------------------------------------------
+  //
+  // Each decoder fills dst[0, dstLen) of a buffer reused across blocks; a
+  // stream that ends early leaves the rest of the block zero.
+
+  /** Deflate with the tile's one `Inflater`, reset per block. */
+  def inflateInto(
+      inf: java.util.zip.Inflater,
+      src: Array[Byte],
+      srcLen: Int,
+      dst: Array[Byte],
+      dstLen: Int): Unit = {
+    inf.reset()
+    inf.setInput(src, 0, srcLen)
     var at = 0
     while (at < dstLen && !inf.finished()) {
       val n = inf.inflate(dst, at, dstLen - at)
       if (n == 0 && inf.needsInput()) throw new java.io.EOFException("truncated deflate block")
+      if (n == 0 && inf.needsDictionary())
+        throw new IllegalArgumentException("deflate block needs a preset dictionary")
       at += n
     }
-    inf.end()
-    dst
+    java.util.Arrays.fill(dst, at, dstLen, 0.toByte)
   }
 
-  def unpackBits(src: Array[Byte], dstLen: Int): Array[Byte] = {
-    val dst = new Array[Byte](dstLen)
+  def unpackBitsInto(src: Array[Byte], srcLen: Int, dst: Array[Byte], dstLen: Int): Unit = {
+    def overrun() = throw new IllegalArgumentException("PackBits run overruns the block")
     var i = 0
     var o = 0
-    while (o < dstLen && i < src.length) {
+    while (o < dstLen && i < srcLen) {
       val n = src(i); i += 1
       if (n >= 0) { // n+1 literal bytes
+        if (o + n + 1 > dstLen || i + n + 1 > srcLen) overrun()
         System.arraycopy(src, i, dst, o, n + 1); i += n + 1; o += n + 1
       } else if (n != -128) { // next byte repeats 1-n times
+        if (o + 1 - n > dstLen || i >= srcLen) overrun()
         val b = src(i); i += 1
         var k = 1 - n
         while (k > 0) { dst(o) = b; o += 1; k -= 1 }
       }
     }
+    java.util.Arrays.fill(dst, o, dstLen, 0.toByte)
+  }
+
+  /** One LZW block into a new array of `dstLen` bytes. */
+  def lzwDecode(src: Array[Byte], dstLen: Int): Array[Byte] = {
+    val dst = new Array[Byte](dstLen)
+    lzwDecodeInto(src, src.length, dst, dstLen, new LzwTable)
     dst
+  }
+
+  /** Code table of [[lzwDecodeInto]], kept per tile. */
+  final class LzwTable {
+    val pos = new Array[Int](4096)
+    val len = new Array[Int](4096)
   }
 
   /** TIFF-variant LZW: MSB-first codes starting at 9 bits, Clear=256,
@@ -287,8 +316,12 @@ object GeoTiff {
     * "early change"). Table entries as prefix/suffix arrays; strings are
     * written back-to-front into the output.
     */
-  def lzwDecode(src: Array[Byte], dstLen: Int): Array[Byte] = {
-    val dst = new Array[Byte](dstLen)
+  def lzwDecodeInto(
+      src: Array[Byte],
+      srcLen: Int,
+      dst: Array[Byte],
+      dstLen: Int,
+      table: LzwTable): Unit = {
     // Contiguous-copy decode: consecutive emissions are back-to-back in
     // dst, so the entry built after emitting `old` then `code` — old's
     // string plus the first char of code's — is exactly the already-written
@@ -297,8 +330,8 @@ object GeoTiff {
     // reversed prefix-chain walk — parity on incompressible data (entries
     // stay ~1 byte), increasingly ahead the longer the matches on real
     // (smooth) raster bands.
-    val pos = new Array[Int](4096)
-    val len = new Array[Int](4096)
+    val pos = table.pos
+    val len = table.len
     var next = 258
     var bits = 9
     // MSB-first bit reader over a byte accumulator (the per-bit loop was
@@ -308,7 +341,7 @@ object GeoTiff {
     var srcPos = 0
 
     def read(): Int = {
-      while (accBits < bits && srcPos < src.length) {
+      while (accBits < bits && srcPos < srcLen) {
         acc = (acc << 8) | (src(srcPos) & 0xffL)
         srcPos += 1
         accBits += 8
@@ -363,172 +396,338 @@ object GeoTiff {
       if (old >= 0 && next == (1 << bits) - 1 && bits < 12) bits += 1
       code = read()
     }
-    dst
+    java.util.Arrays.fill(dst, out, dstLen, 0.toByte)
   }
 
-  // ---- predictors ----------------------------------------------------
+  // ---- predictors, one row at a time ---------------------------------
 
-  /** Predictor 2: per-row horizontal differencing over same-sample lanes,
-    * integer add modulo the sample width. Operates in place on the
-    * decompressed block bytes.
+  /** Predictor 2: horizontal differencing over same-sample lanes, integer
+    * add modulo the sample width, in place on the row at `base`.
     */
   private def undoHorizontal(
-      b: Array[Byte], rows: Int, cols: Int, lanes: Int, bytes: Int, le: Boolean): Unit = {
+      b: Array[Byte], base: Int, cols: Int, lanes: Int, bytes: Int, le: Boolean): Unit = {
     val order = if (le) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
     val rowBytes = cols * lanes * bytes
-    var r = 0
-    while (r < rows) {
-      val base = r * rowBytes
-      bytes match {
-        case 1 =>
-          var i = lanes
-          while (i < rowBytes) { b(base + i) = (b(base + i) + b(base + i - lanes)).toByte; i += 1 }
-        case 2 =>
-          val sb = ByteBuffer.wrap(b, base, rowBytes).order(order).asShortBuffer()
-          var i = lanes
-          while (i < cols * lanes) { sb.put(i, (sb.get(i) + sb.get(i - lanes)).toShort); i += 1 }
-        case 4 =>
-          val ib = ByteBuffer.wrap(b, base, rowBytes).order(order).asIntBuffer()
-          var i = lanes
-          while (i < cols * lanes) { ib.put(i, ib.get(i) + ib.get(i - lanes)); i += 1 }
-        case 8 =>
-          val lb = ByteBuffer.wrap(b, base, rowBytes).order(order).asLongBuffer()
-          var i = lanes
-          while (i < cols * lanes) { lb.put(i, lb.get(i) + lb.get(i - lanes)); i += 1 }
-      }
-      r += 1
+    bytes match {
+      case 1 =>
+        var i = lanes
+        while (i < rowBytes) { b(base + i) = (b(base + i) + b(base + i - lanes)).toByte; i += 1 }
+      case 2 =>
+        val sb = ByteBuffer.wrap(b, base, rowBytes).order(order).asShortBuffer()
+        var i = lanes
+        while (i < cols * lanes) { sb.put(i, (sb.get(i) + sb.get(i - lanes)).toShort); i += 1 }
+      case 4 =>
+        val ib = ByteBuffer.wrap(b, base, rowBytes).order(order).asIntBuffer()
+        var i = lanes
+        while (i < cols * lanes) { ib.put(i, ib.get(i) + ib.get(i - lanes)); i += 1 }
+      case 8 =>
+        val lb = ByteBuffer.wrap(b, base, rowBytes).order(order).asLongBuffer()
+        var i = lanes
+        while (i < cols * lanes) { lb.put(i, lb.get(i) + lb.get(i - lanes)); i += 1 }
     }
   }
 
-  /** Predictor 3 (floating point): each row's bytes were split into
-    * byte-significance planes (MSB plane first, big-endian order
-    * regardless of file byte order) and then byte-wise differenced.
-    * Undo = byte cumulative sum across the row, then regather each value
-    * from its planes. Returns a NEW array in big-endian value order.
+  /** Predictor 3 (floating point), first half: the row's bytes were split
+    * into byte-significance planes (most significant plane first, whatever
+    * the file's byte order) and then byte-wise differenced; this undoes the
+    * differencing in place. The samples are then read straight from their
+    * planes (see `TiffBlocks.readRow`).
     */
-  private def undoFloatPredictor(
-      b: Array[Byte], rows: Int, cols: Int, lanes: Int, bytes: Int): Array[Byte] = {
-    val rowBytes = cols * lanes * bytes
-    val outArr = new Array[Byte](b.length)
-    val vals = cols * lanes
-    var r = 0
-    while (r < rows) {
-      val base = r * rowBytes
-      var i = base + 1
-      while (i < base + rowBytes) { b(i) = (b(i) + b(i - 1)).toByte; i += 1 }
-      var v = 0
-      while (v < vals) {
-        var k = 0
-        while (k < bytes) {
-          outArr(base + v * bytes + k) = b(base + k * vals + v)
-          k += 1
-        }
-        v += 1
-      }
-      r += 1
+  private def accumulateRow(b: Array[Byte], base: Int, rowBytes: Int): Unit = {
+    // the running sum stays in a register: reading back the byte just
+    // stored would chain every step through store-to-load forwarding
+    var acc = b(base)
+    var i = base + 1
+    while (i < base + rowBytes) { acc = (acc + b(i)).toByte; b(i) = acc; i += 1 }
+  }
+
+  // A sample's bytes lie `s` apart from `p` on: 1 in interleaved rows, one
+  // plane's width under predictor 3. `be`: the first byte is the most
+  // significant.
+  @inline private def word16(b: Array[Byte], p: Int, s: Int, be: Boolean): Int =
+    if (be) ((b(p) & 0xff) << 8) | (b(p + s) & 0xff)
+    else (b(p) & 0xff) | ((b(p + s) & 0xff) << 8)
+
+  @inline private def word32(b: Array[Byte], p: Int, s: Int, be: Boolean): Int =
+    if (be) (b(p) << 24) | ((b(p + s) & 0xff) << 16) | ((b(p + 2 * s) & 0xff) << 8) | (b(p + 3 * s) & 0xff)
+    else (b(p) & 0xff) | ((b(p + s) & 0xff) << 8) | ((b(p + 2 * s) & 0xff) << 16) | (b(p + 3 * s) << 24)
+
+  @inline private def word64(b: Array[Byte], p: Int, s: Int, be: Boolean): Long =
+    if (be) (word32(b, p, s, be).toLong << 32) | (word32(b, p + 4 * s, s, be) & 0xffffffffL)
+    else (word32(b, p, s, be) & 0xffffffffL) | (word32(b, p + 4 * s, s, be).toLong << 32)
+
+  // ---- band-1 sample runs -------------------------------------------
+
+  /** Most samples handed out per run: 256 KiB of ints or 512 KiB of
+    * doubles, so a run stays in cache while it is folded.
+    */
+  val RunSamples: Int = 1 << 16
+
+  /** Band-1 samples of one tile, a run at a time. A run is whole rows of
+    * one block, at most [[RunSamples]] samples (at least one row), in
+    * row-major order over the block's window clipped to the image; blocks
+    * come in file order. Integer bands of ≤ 16 bits hand out `ints`, with
+    * nodata as [[noDataInt]] (one past the largest sample, so a value table
+    * of `intRange + 1` counters needs no test per sample); all other bands
+    * hand out `doubles`, with nodata as NaN.
+    */
+  abstract class SampleBlocks extends AutoCloseable {
+
+    /** Value-table size of an integer band of ≤ 16 bits (256 or 65,536),
+      * 0 for a band handed out as doubles.
+      */
+    val intRange: Int
+
+    /** Smallest sample of an integer band (0, −128 or −32,768): the value
+      * table index of sample `v` is `v − intMin`.
+      */
+    val intMin: Int
+
+    final def integral: Boolean = intRange > 0
+    final def noDataInt: Int = intMin + intRange
+
+    /** The current run: `count` samples in `ints` (integral) or `doubles`. */
+    def ints: Array[Int]
+    def doubles: Array[Double]
+    def count: Int
+
+    /** Decode the next run; false once the tile is exhausted. */
+    def nextBlock(): Boolean
+
+    override def close(): Unit = ()
+  }
+
+  private final val U8 = 0
+  private final val I8 = 1
+  private final val U16 = 2
+  private final val I16 = 3
+  private final val U32 = 4
+  private final val I32 = 5
+  private final val U64 = 6
+  private final val I64 = 7
+  private final val F32 = 8
+  private final val F64 = 9
+
+  /** The TIFF decoder: band 1 of directory `ifdIndex` of `in`, one
+    * decompressed block live at a time, buffers reused from block to
+    * block. Closing it ends the tile's `Inflater` and closes `in`.
+    */
+  final class TiffBlocks(in: SeekableBytes, ifdIndex: Int = 0) extends SampleBlocks {
+    val layout: Layout = readLayout(in, ifdIndex)
+
+    private val bytesPer = layout.bitsPerSample / 8
+    private val lanes = if (layout.planar == 2) 1 else layout.samplesPerPixel
+    private val across = (layout.width + layout.blockWidth - 1) / layout.blockWidth
+    private val rowBytes = layout.blockWidth * lanes * bytesPer
+    private val kind = (layout.sampleFormat, layout.bitsPerSample) match {
+      case (1, 8)  => U8
+      case (2, 8)  => I8
+      case (1, 16) => U16
+      case (2, 16) => I16
+      case (1, 32) => U32
+      case (2, 32) => I32
+      case (1, 64) => U64
+      case (2, 64) => I64
+      case (3, 32) => F32
+      case (3, 64) => F64
+      case (f, b)  => throw new IllegalArgumentException(s"unsupported sample format $f bits $b")
     }
-    outArr
+    val intRange: Int = kind match {
+      case U8 | I8   => 256
+      case U16 | I16 => 65536
+      case _         => 0
+    }
+    val intMin: Int = kind match {
+      case I8  => -128
+      case I16 => -32768
+      case _   => 0
+    }
+
+    // GDAL_NODATA: a double sample equal to it becomes NaN ("nan" nodata
+    // never compares equal, and NaN samples stay NaN); an integer sample
+    // equal to it becomes noDataInt. No integer sample can equal noDataInt
+    // itself, the marker used when the band has no reachable nodata.
+    private val ndDouble = layout.nodata.getOrElse(Double.NaN)
+    private val ndMark = noDataInt
+    private val ndInt =
+      if (integral && ndDouble == math.rint(ndDouble) && ndDouble >= intMin && ndDouble < ndMark)
+        ndDouble.toInt
+      else ndMark
+
+    private val runRows = math.max(1, RunSamples / layout.blockWidth)
+    val ints: Array[Int] = if (integral) new Array[Int](runRows * layout.blockWidth) else null
+    val doubles: Array[Double] =
+      if (integral) null else new Array[Double](runRows * layout.blockWidth)
+
+    private var raw = new Array[Byte](0) // compressed block
+    private var blk = new Array[Byte](0) // decompressed block
+    private var inflater: java.util.zip.Inflater = _
+    private var lzw: LzwTable = _
+    private var block = -1
+    private var blockRows = 0 // rows and columns of the block inside the image
+    private var blockCols = 0
+    private var row = 0 // next row of the block to hand out
+    private var n = 0
+
+    def count: Int = n
+
+    def nextBlock(): Boolean = {
+      while (row >= blockRows) {
+        block += 1
+        if (block >= layout.offsets.length) {
+          n = 0
+          release()
+          return false
+        }
+        decode(block)
+      }
+      val rows = math.min(runRows, blockRows - row)
+      var k = 0
+      var r = row
+      while (r < row + rows) {
+        k = readRow(r * rowBytes, k)
+        r += 1
+      }
+      row += rows
+      n = k
+      true
+    }
+
+    private def decode(i: Int): Unit = {
+      val len = layout.byteCounts(i).toInt
+      if (raw.length < len) raw = new Array[Byte](len)
+      in.readFully(layout.offsets(i), raw, 0, len)
+      val y0 = (i / across) * layout.blockHeight
+      val x0 = (i % across) * layout.blockWidth
+      // a tile decompresses to the FULL padded tile; only the final strip
+      // is short
+      val rows =
+        if (layout.tiled) layout.blockHeight
+        else math.min(layout.blockHeight, layout.height - y0)
+      val dstLen = rows * rowBytes
+      if (blk.length < dstLen) blk = new Array[Byte](dstLen)
+      layout.compression match {
+        case 1 =>
+          System.arraycopy(raw, 0, blk, 0, math.min(len, dstLen))
+          java.util.Arrays.fill(blk, math.min(len, dstLen), dstLen, 0.toByte)
+        case 5 =>
+          if (lzw == null) lzw = new LzwTable
+          lzwDecodeInto(raw, len, blk, dstLen, lzw)
+        case 32773 => unpackBitsInto(raw, len, blk, dstLen)
+        case _ =>
+          if (inflater == null) inflater = new java.util.zip.Inflater()
+          inflateInto(inflater, raw, len, blk, dstLen)
+      }
+      // clip the block to the image edge
+      blockRows = math.min(rows, layout.height - y0)
+      blockCols = math.min(layout.blockWidth, layout.width - x0)
+      row = 0
+    }
+
+    /** Undo the predictor on the block row at `base` and write its band-1
+      * samples to the run from index `k0`; returns the next index.
+      */
+    private def readRow(base: Int, k0: Int): Int = {
+      val b = blk
+      val p3 = layout.predictor == 3
+      layout.predictor match {
+        case 2 => undoHorizontal(b, base, layout.blockWidth, lanes, bytesPer, layout.littleEndian)
+        case 3 => accumulateRow(b, base, rowBytes)
+        case _ => ()
+      }
+      // under predictor 3 a sample's bytes sit one plane apart, most
+      // significant first; otherwise they are adjacent in file byte order
+      val step = if (p3) lanes else lanes * bytesPer // to the next band-1 sample
+      val s = if (p3) layout.blockWidth * lanes else 1 // to the sample's next byte
+      val be = p3 || !layout.littleEndian
+      val end = k0 + blockCols
+      var p = base
+      var k = k0
+      kind match {
+        case U8 =>
+          while (k < end) { ints(k) = nd(b(p) & 0xff); p += step; k += 1 }
+        case I8 =>
+          while (k < end) { ints(k) = nd(b(p).toInt); p += step; k += 1 }
+        case U16 =>
+          while (k < end) { ints(k) = nd(word16(b, p, s, be)); p += step; k += 1 }
+        case I16 =>
+          while (k < end) { ints(k) = nd(word16(b, p, s, be).toShort.toInt); p += step; k += 1 }
+        case U32 =>
+          while (k < end) { doubles(k) = nd((word32(b, p, s, be) & 0xffffffffL).toDouble); p += step; k += 1 }
+        case I32 =>
+          while (k < end) { doubles(k) = nd(word32(b, p, s, be).toDouble); p += step; k += 1 }
+        case U64 =>
+          while (k < end) {
+            val l = word64(b, p, s, be) // unsigned 64 → double
+            doubles(k) = nd(if (l >= 0) l.toDouble else (l >>> 1).toDouble * 2.0 + (l & 1L).toDouble)
+            p += step; k += 1
+          }
+        case I64 =>
+          while (k < end) { doubles(k) = nd(word64(b, p, s, be).toDouble); p += step; k += 1 }
+        case F32 =>
+          while (k < end) {
+            doubles(k) = nd(java.lang.Float.intBitsToFloat(word32(b, p, s, be)).toDouble)
+            p += step; k += 1
+          }
+        case F64 =>
+          while (k < end) {
+            doubles(k) = nd(java.lang.Double.longBitsToDouble(word64(b, p, s, be)))
+            p += step; k += 1
+          }
+      }
+      end
+    }
+
+    @inline private def nd(v: Int): Int = if (v == ndInt) ndMark else v
+    @inline private def nd(v: Double): Double = if (v == ndDouble) Double.NaN else v
+
+    private def release(): Unit =
+      if (inflater != null) { inflater.end(); inflater = null }
+
+    override def close(): Unit = try release() finally in.close()
   }
 
   // ---- pixel cursor --------------------------------------------------
 
-  /** Streams band-1 samples of every block in order, tile padding clipped,
-    * nodata mapped to NaN. One decompressed block lives at a time.
+  /** Per-pixel view of a [[SampleBlocks]]: `next()` steps through the
+    * runs, `value()` is the current sample as a double, nodata as NaN.
+    * Closing it closes the blocks.
     */
-  final class PixelCursor(in: SeekableBytes, ifdIndex: Int = 0) {
-    private val layout = readLayout(in, ifdIndex)
-    private val le = { // re-detect byte order for the sample views
-      val h = new Array[Byte](2); in.readFully(0, h, 0, 2); h(0) == 'I'
-    }
-    private val bytesPer = layout.bitsPerSample / 8
-    private val lanes = if (layout.planar == 2) 1 else layout.samplesPerPixel
-    private val across = (layout.width + layout.blockWidth - 1) / layout.blockWidth
-
-    val width: Int = layout.width
-    val height: Int = layout.height
-    val totalPixels: Long = layout.width.toLong * layout.height
-
-    private var block = -1
-    private var buf: ByteBuffer = _
-    private var rowsInBlock = 0
-    private var colsInBlock = 0
-    private var r = 0
-    private var c = 0
+  class BlockCursor[B <: SampleBlocks](protected val blocks: B) extends AutoCloseable {
+    private val mark = blocks.noDataInt
+    private var ints: Array[Int] = _
+    private var doubles: Array[Double] = _
+    private var i = 0
+    private var n = 0
     private var cur = 0.0
 
-    private def loadBlock(i: Int): Unit = {
-      val raw = new Array[Byte](layout.byteCounts(i).toInt)
-      in.readFully(layout.offsets(i), raw, 0, raw.length)
-      // a tile decompresses to the FULL padded tile; only the final strip
-      // is short
-      val blockRow = i / across
-      val blockCol = i % across
-      rowsInBlock =
-        if (layout.tiled) layout.blockHeight
-        else math.min(layout.blockHeight, layout.height - blockRow * layout.blockHeight)
-      colsInBlock = layout.blockWidth
-      val dstLen = rowsInBlock * colsInBlock * lanes * bytesPer
-      var bytes = layout.compression match {
-        case 1     => java.util.Arrays.copyOf(raw, dstLen)
-        case 5     => lzwDecode(raw, dstLen)
-        case 32773 => unpackBits(raw, dstLen)
-        case _     => inflate(raw, dstLen)
+    final def next(): Boolean = {
+      while (i >= n) {
+        if (!blocks.nextBlock()) return false
+        ints = blocks.ints
+        doubles = blocks.doubles
+        n = blocks.count
+        i = 0
       }
-      var order = if (le) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
-      layout.predictor match {
-        case 2 => undoHorizontal(bytes, rowsInBlock, colsInBlock, lanes, bytesPer, le)
-        case 3 =>
-          bytes = undoFloatPredictor(bytes, rowsInBlock, colsInBlock, lanes, bytesPer)
-          order = ByteOrder.BIG_ENDIAN // plane gather reassembles big-endian
-        case _ => ()
-      }
-      buf = ByteBuffer.wrap(bytes).order(order)
-      // clip the emit window to the image edge
-      val x0 = blockCol * layout.blockWidth
-      val y0 = blockRow * layout.blockHeight
-      colsInBlock = math.min(layout.blockWidth, layout.width - x0)
-      rowsInBlock = math.min(rowsInBlock, layout.height - y0)
-      r = 0
-      c = -1
-    }
-
-    private def sampleAt(row: Int, col: Int): Double = {
-      val idx = (row * layout.blockWidth + col) * lanes // band 1 = lane 0
-      val v = (layout.sampleFormat, layout.bitsPerSample) match {
-        case (3, 32) => buf.getFloat(idx * 4).toDouble
-        case (3, 64) => buf.getDouble(idx * 8)
-        case (1, 8)  => (buf.get(idx) & 0xff).toDouble
-        case (2, 8)  => buf.get(idx).toDouble
-        case (1, 16) => (buf.getShort(idx * 2) & 0xffff).toDouble
-        case (2, 16) => buf.getShort(idx * 2).toDouble
-        case (1, 32) => (buf.getInt(idx * 4) & 0xffffffffL).toDouble
-        case (2, 32) => buf.getInt(idx * 4).toDouble
-        case (1, 64) => // unsigned 64 → double
-          val l = buf.getLong(idx * 8)
-          if (l >= 0) l.toDouble else (l >>> 1).toDouble * 2.0 + (l & 1L).toDouble
-        case (2, 64) => buf.getLong(idx * 8).toDouble
-        case (f, b) =>
-          throw new IllegalArgumentException(s"unsupported sample format $f bits $b")
-      }
-      layout.nodata match {
-        case Some(nd) if v == nd || (nd.isNaN && v.isNaN) => Double.NaN
-        case _                                            => v
-      }
-    }
-
-    def next(): Boolean = {
-      c += 1
-      if (block >= 0 && c >= colsInBlock) { c = 0; r += 1 }
-      while (block < 0 || r >= rowsInBlock) {
-        block += 1
-        if (block >= layout.offsets.length) return false
-        loadBlock(block)
-        c = 0
-      }
-      cur = sampleAt(r, c)
+      cur =
+        if (ints != null) { val v = ints(i); if (v == mark) Double.NaN else v.toDouble }
+        else doubles(i)
+      i += 1
       true
     }
 
-    def value(): Double = cur
+    final def value(): Double = cur
+
+    override def close(): Unit = blocks.close()
+  }
+
+  /** Streams band-1 samples of every block in order, tile padding clipped,
+    * nodata mapped to NaN. One decompressed block lives at a time.
+    */
+  final class PixelCursor(in: SeekableBytes, ifdIndex: Int = 0)
+      extends BlockCursor[TiffBlocks](new TiffBlocks(in, ifdIndex)) {
+    val width: Int = blocks.layout.width
+    val height: Int = blocks.layout.height
+    val totalPixels: Long = width.toLong * height
   }
 }

@@ -1,10 +1,13 @@
 package graft.sources.raster
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.{BinMethod, BinSpec}
 
@@ -31,6 +34,12 @@ import graft.core.{BinMethod, BinSpec}
   * `binCounts` exactly: `(v·100).toInt` / `(ln(v+off)·1000).toInt`
   * (truncation toward zero = non-ANSI cast), codes outside `[lo, hi]`
   * dropped, code `hi` merged into the closed last bin `hi−1`.
+  *
+  * Both readers fold the tile's decoded runs ([[GeoTiff.SampleBlocks]])
+  * in tight loops, the bin method chosen once per tile. An integer band
+  * of ≤ 16 bits is first counted into a value table (256 or 65,536
+  * counters), which is then folded through the same arithmetic once per
+  * distinct value: those bands do no per-pixel floating-point work.
   */
 object RasterAggScans {
 
@@ -57,12 +66,56 @@ object RasterAggScans {
       else (z >>> 11).toDouble / (1L << 53).toDouble * 1000.0
     }
   }
+
+  /** Count an integer band's samples: entry `v − intMin` holds the count
+    * of sample `v`; the last entry counts nodata.
+    */
+  def countValues(blocks: GeoTiff.SampleBlocks): Array[Long] = {
+    val table = new Array[Long](blocks.intRange + 1)
+    val base = blocks.intMin
+    while (blocks.nextBlock()) {
+      val a = blocks.ints
+      val n = blocks.count
+      var k = 0
+      while (k < n) { table(a(k) - base) += 1; k += 1 }
+    }
+    table
+  }
 }
 
-final class RasterStatsReaderFactory(required: StructType) extends PartitionReaderFactory {
+/** A reader that folds one tile on its first `next()`. The tile is closed
+  * as soon as the fold ends, and by `close()` if the fold threw, so a
+  * corrupt or truncated tile leaves no file open.
+  */
+abstract class TileFoldReader(tileUri: String, pixels: Long, overview: Int, conf: Configuration)
+    extends PartitionReader[InternalRow] {
+  private var open: GeoTiff.SampleBlocks = _
+  private var folded = false
+
+  protected def fold(blocks: GeoTiff.SampleBlocks): Unit
+
+  protected final def foldOnce(): Unit =
+    if (!folded) {
+      folded = true
+      open = RasterDecode.blocks(tileUri, pixels, overview, conf)
+      fold(open)
+      close()
+    }
+
+  override def close(): Unit =
+    if (open != null) {
+      val b = open
+      open = null
+      b.close()
+    }
+}
+
+final class RasterStatsReaderFactory(
+    required: StructType,
+    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[RasterInputPartition]
-    new RasterStatsPartitionReader(p.tileUri, p.pixels, required, p.overview)
+    new RasterStatsPartitionReader(p.tileUri, p.pixels, required, p.overview, conf.value.value)
   }
 }
 
@@ -75,25 +128,53 @@ final class RasterStatsPartitionReader(
     tileUri: String,
     pixels: Long,
     required: StructType,
-    overview: Int = 0)
-    extends PartitionReader[InternalRow] {
-  private val stream = RasterDecode.open(tileUri, pixels, overview)
+    overview: Int,
+    conf: Configuration)
+    extends TileFoldReader(tileUri, pixels, overview, conf) {
   private var done = false
   private var mn = Double.PositiveInfinity
   private var mx = Double.NegativeInfinity
   private var n = 0L
 
+  protected def fold(blocks: GeoTiff.SampleBlocks): Unit =
+    if (blocks.integral) {
+      val table = RasterAggScans.countValues(blocks)
+      var i = 0
+      while (i < blocks.intRange) {
+        if (table(i) > 0) {
+          val v = (i + blocks.intMin).toDouble
+          if (n == 0) mn = v
+          mx = v
+          n += table(i)
+        }
+        i += 1
+      }
+    } else {
+      var lo = mn
+      var hi = mx
+      var valid = 0L
+      while (blocks.nextBlock()) {
+        val d = blocks.doubles
+        val len = blocks.count
+        var k = 0
+        while (k < len) {
+          val v = d(k)
+          if (!java.lang.Double.isNaN(v)) {
+            if (v < lo) lo = v
+            if (v > hi) hi = v
+            valid += 1
+          }
+          k += 1
+        }
+      }
+      mn = lo
+      mx = hi
+      n = valid
+    }
+
   override def next(): Boolean = {
     if (done) return false
-    while (stream.next()) {
-      val v = stream.value()
-      if (!java.lang.Double.isNaN(v)) {
-        if (v < mn) mn = v
-        if (v > mx) mx = v
-        n += 1
-      }
-    }
-    stream.close()
+    foldOnce()
     done = true
     n > 0
   }
@@ -114,17 +195,17 @@ final class RasterStatsPartitionReader(
     }
     row
   }
-
-  override def close(): Unit = ()
 }
 
 final class RasterHistReaderFactory(
     required: StructType,
     spec: BinSpec,
-    legacyLogOffset100: Boolean) extends PartitionReaderFactory {
+    legacyLogOffset100: Boolean,
+    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[RasterInputPartition]
-    new RasterHistPartitionReader(p.tileUri, p.pixels, required, spec, legacyLogOffset100, p.overview)
+    new RasterHistPartitionReader(
+      p.tileUri, p.pixels, required, spec, legacyLogOffset100, p.overview, conf.value.value)
   }
 }
 
@@ -138,40 +219,68 @@ final class RasterHistPartitionReader(
     required: StructType,
     spec: BinSpec,
     legacyLogOffset100: Boolean,
-    overview: Int = 0) extends PartitionReader[InternalRow] {
+    overview: Int,
+    conf: Configuration) extends TileFoldReader(tileUri, pixels, overview, conf) {
 
   private val uriUtf8 = UTF8String.fromString(tileUri)
   private val counts = new Array[Long](math.max(spec.bins, 0))
-  private var filled = false
   private var bin = -1
+  // an empty spec takes no code: lo > hi
+  private val lo = if (spec.bins > 0) spec.lo else 1
+  private val hi = if (spec.bins > 0) spec.hi else 0
 
   private val logOffset = if (legacyLogOffset100) 100.0 else spec.offset
 
   // exact twin of HistogramOps.quantize: truncation-toward-zero cast
-  private def code(v: Double): Int = spec.method match {
-    case BinMethod.Linear => (v * 100).toInt
-    case BinMethod.Log    => (math.log(v + logOffset) * 1000).toInt
-  }
+  @inline private def linearCode(v: Double): Int = (v * 100).toInt
+  @inline private def logCode(v: Double): Int = (math.log(v + logOffset) * 1000).toInt
 
-  private def fill(): Unit = {
-    val stream = RasterDecode.open(tileUri, pixels, overview)
-    while (stream.next()) {
-      val v = stream.value()
-      if (!java.lang.Double.isNaN(v)) {
-        val c = code(v)
-        // F3 range semantics + numpy closed last bin (code hi → bin hi−1)
-        if (c >= spec.lo && c <= spec.hi && spec.bins > 0) {
-          val b = if (c == spec.hi) spec.hi - 1 else c
-          counts(b - spec.lo) += 1
+  // F3 range semantics + numpy closed last bin (code hi → bin hi−1)
+  @inline private def add(counts: Array[Long], c: Int, cnt: Long): Unit =
+    if (c >= lo && c <= hi) counts((if (c == hi) hi - 1 else c) - lo) += cnt
+
+  protected def fold(blocks: GeoTiff.SampleBlocks): Unit = {
+    val counts = this.counts
+    if (blocks.integral) {
+      val table = RasterAggScans.countValues(blocks)
+      val linear = spec.method == BinMethod.Linear
+      var i = 0
+      while (i < blocks.intRange) {
+        if (table(i) > 0) {
+          val v = (i + blocks.intMin).toDouble
+          add(counts, if (linear) linearCode(v) else logCode(v), table(i))
         }
+        i += 1
       }
-    }
-    stream.close()
-    filled = true
+    } else
+      spec.method match {
+        case BinMethod.Linear =>
+          while (blocks.nextBlock()) {
+            val d = blocks.doubles
+            val len = blocks.count
+            var k = 0
+            while (k < len) {
+              val v = d(k)
+              if (!java.lang.Double.isNaN(v)) add(counts, linearCode(v), 1)
+              k += 1
+            }
+          }
+        case BinMethod.Log =>
+          while (blocks.nextBlock()) {
+            val d = blocks.doubles
+            val len = blocks.count
+            var k = 0
+            while (k < len) {
+              val v = d(k)
+              if (!java.lang.Double.isNaN(v)) add(counts, logCode(v), 1)
+              k += 1
+            }
+          }
+      }
   }
 
   override def next(): Boolean = {
-    if (!filled) fill()
+    foldOnce()
     bin += 1
     while (bin < counts.length && counts(bin) == 0) bin += 1
     bin < counts.length
@@ -192,6 +301,4 @@ final class RasterHistPartitionReader(
     }
     row
   }
-
-  override def close(): Unit = ()
 }

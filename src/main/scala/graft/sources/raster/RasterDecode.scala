@@ -1,8 +1,10 @@
 package graft.sources.raster
 
-/** Per-tile pixel-stream dispatch for the raster source's readers.
+import org.apache.hadoop.conf.Configuration
+
+/** Per-tile band-1 sample dispatch for the raster source's readers.
   *
-  * Real decode ([[GeoTiff.PixelCursor]]) for every URI the cluster can
+  * Real decode ([[GeoTiff.TiffBlocks]]) for every URI the cluster can
   * actually open through the Hadoop filesystem (file://, hdfs://, bare
   * paths); the deterministic stub stream ONLY for network object-store
   * schemes that are unreachable in this offline environment (the
@@ -16,12 +18,6 @@ package graft.sources.raster
   */
 object RasterDecode {
 
-  trait Cursor extends AutoCloseable {
-    def next(): Boolean
-    def value(): Double
-    override def close(): Unit = ()
-  }
-
   /** Offline-unreachable schemes served by the stub stream. */
   val StubSchemes: Set[String] = Set("s3", "s3a", "s3n", "gs", "http", "https")
 
@@ -30,25 +26,49 @@ object RasterDecode {
     catch { case _: java.net.URISyntaxException => None })
       .exists(s => StubSchemes.contains(s.toLowerCase))
 
-  def open(tileUri: String, stubPixels: Long, overview: Int = 0): Cursor =
-    if (isStubUri(tileUri)) stub(tileUri, stubPixels)
+  /** The tile's band-1 sample runs; the caller closes them, which closes
+    * the file. `conf` is the scan's Hadoop configuration.
+    */
+  def blocks(
+      tileUri: String,
+      stubPixels: Long,
+      overview: Int,
+      conf: Configuration): GeoTiff.SampleBlocks =
+    if (isStubUri(tileUri)) new StubBlocks(tileUri, stubPixels)
     else {
-      val in = new GeoTiff.HadoopSeekable(tileUri)
-      val cur =
-        try new GeoTiff.PixelCursor(in, overview)
-        catch { case e: Throwable => in.close(); throw e }
-      new Cursor {
-        def next(): Boolean = cur.next()
-        def value(): Double = cur.value()
-        override def close(): Unit = in.close()
-      }
+      val in = new GeoTiff.HadoopSeekable(tileUri, conf)
+      try new GeoTiff.TiffBlocks(in, overview)
+      catch { case e: Throwable => in.close(); throw e }
     }
 
-  def stub(tileUri: String, pixels: Long): Cursor = {
-    val s = new RasterAggScans.PixelStream(tileUri, pixels)
-    new Cursor {
-      def next(): Boolean = s.next()
-      def value(): Double = s.value()
+  /** Per-pixel cursor over [[blocks]]. `conf` defaults to a plain Hadoop
+    * configuration for callers outside a scan.
+    */
+  def open(
+      tileUri: String,
+      stubPixels: Long,
+      overview: Int = 0,
+      conf: Configuration = new Configuration()): GeoTiff.BlockCursor[GeoTiff.SampleBlocks] =
+    new GeoTiff.BlockCursor(blocks(tileUri, stubPixels, overview, conf))
+
+  /** [[RasterAggScans.PixelStream]] in runs of up to
+    * [[GeoTiff.RunSamples]] doubles.
+    */
+  private final class StubBlocks(tileUri: String, pixels: Long) extends GeoTiff.SampleBlocks {
+    val intRange: Int = 0
+    val intMin: Int = 0
+    val ints: Array[Int] = null
+    val doubles: Array[Double] =
+      new Array[Double](math.min(math.max(pixels, 0L), GeoTiff.RunSamples.toLong).toInt)
+    private val stream = new RasterAggScans.PixelStream(tileUri, pixels)
+    private var n = 0
+
+    def count: Int = n
+
+    def nextBlock(): Boolean = {
+      n = 0
+      while (n < doubles.length && stream.next()) { doubles(n) = stream.value(); n += 1 }
+      n > 0
     }
   }
 }

@@ -755,4 +755,208 @@ class GeoTiffSpec extends graft.SparkSpec {
         }
     }, n = 60)
   }
+
+  // ---- block kernels, resources and degenerate tiles ------------------
+
+  private def drain(r: org.apache.spark.sql.connector.read.PartitionReader[
+      org.apache.spark.sql.catalyst.InternalRow]): Vector[org.apache.spark.sql.catalyst.InternalRow] =
+    try {
+      val out = Vector.newBuilder[org.apache.spark.sql.catalyst.InternalRow]
+      while (r.next()) out += r.get().copy()
+      out.result()
+    } finally r.close()
+
+  /** A builder TIFF over the whole decoder matrix — every sample type at
+    * 8/16/32/64 bits, predictors 1/2/3, chunky or planar second sample,
+    * either byte order, classic or BigTIFF, strips or tiles, no / numeric /
+    * `nan` GDAL_NODATA — with its expected decode. Integer samples cover
+    * the whole range of 8- and 16-bit bands (or a narrow one, so values
+    * repeat); wider bands stay within ±5000 so a linear bin spec stays
+    * small.
+    */
+  private val kernelGen: Gen[((Int, Int), Array[Byte], Vector[Double])] = for {
+    w <- Gen.chooseNum(1, 40)
+    h <- Gen.chooseNum(1, 40)
+    tf <- Gen.oneOf((1, 8), (2, 8), (1, 16), (2, 16), (1, 32), (2, 32), (1, 64), (2, 64), (3, 32), (3, 64))
+    (fmt, bits) = tf
+    le <- Gen.oneOf(true, false)
+    big <- Gen.oneOf(true, false)
+    comp <- Gen.oneOf(1, 8)
+    pred <- if (fmt == 3) Gen.oneOf(1, 3) else Gen.oneOf(1, 2, 3)
+    spp <- Gen.oneOf(1, 2)
+    planar <- if (spp == 1) Gen.const(1) else Gen.oneOf(1, 2)
+    layout <- Gen.oneOf(
+      Gen.chooseNum(0, h + 2).map(Left(_)),
+      Gen.oneOf(16, 32).flatMap(tw => Gen.oneOf(16, 32).map(th => Right((tw, th)))))
+    nodataKind <- Gen.oneOf("none", "numeric", "nan")
+    narrow <- Gen.oneOf(true, false)
+    seed <- Gen.chooseNum(0L, Long.MaxValue)
+  } yield {
+    val r = new scala.util.Random(seed)
+    val (lo, span) = (fmt, bits) match {
+      case (3, _)  => (-300L, 1000L)
+      case (1, 8)  => (0L, 256L)
+      case (2, 8)  => (-128L, 256L)
+      case (1, 16) => (0L, 65536L)
+      case (2, 16) => (-32768L, 65536L)
+      case (1, _)  => (0L, 5001L)
+      case _       => (-5000L, 10001L)
+    }
+    val (from, width) = if (narrow) (lo + r.nextInt(span.toInt - 3), 4) else (lo, span.toInt)
+    def draw(): Double =
+      if (fmt == 3) from + r.nextInt(width * 100) / 100.0
+      else (from + r.nextInt(width)).toDouble
+    val base = Array.fill(w * h)(draw())
+    val ndValue = if (fmt == 3) -9999.0 else base(r.nextInt(base.length))
+    val pix = nodataKind match {
+      case "numeric" if fmt == 3 => base.map(v => if (r.nextInt(8) == 0) ndValue else v)
+      case "nan" if fmt == 3     => base.map(v => if (r.nextInt(8) == 0) Double.NaN else v)
+      case _                     => base
+    }
+    val nodata = nodataKind match {
+      case "numeric" => Some(if (fmt == 3) "-9999" else ndValue.toLong.toString)
+      case "nan"     => Some("nan")
+      case _         => None
+    }
+    val tile = layout.toOption
+    val rps = layout match { case Left(rows) => rows; case Right(_) => 0 }
+    val bytes = buildTiff(pix, w, h, bits, fmt, le = le, big = big, comp = comp,
+      predictor = pred, rowsPerStrip = rps, tile = tile,
+      nodata = nodata, spp = spp, planar = planar,
+      laneGen = (v, l) => if (v.isNaN) v else v + l)
+    val mapped = pix.map { v =>
+      val stored = if (fmt == 3 && bits == 32) v.toFloat.toDouble else v
+      if (nodataKind == "numeric" && stored == ndValue) Double.NaN else stored
+    }
+    val expected = tile match {
+      case Some((tw, th)) => tileOrder(mapped, w, h, tw, th)
+      case None           => mapped.toVector
+    }
+    ((fmt, bits), bytes, expected)
+  }
+
+  test("property: stats/hist block kernels == a plain fold over PixelCursor values") {
+    import graft.core.{BinMethod, BinSpec}
+    val dir = java.nio.file.Files.createTempDirectory("graft-kernels")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val seen = scala.collection.mutable.Map.empty[(Int, Int), Int].withDefaultValue(0)
+    var n = 0
+    try check(Prop.forAllNoShrink(kernelGen) { case (shape, bytes, expected) =>
+      seen(shape) += 1
+      n += 1
+      val f = dir.resolve(s"t$n.tif")
+      java.nio.file.Files.write(f, bytes)
+      val uri = f.toUri.toString
+      val values = decode(bytes)
+      // the plain fold
+      var mn = Double.PositiveInfinity
+      var mx = Double.NegativeInfinity
+      var valid = 0L
+      values.foreach { v =>
+        if (!v.isNaN) { if (v < mn) mn = v; if (v > mx) mx = v; valid += 1 }
+      }
+      val stats = drain(new RasterStatsPartitionReader(uri, 0L, RasterSource.StatsSchema, 0, conf))
+        .map(r => (r.getDouble(1), r.getDouble(2), r.getLong(3)))
+      val statsOk = stats == (if (valid == 0) Vector.empty else Vector((mn, mx, valid)))
+      val (a, b) = if (valid == 0) (0.0, 0.0) else (mn, mx)
+      val histsOk = Seq((BinMethod.Linear, false), (BinMethod.Log, false), (BinMethod.Log, true)).forall {
+        case (method, legacy) =>
+          val spec = BinSpec.derive(a, b, method)
+          val off = if (legacy) 100.0 else spec.offset
+          val want = values.filterNot(_.isNaN).foldLeft(Map.empty[Int, Long]) { (m, v) =>
+            val c = method match {
+              case BinMethod.Linear => (v * 100).toInt
+              case BinMethod.Log    => (math.log(v + off) * 1000).toInt
+            }
+            if (c >= spec.lo && c <= spec.hi && spec.bins > 0) {
+              val bin = if (c == spec.hi) spec.hi - 1 else c
+              m.updated(bin, m.getOrElse(bin, 0L) + 1)
+            } else m
+          }
+          val got = drain(new RasterHistPartitionReader(
+            uri, 0L, RasterSource.HistSchema, spec, legacy, 0, conf))
+            .map(r => r.getInt(1) -> r.getLong(2))
+          got.map(_._1) == got.map(_._1).sorted && got.toMap == want && got.size == want.size
+      }
+      java.nio.file.Files.delete(f)
+      nanEq(values, expected) && statsOk && histsOk
+    }, n = 120)
+    finally java.nio.file.Files.delete(dir)
+    // the 16-bit value table (65,536 counters) is exercised, signed and not
+    assert(seen((1, 16)) > 0 && seen((2, 16)) > 0, seen.toString)
+  }
+
+  test("a truncated file:// tile leaves no descriptor open once its readers are closed") {
+    import graft.core.{BinMethod, BinSpec}
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]
+    // ImageIO writes the directory ahead of the pixel data, so the cut
+    // leaves the layout readable and the block reads fail
+    val full = imageIoTiff(rnd(41, 128 * 128, 0, 256), 128, 128,
+      java.awt.image.BufferedImage.TYPE_BYTE_GRAY, Some("ZLib"))
+    val cut = full.take(full.length / 2)
+    new GeoTiff.TiffBlocks(new GeoTiff.ByteArraySeekable(cut)).close()
+    val tif = java.io.File.createTempFile("graft-truncated", ".tif")
+    tif.deleteOnExit()
+    java.nio.file.Files.write(tif.toPath, cut)
+    val uri = "file://" + tif.getAbsolutePath
+    val conf = spark.sparkContext.hadoopConfiguration
+    val spec = BinSpec.derive(0.0, 255.0, BinMethod.Linear)
+    val readers: Seq[() => org.apache.spark.sql.connector.read.PartitionReader[
+      org.apache.spark.sql.catalyst.InternalRow]] = Seq(
+      () => new RasterStatsPartitionReader(uri, 0L, RasterSource.StatsSchema, 0, conf),
+      () => new RasterHistPartitionReader(uri, 0L, RasterSource.HistSchema, spec, false, 0, conf))
+    def drive(r: org.apache.spark.sql.connector.read.PartitionReader[
+        org.apache.spark.sql.catalyst.InternalRow]): Unit = {
+      intercept[java.io.IOException](r.next())
+      r.close()
+      r.close() // idempotent
+    }
+    readers.foreach(mk => drive(mk())) // classes and filesystem loaded
+    val before = os.getOpenFileDescriptorCount
+    for (_ <- 0 until 50; mk <- readers) drive(mk())
+    val after = os.getOpenFileDescriptorCount
+    // a leak keeps one descriptor per reader (100 here); the slack covers
+    // descriptors other threads of the shared session open meanwhile
+    assert(after - before < 10, s"open descriptors $before -> $after")
+  }
+
+  test("degenerate tiles: pushed and values paths write the same pinned histogram.csv") {
+    import graft.core.BinMethod
+    val dir = java.nio.file.Files.createTempDirectory("graft-degenerate")
+    val equalU8 = buildTiff(Array.fill(16 * 12)(7.0), 16, 12, 8, 1, comp = 8)
+    val allNodata = buildTiff(Array.fill(16 * 12)(-9999.0), 16, 12, 32, 3, comp = 8,
+      predictor = 3, tile = Some((16, 16)), nodata = Some("-9999"))
+    def lines(codes: Range, count: Int => Long): String =
+      codes.map(c => String.format(java.util.Locale.US, "%.2f, %d",
+        Double.box(c / 100.0), Long.box(count(c))) + "\n").mkString
+    var run = 0
+    def csv(tiff: Array[Byte], method: BinMethod, pushed: Boolean): String = {
+      run += 1
+      val tile = dir.resolve(s"tile$run.tif")
+      java.nio.file.Files.write(tile, tiff)
+      val list = dir.resolve(s"tiles$run.txt")
+      java.nio.file.Files.write(list, tile.toUri.toString.getBytes("UTF-8"))
+      val out = dir.resolve(s"out$run").toString
+      graft.HistogramRunner.runCli(
+        spark,
+        graft.HistogramRunner.CliArgs(list.toString, out, 4, graft.HistogramConfig("value", method)),
+        pushed)
+      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out, "histogram.csv")), "UTF-8")
+    }
+    val cases = Seq(
+      // min = max = 7: linear pads ±10 codes around 700; log has hi == lo,
+      // so zero bins and an empty file
+      ("all-equal u8", equalU8, BinMethod.Linear, lines(690 until 710, c => if (c == 700) 192L else 0L)),
+      ("all-equal u8", equalU8, BinMethod.Log, ""),
+      // no valid sample: min/max fall back to (0.0, 0.0)
+      ("all-nodata f32", allNodata, BinMethod.Linear, lines(-10 until 10, _ => 0L)),
+      ("all-nodata f32", allNodata, BinMethod.Log, ""))
+    for ((name, tiff, method, want) <- cases) {
+      val pushed = csv(tiff, method, pushed = true)
+      val values = csv(tiff, method, pushed = false)
+      assert(pushed == values, s"$name ${method.name}: pushed and values paths differ")
+      assert(pushed == want, s"$name ${method.name}")
+    }
+  }
 }
