@@ -55,49 +55,95 @@ object HistogramRunner {
   def runWithDeciles(df: DataFrame, cfg: HistogramConfig): DataFrame =
     PercentileOps.deciles(run(df, cfg.copy(minmaxOnly = false)))
 
-  /** The fully source-pushed two-pass pipeline over the DSv2 raster scan:
-    * pass 1 reads `mode=stats` (ONE row per tile crosses the scan
-    * boundary), pass 2 reads `mode=hist` (≤ bins rows per tile) and the
-    * engine only merges + densifies. Output is bit-identical to
-    * [[run]] over the raw `mode=values` scan (RasterAggSpec pins it) —
-    * this is the reference's own worker/driver split (per-worker
-    * `get_min_max` / `process_sources`, driver-side fold) expressed as
-    * scan modes, and the shape that survives 40000²-pixel tiles: the
-    * exchange after the scan carries bins, not pixels.
+  /** The source-pushed pipeline over the DSv2 raster scan, one scan for
+    * every spec but log with a min ≤ 0. A `mode=codes` scan bins each
+    * packed partition of tiles inside the reader; Spark merges the sparse
+    * `(code, cnt)` rows and the partitions' stats rows in one aggregate,
+    * and the driver derives the spec from the merged min/max, drops the
+    * codes outside it and densifies — the reference's worker/driver split
+    * (per-worker passes, driver-side fold, main.py:93-124) with one read
+    * of each tile. Output is bit-identical to [[run]] over the raw
+    * `mode=values` scan (RasterAggSpec pins it), and only codes cross the
+    * scan boundary.
+    *
+    * The scan codes log with offset 0 unless both bounds are given: that
+    * is the derived offset whenever the min is > 0, and linear and the
+    * legacy `+100` code have no offset to derive. A log spec whose derived
+    * offset differs (min ≤ 0, also after `clampToZero`) needs the min
+    * before any code: a second `mode=codes` scan with that offset, logged
+    * as the `histogramSecondPass` route.
     */
   def runPushed(
       spark: SparkSession,
       tileListPath: String,
       pixelsPerTile: Long,
       cfg: HistogramConfig): DataFrame = {
+    val bounds = (cfg.minValue, cfg.maxValue) match {
+      case (Some(a), Some(b)) => Some(BinSpec.derive(a, b, cfg.method))
+      case _                  => None
+    }
+    val offset = bounds.fold(0.0)(_.offset)
+    val first = scanCodes(spark, tileListPath, pixelsPerTile, cfg, offset)
+    val spec = bounds.getOrElse {
+      val (a, b) = (first.min, first.max)
+      val (mn, mx) = if (cfg.clampToZero) (math.min(a, 0.0), math.max(b, 0.0)) else (a, b)
+      BinSpec.derive(mn, mx, cfg.method)
+    }
+    val codes =
+      if (cfg.method == BinMethod.Log && !cfg.legacyLogOffset100 && spec.offset != offset) {
+        graft.core.RouteLog.costRoute(
+          "histogramSecondPass",
+          s"log bins from min ${first.min} need offset " +
+            s"${spec.offset}, the first scan coded with offset $offset")
+        scanCodes(spark, tileListPath, pixelsPerTile, cfg, spec.offset)
+      } else first
+    // with derived bounds every valid pixel has a code under the spec's offset
+    if (bounds.isEmpty && !codes.valid)
+      throw new IllegalStateException(s"a valid pixel has no ${cfg.method.name} code under $spec")
+    val dense = new Array[Long](spec.bins)
+    codes.counts.foreach { case (c, n) =>
+      val b = spec.binIndex(c)
+      if (b >= 0) dense(b) += n
+    }
+    HistogramOps.histogramFromCounts(spark, spec, dense)
+  }
+
+  /** One `mode=codes` scan merged by one aggregate and collected: at most
+    * one row per code seen plus the stats row. Without a valid pixel the
+    * min and max are (0.0, 0.0), as in [[HistogramOps.minMax]].
+    */
+  private final case class ScanCodes(counts: Array[(Int, Long)], min: Double, max: Double, valid: Boolean)
+
+  private def scanCodes(
+      spark: SparkSession,
+      tileListPath: String,
+      pixelsPerTile: Long,
+      cfg: HistogramConfig,
+      offset: Double): ScanCodes = {
     import org.apache.spark.sql.functions._
-    def read(mode: String, extra: Map[String, String] = Map.empty) = {
-      val base = spark.read
-        .format("graft.sources.raster.RasterSource")
-        .option("tileListPath", tileListPath)
-        .option("pixelsPerTile", pixelsPerTile)
-        .option("mode", mode)
-      extra.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
+    val rows = spark.read
+      .format("graft.sources.raster.RasterSource")
+      .option("tileListPath", tileListPath)
+      .option("pixelsPerTile", pixelsPerTile)
+      .option("mode", "codes")
+      .option("binMethod", cfg.method.name)
+      .option("binOffset", offset.toString)
+      .option("legacyLogOffset100", cfg.legacyLogOffset100.toString)
+      .load()
+      .groupBy(col("code"))
+      .agg(
+        sum(col("cnt")),
+        min(col("min_value")),
+        max(col("max_value")),
+        bool_and(col("codes_valid")))
+      .collect()
+    // the stats rows group under a null code
+    val (stats, codes) = rows.partition(_.isNullAt(0))
+    val counts = codes.map(r => r.getInt(0) -> r.getLong(1))
+    stats.headOption match {
+      case Some(r) => ScanCodes(counts, r.getDouble(2), r.getDouble(3), r.getBoolean(4))
+      case None    => ScanCodes(counts, 0.0, 0.0, valid = true)
     }
-    val (mn, mx) = (cfg.minValue, cfg.maxValue) match {
-      case (Some(a), Some(b)) => (a, b)
-      case _ =>
-        val row = read("stats")
-          .agg(min(col("min_value")), max(col("max_value")))
-          .head()
-        val (a, b) = if (row.isNullAt(0)) (0.0, 0.0) else (row.getDouble(0), row.getDouble(1))
-        if (cfg.clampToZero) (math.min(a, 0.0), math.max(b, 0.0)) else (a, b)
-    }
-    val spec = BinSpec.derive(mn, mx, cfg.method)
-    val binned = read(
-      "hist",
-      Map(
-        "binLo" -> spec.lo.toString,
-        "binHi" -> spec.hi.toString,
-        "binOffset" -> spec.offset.toString,
-        "binMethod" -> cfg.method.name,
-        "legacyLogOffset100" -> cfg.legacyLogOffset100.toString))
-    HistogramOps.histogramFromBinned(binned.select(col("code"), col("cnt")), spec)
   }
 
   /** Parsed CLI surface — the reference's flags
@@ -183,7 +229,7 @@ object HistogramRunner {
     * `<source>` is a Parquet table path, or a `.txt` tile list (S4 —
     * one URI per line, like the reference's bio_*_list.txt), which routes
     * through the DataSource V2 raster scan (S3) for the complete reference
-    * program shape: tile list → per-tile scan → 2-pass histogram → CSV.
+    * program shape: tile list → raster scan → histogram → CSV.
     */
   def main(args: Array[String]): Unit = {
     val cli = parseArgs(args)
@@ -209,8 +255,9 @@ object HistogramRunner {
     runCli(spark, cli, pushed = !sys.env.get("SPARK_GRAFT_PUSHED").contains("0"))
 
   /** [[runCli]] with the scan path of a `.txt` tile list given: `pushed`
-    * runs the stats/hist passes inside the raster scan, otherwise the
-    * `mode=values` scan feeds [[run]]. Other sources ignore it.
+    * bins inside the raster scan ([[runPushed]]; `--minmax_only` reads the
+    * per-tile `mode=stats` rows), otherwise the `mode=values` scan feeds
+    * [[run]]. Other sources ignore it.
     */
   def runCli(spark: SparkSession, cli: CliArgs, pushed: Boolean): DataFrame = {
     val path = cli.source
@@ -233,10 +280,10 @@ object HistogramRunner {
             greatest(col("max_value"), lit(0.0)).as("max_value"))
         else stats
       } else if (tileList && pushed) {
-        // default for tile lists: the per-tile stats/hist passes run
-        // INSIDE the scan (mode=stats / mode=hist readers) — bins, not
-        // pixels, cross the scan boundary (perfbench: the tile_pushed job
-        // reads 0.006 scan rows per pixel, tile_values one per pixel)
+        // default for tile lists: the tiles are binned INSIDE the scan
+        // (mode=codes readers) — codes, not pixels, cross the scan
+        // boundary (perfbench: the tile_pushed job reads ~0.001 scan rows
+        // per pixel, tile_values one per pixel)
         runPushed(spark, path, pixels, cli.cfg)
       } else {
         val source =
@@ -259,12 +306,12 @@ object HistogramRunner {
       println(s"MIN_VALUE=${row.getDouble(0)} MAX_VALUE=${row.getDouble(1)}")
       histo0
     } else {
-      // persist: writeCsv and the bin count would otherwise each run the
-      // full two-pass pipeline from scratch
-      val histo = histo0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // at most `bins` rows, held on the driver: the CSV write and the bin
+      // count then run no scan again (the pushed histogram is local already)
+      val rows = histo0.collect()
+      val histo = spark.createDataFrame(java.util.Arrays.asList(rows: _*), histo0.schema)
       HistogramOps.writeCsv(histo, cli.outDir)
-      println(s"HISTOGRAM_BINS=${histo.count()} OUT=${cli.outDir}")
-      histo.unpersist()
+      println(s"HISTOGRAM_BINS=${rows.length} OUT=${cli.outDir}")
       histo
     }
   }

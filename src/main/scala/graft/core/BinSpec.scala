@@ -34,6 +34,14 @@ object BinMethod {
 final case class BinSpec(lo: Int, hi: Int, offset: Double, method: BinMethod) {
   require(hi >= lo, s"invalid bin range [$lo, $hi)")
   def bins: Int = hi - lo
+
+  /** The 0-based bin that `code` counts in, or −1 for a code the range
+    * drops: codes outside `[lo, hi]` drop, code `hi` joins the last bin.
+    */
+  def binIndex(code: Int): Int =
+    if (code < lo || code > hi || bins == 0) -1
+    else if (code == hi) bins - 1
+    else code - lo
 }
 
 object BinSpec {
@@ -79,10 +87,15 @@ object BinSpec {
           BinMethod.Log)
     }
 
+  /** True when the unrounded bin code `c` is finite and leaves room for
+    * the linear ±10 padding in an `Int` — the codes [[derive]] accepts.
+    */
+  def hasCode(c: Double): Boolean = c.isFinite && math.abs(c) + 10 <= Int.MaxValue
+
   /** `c.toInt` (truncating, like Python `int()`) when `v` is finite and
-    * `c` leaves room for the linear ±10 padding in an `Int`. */
+    * [[hasCode]]`(c)`. */
   private def code(which: String, v: Double, c: Double, method: BinMethod): Int = {
-    if (!v.isFinite || !c.isFinite || math.abs(c) + 10 > Int.MaxValue)
+    if (!v.isFinite || !hasCode(c))
       throw new IllegalArgumentException(
         s"cannot derive ${method.name} bins: $which value $v has no Int bin code")
     c.toInt

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.core.{BinMethod, BinSpec}
 
@@ -174,28 +175,21 @@ object HistogramOps {
       .orderBy(col("value"))
   }
 
-  /** Histogram from an ALREADY-BINNED relation `(code: int, cnt: long)` —
-    * the merge suffix for sources that aggregate per partition themselves
-    * (the DSv2 raster `mode=hist` scan, mirroring the reference's
-    * per-worker `np.histogram`, compute_histogram/main.py:182-201 + the
-    * `_add_histogram` fold at :100-108). Input codes must already respect
-    * the range/last-bin semantics; this stage only merges (Σ per code) and
-    * densifies — identical output to [[histogram]] over the raw values.
+  /** The `(value, cnt)` histogram of dense bin counts already on the
+    * driver (`counts(b)` counts bin `spec.lo + b`) — the driver-side fold
+    * of the reference (compute_histogram/main.py:244-249) for sources that
+    * bin inside the scan (`HistogramRunner.runPushed`). A local relation in
+    * bin order, so value order: writing or counting it runs no scan.
+    * `value` is [[binEdge]], as in [[histogram]].
     */
-  def histogramFromBinned(binned: DataFrame, spec: BinSpec): DataFrame = {
-    val spark = binned.sparkSession
-    if (spec.bins == 0) {
-      import spark.implicits._
-      return Seq.empty[(Double, Long)].toDF("value", "cnt")
-    }
-    val merged = binned
-      .groupBy(col("code").as("bin"))
-      .agg(sum(col("cnt")).as("count"))
-    val bins = spark.range(spec.lo.toLong, spec.hi.toLong).select(col("id").cast("int").as("bin"))
-    bins
-      .join(merged, Seq("bin"), "left")
-      .select(binEdge(col("bin"), spec).as("value"), coalesce(col("count"), lit(0L)).as("cnt"))
-      .orderBy(col("value"))
+  def histogramFromCounts(spark: SparkSession, spec: BinSpec, counts: Array[Long]): DataFrame = {
+    require(counts.length == spec.bins, s"${counts.length} counts for ${spec.bins} bins")
+    val rows = java.util.Arrays.asList(counts.indices.map(b => Row(spec.lo + b, counts(b))): _*)
+    val schema = StructType(Seq(
+      StructField("bin", IntegerType, nullable = false),
+      StructField("count", LongType, nullable = false)))
+    spark.createDataFrame(rows, schema)
+      .select(binEdge(col("bin"), spec).as("value"), col("count").as("cnt"))
   }
 
   /** End-to-end two-job pipeline: stats pass (A1/A2) → derive BinSpec on the

@@ -120,19 +120,24 @@ object TextOps {
     * minimum of every w-hash window; the distinct window-minima are the
     * document's fingerprints. Near-dup docs share most fingerprints, and
     * any sufficiently long shared substring is guaranteed to contribute at
-    * least one.
-    *
-    * The k-gram hash is a plain base-257 polynomial over char codes —
-    * k = 5 keeps it inside exact int64 (127·257⁴ · 5 < 2⁶³), so no modulus
-    * is needed and the same arithmetic is expressible in the DuckDB oracle.
+    * least one. The composition of [[winnowHashes]] and [[winnowMinima]].
     *
     * WARNING — fixture-scale only: as a single nested column expression,
     * the window-minima lambda re-evaluates the whole hash transform per
     * slice (interpreted HOFs have no subexpression reuse) — O(len²·k)
-    * per row. Production path: [[winnowSummary]], which stages the hash
-    * array into its own bound column first.
+    * per row. Materialize [[winnowHashes]] first (a checkpoint between the
+    * two stages) for anything larger. Production path: [[winnowSummary]].
     */
-  def winnowFingerprints(text: Column, k: Int = 5, w: Int = 4): Column = {
+  def winnowFingerprints(text: Column, k: Int = 5, w: Int = 4): Column =
+    winnowMinima(text, winnowHashes(text, k), k, w)
+
+  /** The hash stage of [[winnowFingerprints]]: the k-gram hashes of
+    * `text` in order. The hash is a plain base-257 polynomial over char
+    * codes — k = 5 keeps it inside exact int64 (127·257⁴ · 5 < 2⁶³), so no
+    * modulus is needed and the same arithmetic is expressible in the
+    * DuckDB oracle.
+    */
+  def winnowHashes(text: Column, k: Int = 5): Column = {
     require(k >= 2 && k <= 7, "base-257 polynomial must stay inside exact int64")
     val base = 257L
     // hash of the k-gram starting at 0-based offset i (substr is 1-based):
@@ -144,8 +149,15 @@ object TextOps {
           ascii(text.substr(i + lit(j + 1), lit(1))).cast("long") * lit(pow)
         }
         .reduce(_ + _)
-    val hashes = transform(sequence(lit(0), length(text) - lit(k)), kgramHash(_))
-    // window minima over every w consecutive hashes, deduplicated
+    transform(sequence(lit(0), length(text) - lit(k)), kgramHash(_))
+  }
+
+  /** The minima stage of [[winnowFingerprints]]: the distinct minima of
+    * every `w` consecutive entries of `hashes` (the [[winnowHashes]] of
+    * `text`, with the same `k`), empty when `text` is shorter than
+    * `k + w − 1` characters.
+    */
+  def winnowMinima(text: Column, hashes: Column, k: Int = 5, w: Int = 4): Column = {
     val mins = array_distinct(
       transform(
         sequence(lit(0), size(hashes) - lit(w)),

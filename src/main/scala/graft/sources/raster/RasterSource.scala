@@ -3,22 +3,29 @@ package graft.sources.raster
 import java.util
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
+import graft.core.{BinMethod, BinSpec}
+
 /** DataSource V2 raster-tile source — the faithful Spark mapping of the
   * reference's tile scan (S3: `read_source`, reference:
-  * compute_histogram/main.py:237-241): each GeoTIFF tile becomes exactly
-  * one input partition, band-1 pixels stream out as `value` rows, NaN marks
-  * nodata (filtered by F1 downstream, never here — scan semantics match the
-  * reference, which reads raw pixels and strips NaN as a separate step).
+  * compute_histogram/main.py:237-241). In `mode=values` each GeoTIFF tile
+  * becomes exactly one input partition, band-1 pixels stream out as
+  * `value` rows, NaN marks nodata (filtered by F1 downstream, never here —
+  * scan semantics match the reference, which reads raw pixels and strips
+  * NaN as a separate step). The aggregating modes pack tiles into input
+  * partitions ([[RasterSource.pack]]).
   *
   * Pixel DECODE (round 8): REAL for every URI the cluster can open —
   * [[GeoTiff.TiffBlocks]], a pure-JVM TIFF/BigTIFF band-1 decoder
@@ -39,25 +46,25 @@ import org.apache.spark.util.SerializableConfiguration
   *     .option("tiles", "s3://b/a.tif,s3://b/b.tif")   // inline list, OR:
   *     .option("tileListPath", "s3://b/tiles.txt")     // one URI per line
   *     .option("pixelsPerTile", "40000")   // stub band size
-  *     .option("mode", "values")           // values (default) | stats | hist
+  *     .option("mode", "values")           // values (default) | codes | stats | hist
   *     .option("overview", "1")            // COG pyramid IFD (default 0 = full)
   *     .load()
   * }}}
   *
-  * `mode=stats` and `mode=hist` aggregate per tile INSIDE the reader (the
-  * reference's own worker functions as scan modes — see
-  * [[RasterAggScans]]); `hist` additionally takes
-  * `binLo`/`binHi`/`binMethod`/`binOffset`/`legacyLogOffset100`.
+  * `mode=codes`, `mode=stats` and `mode=hist` aggregate INSIDE the reader
+  * (the reference's own worker functions as scan modes — see
+  * [[RasterAggScans]]); `codes` takes `binMethod`/`binOffset`/
+  * `legacyLogOffset100`, `hist` additionally `binLo`/`binHi`.
   *
   * `tileListPath` is the scale path for large tile sets (the reference's
   * bio_*_list.txt shape, S4): the list file is read once at PLAN time
-  * inside `planInputPartitions` via the Hadoop filesystem — no Spark job,
-  * no driver-side collect-and-comma-join, no multi-MB option string.
+  * inside `planInputPartitions` through the session's Hadoop
+  * configuration — no Spark job, no driver-side collect-and-comma-join, no
+  * multi-MB option string.
   *
-  * Scale: partition-per-tile is the reference's own parallelism unit
-  * (Pool.map over tiles, main.py:93-98); 248 tiles × 40000² px stream
-  * through without ever materializing a tile in memory (the reader is an
-  * iterator, unlike the reference's full-band `np.ndarray`).
+  * Scale: 248 tiles × 40000² px stream through without ever materializing
+  * a tile in memory (the reader is an iterator, unlike the reference's
+  * full-band `np.ndarray`).
   */
 class RasterSource extends TableProvider {
 
@@ -81,36 +88,97 @@ object RasterSource {
     Seq(StructField("tile_uri", StringType, nullable = false),
       StructField("value", DoubleType, nullable = false)))
 
-  /** `mode=stats` schema: one aggregated row per tile (pass 1 pushed). */
+  /** `mode=stats` schema: one aggregated row per tile. */
   val StatsSchema: StructType = StructType(
     Seq(StructField("tile_uri", StringType, nullable = false),
       StructField("min_value", DoubleType, nullable = false),
       StructField("max_value", DoubleType, nullable = false),
       StructField("n_valid", LongType, nullable = false)))
 
-  /** `mode=hist` schema: sparse per-tile bin counts (pass 2 pushed). */
+  /** `mode=hist` schema: sparse per-tile bin counts. */
   val HistSchema: StructType = StructType(
     Seq(StructField("tile_uri", StringType, nullable = false),
       StructField("code", IntegerType, nullable = false),
       StructField("cnt", LongType, nullable = false)))
 
+  /** `mode=codes` schema: a partition's sparse `(code, cnt)` rows, then
+    * its one stats row; each row leaves the other kind's columns null.
+    */
+  val CodesSchema: StructType = StructType(
+    Seq(StructField("code", IntegerType),
+      StructField("cnt", LongType),
+      StructField("min_value", DoubleType),
+      StructField("max_value", DoubleType),
+      StructField("n_valid", LongType),
+      StructField("codes_valid", BooleanType)))
+
   def schemaFor(mode: String): StructType = mode match {
     case "values" => Schema
+    case "codes"  => CodesSchema
     case "stats"  => StatsSchema
     case "hist"   => HistSchema
     case other    => throw new IllegalArgumentException(s"Unknown raster scan mode $other")
   }
 
   /** Read a one-URI-per-line tile list through the Hadoop filesystem (any
-    * scheme the cluster knows: file://, s3a://, hdfs://). Plan-time only.
+    * scheme the cluster knows: file://, s3a://, hdfs://). Plan-time only;
+    * `conf` is the session's (`sessionState.newHadoopConf()`), the one the
+    * readers open tiles with.
     */
-  def readTileList(path: String): Array[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
+  def readTileList(path: String, conf: Configuration): Array[String] = {
+    val p = new Path(path)
     val in = p.getFileSystem(conf).open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
       .map(_.trim).filter(_.nonEmpty).toArray
     finally in.close()
+  }
+
+  /** Tiles packed into input partitions by Spark's own file rule
+    * (`FilePartition.maxSplitBytes` and `getFilePartitions`): a split size
+    * of `min(maxPartitionBytes, max(openCostInBytes, bytes / minPartitionNum))`,
+    * where each tile weighs its length plus `openCostInBytes`, then next fit
+    * over the tiles by decreasing length. One pack is one task: the
+    * aggregating modes ship one sparse vector per pack, not per tile.
+    */
+  def pack(tiles: Array[String], spark: SparkSession, conf: Configuration): Array[Seq[String]] = {
+    val sql = spark.sessionState.conf
+    val openCost = sql.filesOpenCostInBytes
+    val minPartitions = sql.filesMinPartitionNum
+      .orElse(sql.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM))
+      .getOrElse(spark.sparkContext.defaultParallelism)
+    val sizes = tileSizes(tiles, conf)
+    val split = math.min(
+      sql.filesMaxPartitionBytes,
+      math.max(openCost, sizes.map(_ + openCost).sum / minPartitions))
+    val packs = Array.newBuilder[Seq[String]]
+    var pack = Vector.empty[String]
+    var size = 0L
+    for (i <- tiles.indices.sortBy(i => -sizes(i))) {
+      if (pack.nonEmpty && size + sizes(i) > split) {
+        packs += pack
+        pack = Vector.empty
+        size = 0L
+      }
+      size += sizes(i) + openCost
+      pack :+= tiles(i)
+    }
+    if (pack.nonEmpty) packs += pack
+    packs.result()
+  }
+
+  /** Each tile's length in bytes, from one listing per distinct parent
+    * directory. A stub-scheme tile, or one whose directory cannot be
+    * listed, weighs 0: opening it reports the error, not the planner.
+    */
+  private def tileSizes(tiles: Array[String], conf: Configuration): Array[Long] = {
+    val paths = tiles.map(t => if (RasterDecode.isStubUri(t)) None else Some(new Path(t)))
+    val lengths: Map[Path, Map[String, Long]] =
+      paths.flatten.flatMap(p => Option(p.getParent)).distinct.map { dir =>
+        dir -> (try dir.getFileSystem(conf).listStatus(dir).map(s => s.getPath.getName -> s.getLen).toMap
+        catch { case _: java.io.IOException => Map.empty[String, Long] })
+      }.toMap
+    paths.map(_.fold(0L)(p =>
+      Option(p.getParent).flatMap(lengths.get).flatMap(_.get(p.getName)).getOrElse(0L)))
   }
 }
 
@@ -132,8 +200,8 @@ final class RasterTable(
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new RasterScanBuilder(
-      () =>
-        if (tileListPath.nonEmpty) RasterSource.readTileList(tileListPath)
+      conf =>
+        if (tileListPath.nonEmpty) RasterSource.readTileList(tileListPath, conf)
         else tiles.split(",").filter(_.nonEmpty),
       pixelsPerTile,
       mode,
@@ -141,7 +209,7 @@ final class RasterTable(
 }
 
 final class RasterScanBuilder(
-    tiles: () => Array[String],
+    tiles: Configuration => Array[String],
     pixelsPerTile: Long,
     mode: String,
     properties: util.Map[String, String])
@@ -159,7 +227,7 @@ final class RasterScanBuilder(
 }
 
 final class RasterScan(
-    tiles: () => Array[String],
+    tiles: Configuration => Array[String],
     pixelsPerTile: Long,
     required: StructType,
     mode: String,
@@ -172,7 +240,12 @@ final class RasterScan(
     // overview n reads the n-th IFD of a cloud-optimized GeoTIFF — the
     // 4^-n-pixel approximate scan path (stub URIs ignore it)
     val overview = Option(properties.get("overview")).map(_.toInt).getOrElse(0)
-    tiles().map(t => RasterInputPartition(t, pixelsPerTile, overview): InputPartition)
+    val spark = SparkSession.active
+    val conf = spark.sessionState.newHadoopConf()
+    val uris = tiles(conf)
+    // values mode is data-bound: one tile per task spreads its rows
+    val packs = if (mode == "values") uris.map(Seq(_)) else RasterSource.pack(uris, spark, conf)
+    packs.map(p => RasterInputPartition(p, pixelsPerTile, overview): InputPartition)
   }
 
   /** The session's Hadoop configuration goes to the executors once per
@@ -180,35 +253,34 @@ final class RasterScan(
     * building a configuration of its own.
     */
   override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = org.apache.spark.sql.SparkSession.active
+    val spark = SparkSession.active
     val conf = spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    val method = BinMethod.parse(Option(properties.get("binMethod")).getOrElse("linear"))
+    val offset = Option(properties.get("binOffset")).map(_.toDouble).getOrElse(0.0)
+    val legacy = Option(properties.get("legacyLogOffset100")).exists(_.toBoolean)
     mode match {
       case "values" => new RasterReaderFactory(required, conf)
+      case "codes"  => new RasterCodesReaderFactory(required, method, offset, legacy, conf)
       case "stats"  => new RasterStatsReaderFactory(required, conf)
       case "hist" =>
-        new RasterHistReaderFactory(
-          required,
-          graft.core.BinSpec(
-            lo = properties.get("binLo").toInt,
-            hi = properties.get("binHi").toInt,
-            offset = Option(properties.get("binOffset")).map(_.toDouble).getOrElse(0.0),
-            method = graft.core.BinMethod.parse(
-              Option(properties.get("binMethod")).getOrElse("linear"))),
-          Option(properties.get("legacyLogOffset100")).exists(_.toBoolean),
-          conf)
+        val spec = BinSpec(properties.get("binLo").toInt, properties.get("binHi").toInt, offset, method)
+        new RasterHistReaderFactory(required, spec, legacy, conf)
     }
   }
 }
 
-final case class RasterInputPartition(tileUri: String, pixels: Long, overview: Int = 0)
+/** The tiles one task reads: one in `mode=values`, a pack otherwise. */
+final case class RasterInputPartition(tiles: Seq[String], pixels: Long, overview: Int = 0)
     extends InputPartition
 
 final class RasterReaderFactory(required: StructType, conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[RasterInputPartition]
-    new RasterPartitionReader(p.tileUri, p.pixels, required, p.overview, conf.value.value)
+    new TileChainReader(
+      p.tiles,
+      new RasterPartitionReader(_, p.pixels, required, p.overview, conf.value.value))
   }
 }
 

@@ -4,12 +4,12 @@ import graft.sources.raster.GeoTiff
 
 /** Single-core decode throughput of the pure-JVM GeoTIFF reader, per
   * compression, on a synthetic 2048×2048 band (ImageIO-encoded uint8;
-  * builder-encoded float32 deflate). The raster scan parallelizes
-  * partition-per-tile, so per-core decode rate × cores is the scan bound.
+  * builder-encoded float32 deflate). The raster scan parallelizes by
+  * tile, so per-core decode rate × cores is the scan bound.
   * Usage: runMain graft.tools.GeoTiffBench
   *
   * `runMain graft.tools.GeoTiffBench ref248` instead runs the round-9
-  * full-reference-shape benchmark: the two-pass histogram pipeline over
+  * full-reference-shape benchmark: the pushed histogram pipeline over
   * 248 locally-synthesized tiles (the reference's own tile-list length,
   * csv/bio_intact_list.txt:1-248) at 4096×4096 = 16.8 Mpx each, mixed
   * uint8 LZW tiled / uint8 Deflate strips / float32 Deflate predictor-3

@@ -72,9 +72,13 @@ class TextSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
       .unionAll(edges)
     val native = graft.functions.GraftFunctions.winnowFp(col("text"))
-    val hof = TextOps.winnowFingerprints(col("text"))
-    val diff = docs
-      .select(col("doc_id"), native.as("a"), hof.as("b"))
+    // the HOF twin's hash stage is materialized before its minima stage:
+    // evaluated as one nested column it is O(len²·k) per row
+    val hashed = docs
+      .select(col("doc_id"), col("text"), native.as("a"), TextOps.winnowHashes(col("text")).as("h"))
+      .localCheckpoint()
+    val diff = hashed
+      .select(col("a"), TextOps.winnowMinima(col("text"), col("h")).as("b"))
       .filter(not(col("a") <=> col("b")))
       .count()
     assert(diff == 0L)

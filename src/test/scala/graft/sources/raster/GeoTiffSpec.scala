@@ -23,6 +23,7 @@ import javax.imageio.stream.MemoryCacheImageOutputStream
   * than any encoder implementation.
   */
 class GeoTiffSpec extends graft.SparkSpec {
+  import GeoTiffSpec.buildTiff
 
   // ---- helpers -------------------------------------------------------
 
@@ -80,237 +81,6 @@ class GeoTiffSpec extends graft.SparkSpec {
     ios.flush()
     writer.dispose()
     bos.toByteArray
-  }
-
-  private def deflate(b: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    d.setInput(b); d.finish()
-    val out = new ByteArrayOutputStream()
-    val buf = new Array[Byte](4096)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
-
-  /** Byte-level TIFF builder: classic/BigTIFF, LE/BE, strips or tiles,
-    * compression none/deflate, predictor 1/2/3, any sample type, chunky or
-    * planar multi-sample (`pix` holds band 0; `laneGen` synthesizes lanes
-    * 1..spp-1 from the band-0 value — the decoder must ignore them).
-    */
-  private def buildTiff(
-      pix: Array[Double],
-      w: Int,
-      h: Int,
-      bits: Int,
-      fmt: Int, // 1 uint, 2 int, 3 float
-      le: Boolean = true,
-      big: Boolean = false,
-      comp: Int = 1, // 1 none, 8 deflate
-      predictor: Int = 1,
-      rowsPerStrip: Int = 0, // 0 → one strip of h rows
-      tile: Option[(Int, Int)] = None,
-      nodata: Option[String] = None,
-      spp: Int = 1,
-      planar: Int = 1,
-      laneGen: (Double, Int) => Double = (v, lane) => v + lane): Array[Byte] = {
-    val bytesPer = bits / 8
-    val order = if (le) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
-
-    def putSample(bb: ByteBuffer, v: Double): Unit = (fmt, bits) match {
-      case (3, 32) => bb.putFloat(v.toFloat)
-      case (3, 64) => bb.putDouble(v)
-      case (_, 8)  => bb.put(v.toLong.toByte)
-      case (_, 16) => bb.putShort(v.toLong.toShort)
-      case (_, 32) => bb.putInt(v.toLong.toInt)
-      case (_, 64) => // two's-complement wrap so 2^63.. unsigned values encode
-        bb.putLong(new java.math.BigDecimal(v).toBigInteger.longValue)
-      case x => fail(s"unsupported builder shape $x")
-    }
-
-    // rows of SAMPLES (already interleaved for chunky) → block bytes,
-    // predictor applied with the given lane stride
-    def encodeBlock(rows: Array[Array[Double]], lanes: Int): Array[Byte] = {
-      val cols = rows.head.length
-      val bb = ByteBuffer.allocate(rows.length * cols * bytesPer).order(order)
-      if (predictor == 3) {
-        // serialize each row to BIG-endian value bytes, split into
-        // byte-significance planes, then horizontal byte differencing
-        for (row <- rows) {
-          val rb = ByteBuffer.allocate(cols * bytesPer).order(ByteOrder.BIG_ENDIAN)
-          row.foreach(v => putSample(rb, v))
-          val raw = rb.array()
-          val planes = new Array[Byte](raw.length)
-          for (i <- raw.indices)
-            planes((i % bytesPer) * cols + i / bytesPer) = raw(i)
-          for (i <- planes.length - 1 until 0 by -1)
-            planes(i) = (planes(i) - planes(i - 1)).toByte
-          bb.put(planes)
-        }
-      } else {
-        for (row <- rows) {
-          val vals =
-            if (predictor == 2)
-              row.indices.map(x =>
-                if (x < lanes) row(x) else diffMod(row(x), row(x - lanes))).toArray
-            else row
-          vals.foreach(v => putSample(bb, v))
-        }
-      }
-      val raw = bb.array()
-      if (comp == 8) deflate(raw) else raw
-    }
-    def diffMod(a: Double, b: Double): Double = bits match {
-      case 8  => (a.toLong.toByte - b.toLong.toByte).toByte.toDouble
-      case 16 => (a.toLong.toShort - b.toLong.toShort).toShort.toDouble
-      case 32 => (a.toLong.toInt - b.toLong.toInt).toDouble
-      case 64 => (a.toLong - b.toLong).toDouble
-    }
-
-    // assemble blocks
-    val (blockW, blockH, tiled) = tile match {
-      case Some((tw, th)) => (tw, th, true)
-      case None           => (w, if (rowsPerStrip > 0) rowsPerStrip else h, false)
-    }
-    def sampleAt(y: Int, x: Int, lane: Int): Double =
-      if (y < h && x < w) { // edge padding = 0
-        if (lane == 0) pix(y * w + x) else laneGen(pix(y * w + x), lane)
-      } else 0.0
-    // one plane's (or the chunky-interleaved) sample row for a block
-    def blockRows(x0: Int, y0: Int, rows: Int, plane: Int): Array[Array[Double]] =
-      Array.tabulate(rows) { ry =>
-        if (planar == 2) Array.tabulate(blockW)(rx => sampleAt(y0 + ry, x0 + rx, plane))
-        else Array.tabulate(blockW * spp)(i => sampleAt(y0 + ry, x0 + i / spp, i % spp))
-      }
-    val chunkyLanes = if (planar == 2) 1 else spp
-    val blocks = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    // planar=2: the full block grid of plane 0 first, then plane 1, ...
-    for (plane <- 0 until (if (planar == 2) spp else 1)) {
-      if (tiled) {
-        for {
-          ty <- 0 until (h + blockH - 1) / blockH
-          tx <- 0 until (w + blockW - 1) / blockW
-        } blocks += encodeBlock(
-          blockRows(tx * blockW, ty * blockH, blockH, plane), chunkyLanes)
-      } else {
-        for (sy <- 0 until (h + blockH - 1) / blockH) {
-          val rows = math.min(blockH, h - sy * blockH)
-          blocks += encodeBlock(blockRows(0, sy * blockH, rows, plane), chunkyLanes)
-        }
-      }
-    }
-
-    // serialize container
-    val out = new ByteArrayOutputStream()
-    def wr16(v: Int): Unit = {
-      val b = ByteBuffer.allocate(2).order(order); b.putShort(v.toShort); out.write(b.array())
-    }
-    def wr32(v: Long): Unit = {
-      val b = ByteBuffer.allocate(4).order(order); b.putInt(v.toInt); out.write(b.array())
-    }
-    def wr64(v: Long): Unit = {
-      val b = ByteBuffer.allocate(8).order(order); b.putLong(v); out.write(b.array())
-    }
-    // header
-    out.write((if (le) "II" else "MM").getBytes)
-    if (big) { wr16(43); wr16(8); wr16(0); wr64(0L) } // IFD offset patched later
-    else { wr16(42); wr32(0L) }
-    val headerLen = out.size()
-    // pixel blocks
-    val offsets = blocks.map { b => val o = out.size().toLong; out.write(b); o }
-    val counts = blocks.map(_.length.toLong)
-    // external value areas (classic TIFF: arrays > 4 bytes)
-    val inlineMax = if (big) 8 else 4
-    def externLongs(vs: Seq[Long], width: Int): Long = {
-      val o = out.size().toLong
-      vs.foreach(v => if (width == 8) wr64(v) else wr32(v))
-      o
-    }
-    val offW = if (big) 8 else 4
-    val (offType, offTypeW) = if (big) (16, 8) else (4, 4)
-    val offsetsPos =
-      if (offsets.length * offTypeW > inlineMax) Some(externLongs(offsets.toSeq, offTypeW)) else None
-    val countsPos =
-      if (counts.length * offTypeW > inlineMax) Some(externLongs(counts.toSeq, offTypeW)) else None
-    val nodataBytes = nodata.map(s => (s + "\u0000").getBytes("US-ASCII"))
-    val nodataPos = nodataBytes.flatMap { b =>
-      if (b.length > inlineMax) { val o = out.size().toLong; out.write(b); Some(o) } else None
-    }
-    // BitsPerSample: SHORT[spp] — external when it outgrows the inline slot
-    val bpsPos: Option[Long] =
-      if (spp * 2 > inlineMax) {
-        val o = out.size().toLong
-        (0 until spp).foreach(_ => wr16(bits))
-        Some(o)
-      } else None
-    // IFD
-    val ifdOffset = out.size().toLong
-    final case class E(tag: Int, typ: Int, count: Long, writeValue: () => Unit)
-    def scalarE(tag: Int, typ: Int, v: Long) = E(tag, typ, 1L, () => {
-      typ match {
-        case 3 => wr16(v.toInt); if (big) { wr16(0); wr32(0) } else wr16(0)
-        case 4 => wr32(v); if (big) wr32(0)
-        case 16 => wr64(v)
-      }
-    })
-    def arrE(tag: Int, vs: Seq[Long], pos: Option[Long]) = E(tag, offType, vs.length.toLong, () =>
-      pos match {
-        case Some(p) => if (big) wr64(p) else wr32(p)
-        case None => // inline
-          vs.foreach(v => if (big) wr64(v) else wr32(v))
-          val used = vs.length * offTypeW
-          (used until inlineMax by (if (big) 8 else 4)).foreach(_ => if (big) wr64(0) else wr32(0))
-          if (!big && used < 4 && vs.isEmpty) wr32(0)
-      })
-    val bpsE = E(258, 3, spp.toLong, () =>
-      bpsPos match {
-        case Some(p) => if (big) wr64(p) else wr32(p)
-        case None =>
-          (0 until spp).foreach(_ => wr16(bits))
-          (spp * 2 until inlineMax by 2).foreach(_ => wr16(0))
-      })
-    val entries = scala.collection.mutable.ArrayBuffer[E](
-      scalarE(256, if (big) 16 else 4, w.toLong),
-      scalarE(257, if (big) 16 else 4, h.toLong),
-      bpsE,
-      scalarE(259, 3, comp.toLong),
-      scalarE(262, 3, 1L), // BlackIsZero
-      scalarE(277, 3, spp.toLong),
-      scalarE(284, 3, planar.toLong),
-      scalarE(317, 3, predictor.toLong),
-      scalarE(339, 3, fmt.toLong))
-    if (tiled) {
-      entries += scalarE(322, 3, blockW.toLong)
-      entries += scalarE(323, 3, blockH.toLong)
-      entries += arrE(324, offsets.toSeq, offsetsPos)
-      entries += arrE(325, counts.toSeq, countsPos)
-    } else {
-      entries += arrE(273, offsets.toSeq, offsetsPos)
-      entries += scalarE(278, if (big) 16 else 4, blockH.toLong)
-      entries += arrE(279, counts.toSeq, countsPos)
-    }
-    nodataBytes.foreach { b =>
-      entries += E(42113, 2, b.length.toLong, () =>
-        nodataPos match {
-          case Some(p) => if (big) wr64(p) else wr32(p)
-          case None =>
-            out.write(b)
-            (b.length until inlineMax).foreach(_ => out.write(0))
-        })
-    }
-    val sorted = entries.sortBy(_.tag)
-    if (big) wr64(sorted.length.toLong) else wr16(sorted.length)
-    sorted.foreach { e =>
-      wr16(e.tag); wr16(e.typ)
-      if (big) wr64(e.count) else wr32(e.count)
-      e.writeValue()
-    }
-    if (big) wr64(0L) else wr32(0L) // next IFD
-    // patch header's IFD pointer
-    val bytes = out.toByteArray
-    val patch = ByteBuffer.wrap(bytes).order(order)
-    if (big) patch.putLong(8, ifdOffset) else patch.putInt(4, ifdOffset.toInt)
-    require(headerLen == (if (big) 16 else 8))
-    bytes
   }
 
   private def rnd(seed: Long, n: Int, lo: Int, hi: Int): Array[Int] = {
@@ -572,7 +342,7 @@ class GeoTiffSpec extends graft.SparkSpec {
 
     import graft.{HistogramConfig, HistogramRunner}
     val cfg = HistogramConfig(valueCol = "value")
-    // pass 1+2 pushed into the scan (stats/hist modes decode for real)
+    // binned inside the scan (mode=codes decodes for real)
     val pushed = HistogramRunner
       .runPushed(spark, listFile.toString, 0L, cfg)
       .collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
@@ -863,7 +633,9 @@ class GeoTiffSpec extends graft.SparkSpec {
         case (method, legacy) =>
           val spec = BinSpec.derive(a, b, method)
           val off = if (legacy) 100.0 else spec.offset
-          val want = values.filterNot(_.isNaN).foldLeft(Map.empty[Int, Long]) { (m, v) =>
+          // Spark's log is null for v + off <= 0: such a pixel has no log code
+          val coded = values.filterNot(v => v.isNaN || (method == BinMethod.Log && v + off <= 0))
+          val want = coded.foldLeft(Map.empty[Int, Long]) { (m, v) =>
             val c = method match {
               case BinMethod.Linear => (v * 100).toInt
               case BinMethod.Log    => (math.log(v + off) * 1000).toInt
@@ -958,5 +730,239 @@ class GeoTiffSpec extends graft.SparkSpec {
       assert(pushed == values, s"$name ${method.name}: pushed and values paths differ")
       assert(pushed == want, s"$name ${method.name}")
     }
+  }
+}
+
+object GeoTiffSpec {
+
+  private def deflate(b: Array[Byte]): Array[Byte] = {
+    val d = new java.util.zip.Deflater()
+    d.setInput(b); d.finish()
+    val out = new ByteArrayOutputStream()
+    val buf = new Array[Byte](4096)
+    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+    d.end()
+    out.toByteArray
+  }
+
+  /** Byte-level TIFF builder: classic/BigTIFF, LE/BE, strips or tiles,
+    * compression none/deflate, predictor 1/2/3, any sample type, chunky or
+    * planar multi-sample (`pix` holds band 0; `laneGen` synthesizes lanes
+    * 1..spp-1 from the band-0 value — the decoder must ignore them).
+    */
+  def buildTiff(
+      pix: Array[Double],
+      w: Int,
+      h: Int,
+      bits: Int,
+      fmt: Int, // 1 uint, 2 int, 3 float
+      le: Boolean = true,
+      big: Boolean = false,
+      comp: Int = 1, // 1 none, 8 deflate
+      predictor: Int = 1,
+      rowsPerStrip: Int = 0, // 0 → one strip of h rows
+      tile: Option[(Int, Int)] = None,
+      nodata: Option[String] = None,
+      spp: Int = 1,
+      planar: Int = 1,
+      laneGen: (Double, Int) => Double = (v, lane) => v + lane): Array[Byte] = {
+    val bytesPer = bits / 8
+    val order = if (le) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
+
+    def putSample(bb: ByteBuffer, v: Double): Unit = (fmt, bits) match {
+      case (3, 32) => bb.putFloat(v.toFloat)
+      case (3, 64) => bb.putDouble(v)
+      case (_, 8)  => bb.put(v.toLong.toByte)
+      case (_, 16) => bb.putShort(v.toLong.toShort)
+      case (_, 32) => bb.putInt(v.toLong.toInt)
+      case (_, 64) => // two's-complement wrap so 2^63.. unsigned values encode
+        bb.putLong(new java.math.BigDecimal(v).toBigInteger.longValue)
+      case x => throw new IllegalArgumentException(s"unsupported builder shape $x")
+    }
+
+    // rows of SAMPLES (already interleaved for chunky) → block bytes,
+    // predictor applied with the given lane stride
+    def encodeBlock(rows: Array[Array[Double]], lanes: Int): Array[Byte] = {
+      val cols = rows.head.length
+      val bb = ByteBuffer.allocate(rows.length * cols * bytesPer).order(order)
+      if (predictor == 3) {
+        // serialize each row to BIG-endian value bytes, split into
+        // byte-significance planes, then horizontal byte differencing
+        for (row <- rows) {
+          val rb = ByteBuffer.allocate(cols * bytesPer).order(ByteOrder.BIG_ENDIAN)
+          row.foreach(v => putSample(rb, v))
+          val raw = rb.array()
+          val planes = new Array[Byte](raw.length)
+          for (i <- raw.indices)
+            planes((i % bytesPer) * cols + i / bytesPer) = raw(i)
+          for (i <- planes.length - 1 until 0 by -1)
+            planes(i) = (planes(i) - planes(i - 1)).toByte
+          bb.put(planes)
+        }
+      } else {
+        for (row <- rows) {
+          val vals =
+            if (predictor == 2)
+              row.indices.map(x =>
+                if (x < lanes) row(x) else diffMod(row(x), row(x - lanes))).toArray
+            else row
+          vals.foreach(v => putSample(bb, v))
+        }
+      }
+      val raw = bb.array()
+      if (comp == 8) deflate(raw) else raw
+    }
+    def diffMod(a: Double, b: Double): Double = bits match {
+      case 8  => (a.toLong.toByte - b.toLong.toByte).toByte.toDouble
+      case 16 => (a.toLong.toShort - b.toLong.toShort).toShort.toDouble
+      case 32 => (a.toLong.toInt - b.toLong.toInt).toDouble
+      case 64 => (a.toLong - b.toLong).toDouble
+    }
+
+    // assemble blocks
+    val (blockW, blockH, tiled) = tile match {
+      case Some((tw, th)) => (tw, th, true)
+      case None           => (w, if (rowsPerStrip > 0) rowsPerStrip else h, false)
+    }
+    def sampleAt(y: Int, x: Int, lane: Int): Double =
+      if (y < h && x < w) { // edge padding = 0
+        if (lane == 0) pix(y * w + x) else laneGen(pix(y * w + x), lane)
+      } else 0.0
+    // one plane's (or the chunky-interleaved) sample row for a block
+    def blockRows(x0: Int, y0: Int, rows: Int, plane: Int): Array[Array[Double]] =
+      Array.tabulate(rows) { ry =>
+        if (planar == 2) Array.tabulate(blockW)(rx => sampleAt(y0 + ry, x0 + rx, plane))
+        else Array.tabulate(blockW * spp)(i => sampleAt(y0 + ry, x0 + i / spp, i % spp))
+      }
+    val chunkyLanes = if (planar == 2) 1 else spp
+    val blocks = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+    // planar=2: the full block grid of plane 0 first, then plane 1, ...
+    for (plane <- 0 until (if (planar == 2) spp else 1)) {
+      if (tiled) {
+        for {
+          ty <- 0 until (h + blockH - 1) / blockH
+          tx <- 0 until (w + blockW - 1) / blockW
+        } blocks += encodeBlock(
+          blockRows(tx * blockW, ty * blockH, blockH, plane), chunkyLanes)
+      } else {
+        for (sy <- 0 until (h + blockH - 1) / blockH) {
+          val rows = math.min(blockH, h - sy * blockH)
+          blocks += encodeBlock(blockRows(0, sy * blockH, rows, plane), chunkyLanes)
+        }
+      }
+    }
+
+    // serialize container
+    val out = new ByteArrayOutputStream()
+    def wr16(v: Int): Unit = {
+      val b = ByteBuffer.allocate(2).order(order); b.putShort(v.toShort); out.write(b.array())
+    }
+    def wr32(v: Long): Unit = {
+      val b = ByteBuffer.allocate(4).order(order); b.putInt(v.toInt); out.write(b.array())
+    }
+    def wr64(v: Long): Unit = {
+      val b = ByteBuffer.allocate(8).order(order); b.putLong(v); out.write(b.array())
+    }
+    // header
+    out.write((if (le) "II" else "MM").getBytes)
+    if (big) { wr16(43); wr16(8); wr16(0); wr64(0L) } // IFD offset patched later
+    else { wr16(42); wr32(0L) }
+    val headerLen = out.size()
+    // pixel blocks
+    val offsets = blocks.map { b => val o = out.size().toLong; out.write(b); o }
+    val counts = blocks.map(_.length.toLong)
+    // external value areas (classic TIFF: arrays > 4 bytes)
+    val inlineMax = if (big) 8 else 4
+    def externLongs(vs: Seq[Long], width: Int): Long = {
+      val o = out.size().toLong
+      vs.foreach(v => if (width == 8) wr64(v) else wr32(v))
+      o
+    }
+    val offW = if (big) 8 else 4
+    val (offType, offTypeW) = if (big) (16, 8) else (4, 4)
+    val offsetsPos =
+      if (offsets.length * offTypeW > inlineMax) Some(externLongs(offsets.toSeq, offTypeW)) else None
+    val countsPos =
+      if (counts.length * offTypeW > inlineMax) Some(externLongs(counts.toSeq, offTypeW)) else None
+    val nodataBytes = nodata.map(s => (s + "\u0000").getBytes("US-ASCII"))
+    val nodataPos = nodataBytes.flatMap { b =>
+      if (b.length > inlineMax) { val o = out.size().toLong; out.write(b); Some(o) } else None
+    }
+    // BitsPerSample: SHORT[spp] — external when it outgrows the inline slot
+    val bpsPos: Option[Long] =
+      if (spp * 2 > inlineMax) {
+        val o = out.size().toLong
+        (0 until spp).foreach(_ => wr16(bits))
+        Some(o)
+      } else None
+    // IFD
+    val ifdOffset = out.size().toLong
+    final case class E(tag: Int, typ: Int, count: Long, writeValue: () => Unit)
+    def scalarE(tag: Int, typ: Int, v: Long) = E(tag, typ, 1L, () => {
+      typ match {
+        case 3 => wr16(v.toInt); if (big) { wr16(0); wr32(0) } else wr16(0)
+        case 4 => wr32(v); if (big) wr32(0)
+        case 16 => wr64(v)
+      }
+    })
+    def arrE(tag: Int, vs: Seq[Long], pos: Option[Long]) = E(tag, offType, vs.length.toLong, () =>
+      pos match {
+        case Some(p) => if (big) wr64(p) else wr32(p)
+        case None => // inline
+          vs.foreach(v => if (big) wr64(v) else wr32(v))
+          val used = vs.length * offTypeW
+          (used until inlineMax by (if (big) 8 else 4)).foreach(_ => if (big) wr64(0) else wr32(0))
+          if (!big && used < 4 && vs.isEmpty) wr32(0)
+      })
+    val bpsE = E(258, 3, spp.toLong, () =>
+      bpsPos match {
+        case Some(p) => if (big) wr64(p) else wr32(p)
+        case None =>
+          (0 until spp).foreach(_ => wr16(bits))
+          (spp * 2 until inlineMax by 2).foreach(_ => wr16(0))
+      })
+    val entries = scala.collection.mutable.ArrayBuffer[E](
+      scalarE(256, if (big) 16 else 4, w.toLong),
+      scalarE(257, if (big) 16 else 4, h.toLong),
+      bpsE,
+      scalarE(259, 3, comp.toLong),
+      scalarE(262, 3, 1L), // BlackIsZero
+      scalarE(277, 3, spp.toLong),
+      scalarE(284, 3, planar.toLong),
+      scalarE(317, 3, predictor.toLong),
+      scalarE(339, 3, fmt.toLong))
+    if (tiled) {
+      entries += scalarE(322, 3, blockW.toLong)
+      entries += scalarE(323, 3, blockH.toLong)
+      entries += arrE(324, offsets.toSeq, offsetsPos)
+      entries += arrE(325, counts.toSeq, countsPos)
+    } else {
+      entries += arrE(273, offsets.toSeq, offsetsPos)
+      entries += scalarE(278, if (big) 16 else 4, blockH.toLong)
+      entries += arrE(279, counts.toSeq, countsPos)
+    }
+    nodataBytes.foreach { b =>
+      entries += E(42113, 2, b.length.toLong, () =>
+        nodataPos match {
+          case Some(p) => if (big) wr64(p) else wr32(p)
+          case None =>
+            out.write(b)
+            (b.length until inlineMax).foreach(_ => out.write(0))
+        })
+    }
+    val sorted = entries.sortBy(_.tag)
+    if (big) wr64(sorted.length.toLong) else wr16(sorted.length)
+    sorted.foreach { e =>
+      wr16(e.tag); wr16(e.typ)
+      if (big) wr64(e.count) else wr32(e.count)
+      e.writeValue()
+    }
+    if (big) wr64(0L) else wr32(0L) // next IFD
+    // patch header's IFD pointer
+    val bytes = out.toByteArray
+    val patch = ByteBuffer.wrap(bytes).order(order)
+    if (big) patch.putLong(8, ifdOffset) else patch.putInt(4, ifdOffset.toInt)
+    require(headerLen == (if (big) 16 else 8))
+    bytes
   }
 }
