@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.{BinMethod, BinSpec}
 import graft.operators.{HistogramOps, PercentileOps}
+import graft.sources.Tables
 
 /** The reference's CLI surface (E3 — reference: compute_histogram/main.py:17-57,
   * README.md:22-31) as a config object + runner.
@@ -248,7 +249,8 @@ object HistogramRunner {
   }
 
   /** The CLI body against a given session (spec-driveable). Returns the
-    * written relation (stats row for `--minmax_only`, else the histogram).
+    * result as a local relation (stats row for `--minmax_only`, else the
+    * written histogram), so reading it starts no scan.
     * A `.txt` tile list takes the pushed scan unless `SPARK_GRAFT_PUSHED=0`.
     */
   def runCli(spark: SparkSession, cli: CliArgs): DataFrame =
@@ -297,22 +299,21 @@ object HistogramRunner {
               .option("tileListPath", path)
               .option("pixelsPerTile", pixels.toString)
               .load()
-          } else spark.read.parquet(path)
+          } else Tables.parquet(spark, path)
         run(source, cli.cfg)
       }
-    if (cli.cfg.minmaxOnly) {
-      val row = histo0.head()
+    // one stats row or at most `bins` rows, held on the driver: the CSV
+    // write, the bin count and the caller's own reads then run no scan
+    // again (the pushed histogram is local already)
+    val rows = histo0.collect()
+    val held = spark.createDataFrame(java.util.Arrays.asList(rows: _*), histo0.schema)
+    if (cli.cfg.minmaxOnly)
       // the reference's click.echo surface (main.py:51-52)
-      println(s"MIN_VALUE=${row.getDouble(0)} MAX_VALUE=${row.getDouble(1)}")
-      histo0
-    } else {
-      // at most `bins` rows, held on the driver: the CSV write and the bin
-      // count then run no scan again (the pushed histogram is local already)
-      val rows = histo0.collect()
-      val histo = spark.createDataFrame(java.util.Arrays.asList(rows: _*), histo0.schema)
-      HistogramOps.writeCsv(histo, cli.outDir)
+      println(s"MIN_VALUE=${rows.head.getDouble(0)} MAX_VALUE=${rows.head.getDouble(1)}")
+    else {
+      HistogramOps.writeCsv(held, cli.outDir)
       println(s"HISTOGRAM_BINS=${rows.length} OUT=${cli.outDir}")
-      histo
     }
+    held
   }
 }

@@ -180,20 +180,11 @@ object DedupOps {
     * listing is already cached by the analyzed relation, so this is a
     * driver-memory walk, not an object-store LIST per call.
     */
-  private def dataVersion(df: DataFrame): Long = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val files: Seq[(String, Long, Long)] = df.queryExecution.analyzed.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          fs.location.listFiles(Nil, Nil).flatMap(_.files)
-            .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
-        case _ => Seq.empty[(String, Long, Long)]
+  private def dataVersion(df: DataFrame): Long =
+    graft.sources.Tables.fileStamps(df.queryExecution.analyzed)
+      .foldLeft(1125899906842597L) { case (h, (p, len, mt)) =>
+        ((h * 31 + p.hashCode) * 31 + len) * 31 + mt
       }
-    }.flatten.sortBy(t => (t._1, t._2, t._3))
-    files.foldLeft(1125899906842597L) { case (h, (p, len, mt)) =>
-      ((h * 31 + p.hashCode) * 31 + len) * 31 + mt
-    }
-  }
 
   /** Memoize a bounded driver-side value derived from `source` (session
     * lifecycle — evicted by [[releaseAllCaches]]). The compute runs OUTSIDE

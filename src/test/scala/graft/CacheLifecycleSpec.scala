@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 import graft.operators.{DedupOps, ProfileOps, SimilarityOps}
@@ -54,6 +55,28 @@ class CacheLifecycleSpec extends SparkSpec {
     assert(DedupOps.sessionValue(df.filter(col("a") > 0), "lifecycle-test") { 43 } == 43)
     DedupOps.releaseAllCaches() // full release evicts
     assert(get() == 2, "full release must force recompute")
+  }
+
+  test("a query on a second load of a cached table plans an in-memory scan") {
+    val cached = Tables.orders(spark, TestSpark.sf0001).cache()
+    try {
+      cached.count()
+      val q = Tables.orders(spark, TestSpark.sf0001).groupBy(col("o_orderstatus")).count()
+      assert(q.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }.nonEmpty,
+        q.queryExecution.withCachedData.treeString)
+      assert(q.collect().map(_.getLong(1)).sum == cached.count())
+    } finally cached.unpersist(blocking = true)
+  }
+
+  test("a self-join of two loads of one table resolves its columns unambiguously") {
+    val a = Tables.nation(spark, TestSpark.sf0001)
+    val b = Tables.nation(spark, TestSpark.sf0001)
+    val pairs = a.join(b, a("n_regionkey") === b("n_regionkey") && a("n_nationkey") =!= b("n_nationkey"))
+      .select(a("n_nationkey"), b("n_nationkey"), a("n_regionkey"), b("n_regionkey"))
+      .as[(Long, Long, Long, Long)].collect()
+    val perRegion = a.groupBy(col("n_regionkey")).count().as[(Long, Long)].collect()
+    assert(pairs.length.toLong == perRegion.map { case (_, n) => n * (n - 1) }.sum)
+    assert(pairs.forall { case (l, r, lr, rr) => l != r && lr == rr })
   }
 
   test("minhashLsh rejects a partial trailing band (silent recall loss)") {

@@ -66,7 +66,8 @@ class PushedHistogramSpec extends graft.SparkSpec {
   private var outs = 0
 
   /** `runCli` over `tileList`: its `histogram.csv` (empty for
-    * `--minmax_only`), the returned rows and the raster scans it ran.
+    * `--minmax_only`), the returned rows and the raster scans it ran,
+    * collecting the returned relation included.
     */
   private def cli(tileList: String, cfg: HistogramConfig, pushed: Boolean): (String, Seq[Row], Int) = {
     outs += 1
@@ -74,12 +75,13 @@ class PushedHistogramSpec extends graft.SparkSpec {
     ListenerBusDrain(spark.sparkContext)
     scans.set(0)
     val written = HistogramRunner.runCli(spark, HistogramRunner.CliArgs(tileList, out.toString, 4, cfg), pushed)
+    val rows = written.collect().toSeq
     ListenerBusDrain(spark.sparkContext)
     val n = scans.get
     val csv =
       if (cfg.minmaxOnly) ""
       else new String(Files.readAllBytes(out.resolve("histogram.csv")), "UTF-8")
-    (csv, written.collect().toSeq, n)
+    (csv, rows, n)
   }
 
   test("one scan: runCli pushed writes the values path's histogram.csv for every spec") {
@@ -105,11 +107,13 @@ class PushedHistogramSpec extends graft.SparkSpec {
         RouteLog.reset()
         val (csv, rows, n) = cli(tileList, c, pushed = true)
         val secondPass = RouteLog.fired("histogramSecondPass")
-        val (valuesCsv, valuesRows, _) = cli(tileList, c, pushed = false)
+        val (valuesCsv, valuesRows, valuesScans) = cli(tileList, c, pushed = false)
         assert(csv == valuesCsv, s"$name: histogram.csv differs from the values path's")
         assert(rows == valuesRows, s"$name: returned rows differ from the values path's")
         assert(rows.nonEmpty, name)
         assert(n == wantScans, s"$name: $n raster scans")
+        // the stats row comes back held: reading it scans no tile again
+        if (c.minmaxOnly) assert(valuesScans == 1, s"$name: $valuesScans raster scans on the values path")
         assert(secondPass == (wantScans == 2), s"$name: ${RouteLog.recent()}")
       }
     finally spark.sparkContext.removeSparkListener(scanCounter)
