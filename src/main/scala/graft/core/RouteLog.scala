@@ -7,7 +7,8 @@ import org.slf4j.LoggerFactory
 /** Runtime signal for size-route decisions (round-12 advice: a routed
   * operator must not silently change contract). Every scale route —
   * [[graft.operators.SimilarityOps.nearDupPairs]]'s exact→LSH switch,
-  * [[graft.operators.KMeansOps.fitCentroids]]'s full→sampled-fit switch —
+  * [[graft.operators.KMeansOps.fitCentroids]]'s full→sampled-fit switch,
+  * decided from the row count its one training collect returns —
   * announces itself here: once to the slf4j log (WARN for contract
   * changes like lossy LSH output, INFO for exact-result routes like the
   * sampled fit), and once to an in-memory ring that tests and callers can

@@ -5,13 +5,16 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{DedupOps, KMeansOps}
 
-/** One focused datapoint for the round-13 sampled-fit route: codebook
-  * training cost at 128k vectors (ABOVE the default 10⁵ ceiling, so the
-  * DEFAULT config routes — no forced threshold) with a production-ish
-  * k=64, full fit vs routed fit. The EmbedScaleStress k=32 points at
-  * ≤32k vectors are job-overhead-bound (Lloyd rounds cost ~0.5 s of
-  * scheduling regardless of compute); this is the scale where the
-  * O(n·k·d·iters) term actually shows.
+/** One focused datapoint for the sampled-fit route: codebook training
+  * cost at 512k vectors (ABOVE the default 10⁵ ceiling, so the DEFAULT
+  * config routes — no forced threshold) with a production-ish k=64, full
+  * fit vs routed fit. A fit is one bounded collect of the training set
+  * plus the exact Lloyd fold on the driver (`KMeansOps.lloyd`, chunked
+  * over the driver's cores): the routed fit collects and folds the
+  * ~16k-vector hash sample, the forced full fit all 512k vectors. This is
+  * the scale where the O(n·k·d·iters) fold term shows; at ≤32k vectors
+  * (the EmbedScaleStress k=32 points) a fit is one job plus milliseconds
+  * of fold.
   *
   * Usage: runMain graft.tools.FitCostPoint
   */
@@ -36,10 +39,9 @@ object FitCostPoint {
     spark.sparkContext.setLogLevel("ERROR")
     graft.SparkEntry.tune(spark)
     val base = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.1")
-    // 2k -> 512k vectors: the plan-stats estimate divides file bytes by the
-    // 64-double row layout while the parquet stores compressed float32, so
-    // it undercounts ~3x - the documented conservative slack; 512k is where
-    // the DEFAULT gate (estimate > 1e5) genuinely fires.
+    // 2k -> 512k vectors: the route reads the row count of the training
+    // collect, so anything over 1e5 routes; 512k keeps the point
+    // comparable with the rounds that gated on the ~3x-low plan estimate.
     val factor = 256
     val path = s"target/stress/emb_x$factor.parquet"
     if (!new java.io.File(path).exists()) {
@@ -60,7 +62,7 @@ object FitCostPoint {
       val ts = t(s"rep $rep DEFAULT config (route fires: n > 1e5)")(
         KMeansOps.fitCentroids(emb, 64, 2).count())
       require(graft.core.RouteLog.fired("fitCentroids.sampledFit"),
-        "default config must route at 128k vectors")
+        "default config must route at 512k vectors")
       DedupOps.releaseAllCaches()
       println(f"  full/sampled = ${tf / ts}%.2fx")
     }

@@ -1,12 +1,89 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
-import graft.operators.{DedupOps, KMeansOps, TextOps}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+
+import graft.operators.{DedupOps, KMeansOps, SimilarityOps, TextOps}
 import graft.sources.Tables
 
 class KMeansSpec extends SparkSpec {
   import spark.implicits._
+
+  private def check(p: Prop, n: Int): Unit = {
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(n), p)
+    assert(res.passed, res.status.toString)
+  }
+
+  private val jobs = new AtomicInteger
+  private val jobCounter = new SparkListener {
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+  }
+
+  /** `f`'s result and the Spark jobs it started. */
+  private def countingJobs[T](f: => T): (T, Int) = {
+    ListenerBusDrain(spark.sparkContext)
+    jobs.set(0)
+    spark.sparkContext.addSparkListener(jobCounter)
+    try {
+      val out = f
+      ListenerBusDrain(spark.sparkContext)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(jobCounter)
+  }
+
+  /** A corpus whose components are exact binary fractions: `vals` row-major,
+    * `dim` per vector, vec_ids 0..n-1.
+    */
+  private def microCorpus(vals: Seq[Int], dim: Int): DataFrame =
+    vals.grouped(dim).zipWithIndex
+      .map { case (v, i) => (i.toLong, v.map(_ * 0.125)) }
+      .toSeq.toDF("vec_id", "embedding")
+
+  private def bits(ci: collection.Seq[Double]): Seq[Long] =
+    ci.map(java.lang.Double.doubleToRawLongBits).toSeq
+
+  /** Driver-fold and distributed codebooks of one corpus, as
+    * `(s, cid, component bits)` sets — unkeyed (`m = 0`) or over `m`
+    * subspaces.
+    */
+  private def codebooks(emb: DataFrame, m: Int, k: Int, iters: Int) = {
+    val v = KMeansOps.quantize(emb)
+    val out =
+      if (m == 0) {
+        val fold = KMeansOps.fitCentroids(emb, k, iters).collect()
+          .map(r => (0, r.getInt(0), bits(r.getSeq[Double](1)))).toSet
+        val twin = KMeansTwin.fit(v, k, iters).collect()
+          .map(r => (0, r.getInt(0), bits(r.getSeq[Double](1)))).toSet
+        (fold, twin)
+      } else {
+        val dim = emb.select(size(col("embedding"))).head().getInt(0)
+        val dsub = dim / m
+        val train = KMeansOps.trainingSet(v, k, KMeansOps.MaxFullFitVectors)(n =>
+          fail(s"a $n-vector corpus must not route"))
+        val fold = (0 until m).flatMap { s =>
+          KMeansOps.lloyd(train.map(_.vi.slice(s * dsub, s * dsub + dsub)), k, iters)
+            .map { case (cid, ci) => (s, cid, bits(ci)) }
+        }.toSet
+        val sub = v
+          .select(
+            col("vec_id"),
+            posexplode(array((0 until m).map(s => slice(col("vi"), s * dsub + 1, dsub)): _*)))
+          .select(col("vec_id"), col("pos").as("s"), col("col").as("vi"))
+          .withColumn("vv", graft.functions.GraftFunctions.dot(col("vi"), col("vi")))
+        val twin = KMeansTwin.fitBy(sub, k, iters).collect()
+          .map(r => (r.getInt(0), r.getInt(1), bits(r.getSeq[Double](2)))).toSet
+        (fold, twin)
+      }
+    DedupOps.releaseShingleCaches()
+    out
+  }
 
   test("kmeans golden: two obvious clusters recovered") {
     // two tight groups on a 4-dim line; k=2 must separate them whatever
@@ -19,9 +96,7 @@ class KMeansSpec extends SparkSpec {
       (5L, Array(0.51f, 0.50f, 0.50f, 0.50f)),
       (6L, Array(0.50f, 0.51f, 0.50f, 0.50f)))
       .toDF("vec_id", "embedding")
-    val vecs = KMeansOps.quantize(emb)
-    val cents = KMeansOps.seeds(vecs, 2)
-    val best = KMeansOps.assign(vecs, KMeansOps.update(vecs, KMeansOps.assign(vecs, cents)))
+    val best = KMeansOps.fitAssign(emb, k = 2, iters = 2)
     val byCluster = best
       .collect()
       .map(r => r.getLong(0) -> r.getInt(1))
@@ -149,6 +224,109 @@ class KMeansSpec extends SparkSpec {
     KMeansOps.fitCentroids(emb, k, iters = 1).count()
     DedupOps.releaseShingleCaches()
     assert(count("fitCentroids.sampledFit") == quiet)
+  }
+
+  test("driver fold equals the distributed Lloyd rounds bit for bit") {
+    // few distinct component values: ties in distance, duplicate vectors,
+    // negative components, and k above the distinct count (empty clusters
+    // drop out)
+    val corpora = for {
+      n <- Gen.chooseNum(1, 24)
+      dim <- Gen.oneOf(2, 4)
+      m <- Gen.oneOf(0, 1, 2)
+      k <- Gen.chooseNum(1, 8)
+      iters <- Gen.chooseNum(1, 3)
+      vals <- Gen.listOfN(n * dim, Gen.chooseNum(-3, 3))
+    } yield (vals, dim, m, k, iters)
+    check(Prop.forAll(corpora) { case (vals, dim, m, k, iters) =>
+      val (fold, twin) = codebooks(microCorpus(vals, dim), m, k, iters)
+      Prop(fold == twin) :| s"m=$m k=$k iters=$iters vals=$vals\nfold=$fold\ntwin=$twin"
+    }, n = 16)
+    // all-equal vectors: every seed ties, only cid 0 ever wins, and the
+    // other clusters drop out after one update
+    val same = microCorpus(Seq.fill(5 * 2)(1), 2)
+    for (m <- Seq(0, 2)) {
+      val (fold, twin) = codebooks(same, m, k = 3, iters = 2)
+      assert(fold == twin && fold.map(_._2) == Set(0))
+    }
+    // enough vectors for several fold chunks, merged in chunk order
+    val big = microCorpus(Seq.tabulate(3000 * 4)(i => (i * 7919 % 97) - 48), 4)
+    for (m <- Seq(0, 2)) {
+      val (fold, twin) = codebooks(big, m, k = 5, iters = 3)
+      assert(fold == twin && fold.size == (if (m == 0) 5 else 10))
+    }
+  }
+
+  test("degenerate training vectors fail loudly, naming the vec_id") {
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(DoubleType, containsNull = true))))
+    def corpus(bad: Row) = spark.createDataFrame(
+      java.util.Arrays.asList(Row(1L, Seq(0.1, 0.2)), Row(2L, Seq(0.3, 0.4)), bad), schema)
+    for ((bad, what) <- Seq(
+        Row(7L, null) -> "null embedding",
+        Row(7L, Seq(0.1, null)) -> "null or non-finite component",
+        Row(7L, Seq(0.1, Double.NaN)) -> "null or non-finite component",
+        Row(7L, Seq(Double.PositiveInfinity, 0.1)) -> "null or non-finite component",
+        Row(7L, Seq(0.1, 0.2, 0.3)) -> "ragged",
+        Row(1L, Seq(0.5, 0.5)) -> "more than once")) {
+      val e = intercept[IllegalArgumentException](KMeansOps.fitCentroids(corpus(bad), 2, 2))
+      DedupOps.releaseShingleCaches()
+      assert(e.getMessage.contains(s"vec_id=${bad.getLong(0)}") && e.getMessage.contains(what),
+        e.getMessage)
+    }
+  }
+
+  test("a fit under the cap starts exactly one Spark job") {
+    val emb = Tables.embeddings(spark, TestSpark.sf0001)
+    val n = emb.count()
+    val (cents, started) = countingJobs(KMeansOps.fitCentroids(emb, k = 8, iters = 3).collect())
+    DedupOps.releaseShingleCaches()
+    assert(started == 1, s"$started jobs")
+    assert(cents.length > 0 && cents.length <= math.min(8L, n))
+  }
+
+  test("a partition over its share of the collect is re-read whole: one more job, same fit") {
+    // 500 vectors in the first of 4 partitions; under a 600-vector cap each
+    // partition ships at most 600/4 + 1 = 151 vectors in the first job
+    val rows = (0L until 500L).map(i =>
+      Row(i, (0 until 4).map(d => (((i * 13 + d * 7) % 21).toDouble - 10.0) / 20.0)))
+    val schema = StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(DoubleType, containsNull = false))))
+    val sc = spark.sparkContext
+    val skewed = spark.createDataFrame(
+      sc.parallelize(rows, 1).union(sc.parallelize(Seq.empty[Row], 3)), schema)
+    assert(skewed.rdd.getNumPartitions == 4)
+    def fit(emb: DataFrame) = {
+      val out = countingJobs(
+        KMeansOps.fitCentroids(emb, k = 2, iters = 2, maxFullFitVectors = 600L).collect()
+          .map(r => (r.getInt(0), bits(r.getSeq[Double](1)))).toSet)
+      DedupOps.releaseShingleCaches()
+      out
+    }
+    val (got, started) = fit(skewed)
+    assert(started == 2, s"$started jobs")
+    assert(got == fit(spark.createDataFrame(sc.parallelize(rows, 4), schema))._1)
+  }
+
+  test("the sampled route follows the real row count, not the plan estimate") {
+    import graft.core.RouteLog
+    val path = Files.createTempDirectory("graft-kmeans").resolve("emb.parquet").toString
+    (0L until 1200L)
+      .map(i => (i, (0 until 4).map(d => (((i * 13 + d * 7) % 21).toDouble - 10.0) / 20.0)))
+      .toDF("vec_id", "embedding")
+      .coalesce(1)
+      .write.parquet(path)
+    val emb = spark.read.parquet(path)
+    val ceiling = 600L // L = max(600, sampleTarget(2) = 512) < 1200 rows
+    assert(SimilarityOps.estimatedVectors(emb) < ceiling,
+      "fixture: the plan estimate must read below the ceiling")
+    def routed = RouteLog.recent().count(_.startsWith("fitCentroids.sampledFit:"))
+    val before = routed
+    KMeansOps.fitCentroids(emb, k = 2, iters = 2, maxFullFitVectors = ceiling).collect()
+    DedupOps.releaseShingleCaches()
+    assert(routed == before + 1, "1200 rows over a 600-vector ceiling must train on the sample")
   }
 
   test("unigram NLL: uniform corpus scores ln(vocab), rare tokens score higher") {
