@@ -74,17 +74,13 @@ object HistogramRunner {
     * before any code: a second `mode=codes` scan with that offset, logged
     * as the `histogramSecondPass` route.
     */
-  def runPushed(
-      spark: SparkSession,
-      tileListPath: String,
-      pixelsPerTile: Long,
-      cfg: HistogramConfig): DataFrame = {
+  def runPushed(spark: SparkSession, tileListPath: String, cfg: HistogramConfig): DataFrame = {
     val bounds = (cfg.minValue, cfg.maxValue) match {
       case (Some(a), Some(b)) => Some(BinSpec.derive(a, b, cfg.method))
       case _                  => None
     }
     val offset = bounds.fold(0.0)(_.offset)
-    val first = scanCodes(spark, tileListPath, pixelsPerTile, cfg, offset)
+    val first = scanCodes(spark, tileListPath, cfg, offset)
     val spec = bounds.getOrElse {
       val (a, b) = (first.min, first.max)
       val (mn, mx) = if (cfg.clampToZero) (math.min(a, 0.0), math.max(b, 0.0)) else (a, b)
@@ -96,7 +92,7 @@ object HistogramRunner {
           "histogramSecondPass",
           s"log bins from min ${first.min} need offset " +
             s"${spec.offset}, the first scan coded with offset $offset")
-        scanCodes(spark, tileListPath, pixelsPerTile, cfg, spec.offset)
+        scanCodes(spark, tileListPath, cfg, spec.offset)
       } else first
     // with derived bounds every valid pixel has a code under the spec's offset
     if (bounds.isEmpty && !codes.valid)
@@ -109,6 +105,11 @@ object HistogramRunner {
     HistogramOps.histogramFromCounts(spark, spec, dense)
   }
 
+  // perfbench's TilePipeline is the only caller left; it passes 0L
+  @deprecated("the pixel count is unused: call runPushed(spark, tileListPath, cfg)", "0.1.0")
+  def runPushed(spark: SparkSession, tileListPath: String, pixelsPerTile: Long, cfg: HistogramConfig): DataFrame =
+    runPushed(spark, tileListPath, cfg)
+
   /** One `mode=codes` scan merged by one aggregate and collected: at most
     * one row per code seen plus the stats row. Without a valid pixel the
     * min and max are (0.0, 0.0), as in [[HistogramOps.minMax]].
@@ -118,14 +119,12 @@ object HistogramRunner {
   private def scanCodes(
       spark: SparkSession,
       tileListPath: String,
-      pixelsPerTile: Long,
       cfg: HistogramConfig,
       offset: Double): ScanCodes = {
     import org.apache.spark.sql.functions._
     val rows = spark.read
       .format("graft.sources.raster.RasterSource")
       .option("tileListPath", tileListPath)
-      .option("pixelsPerTile", pixelsPerTile)
       .option("mode", "codes")
       .option("binMethod", cfg.method.name)
       .option("binOffset", offset.toString)
@@ -263,7 +262,6 @@ object HistogramRunner {
     */
   def runCli(spark: SparkSession, cli: CliArgs, pushed: Boolean): DataFrame = {
     val path = cli.source
-    val pixels = sys.env.getOrElse("SPARK_GRAFT_PIXELS", "100000").toLong
     val tileList = path.endsWith(".txt")
     val histo0 =
       if (tileList && pushed && cli.cfg.minmaxOnly) {
@@ -272,7 +270,6 @@ object HistogramRunner {
         val stats = spark.read
           .format("graft.sources.raster.RasterSource")
           .option("tileListPath", path)
-          .option("pixelsPerTile", pixels.toString)
           .option("mode", "stats")
           .load()
           .agg(min(col("min_value")).as("min_value"), max(col("max_value")).as("max_value"))
@@ -286,7 +283,7 @@ object HistogramRunner {
         // (mode=codes readers) — codes, not pixels, cross the scan
         // boundary (perfbench: the tile_pushed job reads ~0.001 scan rows
         // per pixel, tile_values one per pixel)
-        runPushed(spark, path, pixels, cli.cfg)
+        runPushed(spark, path, cli.cfg)
       } else {
         val source =
           if (tileList) {
@@ -297,7 +294,6 @@ object HistogramRunner {
             spark.read
               .format("graft.sources.raster.RasterSource")
               .option("tileListPath", path)
-              .option("pixelsPerTile", pixels.toString)
               .load()
           } else Tables.parquet(spark, path)
         run(source, cli.cfg)

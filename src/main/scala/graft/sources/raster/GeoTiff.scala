@@ -2,11 +2,10 @@ package graft.sources.raster
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-/** Minimal pure-JVM GeoTIFF band-1 decoder — replaces the stub pixel
-  * stream for tile URIs the cluster can actually open (GDAL/rasterio are
-  * unavailable offline, and a histogram engine needs only the sample
-  * values, not warping/CRS — so the TIFF container is decoded directly
-  * from its public specification).
+/** Minimal pure-JVM GeoTIFF band-1 decoder, the raster source's one
+  * decode path (GDAL/rasterio are unavailable offline, and a histogram
+  * engine needs only the sample values, not warping/CRS — so the TIFF
+  * container is decoded directly from its public specification).
   *
   * Derived entirely from the published TIFF 6.0 specification plus the
   * BigTIFF and GDAL metadata conventions (all public). Supported, chosen

@@ -26,46 +26,21 @@ import graft.core.{BinMethod, BinSpec}
   *    (compute_histogram/main.py:127-149, then :182-201);
   *  - `mode=stats`: one `(tile_uri, min_value, max_value, n_valid)` row
   *    per tile (reference `get_min_max`, main.py:206-219), for
-  *    `--minmax_only`;
-  *  - `mode=hist`: sparse `(tile_uri, code, cnt)` rows per tile under a
-  *    given bin spec (reference `process_sources`, main.py:182-201).
+  *    `--minmax_only`.
   *
   * Spark's DSv2 aggregate pushdown (`SupportsPushDownAggregates`) cannot
   * express these (it pushes MIN/MAX/COUNT of plain columns, not a grouped
   * aggregation of a quantize EXPRESSION), so the modes are explicit scan
   * options; `RasterAggSpec` pins bit-equality with the raw-pixel path.
   *
-  * All three modes are [[CodeFold]]: the quantize arithmetic REPLICATES
+  * Both modes are [[CodeFold]]: the quantize arithmetic REPLICATES
   * `HistogramOps.quantize` + `binCounts` exactly — `(v·100).toInt` /
-  * `(ln(v+off)·1000).toInt` (truncation toward zero = non-ANSI cast), no
-  * code where Spark's `log` is null, codes outside `[lo, hi]` dropped and
-  * code `hi` merged into the closed last bin `hi−1` (`BinSpec.binIndex`).
+  * `(ln(v+off)·1000).toInt` (truncation toward zero = non-ANSI cast) and
+  * no code where Spark's `log` is null; the driver then drops the codes
+  * outside `[lo, hi]` and merges code `hi` into the closed last bin
+  * `hi−1` (`BinSpec.binIndex`).
   */
 object RasterAggScans {
-
-  /** The shared STUB pixel stream (splitmix64 seeded by the URI, every
-    * 97th pixel NaN) — since round 8 used only for offline-unreachable
-    * network schemes; openable URIs real-decode via [[GeoTiff]] (see
-    * [[RasterDecode]]).
-    */
-  final class PixelStream(tileUri: String, val pixels: Long) {
-    private var state: Long = {
-      var h = 1125899906842597L
-      tileUri.foreach(c => h = 31 * h + c)
-      h
-    }
-    private var i: Long = -1
-    def next(): Boolean = { i += 1; i < pixels }
-    def value(): Double = {
-      state += 0x9e3779b97f4a7c15L
-      var z = state
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z = z ^ (z >>> 31)
-      if (i % 97 == 96) Double.NaN
-      else (z >>> 11).toDouble / (1L << 53).toDouble * 1000.0
-    }
-  }
 
   /** Count an integer band's samples: entry `v − intMin` holds the count
     * of sample `v`; the last entry counts nodata.
@@ -275,7 +250,7 @@ object RasterAggScans {
   * `close()` if the fold threw, so a corrupt or truncated tile leaves no
   * file open.
   */
-abstract class TileFoldReader(tiles: Seq[String], pixels: Long, overview: Int, conf: Configuration)
+abstract class TileFoldReader(tiles: Seq[String], overview: Int, conf: Configuration)
     extends PartitionReader[InternalRow] {
   private var open: GeoTiff.SampleBlocks = _
   private var folded = false
@@ -286,7 +261,7 @@ abstract class TileFoldReader(tiles: Seq[String], pixels: Long, overview: Int, c
     if (!folded) {
       folded = true
       tiles.foreach { t =>
-        open = RasterDecode.blocks(t, pixels, overview, conf)
+        open = RasterDecode.blocks(t, overview, conf)
         fold(open)
         close()
       }
@@ -334,7 +309,7 @@ final class RasterStatsReaderFactory(
     val p = partition.asInstanceOf[RasterInputPartition]
     new TileChainReader(
       p.tiles,
-      new RasterStatsPartitionReader(_, p.pixels, required, p.overview, conf.value.value))
+      new RasterStatsPartitionReader(_, required, p.overview, conf.value.value))
   }
 }
 
@@ -345,11 +320,10 @@ final class RasterStatsReaderFactory(
   */
 final class RasterStatsPartitionReader(
     tileUri: String,
-    pixels: Long,
     required: StructType,
     overview: Int,
     conf: Configuration)
-    extends TileFoldReader(Seq(tileUri), pixels, overview, conf) {
+    extends TileFoldReader(Seq(tileUri), overview, conf) {
   private var done = false
   private val acc = new RasterAggScans.CodeFold(BinMethod.Linear, 0.0, false, withCodes = false)
 
@@ -380,71 +354,6 @@ final class RasterStatsPartitionReader(
   }
 }
 
-final class RasterHistReaderFactory(
-    required: StructType,
-    spec: BinSpec,
-    legacyLogOffset100: Boolean,
-    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[RasterInputPartition]
-    new TileChainReader(
-      p.tiles,
-      new RasterHistPartitionReader(
-        _, p.pixels, required, spec, legacyLogOffset100, p.overview, conf.value.value))
-  }
-}
-
-/** Sparse per-tile histogram rows (tile_uri, code, cnt) under `spec`,
-  * non-zero bins only, ordered by bin.
-  */
-final class RasterHistPartitionReader(
-    tileUri: String,
-    pixels: Long,
-    required: StructType,
-    spec: BinSpec,
-    legacyLogOffset100: Boolean,
-    overview: Int,
-    conf: Configuration) extends TileFoldReader(Seq(tileUri), pixels, overview, conf) {
-
-  private val uriUtf8 = UTF8String.fromString(tileUri)
-  private val counts = new Array[Long](math.max(spec.bins, 0))
-  private var bin = -1
-
-  protected def fold(blocks: GeoTiff.SampleBlocks): Unit = {
-    val acc = new RasterAggScans.CodeFold(spec.method, spec.offset, legacyLogOffset100, withCodes = true)
-    acc.fold(blocks)
-    var i = 0
-    while (i < acc.codeCounts.length) {
-      val b = spec.binIndex(acc.codeBase + i)
-      if (b >= 0) counts(b) += acc.codeCounts(i)
-      i += 1
-    }
-  }
-
-  override def next(): Boolean = {
-    foldOnce()
-    bin += 1
-    while (bin < counts.length && counts(bin) == 0) bin += 1
-    bin < counts.length
-  }
-
-  override def get(): InternalRow = {
-    val row = new GenericInternalRow(required.length)
-    var j = 0
-    while (j < required.length) {
-      row.update(
-        j,
-        required.fields(j).name match {
-          case "tile_uri" => uriUtf8
-          case "code"     => spec.lo + bin
-          case "cnt"      => counts(bin)
-        })
-      j += 1
-    }
-    row
-  }
-}
-
 final class RasterCodesReaderFactory(
     required: StructType,
     method: BinMethod,
@@ -454,7 +363,7 @@ final class RasterCodesReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[RasterInputPartition]
     new RasterCodesPartitionReader(
-      p.tiles, p.pixels, required, method, offset, legacyLogOffset100, p.overview, conf.value.value)
+      p.tiles, required, method, offset, legacyLogOffset100, p.overview, conf.value.value)
   }
 }
 
@@ -465,13 +374,12 @@ final class RasterCodesReaderFactory(
   */
 final class RasterCodesPartitionReader(
     tiles: Seq[String],
-    pixels: Long,
     required: StructType,
     method: BinMethod,
     offset: Double,
     legacyLogOffset100: Boolean,
     overview: Int,
-    conf: Configuration) extends TileFoldReader(tiles, pixels, overview, conf) {
+    conf: Configuration) extends TileFoldReader(tiles, overview, conf) {
 
   private val acc = new RasterAggScans.CodeFold(method, offset, legacyLogOffset100, withCodes = true)
   private var i = -1

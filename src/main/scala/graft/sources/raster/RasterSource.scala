@@ -16,7 +16,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.core.{BinMethod, BinSpec}
+import graft.core.BinMethod
 
 /** DataSource V2 raster-tile source — the faithful Spark mapping of the
   * reference's tile scan (S3: `read_source`, reference:
@@ -27,34 +27,32 @@ import graft.core.{BinMethod, BinSpec}
   * NaN as a separate step). The aggregating modes pack tiles into input
   * partitions ([[RasterSource.pack]]).
   *
-  * Pixel DECODE (round 8): REAL for every URI the cluster can open —
+  * Pixel DECODE: every tile URI opens through the Hadoop filesystem with
+  * the scan's one Hadoop configuration, broadcast by
+  * [[RasterScan.createReaderFactory]], and decodes with
   * [[GeoTiff.TiffBlocks]], a pure-JVM TIFF/BigTIFF band-1 decoder
   * (strips/tiles, LZW/Deflate/PackBits, predictors 1-3, uint/int/float
   * 8-64 bit, GDAL_NODATA→NaN) validated against the JDK ImageIO TIFF
   * encoder in `GeoTiffSpec`. It decodes one block at a time into reusable
   * primitive buffers; `mode=values` reads them through the per-pixel
-  * [[GeoTiff.BlockCursor]], the aggregating modes fold them directly.
-  * Tiles open with the scan's one Hadoop configuration, broadcast by
-  * [[RasterScan.createReaderFactory]]. Only offline-unreachable network
-  * schemes (the reference's own `s3://gfw-data/...` fixtures) fall back to a
-  * deterministic per-tile PRNG stub with every 97th pixel NaN — dispatch
-  * is by scheme, never by open-failure ([[RasterDecode]]).
+  * [[GeoTiff.BlockCursor]], the aggregating modes fold them directly. A
+  * scheme with no Hadoop `FileSystem` on the classpath fails at read with
+  * Hadoop's own error ([[RasterDecode]]).
   *
   * Usage:
   * {{{
   *   spark.read.format("graft.sources.raster.RasterSource")
-  *     .option("tiles", "s3://b/a.tif,s3://b/b.tif")   // inline list, OR:
-  *     .option("tileListPath", "s3://b/tiles.txt")     // one URI per line
-  *     .option("pixelsPerTile", "40000")   // stub band size
-  *     .option("mode", "values")           // values (default) | codes | stats | hist
+  *     .option("tiles", "s3a://b/a.tif,s3a://b/b.tif")   // inline list, OR:
+  *     .option("tileListPath", "s3a://b/tiles.txt")     // one URI per line
+  *     .option("mode", "values")           // values (default) | codes | stats
   *     .option("overview", "1")            // COG pyramid IFD (default 0 = full)
   *     .load()
   * }}}
   *
-  * `mode=codes`, `mode=stats` and `mode=hist` aggregate INSIDE the reader
-  * (the reference's own worker functions as scan modes — see
+  * `mode=codes` and `mode=stats` aggregate INSIDE the reader (the
+  * reference's own worker functions as scan modes — see
   * [[RasterAggScans]]); `codes` takes `binMethod`/`binOffset`/
-  * `legacyLogOffset100`, `hist` additionally `binLo`/`binHi`.
+  * `legacyLogOffset100`.
   *
   * `tileListPath` is the scale path for large tile sets (the reference's
   * bio_*_list.txt shape, S4): the list file is read once at PLAN time
@@ -78,7 +76,6 @@ class RasterSource extends TableProvider {
     new RasterTable(
       properties.getOrDefault("tiles", ""),
       properties.getOrDefault("tileListPath", ""),
-      properties.getOrDefault("pixelsPerTile", "10000").toLong,
       properties.getOrDefault("mode", "values"),
       properties)
 }
@@ -95,12 +92,6 @@ object RasterSource {
       StructField("max_value", DoubleType, nullable = false),
       StructField("n_valid", LongType, nullable = false)))
 
-  /** `mode=hist` schema: sparse per-tile bin counts. */
-  val HistSchema: StructType = StructType(
-    Seq(StructField("tile_uri", StringType, nullable = false),
-      StructField("code", IntegerType, nullable = false),
-      StructField("cnt", LongType, nullable = false)))
-
   /** `mode=codes` schema: a partition's sparse `(code, cnt)` rows, then
     * its one stats row; each row leaves the other kind's columns null.
     */
@@ -116,7 +107,6 @@ object RasterSource {
     case "values" => Schema
     case "codes"  => CodesSchema
     case "stats"  => StatsSchema
-    case "hist"   => HistSchema
     case other    => throw new IllegalArgumentException(s"Unknown raster scan mode $other")
   }
 
@@ -167,31 +157,28 @@ object RasterSource {
   }
 
   /** Each tile's length in bytes, from one listing per distinct parent
-    * directory. A stub-scheme tile, or one whose directory cannot be
-    * listed, weighs 0: opening it reports the error, not the planner.
+    * directory. A tile whose directory cannot be listed (no `FileSystem`
+    * for its scheme, say) weighs 0: opening it reports the error, not the
+    * planner.
     */
   private def tileSizes(tiles: Array[String], conf: Configuration): Array[Long] = {
-    val paths = tiles.map(t => if (RasterDecode.isStubUri(t)) None else Some(new Path(t)))
+    val paths = tiles.map(new Path(_))
     val lengths: Map[Path, Map[String, Long]] =
-      paths.flatten.flatMap(p => Option(p.getParent)).distinct.map { dir =>
+      paths.flatMap(p => Option(p.getParent)).distinct.map { dir =>
         dir -> (try dir.getFileSystem(conf).listStatus(dir).map(s => s.getPath.getName -> s.getLen).toMap
         catch { case _: java.io.IOException => Map.empty[String, Long] })
       }.toMap
-    paths.map(_.fold(0L)(p =>
-      Option(p.getParent).flatMap(lengths.get).flatMap(_.get(p.getName)).getOrElse(0L)))
+    paths.map(p => Option(p.getParent).flatMap(lengths.get).flatMap(_.get(p.getName)).getOrElse(0L))
   }
 }
 
 final class RasterTable(
     tiles: String,
     tileListPath: String,
-    pixelsPerTile: Long,
     mode: String,
     properties: util.Map[String, String])
     extends Table
     with SupportsRead {
-  def this(tiles: String, tileListPath: String, pixelsPerTile: Long) =
-    this(tiles, tileListPath, pixelsPerTile, "values", new util.HashMap[String, String]())
   override def name(): String =
     if (tileListPath.nonEmpty) s"raster($tileListPath, $mode)"
     else s"raster(${tiles.split(",").length} tiles, $mode)"
@@ -203,14 +190,12 @@ final class RasterTable(
       conf =>
         if (tileListPath.nonEmpty) RasterSource.readTileList(tileListPath, conf)
         else tiles.split(",").filter(_.nonEmpty),
-      pixelsPerTile,
       mode,
       properties)
 }
 
 final class RasterScanBuilder(
     tiles: Configuration => Array[String],
-    pixelsPerTile: Long,
     mode: String,
     properties: util.Map[String, String])
     extends ScanBuilder
@@ -223,12 +208,11 @@ final class RasterScanBuilder(
     required = requiredSchema
 
   override def build(): Scan =
-    new RasterScan(tiles, pixelsPerTile, required, mode, properties)
+    new RasterScan(tiles, required, mode, properties)
 }
 
 final class RasterScan(
     tiles: Configuration => Array[String],
-    pixelsPerTile: Long,
     required: StructType,
     mode: String,
     properties: util.Map[String, String])
@@ -238,14 +222,14 @@ final class RasterScan(
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] = {
     // overview n reads the n-th IFD of a cloud-optimized GeoTIFF — the
-    // 4^-n-pixel approximate scan path (stub URIs ignore it)
+    // 4^-n-pixel approximate scan path
     val overview = Option(properties.get("overview")).map(_.toInt).getOrElse(0)
     val spark = SparkSession.active
     val conf = spark.sessionState.newHadoopConf()
     val uris = tiles(conf)
     // values mode is data-bound: one tile per task spreads its rows
     val packs = if (mode == "values") uris.map(Seq(_)) else RasterSource.pack(uris, spark, conf)
-    packs.map(p => RasterInputPartition(p, pixelsPerTile, overview): InputPartition)
+    packs.map(p => RasterInputPartition(p, overview): InputPartition)
   }
 
   /** The session's Hadoop configuration goes to the executors once per
@@ -263,15 +247,12 @@ final class RasterScan(
       case "values" => new RasterReaderFactory(required, conf)
       case "codes"  => new RasterCodesReaderFactory(required, method, offset, legacy, conf)
       case "stats"  => new RasterStatsReaderFactory(required, conf)
-      case "hist" =>
-        val spec = BinSpec(properties.get("binLo").toInt, properties.get("binHi").toInt, offset, method)
-        new RasterHistReaderFactory(required, spec, legacy, conf)
     }
   }
 }
 
 /** The tiles one task reads: one in `mode=values`, a pack otherwise. */
-final case class RasterInputPartition(tiles: Seq[String], pixels: Long, overview: Int = 0)
+final case class RasterInputPartition(tiles: Seq[String], overview: Int = 0)
     extends InputPartition
 
 final class RasterReaderFactory(required: StructType, conf: Broadcast[SerializableConfiguration])
@@ -280,13 +261,12 @@ final class RasterReaderFactory(required: StructType, conf: Broadcast[Serializab
     val p = partition.asInstanceOf[RasterInputPartition]
     new TileChainReader(
       p.tiles,
-      new RasterPartitionReader(_, p.pixels, required, p.overview, conf.value.value))
+      new RasterPartitionReader(_, required, p.overview, conf.value.value))
   }
 }
 
 final class RasterPartitionReader(
     tileUri: String,
-    pixels: Long,
     required: StructType,
     overview: Int,
     conf: Configuration)
@@ -301,11 +281,10 @@ final class RasterPartitionReader(
   private val row =
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(fieldIsUri.length)
 
-  // Real TIFF decode for openable URIs, deterministic stub for offline
-  // network schemes — see [[RasterDecode]]. Band-1 pixels stream one
-  // decompressed block at a time; NaN marks nodata (GDAL_NODATA mapped in
-  // the decoder), filtered downstream by F1, never here.
-  private val cursor = RasterDecode.open(tileUri, pixels, overview, conf)
+  // Band-1 pixels stream one decompressed block at a time (see
+  // [[RasterDecode]]); NaN marks nodata (GDAL_NODATA mapped in the
+  // decoder), filtered downstream by F1, never here.
+  private val cursor = RasterDecode.open(tileUri, overview, conf)
 
   override def next(): Boolean = cursor.next()
 

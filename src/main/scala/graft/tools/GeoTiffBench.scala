@@ -170,7 +170,7 @@ object GeoTiffBench {
     val times = (0 until 3).map { rep =>
       val t0 = System.nanoTime()
       val bins = graft.HistogramRunner
-        .runPushed(spark, listFile.toString, 0L, cfg)
+        .runPushed(spark, listFile.toString, cfg)
         .count()
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"rep$rep: $dt%.2f s ($bins bins)")
@@ -262,7 +262,7 @@ object GeoTiffBench {
     for (rep <- 0 until 3) {
       val t0 = System.nanoTime()
       val n = graft.HistogramRunner
-        .runPushed(spark, listFile.toString, 0L, cfg)
+        .runPushed(spark, listFile.toString, cfg)
         .count()
       val dt = (System.nanoTime() - t0) / 1e9
       if (rep > 0) best = math.min(best, dt)

@@ -147,5 +147,21 @@ class HistogramSpec extends SparkSpec {
     assert(a.nonEmpty)
     // last cumulative row: running == total → pct 10 → percentile 100
     assert(a.map(_.getLong(0)).max == 100L)
+    // degenerate histograms, pinned to what DuckDB 1.0.0 returns for the
+    // reference SQL; a 0/0 share is null on both engines
+    import org.apache.spark.sql.Row
+    val inf = Double.PositiveInfinity
+    val degenerate = Seq(
+      ("empty", Seq.empty[(Double, Long)], Seq.empty[Row]),
+      // what an all-nodata tile list writes: the 20-row (0.0, 0.0) fallback
+      ("all-zero counts", (-10 until 10).map(c => (c / 100.0, 0L)), Seq(Row(null, -0.1, 0.09, 0L))),
+      ("one row", Seq((7.0, 192L)), Seq(Row(100L, 7.0, 7.0, 192L))),
+      ("±Inf value", Seq((-inf, 3L), (1.0, 5L), (inf, 2L)),
+        Seq(Row(30L, -inf, -inf, 3L), Row(80L, 1.0, 1.0, 5L), Row(100L, inf, inf, 2L))))
+    for ((name, rows, want) <- degenerate) {
+      val h = rows.toDF("value", "cnt")
+      assert(PercentileOps.deciles(h).collect().toSeq == want, name)
+      assert(PercentileOps.decilesSql(spark, h).collect().toSeq == want, name)
+    }
   }
 }

@@ -1,25 +1,36 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 import graft.core.BinMethod
 import graft.operators.HistogramOps
+import graft.sources.raster.LocalS3FileSystem
 
-/** The aggregated raster scan modes (`stats` / `hist`) must be
+/** The aggregated raster scan modes (`stats` / `codes`) must be
   * bit-identical to the raw-pixel path composed with the engine
   * operators — the pushdown changes WHERE the work runs, never the
-  * answer.
+  * answer. The tiles are the reference's `s3://gfw-data/bio/...` URIs,
+  * served by [[LocalS3FileSystem]] from float32 tiles with every 97th
+  * sample NaN.
   */
-class RasterAggSpec extends SparkSpec {
+class RasterAggSpec extends SparkSpec with BeforeAndAfterAll {
 
-  private val tiles =
-    "s3://gfw-data/bio/10N_010E.tif,s3://gfw-data/bio/10N_020E.tif,s3://gfw-data/bio/10N_030E.tif"
+  private lazy val (small, tiles) = {
+    val (root, uris) = LocalS3FileSystem.bioTiles(5000, 100)
+    (root, uris.mkString(","))
+  }
 
-  private def load(mode: String, pixels: Int = 5000, extra: Map[String, String] = Map.empty) = {
+  override def beforeAll(): Unit = LocalS3FileSystem.register(spark, small)
+  override def afterAll(): Unit = {
+    LocalS3FileSystem.unregister(spark)
+    LocalS3FileSystem.delete(small)
+  }
+
+  private def load(mode: String, extra: Map[String, String] = Map.empty) = {
     val base = spark.read
       .format("graft.sources.raster.RasterSource")
       .option("tiles", tiles)
-      .option("pixelsPerTile", pixels.toString)
       .option("mode", mode)
     extra.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
   }
@@ -51,7 +62,7 @@ class RasterAggSpec extends SparkSpec {
     for (method <- Seq(BinMethod.Linear, BinMethod.Log)) {
       val cfg = HistogramConfig("value", method)
       val pushed = HistogramRunner
-        .runPushed(spark, list.toString, 5000L, cfg)
+        .runPushed(spark, list.toString, cfg)
         .collect()
         .map(r => (r.getDouble(0), r.getLong(1)))
         .toSeq
@@ -65,26 +76,27 @@ class RasterAggSpec extends SparkSpec {
     }
   }
 
-  test("hist mode ships bins, not pixels, across the scan boundary") {
-    // 2M px/tile over ~100k 2-decimal bins: the scan emits ≤ bins rows
-    // per tile no matter how many pixels land in them (real tiles are
-    // 40000² px → 4 orders of magnitude reduction)
+  test("codes mode ships codes, not pixels, across the scan boundary") {
+    // 2M px/tile over ~100k 2-decimal codes: the scan emits ≤ codes + 1
+    // rows per partition no matter how many pixels land in them (real
+    // tiles are 40000² px → 4 orders of magnitude reduction)
     val pixels = 2000000
-    val spec = graft.core.BinSpec.derive(0.0, 1000.0, BinMethod.Linear)
-    val binned = load(
-      "hist",
-      pixels = pixels,
-      extra = Map(
-        "binLo" -> spec.lo.toString,
-        "binHi" -> spec.hi.toString,
-        "binMethod" -> "linear"))
-    val rows = binned.count()
-    // sparse per-tile bins: at most bins × tiles rows regardless of pixels
-    assert(rows <= spec.bins.toLong * 3)
-    assert(rows < 3L * pixels / 10, "scan output must be bounded by bins, not pixels")
-    // counts conserve the valid pixel total
-    val totalCnt = binned.agg(sum("cnt")).head().getLong(0)
-    val valid = load("values", pixels = pixels).filter(!isnan(col("value"))).count()
-    assert(totalCnt == valid)
+    val (big, _) = LocalS3FileSystem.bioTiles(pixels, 2000)
+    LocalS3FileSystem.register(spark, big)
+    try {
+      val spec = graft.core.BinSpec.derive(0.0, 1000.0, BinMethod.Linear)
+      val binned = load("codes", extra = Map("binMethod" -> "linear"))
+      val rows = binned.count()
+      // sparse codes per pack of tiles: at most bins × tiles rows regardless of pixels
+      assert(rows <= spec.bins.toLong * 3)
+      assert(rows < 3L * pixels / 10, "scan output must be bounded by bins, not pixels")
+      // counts conserve the valid pixel total
+      val totalCnt = binned.agg(sum("cnt")).head().getLong(0)
+      val valid = load("values").filter(!isnan(col("value"))).count()
+      assert(totalCnt == valid)
+    } finally {
+      LocalS3FileSystem.register(spark, small)
+      LocalS3FileSystem.delete(big)
+    }
   }
 }

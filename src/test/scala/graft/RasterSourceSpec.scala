@@ -1,20 +1,31 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 import graft.core.BinMethod
 import graft.operators.HistogramOps
+import graft.sources.raster.LocalS3FileSystem
 
-class RasterSourceSpec extends SparkSpec {
+/** The raster scan over the reference's `s3://gfw-data/bio/...` tile URIs,
+  * served by [[LocalS3FileSystem]] from three 5000-sample float32 tiles
+  * with every 97th sample NaN.
+  */
+class RasterSourceSpec extends SparkSpec with BeforeAndAfterAll {
 
-  private val tiles =
-    "s3://gfw-data/bio/10N_010E.tif,s3://gfw-data/bio/10N_020E.tif,s3://gfw-data/bio/10N_030E.tif"
+  private lazy val (root, uris) = LocalS3FileSystem.bioTiles(5000, 100)
+  private lazy val tiles = uris.mkString(",")
 
-  private def load(pixels: Int = 5000) =
+  override def beforeAll(): Unit = LocalS3FileSystem.register(spark, root)
+  override def afterAll(): Unit = {
+    LocalS3FileSystem.unregister(spark)
+    LocalS3FileSystem.delete(root)
+  }
+
+  private def load() =
     spark.read
       .format("graft.sources.raster.RasterSource")
       .option("tiles", tiles)
-      .option("pixelsPerTile", pixels.toString)
       .load()
 
   test("one input partition per tile, pixels × tiles rows") {
@@ -45,7 +56,6 @@ class RasterSourceSpec extends SparkSpec {
     val df = spark.read
       .format("graft.sources.raster.RasterSource")
       .option("tileListPath", list.toString)
-      .option("pixelsPerTile", "5000")
       .load()
     assert(df.rdd.getNumPartitions == 3)
     assert(df.count() == 3L * 5000)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.BinMethod
 import graft.operators.{HistogramOps, MaskOps}
+import graft.sources.raster.GeoTiffSpec
 
 class RunnerSpec extends SparkSpec {
   import spark.implicits._
@@ -90,6 +91,25 @@ class RunnerSpec extends SparkSpec {
         "--min_value", "0", "--max_value", "10")))
     assert(histo.count() == 1020L) // overrides set the range, like run()
     assert(Files.exists(Paths.get(out, "histogram.csv")))
+  }
+
+  test("CLI over an s3:// tile list with no FileSystem for s3 fails loudly, writes no histogram.csv") {
+    val dir = Files.createTempDirectory("cli_s3")
+    val list = dir.resolve("bio_intact_list.txt")
+    Files.writeString(list, Seq("10N_010E", "10N_020E", "10N_030E")
+      .map(t => s"s3://gfw-data/bio/$t.tif").mkString("\n"))
+    val runs = Seq(
+      ("pushed", Nil, true),
+      ("values", Nil, false),
+      ("minmax_pushed", Seq("--minmax_only"), true),
+      ("minmax_values", Seq("--minmax_only"), false))
+    for ((name, flags, pushed) <- runs) {
+      val out = dir.resolve(name)
+      val cli = HistogramRunner.parseArgs((Seq(list.toString, "value", out.toString) ++ flags).toArray)
+      val e = intercept[Exception](HistogramRunner.runCli(spark, cli, pushed))
+      assert(GeoTiffSpec.noFileSystemFor("s3", e), s"$name: " + GeoTiffSpec.causes(e).mkString("\n"))
+      assert(!Files.exists(out.resolve("histogram.csv")), name)
+    }
   }
 
   test("E2 retry config: CLI session pins task+S3A retries (main.py:229-236)") {

@@ -285,7 +285,7 @@ class GeoTiffSpec extends graft.SparkSpec {
 
   // ---- end-to-end through the DataSource V2 scan ----------------------
 
-  test("DSv2 values/stats/hist modes real-decode a file:// GeoTIFF") {
+  test("DSv2 values/stats/codes modes real-decode a file:// GeoTIFF") {
     val pix = rnd(11, 60 * 44, 0, 256)
     val tif = java.io.File.createTempFile("graft-geotiff", ".tif")
     tif.deleteOnExit()
@@ -306,14 +306,17 @@ class GeoTiffSpec extends graft.SparkSpec {
     assert(stats(0).getAs[Double]("max_value") == pix.max.toDouble)
     assert(stats(0).getAs[Long]("n_valid") == pix.length.toLong)
 
-    val hist = spark.read.format("graft.sources.raster.RasterSource")
-      .option("tiles", uri).option("mode", "hist")
-      .option("binLo", "0").option("binHi", "100000").load()
-      .select(col("code"), col("cnt")).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val (codeRows, statsRows) = spark.read.format("graft.sources.raster.RasterSource")
+      .option("tiles", uri).option("mode", "codes").load().collect()
+      .partition(r => !r.isNullAt(r.fieldIndex("code")))
+    val hist = codeRows.map(r => r.getAs[Int]("code") -> r.getAs[Long]("cnt")).toMap
     val expectedHist = pix.map(v => (v.toDouble * 100).toInt)
       .groupBy(identity).map { case (c, vs) => c -> vs.length.toLong }
     assert(hist == expectedHist)
+    assert(codeRows.length == expectedHist.size)
+    assert(statsRows.map(r => (r.getAs[Double]("min_value"), r.getAs[Double]("max_value"),
+      r.getAs[Long]("n_valid"), r.getAs[Boolean]("codes_valid"))).toSeq ==
+      Seq((pix.min.toDouble, pix.max.toDouble, pix.length.toLong, true)))
   }
 
   test("full reference pipeline over a REAL tile list: 2-pass pushed == raw == in-memory") {
@@ -344,7 +347,7 @@ class GeoTiffSpec extends graft.SparkSpec {
     val cfg = HistogramConfig(valueCol = "value")
     // binned inside the scan (mode=codes decodes for real)
     val pushed = HistogramRunner
-      .runPushed(spark, listFile.toString, 0L, cfg)
+      .runPushed(spark, listFile.toString, cfg)
       .collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
     // raw values scan through the engine-side two-pass pipeline
     val rawScan = spark.read.format("graft.sources.raster.RasterSource")
@@ -404,14 +407,25 @@ class GeoTiffSpec extends graft.SparkSpec {
     assert(ov == half.map(_.toDouble).toVector)
   }
 
-  test("s3:// URIs still stream the deterministic stub (offline fixtures)") {
-    assert(RasterDecode.isStubUri("s3://gfw-data/tile.tif"))
-    assert(!RasterDecode.isStubUri("file:///tmp/x.tif"))
-    assert(!RasterDecode.isStubUri("/tmp/x.tif"))
-    val c = RasterDecode.open("s3://bucket/a.tif", 10L)
-    var n = 0
-    while (c.next()) n += 1
-    assert(n == 10)
+  test("an s3:// tile with no FileSystem for s3 fails at read, never streams made-up pixels") {
+    val scan = spark.read.format("graft.sources.raster.RasterSource")
+      .option("tiles", "s3://gfw-data/bio/10N_010E.tif").load()
+    val e = intercept[Exception](scan.collect())
+    assert(GeoTiffSpec.noFileSystemFor("s3", e), GeoTiffSpec.causes(e).mkString("\n"))
+  }
+
+  test("s3:// tile via a registered FileSystem decodes exact samples") {
+    val pix = Array.tabulate(30 * 20)(i => if (i % 7 == 3) -9999.0 else i * 1.25 - 40)
+    val root = LocalS3FileSystem.write(Seq("bucket/dir/a.tif" ->
+      buildTiff(pix, 30, 20, 32, 3, comp = 8, predictor = 3, nodata = Some("-9999"))))
+    val got = LocalS3FileSystem.withS3(spark, root) {
+      spark.read.format("graft.sources.raster.RasterSource")
+        .option("tiles", "s3://bucket/dir/a.tif").load()
+        .select("value").collect().map(_.getDouble(0)).toVector
+    }
+    LocalS3FileSystem.delete(root)
+    assert(nanEq(got, pix.map(v => if (v == -9999.0) Double.NaN else v.toFloat.toDouble).toVector))
+    assert(got.count(_.isNaN) == pix.count(_ == -9999.0))
   }
 
   // ---- adversarial ScalaCheck properties (round 9) --------------------
@@ -625,7 +639,7 @@ class GeoTiffSpec extends graft.SparkSpec {
       values.foreach { v =>
         if (!v.isNaN) { if (v < mn) mn = v; if (v > mx) mx = v; valid += 1 }
       }
-      val stats = drain(new RasterStatsPartitionReader(uri, 0L, RasterSource.StatsSchema, 0, conf))
+      val stats = drain(new RasterStatsPartitionReader(uri, RasterSource.StatsSchema, 0, conf))
         .map(r => (r.getDouble(1), r.getDouble(2), r.getLong(3)))
       val statsOk = stats == (if (valid == 0) Vector.empty else Vector((mn, mx, valid)))
       val (a, b) = if (valid == 0) (0.0, 0.0) else (mn, mx)
@@ -645,10 +659,17 @@ class GeoTiffSpec extends graft.SparkSpec {
               m.updated(bin, m.getOrElse(bin, 0L) + 1)
             } else m
           }
-          val got = drain(new RasterHistPartitionReader(
-            uri, 0L, RasterSource.HistSchema, spec, legacy, 0, conf))
-            .map(r => r.getInt(1) -> r.getLong(2))
-          got.map(_._1) == got.map(_._1).sorted && got.toMap == want && got.size == want.size
+          // the codes reader's rows, binned through the spec as runPushed does
+          val rows = drain(new RasterCodesPartitionReader(
+            Seq(uri), RasterSource.CodesSchema, method, spec.offset, legacy, 0, conf))
+          val codes = rows.filterNot(_.isNullAt(0)).map(r => r.getInt(0) -> r.getLong(1))
+          val got = codes.foldLeft(Map.empty[Int, Long]) { case (m, (c, cnt)) =>
+            val b = spec.binIndex(c)
+            if (b < 0) m else m.updated(spec.lo + b, m.getOrElse(spec.lo + b, 0L) + cnt)
+          }
+          val statsRow = rows.filter(_.isNullAt(0)).map(r => (r.getDouble(2), r.getDouble(3), r.getLong(4)))
+          codes.map(_._1) == codes.map(_._1).sorted.distinct && codes.forall(_._2 > 0) &&
+            got == want && statsRow == stats
       }
       java.nio.file.Files.delete(f)
       nanEq(values, expected) && statsOk && histsOk
@@ -676,8 +697,9 @@ class GeoTiffSpec extends graft.SparkSpec {
     val spec = BinSpec.derive(0.0, 255.0, BinMethod.Linear)
     val readers: Seq[() => org.apache.spark.sql.connector.read.PartitionReader[
       org.apache.spark.sql.catalyst.InternalRow]] = Seq(
-      () => new RasterStatsPartitionReader(uri, 0L, RasterSource.StatsSchema, 0, conf),
-      () => new RasterHistPartitionReader(uri, 0L, RasterSource.HistSchema, spec, false, 0, conf))
+      () => new RasterStatsPartitionReader(uri, RasterSource.StatsSchema, 0, conf),
+      () => new RasterCodesPartitionReader(
+        Seq(uri), RasterSource.CodesSchema, spec.method, spec.offset, false, 0, conf))
     def drive(r: org.apache.spark.sql.connector.read.PartitionReader[
         org.apache.spark.sql.catalyst.InternalRow]): Unit = {
       intercept[java.io.IOException](r.next())
@@ -734,6 +756,16 @@ class GeoTiffSpec extends graft.SparkSpec {
 }
 
 object GeoTiffSpec {
+
+  /** `e` and its causes, outermost first. */
+  def causes(e: Throwable): Seq[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  /** Whether `e` or one of its causes is Hadoop's error for a scheme with
+    * no `FileSystem`.
+    */
+  def noFileSystemFor(scheme: String, e: Throwable): Boolean =
+    causes(e).exists(t => String.valueOf(t.getMessage).contains(s"No FileSystem for scheme \"$scheme\""))
 
   private def deflate(b: Array[Byte]): Array[Byte] = {
     val d = new java.util.zip.Deflater()
