@@ -14,8 +14,8 @@ import graft.sources.Tables
   *    the flag but never checks it — main.py:29-33 vs :53-57);
   *  - min/max start un-clamped; `clampToZero = true` restores the
   *    reference's zero-initialized accumulators (main.py:131-132).
-  * When both `minValue` and `maxValue` are given the stats pass is skipped,
-  * exactly like the reference (main.py:53-54).
+  * When both `minValue` and `maxValue` are given they fix the bins and no
+  * min/max is taken, exactly like the reference (main.py:53-54).
   */
 final case class HistogramConfig(
     valueCol: String,
@@ -29,7 +29,11 @@ final case class HistogramConfig(
 object HistogramRunner {
 
   /** Run the configured pipeline. `minmaxOnly` returns the 1-row stats
-    * relation; otherwise the dense `(value, cnt)` histogram.
+    * relation; otherwise the dense `(value, cnt)` histogram of
+    * [[HistogramOps.fold]] over the DataFrame code source
+    * ([[HistogramOps.valueCodes]]): one aggregate reads `df` once (twice
+    * for log with a min ≤ 0), and the histogram comes back as a local
+    * relation.
     */
   def run(df: DataFrame, cfg: HistogramConfig): DataFrame = {
     val values = HistogramOps.validValues(df, cfg.valueCol)
@@ -41,13 +45,16 @@ object HistogramRunner {
           least(col("min_value"), lit(0.0)).as("min_value"),
           greatest(col("max_value"), lit(0.0)).as("max_value"))
       else base
-    } else {
-      val (mn, mx) = (cfg.minValue, cfg.maxValue) match {
-        case (Some(a), Some(b)) => (a, b)
-        case _                  => HistogramOps.minMax(values, cfg.clampToZero)
-      }
-      HistogramOps.histogram(values, BinSpec.derive(mn, mx, cfg.method), cfg.legacyLogOffset100)
-    }
+    } else fold(values.sparkSession, cfg)(HistogramOps.valueCodes(values, cfg.method, cfg.legacyLogOffset100))
+  }
+
+  /** [[HistogramOps.fold]] under `cfg`: the spec comes from both bounds
+    * when given (the reference skips its stats pass then, main.py:53-54).
+    */
+  private def fold(spark: SparkSession, cfg: HistogramConfig)(
+      codes: (Double, Option[BinSpec]) => HistogramOps.Codes): DataFrame = {
+    val bounds = for (a <- cfg.minValue; b <- cfg.maxValue) yield BinSpec.derive(a, b, cfg.method)
+    HistogramOps.fold(spark, cfg.method, bounds, cfg.clampToZero, cfg.legacyLogOffset100)(codes)
   }
 
   /** Histogram + decile summary in one call (the full reference workflow:
@@ -56,71 +63,31 @@ object HistogramRunner {
   def runWithDeciles(df: DataFrame, cfg: HistogramConfig): DataFrame =
     PercentileOps.deciles(run(df, cfg.copy(minmaxOnly = false)))
 
-  /** The source-pushed pipeline over the DSv2 raster scan, one scan for
-    * every spec but log with a min ≤ 0. A `mode=codes` scan bins each
-    * packed partition of tiles inside the reader; Spark merges the sparse
-    * `(code, cnt)` rows and the partitions' stats rows in one aggregate,
-    * and the driver derives the spec from the merged min/max, drops the
-    * codes outside it and densifies — the reference's worker/driver split
-    * (per-worker passes, driver-side fold, main.py:93-124) with one read
-    * of each tile. Output is bit-identical to [[run]] over the raw
-    * `mode=values` scan (RasterAggSpec pins it), and only codes cross the
-    * scan boundary.
-    *
-    * The scan codes log with offset 0 unless both bounds are given: that
-    * is the derived offset whenever the min is > 0, and linear and the
-    * legacy `+100` code have no offset to derive. A log spec whose derived
-    * offset differs (min ≤ 0, also after `clampToZero`) needs the min
-    * before any code: a second `mode=codes` scan with that offset, logged
-    * as the `histogramSecondPass` route.
+  /** The source-pushed pipeline over the DSv2 raster scan: the same
+    * [[HistogramOps.fold]] as [[run]], one scan for every spec but log with
+    * a min ≤ 0. A `mode=codes` scan bins each packed partition of tiles
+    * inside the reader, and Spark merges the sparse `(code, cnt)` rows and
+    * the partitions' stats rows in one aggregate: one read of each tile,
+    * and only codes cross the scan boundary. Output is bit-identical to
+    * [[run]] over the raw `mode=values` scan (RasterAggSpec pins it).
     */
-  def runPushed(spark: SparkSession, tileListPath: String, cfg: HistogramConfig): DataFrame = {
-    val bounds = (cfg.minValue, cfg.maxValue) match {
-      case (Some(a), Some(b)) => Some(BinSpec.derive(a, b, cfg.method))
-      case _                  => None
-    }
-    val offset = bounds.fold(0.0)(_.offset)
-    val first = scanCodes(spark, tileListPath, cfg, offset)
-    val spec = bounds.getOrElse {
-      val (a, b) = (first.min, first.max)
-      val (mn, mx) = if (cfg.clampToZero) (math.min(a, 0.0), math.max(b, 0.0)) else (a, b)
-      BinSpec.derive(mn, mx, cfg.method)
-    }
-    val codes =
-      if (cfg.method == BinMethod.Log && !cfg.legacyLogOffset100 && spec.offset != offset) {
-        graft.core.RouteLog.costRoute(
-          "histogramSecondPass",
-          s"log bins from min ${first.min} need offset " +
-            s"${spec.offset}, the first scan coded with offset $offset")
-        scanCodes(spark, tileListPath, cfg, spec.offset)
-      } else first
-    // with derived bounds every valid pixel has a code under the spec's offset
-    if (bounds.isEmpty && !codes.valid)
-      throw new IllegalStateException(s"a valid pixel has no ${cfg.method.name} code under $spec")
-    val dense = new Array[Long](spec.bins)
-    codes.counts.foreach { case (c, n) =>
-      val b = spec.binIndex(c)
-      if (b >= 0) dense(b) += n
-    }
-    HistogramOps.histogramFromCounts(spark, spec, dense)
-  }
+  def runPushed(spark: SparkSession, tileListPath: String, cfg: HistogramConfig): DataFrame =
+    fold(spark, cfg)((offset, _) => scanCodes(spark, tileListPath, cfg, offset))
 
   // perfbench's TilePipeline is the only caller left; it passes 0L
   @deprecated("the pixel count is unused: call runPushed(spark, tileListPath, cfg)", "0.1.0")
   def runPushed(spark: SparkSession, tileListPath: String, pixelsPerTile: Long, cfg: HistogramConfig): DataFrame =
     runPushed(spark, tileListPath, cfg)
 
-  /** One `mode=codes` scan merged by one aggregate and collected: at most
-    * one row per code seen plus the stats row. Without a valid pixel the
-    * min and max are (0.0, 0.0), as in [[HistogramOps.minMax]].
+  /** The raster code source of [[HistogramOps.fold]]: one `mode=codes`
+    * scan merged by one aggregate and collected, at most one row per code
+    * seen plus the stats row.
     */
-  private final case class ScanCodes(counts: Array[(Int, Long)], min: Double, max: Double, valid: Boolean)
-
   private def scanCodes(
       spark: SparkSession,
       tileListPath: String,
       cfg: HistogramConfig,
-      offset: Double): ScanCodes = {
+      offset: Double): HistogramOps.Codes = {
     import org.apache.spark.sql.functions._
     val rows = spark.read
       .format("graft.sources.raster.RasterSource")
@@ -141,8 +108,8 @@ object HistogramRunner {
     val (stats, codes) = rows.partition(_.isNullAt(0))
     val counts = codes.map(r => r.getInt(0) -> r.getLong(1))
     stats.headOption match {
-      case Some(r) => ScanCodes(counts, r.getDouble(2), r.getDouble(3), r.getBoolean(4))
-      case None    => ScanCodes(counts, 0.0, 0.0, valid = true)
+      case Some(r) => HistogramOps.Codes(counts, r.getDouble(2), r.getDouble(3), r.getBoolean(4))
+      case None    => HistogramOps.Codes(counts, 0.0, 0.0, valid = true)
     }
   }
 
@@ -204,8 +171,9 @@ object HistogramRunner {
     * (main.py:229-236 — stop_max_attempt_number=7, 1 s base, 5 min cap);
     * Spark's equivalent resilience is task re-execution plus the S3A
     * connector's own retry policy, so the CLI session pins
-    * `spark.task.maxFailures=7` and the matching S3A retry knobs instead
-    * of hand-rolling a retry loop in engine code (SURVEY §2.8).
+    * `spark.task.maxFailures=7` (on [[master]] for the local CLI) and
+    * the matching S3A retry knobs instead of hand-rolling a retry loop in
+    * engine code (SURVEY §2.8).
     */
   def sessionConfigs(workers: Int): Map[String, String] = Map(
     "spark.sql.shuffle.partitions" -> workers.toString,
@@ -217,6 +185,12 @@ object HistogramRunner {
     "spark.hadoop.fs.s3a.retry.limit" -> "7",
     "spark.hadoop.fs.s3a.retry.interval" -> "1s",
     "spark.hadoop.fs.s3a.attempts.maximum" -> "7")
+
+  /** The CLI session's master. Local mode ignores `spark.task.maxFailures`
+    * and takes a task's attempts from the master URL: `local[N,7]` makes
+    * the 7-attempt retry of [[sessionConfigs]] real.
+    */
+  def master(workers: Int): String = s"local[$workers,7]"
 
   /** CLI-shaped main: runMain graft.HistogramRunner <source> [valueCol]
     * [outDir] [-m linear|log] [-w N] [--min_value X] [--max_value Y]
@@ -237,7 +211,7 @@ object HistogramRunner {
     // NOT stopped on exit); standalone, the builder owns its session
     val preExisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val spark = sessionConfigs(cli.workers)
-      .foldLeft(SparkSession.builder().master(s"local[${cli.workers}]")) {
+      .foldLeft(SparkSession.builder().master(master(cli.workers))) {
         case (b, (k, v)) => b.config(k, v)
       }
       .getOrCreate()
@@ -300,7 +274,7 @@ object HistogramRunner {
       }
     // one stats row or at most `bins` rows, held on the driver: the CSV
     // write, the bin count and the caller's own reads then run no scan
-    // again (the pushed histogram is local already)
+    // again (a histogram is local already)
     val rows = histo0.collect()
     val held = spark.createDataFrame(java.util.Arrays.asList(rows: _*), histo0.schema)
     if (cli.cfg.minmaxOnly)

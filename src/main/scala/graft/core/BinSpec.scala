@@ -42,6 +42,21 @@ final case class BinSpec(lo: Int, hi: Int, offset: Double, method: BinMethod) {
     if (code < lo || code > hi || bins == 0) -1
     else if (code == hi) bins - 1
     else code - lo
+
+  /** The dense bin counts of sparse `(code, count)` pairs: `dense(b)`
+    * counts bin `lo + b`, codes outside `[lo, hi]` drop and code `hi`
+    * joins the closed last bin — `np.histogram(w, bins, range=(lo, hi))`
+    * over counted codes, the reference's driver-side fold
+    * (compute_histogram/main.py:244-249).
+    */
+  def dense(codeCounts: IterableOnce[(Int, Long)]): Array[Long] = {
+    val counts = new Array[Long](bins)
+    codeCounts.iterator.foreach { case (c, n) =>
+      val b = binIndex(c)
+      if (b >= 0) counts(b) += n
+    }
+    counts
+  }
 }
 
 object BinSpec {
@@ -65,27 +80,30 @@ object BinSpec {
     * `legacyLogOffset100 = true` to [[graft.operators.HistogramOps.quantize]]
     * for bug-compatible behavior.
     *
-    * A non-finite min/max, or one whose padded bin code does not fit an
-    * `Int` (linear: |v| above ~2.1·10⁷), throws `IllegalArgumentException`
-    * naming the value and the method — the reference fails here too
-    * (Python `int(inf)` raises).
+    * A non-finite min/max, one whose padded bin code does not fit an
+    * `Int` (linear: |v| above ~2.1·10⁷), or a range of more bins than an
+    * `Int` counts (linear: max − min above ~2.1·10⁷) throws
+    * `IllegalArgumentException` naming the values and the method — the
+    * reference fails here too (Python `int(inf)` raises).
     */
-  def derive(minValue: Double, maxValue: Double, method: BinMethod): BinSpec =
-    method match {
+  def derive(minValue: Double, maxValue: Double, method: BinMethod): BinSpec = {
+    val (lo, hi, offset) = method match {
       case BinMethod.Linear =>
-        BinSpec(
-          code("min", minValue, minValue * 100, method) - 10,
+        (code("min", minValue, minValue * 100, method) - 10,
           code("max", maxValue, maxValue * 100, method) + 10,
-          0.0,
-          BinMethod.Linear)
+          0.0)
       case BinMethod.Log =>
         val offset = if (minValue <= 0) math.abs(minValue) + 1 else 0.0
-        BinSpec(
-          code("min", minValue, math.log(minValue + offset) * 1000, method),
+        (code("min", minValue, math.log(minValue + offset) * 1000, method),
           code("max", maxValue, math.log(maxValue + offset) * 1000, method),
-          offset,
-          BinMethod.Log)
+          offset)
     }
+    if (hi.toLong - lo > Int.MaxValue)
+      throw new IllegalArgumentException(
+        s"cannot derive ${method.name} bins: min value $minValue and max value $maxValue " +
+          s"span ${hi.toLong - lo} bins, more than an Int counts")
+    BinSpec(lo, hi, offset, method)
+  }
 
   /** True when the unrounded bin code `c` is finite and leaves room for
     * the linear ±10 padding in an `Int` — the codes [[derive]] accepts.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
-import graft.core.{BinMethod, BinSpec}
+import graft.core.{BinMethod, BinSpec, RouteLog}
 
 /** The histogram operator core, re-expressed as declarative Spark transforms.
   *
@@ -18,7 +18,8 @@ import graft.core.{BinMethod, BinSpec}
   * wide operation — raw values are quantized to integer codes, so the only
   * shuffle is a group-by over ≤ `hi − lo` distinct keys after map-side
   * partial aggregation; aggregation state is bounded by the bin count, never
-  * by data size. No driver-side data beyond one (min, max) row.
+  * by data size. The driver folds ≤ bins counts, as the reference's driver
+  * does ([[fold]]).
   */
 object HistogramOps {
 
@@ -50,28 +51,38 @@ object HistogramOps {
     }
   }
 
-  /** P1/P2 — quantize a value column to an integer bin code.
+  /** P1/P2 — quantize a value column to an integer bin code under `spec`'s
+    * method and offset: [[code]].
+    */
+  def quantize(
+      value: Column,
+      spec: BinSpec,
+      legacyLogOffset100: Boolean = false): Column =
+    code(value, spec.method, spec.offset, legacyLogOffset100)
+
+  /** A value's integer bin code, or null where it has none.
     *
     * Linear: `trunc(v · 100)` (reference: compute_histogram/main.py:194-195).
     * Log: `trunc(ln(v + offset) · 1000)` (compute_histogram/main.py:196-197).
     *
     * We quantize in `IntegerType`, not the reference's `int16`, and rely on
-    * the explicit `[lo, hi]` range filter in [[binCounts]] instead of
+    * the explicit `[lo, hi]` range of [[BinSpec.dense]] instead of
     * wraparound (SURVEY §7.4.4). `cast("int")` truncates toward zero like
-    * numpy `astype` for in-range values.
+    * numpy `astype`. A value has no code where Spark's `log` is null
+    * (v + offset ≤ 0) or where the unrounded code fails `BinSpec.hasCode`
+    * — exactly where the raster scan's `CodeFold` gives none — so the cast
+    * never overflows, with or without ANSI mode.
     *
     * `legacyLogOffset100 = true` reproduces the reference bug where
     * quantization hard-codes `+ 100` regardless of the derived offset
     * (compute_histogram/main.py:197 vs :166-172).
     */
-  def quantize(
-      value: Column,
-      spec: BinSpec,
-      legacyLogOffset100: Boolean = false): Column = spec.method match {
-    case BinMethod.Linear => (value * lit(100)).cast("int")
-    case BinMethod.Log =>
-      val off = if (legacyLogOffset100) 100.0 else spec.offset
-      (log(value + lit(off)) * lit(1000)).cast("int")
+  def code(value: Column, method: BinMethod, offset: Double, legacyLogOffset100: Boolean): Column = {
+    val raw = method match {
+      case BinMethod.Linear => value * lit(100)
+      case BinMethod.Log    => log(value + lit(if (legacyLogOffset100) 100.0 else offset)) * lit(1000)
+    }
+    when(abs(raw) + lit(10.0) <= lit(Int.MaxValue.toDouble), raw.cast("int"))
   }
 
   /** P3/P4 — reconstruct the bin's representative value from its code.
@@ -93,39 +104,6 @@ object HistogramOps {
 
   def clampToLastBin(code: Column, hi: Int): Column =
     when(code === lit(hi), lit(hi - 1)).otherwise(code)
-
-  /** A3 + A4 + F3 — dense fixed-bin histogram over integer codes.
-    *
-    * Semantics of `np.histogram(w, bins = hi−lo, range = (lo, hi))`
-    * (compute_histogram/main.py:248-249): codes outside `[lo, hi]` are
-    * silently dropped; every bin is `[b, b+1)` except the last, which is
-    * closed `[hi−1, hi]` — so code `hi` merges into bin `hi−1`.
-    *
-    * The distributed combine (reference `_add_histogram` fold,
-    * compute_histogram/main.py:100-108, 244-245) is subsumed by the
-    * group-by's partial/final hash aggregation. The result is densified —
-    * zero-count bins present — by a left join against `spark.range(lo, hi)`
-    * (AQE broadcasts the ≤ `hi−lo`-row side at runtime).
-    *
-    * Input: single `code: int` column. Output: `(bin: int, count: long)`.
-    */
-  def binCounts(codes: DataFrame, lo: Int, hi: Int): DataFrame = {
-    val spark = codes.sparkSession
-    if (hi == lo) {
-      // degenerate range (e.g. min == max under log binning): zero bins
-      import spark.implicits._
-      return Seq.empty[(Int, Long)].toDF("bin", "count")
-    }
-    val counted = codes
-      .filter(inRange(col("code"), lo, hi))
-      .select(clampToLastBin(col("code"), hi).as("bin"))
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("count"))
-    val bins = spark.range(lo.toLong, hi.toLong).select(col("id").cast("int").as("bin"))
-    bins
-      .join(counted, Seq("bin"), "left")
-      .select(col("bin"), coalesce(col("count"), lit(0L)).as("count"))
-  }
 
   /** A4 — element-wise merge of two dense histograms
     * (reference `_add_histogram`, compute_histogram/main.py:244-245).
@@ -160,29 +138,103 @@ object HistogramOps {
       .orderBy(col("value"))
   }
 
-  /** The full single-method histogram: quantize → range filter → dense bin
-    * counts → bin-edge reconstruction. Output `(value: double, cnt: long)`
-    * ordered by value — the reference's `histogram.csv` relation
+  /** The histogram of `values` under a known `spec`: [[fold]] over
+    * [[valueCodes]], one aggregate. Output `(value: double, cnt: long)`
+    * in value order — the reference's `histogram.csv` relation
     * (compute_histogram/main.py:110-124).
     */
   def histogram(
       values: DataFrame,
       spec: BinSpec,
-      legacyLogOffset100: Boolean = false): DataFrame = {
-    val codes = values.select(quantize(col("value"), spec, legacyLogOffset100).as("code"))
-    binCounts(codes, spec.lo, spec.hi)
-      .select(binEdge(col("bin"), spec).as("value"), col("count").as("cnt"))
-      .orderBy(col("value"))
+      legacyLogOffset100: Boolean = false): DataFrame =
+    fold(values.sparkSession, spec.method, Some(spec), clampToZero = false, legacyLogOffset100)(
+      valueCodes(values, spec.method, legacyLogOffset100))
+
+  /** Bin-code counts of one read of a source, merged and collected: at
+    * most one `(code, count)` pair per code seen, and the min and max of
+    * its valid values, coded or not — (0.0, 0.0) without one, as in
+    * [[minMax]]. `valid` is false when a valid value got no code, except
+    * v + 100 ≤ 0 under the legacy log offset, whose log is undefined by
+    * that offset's own definition.
+    */
+  final case class Codes(counts: Array[(Int, Long)], min: Double, max: Double, valid: Boolean)
+
+  /** The one histogram fold — the reference's worker/driver split
+    * (per-worker passes, driver-side `_add_histogram` fold and
+    * `np.histogram`, compute_histogram/main.py:93-124, 244-249). Workers
+    * count codes; the driver derives the spec from the merged min/max
+    * unless `bounds` gives it (after `clampToZero`), drops the codes
+    * outside it and densifies ([[BinSpec.dense]]).
+    *
+    * `codes(offset, spec)` reads the source once, coding with `offset`;
+    * `spec` is the spec when already known, so the source may drop codes
+    * outside it. The first read codes with offset 0 unless `bounds` is
+    * given: that is the derived offset whenever the min is > 0, and linear
+    * and the legacy `+100` code have no offset to derive. A log spec whose
+    * derived offset differs (min ≤ 0, also after `clampToZero`) needs the
+    * min before any code: a second read with that offset, logged as the
+    * `histogramSecondPass` route. With derived bounds every valid value
+    * has a code under the spec's offset; a read that says otherwise
+    * throws.
+    */
+  def fold(
+      spark: SparkSession,
+      method: BinMethod,
+      bounds: Option[BinSpec],
+      clampToZero: Boolean,
+      legacyLogOffset100: Boolean)(
+      codes: (Double, Option[BinSpec]) => Codes): DataFrame = {
+    val offset = bounds.fold(0.0)(_.offset)
+    val first = codes(offset, bounds)
+    val spec = bounds.getOrElse {
+      val (a, b) = (first.min, first.max)
+      val (mn, mx) = if (clampToZero) (math.min(a, 0.0), math.max(b, 0.0)) else (a, b)
+      BinSpec.derive(mn, mx, method)
+    }
+    val coded =
+      if (method == BinMethod.Log && !legacyLogOffset100 && spec.offset != offset) {
+        RouteLog.costRoute(
+          "histogramSecondPass",
+          s"log bins from min ${first.min} need offset " +
+            s"${spec.offset}, the first read coded with offset $offset")
+        codes(spec.offset, Some(spec))
+      } else first
+    if (bounds.isEmpty && !coded.valid)
+      throw new IllegalStateException(s"a valid value has no ${method.name} code under $spec")
+    histogramFromCounts(spark, spec, spec.dense(coded.counts))
+  }
+
+  /** The DataFrame code source of [[fold]]: one `groupBy(code)` aggregate
+    * of count, min and max over `values` (F1-normalized), collected. The
+    * values with no [[code]] group under a null code and still count in
+    * the min and max. A known `spec` keeps only its codes (and the null
+    * one), so at most `bins + 1` rows reach the driver.
+    */
+  def valueCodes(values: DataFrame, method: BinMethod, legacyLogOffset100: Boolean)(
+      offset: Double,
+      spec: Option[BinSpec]): Codes = {
+    val coded = values.select(
+      code(col("value"), method, offset, legacyLogOffset100).as("code"), col("value"))
+    val kept = spec.fold(coded)(s => coded.filter(col("code").isNull || inRange(col("code"), s.lo, s.hi)))
+    val rows = kept
+      .groupBy(col("code"))
+      .agg(count(lit(1)), min(col("value")), max(col("value")))
+      .collect()
+    val (noCode, withCode) = rows.partition(_.isNullAt(0))
+    val legacyLog = method == BinMethod.Log && legacyLogOffset100
+    Codes(
+      withCode.map(r => r.getInt(0) -> r.getLong(1)),
+      rows.iterator.map(_.getDouble(2)).reduceOption(_ min _).getOrElse(0.0),
+      rows.iterator.map(_.getDouble(3)).reduceOption(_ max _).getOrElse(0.0),
+      noCode.forall(r => legacyLog && r.getDouble(3) + 100 <= 0))
   }
 
   /** The `(value, cnt)` histogram of dense bin counts already on the
-    * driver (`counts(b)` counts bin `spec.lo + b`) — the driver-side fold
-    * of the reference (compute_histogram/main.py:244-249) for sources that
-    * bin inside the scan (`HistogramRunner.runPushed`). A local relation in
-    * bin order, so value order: writing or counting it runs no scan.
-    * `value` is [[binEdge]], as in [[histogram]].
+    * driver (`counts(b)` counts bin `spec.lo + b`), as [[fold]] returns
+    * it. A local relation in bin order, so value order: writing or
+    * counting it runs no scan. `value` is [[binEdge]].
     */
-  def histogramFromCounts(spark: SparkSession, spec: BinSpec, counts: Array[Long]): DataFrame = {
+  private def histogramFromCounts(spark: SparkSession, spec: BinSpec, counts: Array[Long]): DataFrame = {
     require(counts.length == spec.bins, s"${counts.length} counts for ${spec.bins} bins")
     val rows = java.util.Arrays.asList(counts.indices.map(b => Row(spec.lo + b, counts(b))): _*)
     val schema = StructType(Seq(
@@ -190,24 +242,6 @@ object HistogramOps {
       StructField("count", LongType, nullable = false)))
     spark.createDataFrame(rows, schema)
       .select(binEdge(col("bin"), spec).as("value"), col("count").as("cnt"))
-  }
-
-  /** End-to-end two-job pipeline: stats pass (A1/A2) → derive BinSpec on the
-    * driver (1 collected row) → histogram pass. Mirrors the reference's
-    * pass-1/pass-2 shape (compute_histogram/main.py:53-57).
-    */
-  def computeHistogram(
-      df: DataFrame,
-      valueCol: String,
-      method: BinMethod,
-      minValueOverride: Option[Double] = None,
-      maxValueOverride: Option[Double] = None): DataFrame = {
-    val values = validValues(df, valueCol)
-    val (mn, mx) = (minValueOverride, maxValueOverride) match {
-      case (Some(a), Some(b)) => (a, b) // user stats replace the stats pass (main.py:53-54)
-      case _                  => minMax(values)
-    }
-    histogram(values, BinSpec.derive(mn, mx, method))
   }
 
   /** S5 — CSV sink with the reference's `"%1.2f, %d"` row format, written as

@@ -479,7 +479,7 @@ object RankOps {
     * (ntile-equivalence property-pinned in RankOpsSpec).
     *
     * Eagerness note: this runs its three passes when CALLED (the
-    * HistogramOps two-pass precedent), not at consumer action time — the
+    * `HistogramOps.fold` precedent), not at consumer action time — the
     * right trade for the interactive/bench shape where the cut derivation
     * is a bounded prefix of one query.
     *

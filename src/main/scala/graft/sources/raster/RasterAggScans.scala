@@ -34,11 +34,12 @@ import graft.core.{BinMethod, BinSpec}
   * options; `RasterAggSpec` pins bit-equality with the raw-pixel path.
   *
   * Both modes are [[CodeFold]]: the quantize arithmetic REPLICATES
-  * `HistogramOps.quantize` + `binCounts` exactly — `(v·100).toInt` /
-  * `(ln(v+off)·1000).toInt` (truncation toward zero = non-ANSI cast) and
-  * no code where Spark's `log` is null; the driver then drops the codes
-  * outside `[lo, hi]` and merges code `hi` into the closed last bin
-  * `hi−1` (`BinSpec.binIndex`).
+  * `HistogramOps.code` exactly — `(v·100).toInt` / `(ln(v+off)·1000).toInt`
+  * (truncation toward zero) and no code where Spark's `log` is null or
+  * `BinSpec.hasCode` fails; the driver then folds the codes as it folds a
+  * DataFrame's (`HistogramOps.fold`): it drops the codes outside
+  * `[lo, hi]` and merges code `hi` into the closed last bin `hi−1`
+  * (`BinSpec.dense`).
   */
 object RasterAggScans {
 
@@ -66,7 +67,7 @@ object RasterAggScans {
     * 1000)` (log; `off` is 100 under `legacyLogOffset100`, else `offset`).
     * A sample has no code where Spark's `log` is null (v + off ≤ 0) or
     * where the code fails `BinSpec.hasCode`; it is left out of the counts,
-    * as `binCounts` drops a null or saturated code, and clears
+    * as `HistogramOps.code` is null there, and clears
     * [[codesValid]] — except v + 100 ≤ 0 under the legacy offset, whose
     * log is undefined by that offset's own definition.
     *

@@ -15,15 +15,11 @@ class HistogramSpec extends SparkSpec {
   // reference test/test_histogram.py:5 — 3×3 matrix flattened
   private val fixture = Seq(1, 2, 3, 2, 3, 4, 3, 4, 5)
 
-  private def denseCounts(lo: Int, hi: Int): Seq[Long] = {
-    val codes = fixture.toDF("code")
-    HistogramOps
-      .binCounts(codes, lo, hi)
-      .orderBy("bin")
-      .collect()
-      .map(_.getLong(1))
-      .toSeq
-  }
+  // the fold's dense step over counted codes: np.histogram(codes, hi - lo, (lo, hi))
+  private def dense(codes: Seq[Int], lo: Int, hi: Int): Seq[Long] =
+    BinSpec(lo, hi, 0.0, BinMethod.Linear).dense(codes.groupMapReduce(identity)(_ => 1L)(_ + _)).toSeq
+
+  private def denseCounts(lo: Int, hi: Int): Seq[Long] = dense(fixture, lo, hi)
 
   test("golden: histogram range (0,6) == [0,1,2,3,2,1]") {
     assert(denseCounts(0, 6) == Seq(0L, 1L, 2L, 3L, 2L, 1L))
@@ -49,19 +45,12 @@ class HistogramSpec extends SparkSpec {
   }
 
   test("np.histogram closed last bin: code == hi lands in bin hi-1") {
-    val codes = Seq(0, 1, 5, 6).toDF("code") // range (0,6): 6 == hi
-    val counts = HistogramOps
-      .binCounts(codes, 0, 6)
-      .orderBy("bin")
-      .collect()
-      .map(_.getLong(1))
-      .toSeq
+    val counts = dense(Seq(0, 1, 5, 6), 0, 6) // range (0,6): 6 == hi
     assert(counts == Seq(1L, 1L, 0L, 0L, 0L, 2L)) // 5 and 6 both in last bin
   }
 
   test("out-of-range codes are dropped (numpy range semantics)") {
-    val codes = Seq(-1, 0, 3, 7, 100).toDF("code")
-    val total = HistogramOps.binCounts(codes, 0, 6).agg(sum("count")).head().getLong(0)
+    val total = dense(Seq(-1, 0, 3, 7, 100), 0, 6).sum
     assert(total == 2L) // only 0 and 3 in [0, 6]
   }
 
@@ -87,16 +76,24 @@ class HistogramSpec extends SparkSpec {
   }
 
   test("BinSpec rejects a non-finite or Int-overflowing min/max by value and method") {
-    // neither scan path filters ±Inf; the reference fails too (int(inf))
+    // neither scan path filters ±Inf; the reference fails too (int(inf)).
+    // ±Inf has no code, so no cast overflows whatever ANSI is set to
     val withInf = Seq(1.0, 2.5, Double.PositiveInfinity).toDF("value")
-    for (m <- Seq(BinMethod.Linear, BinMethod.Log)) {
-      val e = intercept[IllegalArgumentException](
-        HistogramRunner.run(withInf, HistogramConfig("value", m)).collect())
-      assert(e.getMessage.contains("Infinity") && e.getMessage.contains(m.name), e.getMessage)
-    }
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try
+      for (a <- Seq("true", "false"); m <- Seq(BinMethod.Linear, BinMethod.Log)) {
+        spark.conf.set("spark.sql.ansi.enabled", a)
+        val e = intercept[IllegalArgumentException](
+          HistogramRunner.run(withInf, HistogramConfig("value", m)).collect())
+        assert(e.getMessage.contains("Infinity") && e.getMessage.contains(m.name), s"ansi $a: ${e.getMessage}")
+      }
+    finally spark.conf.set("spark.sql.ansi.enabled", ansi)
     // linear codes are v·100 ± 10: 3·10⁷ no longer fits an Int
     val big = intercept[IllegalArgumentException](BinSpec.derive(0.0, 3e7, BinMethod.Linear))
     assert(big.getMessage.contains("3.0E7"), big.getMessage)
+    // both ends fit, but hi − lo = 4,000,000,020 bins do not
+    val wide = intercept[IllegalArgumentException](BinSpec.derive(-2e7, 2e7, BinMethod.Linear))
+    assert(wide.getMessage.contains("-2.0E7") && wide.getMessage.contains("linear"), wide.getMessage)
   }
 
   test("histogram counts sum to the number of in-range values") {

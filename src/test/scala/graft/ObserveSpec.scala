@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 
 /** `Dataset.observe` metrics — the zero-cost accounting hook a 100 TB
@@ -11,22 +12,22 @@ class ObserveSpec extends SparkSpec {
 
   test("observed metrics ride the histogram job: valid rows + cents sum, no extra pass") {
     val li = graft.sources.Tables.lineitem(spark, TestSpark.sf0001)
+    val ingest = Observation("ingest")
     val observed = graft.operators.HistogramOps
       .validValues(li, "l_quantity")
       .observe(
-        "ingest",
+        ingest,
         count(lit(1)).as("n_valid"),
         sum((col("value") * 100).cast("bigint")).as("cents_sum"))
-    val histo = graft.operators.HistogramOps.histogram(
+    // the histogram's one aggregate is the action — metrics accumulate
+    // during it, and the Observation reads them from that executed query
+    graft.operators.HistogramOps.histogram(
       observed,
       graft.core.BinSpec.derive(1.0, 50.0, graft.core.BinMethod.Linear))
-    histo.collect() // one action — metrics accumulate during it
-    // metrics belong to the EXECUTED query's plan (the downstream action),
-    // not the intermediate Dataset the observe was declared on
-    val m = histo.queryExecution.observedMetrics("ingest")
+    val m = ingest.get
     val expectValid = li.filter(col("l_quantity").isNotNull && !isnan(col("l_quantity"))).count()
-    assert(m.getAs[Long]("n_valid") == expectValid)
-    assert(m.getAs[Long]("cents_sum") ==
+    assert(m("n_valid") == expectValid)
+    assert(m("cents_sum") ==
       li.select(sum((col("l_quantity") * 100).cast("bigint"))).head().getLong(0))
   }
 }

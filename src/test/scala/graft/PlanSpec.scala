@@ -1,7 +1,14 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-shape regression guards: the scale properties README promises
   * (column pruning, predicate pushdown, broadcast choices, top-k without
@@ -15,8 +22,30 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
   }
 
+  /** The formatted plans of the queries `body` executes, build included. */
+  private def executed(body: => Unit): Seq[String] = {
+    val qes = new ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = qes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { body; ListenerBusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    qes.asScala.toSeq.map(_.explainString(ExplainMode.fromString("formatted")))
+  }
+
+  // formatted mode prints each node twice (tree + "(n) Node" detail
+  // section); count the detail headers = distinct scan nodes
+  private def parquetScans(p: String): Int = """(?m)^\(\d+\) Scan parquet""".r.findAllIn(p).length
+
   test("hist_linear: scan prunes to the value column and pushes IsNotNull") {
-    val p = plan("hist_linear")
+    // the histogram's one aggregate runs while the query is built: its
+    // executed plan holds the scan
+    val scans = executed(plan("hist_linear")).filter(parquetScans(_) > 0)
+    assert(scans.length == 1, scans.mkString("\n"))
+    val p = scans.head
     assert(p.contains("ReadSchema: struct<l_quantity:double>"))
     assert(p.contains("PushedFilters: [IsNotNull(l_quantity)]"))
   }
@@ -28,6 +57,8 @@ class PlanSpec extends SparkSpec {
     val windowIdx = p.indexOf("Window")
     assert(windowIdx > 0)
     assert(p.indexOf("HashAggregate") < windowIdx, "window must sit above the aggregation")
+    // the window reads the folded bins, never a raw scan
+    assert(parquetScans(p) == 0, p)
   }
 
   test("doc_repetition: native kernel keeps the plan shuffle-free (sort exchange only)") {
@@ -50,16 +81,31 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("transform("), "no interpreted HOF stage")
   }
 
-  test("hist_deciles: single raw scan in the decile plan (2 passes total incl. stats job)") {
-    // the scalar total is an unbounded window over the binned relation, not
-    // a cross join against a separate aggregate — the old shape evaluated
-    // the histogram lineage twice, showing TWO parquet scans here (a third
-    // full pass over raw data counting the stats job)
-    val p = plan("hist_deciles")
-    // formatted mode prints each node twice (tree + "(n) Node" detail
-    // section); count the detail headers = distinct scan nodes
-    val scans = """(?m)^\(\d+\) Scan parquet""".r.findAllIn(p).length
-    assert(scans == 1, s"expected 1 parquet scan node in the decile plan, got $scans")
+  test("hist_deciles: one parquet scan for the whole query, build and exec together") {
+    // no stats job: the fold reads lineitem once while the query is built,
+    // and the scalar total is an unbounded window over the binned relation,
+    // not a cross join that would evaluate the histogram lineage twice
+    val plans = executed(SparkEntry.queries("hist_deciles")(spark, TestSpark.sf0001).collect())
+    val scans = plans.map(parquetScans).sum
+    assert(scans == 1, s"expected 1 parquet scan node over the query's plans, got $scans")
+  }
+
+  test("shared fold: hist_linear, hist_log and hist_deciles each read their table in one scan") {
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scans.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try
+      for (q <- Seq("hist_linear", "hist_log", "hist_deciles")) {
+        ListenerBusDrain(spark.sparkContext)
+        scans.set(0)
+        SparkEntry.queries(q)(spark, TestSpark.sf0001).collect()
+        ListenerBusDrain(spark.sparkContext)
+        assert(scans.get == 1, s"$q: ${scans.get} parquet scan stages")
+      }
+    finally spark.sparkContext.removeSparkListener(counter)
   }
 
   test("q3: dims broadcast, timestamp predicates pushed, top-k avoids global sort") {

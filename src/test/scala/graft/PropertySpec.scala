@@ -34,8 +34,9 @@ class PropertySpec extends SparkSpec {
   test("histogram mass conservation: sum(counts) == #in-range codes") {
     val gen = Gen.nonEmptyListOf(Gen.chooseNum(-50, 150))
     check(Prop.forAll(gen) { xs: List[Int] =>
-      val df = xs.toDF("code")
-      val total = HistogramOps.binCounts(df, 0, 100).agg(sum("count")).head().getLong(0)
+      // the fold's dense step over the codes' counts
+      val codeCounts = xs.toDF("code").groupBy("code").count().as[(Int, Long)].collect()
+      val total = BinSpec(0, 100, 0.0, BinMethod.Linear).dense(codeCounts).sum
       total == xs.count(x => x >= 0 && x <= 100)
     }, n = 15)
   }
@@ -64,6 +65,79 @@ class PropertySpec extends SparkSpec {
         .toSeq
       codes == codes.sorted
     }, n = 10)
+  }
+
+  /** `np.histogram` over the reference's codes in plain Scala: the spec
+    * from the valid values' min/max (after `clampToZero`) or both bounds,
+    * codes `trunc(v·100)` / `trunc(ln(v + off)·1000)` with no code where
+    * Spark's `log` is null, codes outside `[lo, hi]` dropped and code `hi`
+    * in the closed last bin; `(edge, count)` per bin.
+    */
+  private def npHistogram(xs: Seq[Option[Double]], cfg: graft.HistogramConfig): Seq[(Double, Long)] = {
+    val valid = xs.flatten.filterNot(_.isNaN)
+    val (mn, mx) = (cfg.minValue, cfg.maxValue) match {
+      case (Some(a), Some(b)) => (a, b)
+      case _ =>
+        val (a, b) = if (valid.isEmpty) (0.0, 0.0) else (valid.reduce(_ min _), valid.reduce(_ max _))
+        if (cfg.clampToZero) (math.min(a, 0.0), math.max(b, 0.0)) else (a, b)
+    }
+    val spec = BinSpec.derive(mn, mx, cfg.method)
+    val off = if (cfg.legacyLogOffset100) 100.0 else spec.offset
+    val codes = valid.flatMap { v =>
+      if (cfg.method == BinMethod.Linear) Some((v * 100).toInt)
+      else if (v + off > 0) Some((StrictMath.log(v + off) * 1000).toInt)
+      else None
+    }
+    val counts = new Array[Long](spec.bins)
+    for (c <- codes if c >= spec.lo && c <= spec.hi && spec.bins > 0)
+      counts(math.min(c, spec.hi - 1) - spec.lo) += 1
+    counts.toSeq.zipWithIndex.map { case (n, b) =>
+      val c = spec.lo + b
+      val edge =
+        if (cfg.method == BinMethod.Linear) c / 100.0
+        else StrictMath.exp(c / 1000.0) - spec.offset
+      (edge, n)
+    }
+  }
+
+  test("DataFrame histogram fold == a plain np.histogram fold on generated values") {
+    import graft.{HistogramConfig, HistogramRunner}
+    import BinMethod.{Linear, Log}
+    // quarter steps in [-150, 400], NaN and null; `positive` lifts every
+    // value above 0 (log with offset 0), `ties` repeats the max (log codes
+    // it as hi, the closed last bin)
+    val value = Gen.frequency(
+      8 -> Gen.chooseNum(-600, 1600).map(i => Option(i / 4.0)),
+      1 -> Gen.const(Option(Double.NaN)),
+      1 -> Gen.const(Option.empty[Double]))
+    val gen = for {
+      base <- Gen.listOf(value)
+      positive <- Gen.oneOf(true, false)
+      ties <- Gen.chooseNum(0, 3)
+      lo <- Gen.chooseNum(-80, 80).map(_ / 4.0)
+      span <- Gen.chooseNum(0, 400).map(_ / 4.0)
+    } yield {
+      val xs = if (positive) base.map(_.map(v => math.abs(v) + 0.25)) else base
+      val valid = xs.flatten.filterNot(_.isNaN)
+      val withTies = xs ++ Seq.fill(if (valid.isEmpty) 0 else ties)(Some(valid.reduce(_ max _)))
+      // values at the given max and one linear pad above it: code hi
+      (withTies ++ Seq(Some(lo + span), Some(lo + span + 0.1)), lo, lo + span)
+    }
+    check(Prop.forAllNoShrink(gen) { case (xs, lo, hi) =>
+      val df = xs.toDF("value")
+      val cfgs = Seq(
+        HistogramConfig("value", Linear),
+        HistogramConfig("value", Log),
+        HistogramConfig("value", Log, legacyLogOffset100 = true),
+        HistogramConfig("value", Linear, clampToZero = true),
+        HistogramConfig("value", Log, clampToZero = true),
+        HistogramConfig("value", Linear, minValue = Some(lo), maxValue = Some(hi)),
+        HistogramConfig("value", Log, minValue = Some(lo), maxValue = Some(hi)))
+      cfgs.forall { cfg =>
+        val got = HistogramRunner.run(df, cfg).collect().map(r => (r.getDouble(0), r.getLong(1))).toSeq
+        got == npHistogram(xs, cfg)
+      }
+    }, n = 12)
   }
 
   test("deciles: percentiles ∈ {0..100}, counts sum to total") {

@@ -70,7 +70,7 @@ class RasterSourceSpec extends SparkSpec with BeforeAndAfterAll {
     assert(df.schema.fieldNames.toSeq == Seq("value"))
     assert(df.count() == 3L * 5000)
     // full reference pipeline over the DSv2 source
-    val histo = HistogramOps.computeHistogram(load(), "value", BinMethod.Linear)
+    val histo = HistogramRunner.run(load(), HistogramConfig("value", BinMethod.Linear))
     assert(histo.count() > 0)
     assert(
       histo.agg(sum("cnt")).head().getLong(0) ==

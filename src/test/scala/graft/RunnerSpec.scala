@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.core.BinMethod
+import graft.core.{BinMethod, BinSpec}
 import graft.operators.{HistogramOps, MaskOps}
 import graft.sources.raster.GeoTiffSpec
 
@@ -118,6 +118,8 @@ class RunnerSpec extends SparkSpec {
     assert(cfgs("spark.hadoop.fs.s3a.retry.limit") == "7")
     assert(cfgs("spark.hadoop.fs.s3a.attempts.maximum") == "7")
     assert(cfgs("spark.sql.shuffle.partitions") == "4")
+    // local mode takes a task's attempts from the master URL, not the conf
+    assert(HistogramRunner.master(4) == "local[4,7]")
   }
 
   test("F4 mask filter: reference 3x3 fixture semantics") {
@@ -130,12 +132,9 @@ class RunnerSpec extends SparkSpec {
       .map { case (m, i) => (i.toLong, m) }
       .toDF("key", "mask")
     val kept = MaskOps.applyMask(vals, mask)
-    val counts = HistogramOps
-      .binCounts(kept.select(col("code")), 0, 9)
-      .orderBy("bin")
-      .collect()
-      .map(_.getLong(1))
-      .toSeq
+    // the fold's dense step over the kept codes' counts
+    val codeCounts = kept.groupBy(col("code")).count().as[(Int, Long)].collect()
+    val counts = BinSpec(0, 9, 0.0, BinMethod.Linear).dense(codeCounts).toSeq
     assert(counts == Seq(0L, 0L, 2L, 2L, 2L, 0L, 0L, 0L, 0L))
   }
 
