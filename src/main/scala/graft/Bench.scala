@@ -239,14 +239,14 @@ object Bench {
       .map { case (b, a, m) => s"[$b,$a,$m]" }
       .mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    // like-for-like subtotal over the round-1 surface (34 queries): the
+    // like-for-like subtotal over the round-1 surface (33 queries): the
     // full total grows every round as operators are added, so
     // round-over-round comparisons against the recorded baseline use this
     val r1Names = Set(
       "dedup_embedding", "dedup_exact", "dedup_fingerprint", "dedup_minhash",
       "dedup_ngram_jaccard", "dedup_simhash", "doc_winnow", "events_asof",
       "events_hourly_hist", "events_json_stats", "events_sessions", "hist_deciles",
-      "hist_linear", "hist_linear_dense", "hist_log", "hist_log_offset",
+      "hist_linear", "hist_log", "hist_log_offset",
       "knn_cosine", "knn_ivf", "knn_lsh", "lang_id", "media_decode",
       "media_features", "minmax", "minmax_clamped", "pipeline_clean",
       "q1_pricing", "q1_rollup", "q3_top_orders", "q5_region_volume",
@@ -259,7 +259,7 @@ object Bench {
     val r1SubtotalMed = medians.collect { case (k, v) if r1Names(k) && v >= 0 => v }.sum
     val excludedJson = excludedIdx.mkString("[", ",", "]")
     // Full-surface regression gate (round-12 verdict #2): the r1 subtotal
-    // only watches the 34 round-1 queries; everything added since had no
+    // only watches the 33 round-1 queries; everything added since had no
     // recorded time for the 2× gate to compare against. bench_baseline.json
     // (repo root, medians recorded by the round-13 re-baseline procedure:
     // n≥3 load-guarded sweeps at sf0.1 on HEAD) supplies a per-query

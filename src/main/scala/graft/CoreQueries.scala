@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{BinMethod, BinSpec}
+import graft.core.BinMethod
 import graft.operators.{HistogramOps, PercentileOps}
 import graft.sources.Tables
 
@@ -43,10 +43,11 @@ object CoreQueries {
        |)""".stripMargin
 
   // Known cross-engine exposure (accepted): the log-bin CODE itself is
-  // trunc(ln(v + off) * 1000) computed independently by JVM Math.log and
-  // DuckDB libm. A value whose scaled log lands within 1 ulp of an integer
-  // boundary could flip a bin between engines; counts would then differ by
-  // ±1 in two adjacent bins. Probability grows with row count (none observed
+  // trunc(ln(v + off) * 1000) computed independently by the JVM's
+  // StrictMath.log (Spark's log and BinSpec.logCode, so the spec and the
+  // codes agree inside the engine) and DuckDB libm. A value whose scaled
+  // log lands within 1 ulp of an integer boundary could flip a bin between
+  // engines; counts would then differ by ±1 in two adjacent bins. Probability grows with row count (none observed
   // through sf0.1). The bin-edge VALUE column is already round(·, 6) on both
   // sides; the code boundary cannot be rounded without changing reference
   // semantics (compute_histogram/main.py:196-197), so it is documented
@@ -98,14 +99,6 @@ object CoreQueries {
     // P1/P3/A3/A4/F3 — dense linear histogram.
     "hist_linear" -> ((s, dir) =>
       HistogramRunner.run(Tables.lineitem(s, dir), HistogramConfig("l_quantity"))),
-    // Same semantics via the single-shuffle dense-vector Aggregator
-    // (graft.functions.DenseHistogram) — shares hist_linear's oracle.
-    "hist_linear_dense" -> ((s, dir) => {
-      val values =
-        HistogramOps.validValues(Tables.lineitem(s, dir), "l_quantity")
-      val (mn, mx) = HistogramOps.minMax(values)
-      HistogramOps.histogramDense(values, BinSpec.derive(mn, mx, BinMethod.Linear))
-    }),
     // P2/P4 — dense log histogram, offset = 0 path (events.value > 0).
     // Bin-edge values are exp()-reconstructed; JVM Math.exp and DuckDB libm
     // differ in the last ulp, so the verify surface rounds to 6 decimals
@@ -132,14 +125,17 @@ object CoreQueries {
     // state a live stream maintains, equivalence spec-pinned in
     // StreamingQuantilesSpec). Every exact batch cut provably lies inside
     // its row's [err_lo, err_hi].
-    "hist_cut_bounds" -> ((s, dir) => {
-      val values = HistogramOps.validValues(Tables.lineitem(s, dir), "l_quantity")
-      val (mn, mx) = HistogramOps.minMax(values)
-      val spec = BinSpec.derive(mn, mx, BinMethod.Linear)
-      graft.streaming.StreamingQuantiles.cutsFromState(
-        graft.streaming.StreamingQuantiles.binCounts(values, spec), spec, 10)
-    })
+    "hist_cut_bounds" -> ((s, dir) => cutBounds(Tables.lineitem(s, dir), "l_quantity"))
   )
+
+  /** `hist_cut_bounds` over any `valueCol`: one linear histogram fold
+    * ([[HistogramRunner.fold]]) gives both the spec and the `(bin, cnt)`
+    * state the cuts read, in one read of `df`.
+    */
+  def cutBounds(df: DataFrame, valueCol: String): DataFrame = {
+    val folded = HistogramRunner.fold(df, HistogramConfig(valueCol))
+    graft.streaming.StreamingQuantiles.cutsFromState(folded.binCounts(df.sparkSession), folded.spec, 10)
+  }
 
   val oracle: Map[String, String] = Map(
     "minmax" ->
@@ -153,9 +149,6 @@ object CoreQueries {
         |      WHERE l_extendedprice IS NOT NULL
         |        AND NOT isnan(CAST(l_extendedprice AS DOUBLE)))""".stripMargin,
     "hist_linear" ->
-      (histoLinearCte("lineitem", "l_quantity") +
-        "\nSELECT value, cnt FROM histo ORDER BY value"),
-    "hist_linear_dense" ->
       (histoLinearCte("lineitem", "l_quantity") +
         "\nSELECT value, cnt FROM histo ORDER BY value"),
     "hist_log" ->

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.{BinMethod, BinSpec}
-import graft.operators.{HistogramOps, PercentileOps}
+import graft.operators.HistogramOps
 import graft.sources.Tables
 
 /** The reference's CLI surface (E3 — reference: compute_histogram/main.py:17-57,
@@ -29,39 +29,39 @@ final case class HistogramConfig(
 object HistogramRunner {
 
   /** Run the configured pipeline. `minmaxOnly` returns the 1-row stats
-    * relation; otherwise the dense `(value, cnt)` histogram of
-    * [[HistogramOps.fold]] over the DataFrame code source
-    * ([[HistogramOps.valueCodes]]): one aggregate reads `df` once (twice
-    * for log with a min ≤ 0), and the histogram comes back as a local
-    * relation.
+    * relation; otherwise the dense `(value, cnt)` histogram of [[fold]]:
+    * one aggregate reads `df` once (twice for log with a min ≤ 0), and the
+    * histogram comes back as a local relation.
     */
-  def run(df: DataFrame, cfg: HistogramConfig): DataFrame = {
-    val values = HistogramOps.validValues(df, cfg.valueCol)
+  def run(df: DataFrame, cfg: HistogramConfig): DataFrame =
     if (cfg.minmaxOnly) {
       import org.apache.spark.sql.functions._
-      val base = values.agg(min(col("value")).as("min_value"), max(col("value")).as("max_value"))
+      val base = HistogramOps.validValues(df, cfg.valueCol)
+        .agg(min(col("value")).as("min_value"), max(col("value")).as("max_value"))
       if (cfg.clampToZero)
         base.select(
           least(col("min_value"), lit(0.0)).as("min_value"),
           greatest(col("max_value"), lit(0.0)).as("max_value"))
       else base
-    } else fold(values.sparkSession, cfg)(HistogramOps.valueCodes(values, cfg.method, cfg.legacyLogOffset100))
+    } else fold(df, cfg).histogram(df.sparkSession)
+
+  /** [[HistogramOps.fold]] of `df`'s valid `cfg.valueCol` values over the
+    * DataFrame code source ([[HistogramOps.valueCodes]]): the spec and the
+    * dense bin counts, on the driver.
+    */
+  def fold(df: DataFrame, cfg: HistogramConfig): HistogramOps.Folded = {
+    val values = HistogramOps.validValues(df, cfg.valueCol)
+    foldCodes(cfg)(HistogramOps.valueCodes(values, cfg.method, cfg.legacyLogOffset100))
   }
 
   /** [[HistogramOps.fold]] under `cfg`: the spec comes from both bounds
     * when given (the reference skips its stats pass then, main.py:53-54).
     */
-  private def fold(spark: SparkSession, cfg: HistogramConfig)(
-      codes: (Double, Option[BinSpec]) => HistogramOps.Codes): DataFrame = {
+  private def foldCodes(cfg: HistogramConfig)(
+      codes: (Double, Option[BinSpec]) => HistogramOps.Codes): HistogramOps.Folded = {
     val bounds = for (a <- cfg.minValue; b <- cfg.maxValue) yield BinSpec.derive(a, b, cfg.method)
-    HistogramOps.fold(spark, cfg.method, bounds, cfg.clampToZero, cfg.legacyLogOffset100)(codes)
+    HistogramOps.fold(cfg.method, bounds, cfg.clampToZero, cfg.legacyLogOffset100)(codes)
   }
-
-  /** Histogram + decile summary in one call (the full reference workflow:
-    * histogram.csv → compute_histogram.sql).
-    */
-  def runWithDeciles(df: DataFrame, cfg: HistogramConfig): DataFrame =
-    PercentileOps.deciles(run(df, cfg.copy(minmaxOnly = false)))
 
   /** The source-pushed pipeline over the DSv2 raster scan: the same
     * [[HistogramOps.fold]] as [[run]], one scan for every spec but log with
@@ -72,7 +72,7 @@ object HistogramRunner {
     * [[run]] over the raw `mode=values` scan (RasterAggSpec pins it).
     */
   def runPushed(spark: SparkSession, tileListPath: String, cfg: HistogramConfig): DataFrame =
-    fold(spark, cfg)((offset, _) => scanCodes(spark, tileListPath, cfg, offset))
+    foldCodes(cfg)(scanCodes(spark, tileListPath, cfg)).histogram(spark)
 
   // perfbench's TilePipeline is the only caller left; it passes 0L
   @deprecated("the pixel count is unused: call runPushed(spark, tileListPath, cfg)", "0.1.0")
@@ -80,16 +80,15 @@ object HistogramRunner {
     runPushed(spark, tileListPath, cfg)
 
   /** The raster code source of [[HistogramOps.fold]]: one `mode=codes`
-    * scan merged by one aggregate and collected, at most one row per code
-    * seen plus the stats row.
+    * scan, merged by [[HistogramOps.mergeCodes]]. A known `spec` filters
+    * the rows to its codes, and the filter reaches the readers
+    * (`RasterSource.codeRange`): their folds keep only those codes.
     */
-  private def scanCodes(
-      spark: SparkSession,
-      tileListPath: String,
-      cfg: HistogramConfig,
-      offset: Double): HistogramOps.Codes = {
-    import org.apache.spark.sql.functions._
-    val rows = spark.read
+  private def scanCodes(spark: SparkSession, tileListPath: String, cfg: HistogramConfig)(
+      offset: Double,
+      spec: Option[BinSpec]): HistogramOps.Codes = {
+    import org.apache.spark.sql.functions.col
+    val scan = spark.read
       .format("graft.sources.raster.RasterSource")
       .option("tileListPath", tileListPath)
       .option("mode", "codes")
@@ -97,20 +96,7 @@ object HistogramRunner {
       .option("binOffset", offset.toString)
       .option("legacyLogOffset100", cfg.legacyLogOffset100.toString)
       .load()
-      .groupBy(col("code"))
-      .agg(
-        sum(col("cnt")),
-        min(col("min_value")),
-        max(col("max_value")),
-        bool_and(col("codes_valid")))
-      .collect()
-    // the stats rows group under a null code
-    val (stats, codes) = rows.partition(_.isNullAt(0))
-    val counts = codes.map(r => r.getInt(0) -> r.getLong(1))
-    stats.headOption match {
-      case Some(r) => HistogramOps.Codes(counts, r.getDouble(2), r.getDouble(3), r.getBoolean(4))
-      case None    => HistogramOps.Codes(counts, 0.0, 0.0, valid = true)
-    }
+    HistogramOps.mergeCodes(spec.fold(scan)(s => scan.filter(col("code").between(s.lo, s.hi))))
   }
 
   /** Parsed CLI surface — the reference's flags

@@ -40,6 +40,18 @@ object ProfileQueries {
         when(col("lang") === "en", 1L).otherwise(0L).as("y")),
       DocStateSpec)
 
+  /** `group_cut_bounds` over any `(event_type, value)` frame. */
+  def groupCutBounds(events: DataFrame): DataFrame = {
+    val df = events
+      .select(col("event_type"), col("value"))
+      .filter(col("value").isNotNull && !isnan(col("value")))
+    val (mn, mx) = graft.operators.HistogramOps.minMax(df.select(col("value")))
+    val spec = graft.core.BinSpec.derive(mn, mx, graft.core.BinMethod.Linear)
+    graft.streaming.StreamingQuantiles.cutsFromStateBy(
+      graft.streaming.StreamingQuantiles.binCountsBy(df, spec, Seq("event_type")),
+      spec, 4, Seq("event_type"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Long-form per-column completeness/cardinality/range profile.
     // round 14: a spreadKeys respread here was tried and REVERTED on
@@ -65,16 +77,7 @@ object ProfileQueries {
     // (streaming/StreamingQuantiles, grouped form) run in batch — each
     // row's [err_lo, err_hi] interval contains the exact group cut; the
     // state is what a live stream maintains incrementally.
-    "group_cut_bounds" -> ((s, dir) => {
-      val df = Tables.events(s, dir)
-        .select(col("event_type"), col("value"))
-        .filter(col("value").isNotNull && !isnan(col("value")))
-      val (mn, mx) = graft.operators.HistogramOps.minMax(df.select(col("value")))
-      val spec = graft.core.BinSpec.derive(mn, mx, graft.core.BinMethod.Linear)
-      graft.streaming.StreamingQuantiles.cutsFromStateBy(
-        graft.streaming.StreamingQuantiles.binCountsBy(df, spec, Seq("event_type")),
-        spec, 4, Seq("event_type"))
-    }),
+    "group_cut_bounds" -> ((s, dir) => groupCutBounds(Tables.events(s, dir))),
     // Right-to-be-forgotten audit: a deterministic 1/20 hash sample of
     // customers is "deleted"; count the residual surface per table —
     // direct rows (customer, events by user hash) and the FK cascade

@@ -94,8 +94,8 @@ object BinSpec {
           0.0)
       case BinMethod.Log =>
         val offset = if (minValue <= 0) math.abs(minValue) + 1 else 0.0
-        (code("min", minValue, math.log(minValue + offset) * 1000, method),
-          code("max", maxValue, math.log(maxValue + offset) * 1000, method),
+        (code("min", minValue, logCode(minValue, offset), method),
+          code("max", maxValue, logCode(maxValue, offset), method),
           offset)
     }
     if (hi.toLong - lo > Int.MaxValue)
@@ -104,6 +104,13 @@ object BinSpec {
           s"span ${hi.toLong - lo} bins, more than an Int counts")
     BinSpec(lo, hi, offset, method)
   }
+
+  /** The unrounded log bin code `ln(v + offset) · 1000` (NaN or −∞ where
+    * v + offset ≤ 0) by `StrictMath.log`, which Spark's `log` evaluates:
+    * [[derive]], [[CodeFold]] and `HistogramOps.quantize` then agree on
+    * every code. `Math.log` may differ by an ulp across a code boundary.
+    */
+  def logCode(v: Double, offset: Double): Double = StrictMath.log(v + offset) * 1000
 
   /** True when the unrounded bin code `c` is finite and leaves room for
     * the linear ±10 padding in an `Int` — the codes [[derive]] accepts.

@@ -3,19 +3,18 @@ package graft.functions
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Dense-vector histogram aggregator (SURVEY §7.3/§7.5): the alternative
-  * physical strategy to the `groupBy(code).count()` histogram — each
-  * partition folds its codes into one `Array[Long]` of `hi − lo` counts,
-  * and partials merge element-wise (the reference's `_add_histogram`,
-  * compute_histogram/main.py:244-245, as a Spark `Aggregator`).
+/** Dense-vector histogram aggregator (SURVEY §7.3/§7.5): each partition
+  * folds its codes into one `Array[Long]` of `hi − lo` counts, and
+  * partials merge element-wise (the reference's `_add_histogram`,
+  * compute_histogram/main.py:244-245, as a Spark `Aggregator`). RankOps
+  * bins with it; the histogram queries count codes with
+  * `graft.core.CodeFold` and merge them by group-by instead.
   *
   * Trade-off vs group-by: ONE buffer of `bins` longs crosses the exchange
   * per partition (a single-row shuffle), instead of ≤ `bins` key rows per
   * partition — wins when partitions × distinct-codes is large and bins is
   * moderate; loses memory-safety when bins is huge (the group-by spills,
-  * the array does not). Both paths produce identical results
-  * (HistogramSpec asserts it; the `hist_linear_dense` query shares
-  * hist_linear's oracle).
+  * the array does not).
   *
   * numpy semantics preserved: codes outside `[lo, hi]` dropped, code == hi
   * merged into the last bin.

@@ -17,9 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * per element, so the HOF formulation needs a persist barrier between the
   * hash stage and the minima stage to stay off the O(len²·k) cliff
   * (PERF.md "HOF inlining trap"). Even barriered, the interpreted hash fill
-  * costs ~10 s/sf0.1 (tools/AnalyticsScaleStress) and is re-paid whenever
-  * the transient cache is released. This kernel runs the same arithmetic in
-  * one compiled loop — no barrier, no cache, no second stage.
+  * costs ~10 s/sf0.1 (PERF.md "Round 4 (final): analytics additions") and
+  * is re-paid whenever the transient cache is released. This kernel runs
+  * the same arithmetic in one compiled loop — no barrier, no cache, no
+  * second stage.
   *
   * Exact-int64 portability (same contract as the HOF twin
   * [[graft.operators.TextOps.winnowFingerprints]] and the DuckDB oracle):

@@ -523,7 +523,8 @@ object CurationOps {
     * sort left is over ≤ 4096 histogram bins. (The machinery was built
     * here in round 7 and generalized into [[RankOps]] in round 8 — the
     * ntile-twin equivalence is property-pinned in `RankOpsSpec` plus the
-    * 1×/4×/16× `tools/LmBucketsStress` harness.)
+    * 1×/4×/16× measurement in PERF.md "Round 7: lmBuckets cutpoint
+    * shape".)
     *
     * PRECONDITION (RankOps bucket contract): `doc_id` is unique, so the
     * (avg_nll, doc_id) key is strictly ordered and `key ≤ cut` admits

@@ -409,7 +409,7 @@ object DedupOps {
     // SHUFFLE_HASH over sort-merge for the verify joins: the streamed side
     // is the |candidates| × set-size fan-out, and sorting it degrades
     // superlinearly once partitions spill (measured 4× corpus: SMJ 20 s vs
-    // hash 9 s cold / 4 s warm — tools/DedupScaleStress). Both BUILD sides
+    // hash 9 s cold / 4 s warm — PERF.md "Round 2: dedup pipeline scale-up"). Both BUILD sides
     // are partition-bounded — candidate pairs (thin) and the exploded
     // shingle relation, each O(input/partitions) with keys that hash
     // uniformly — exactly the case where hash join beats paying n·log n

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
-import graft.core.{BinMethod, BinSpec, RouteLog}
+import graft.core.{BinMethod, BinSpec, CodeFold, RouteLog}
 
 /** The histogram operator core, re-expressed as declarative Spark transforms.
   *
@@ -15,10 +15,11 @@ import graft.core.{BinMethod, BinSpec, RouteLog}
   * compute_histogram/main.py:82-149).
   *
   * Scale notes (100 TB): the whole pipeline reduces cardinality *before* any
-  * wide operation — raw values are quantized to integer codes, so the only
-  * shuffle is a group-by over ≤ `hi − lo` distinct keys after map-side
-  * partial aggregation; aggregation state is bounded by the bin count, never
-  * by data size. The driver folds ≤ bins counts, as the reference's driver
+  * wide operation — each partition counts its values' integer codes in one
+  * [[CodeFold]], the kernel the raster reader runs per tile pack, so the
+  * only shuffle is [[mergeCodes]]' group-by over ≤ `bins + 1` code rows
+  * per partition; aggregation state is bounded by the bin count, never by
+  * data size. The driver folds ≤ bins counts, as the reference's driver
   * does ([[fold]]).
   */
 object HistogramOps {
@@ -34,53 +35,42 @@ object HistogramOps {
     df.select(col(valueCol).cast("double").as("value"))
       .filter(col("value").isNotNull && !isnan(col("value")))
 
-  /** A1/A2 — global min/max as one distributed agg (partial per partition,
+  /** A1 — global min/max as one distributed agg (partial per partition,
     * final combine — what the reference does manually in
-    * compute_histogram/main.py:127-149).
-    *
-    * `clampToZero = true` reproduces the reference's accumulator zero-init
-    * bug (min ≤ 0 and max ≥ 0 always; compute_histogram/main.py:131-132);
-    * default is the correct semantics.
+    * compute_histogram/main.py:127-149); (0.0, 0.0) on empty input.
     */
-  def minMax(values: DataFrame, clampToZero: Boolean = false): (Double, Double) = {
+  def minMax(values: DataFrame): (Double, Double) = {
     val row = values.agg(min(col("value")), max(col("value"))).head()
-    if (row.isNullAt(0)) (0.0, 0.0)
-    else {
-      val (mn, mx) = (row.getDouble(0), row.getDouble(1))
-      if (clampToZero) (math.min(mn, 0.0), math.max(mx, 0.0)) else (mn, mx)
-    }
+    if (row.isNullAt(0)) (0.0, 0.0) else (row.getDouble(0), row.getDouble(1))
   }
 
-  /** P1/P2 — quantize a value column to an integer bin code under `spec`'s
-    * method and offset: [[code]].
-    */
-  def quantize(
-      value: Column,
-      spec: BinSpec,
-      legacyLogOffset100: Boolean = false): Column =
-    code(value, spec.method, spec.offset, legacyLogOffset100)
-
-  /** A value's integer bin code, or null where it has none.
+  /** P1/P2 — a value's integer bin code under `spec`'s method and
+    * offset, or null where it has none: the Column twin of [[CodeFold]],
+    * which the streaming paths bin with.
     *
     * Linear: `trunc(v · 100)` (reference: compute_histogram/main.py:194-195).
-    * Log: `trunc(ln(v + offset) · 1000)` (compute_histogram/main.py:196-197).
+    * Log: `trunc(ln(v + offset) · 1000)` (compute_histogram/main.py:196-197);
+    * Spark's `log` is `StrictMath.log`, as [[BinSpec.logCode]] is.
     *
     * We quantize in `IntegerType`, not the reference's `int16`, and rely on
     * the explicit `[lo, hi]` range of [[BinSpec.dense]] instead of
     * wraparound (SURVEY §7.4.4). `cast("int")` truncates toward zero like
     * numpy `astype`. A value has no code where Spark's `log` is null
     * (v + offset ≤ 0) or where the unrounded code fails `BinSpec.hasCode`
-    * — exactly where the raster scan's `CodeFold` gives none — so the cast
-    * never overflows, with or without ANSI mode.
+    * — exactly where `CodeFold` gives none — so the cast never overflows,
+    * with or without ANSI mode.
     *
     * `legacyLogOffset100 = true` reproduces the reference bug where
     * quantization hard-codes `+ 100` regardless of the derived offset
     * (compute_histogram/main.py:197 vs :166-172).
     */
-  def code(value: Column, method: BinMethod, offset: Double, legacyLogOffset100: Boolean): Column = {
-    val raw = method match {
+  def quantize(
+      value: Column,
+      spec: BinSpec,
+      legacyLogOffset100: Boolean = false): Column = {
+    val raw = spec.method match {
       case BinMethod.Linear => value * lit(100)
-      case BinMethod.Log    => log(value + lit(if (legacyLogOffset100) 100.0 else offset)) * lit(1000)
+      case BinMethod.Log    => log(value + lit(if (legacyLogOffset100) 100.0 else spec.offset)) * lit(1000)
     }
     when(abs(raw) + lit(10.0) <= lit(Int.MaxValue.toDouble), raw.cast("int"))
   }
@@ -113,43 +103,6 @@ object HistogramOps {
   def merge(h1: DataFrame, h2: DataFrame): DataFrame =
     h1.union(h2).groupBy(col("bin")).agg(sum(col("count")).as("count"))
 
-  /** Dense-vector histogram (SURVEY §7.3/§7.5 single-shuffle alternative):
-    * one `Array[Long]` buffer per partition crosses the exchange instead of
-    * ≤ `bins` key rows — see [[graft.functions.DenseHistogram]]. Identical
-    * output to [[histogram]].
-    */
-  def histogramDense(
-      values: DataFrame,
-      spec: BinSpec,
-      legacyLogOffset100: Boolean = false): DataFrame = {
-    if (spec.bins == 0) {
-      // degenerate range — same empty result as the group-by path
-      import values.sparkSession.implicits._
-      return Seq.empty[(Double, Long)].toDF("value", "cnt")
-    }
-    val agg = udaf(
-      new graft.functions.DenseHistogram(spec.lo, spec.hi),
-      org.apache.spark.sql.Encoders.scalaInt)
-    values
-      .select(quantize(col("value"), spec, legacyLogOffset100).as("code"))
-      .agg(agg(col("code")).as("counts"))
-      .select(posexplode(col("counts")).as(Seq("bin0", "count")))
-      .select(binEdge(col("bin0") + lit(spec.lo), spec).as("value"), col("count").as("cnt"))
-      .orderBy(col("value"))
-  }
-
-  /** The histogram of `values` under a known `spec`: [[fold]] over
-    * [[valueCodes]], one aggregate. Output `(value: double, cnt: long)`
-    * in value order — the reference's `histogram.csv` relation
-    * (compute_histogram/main.py:110-124).
-    */
-  def histogram(
-      values: DataFrame,
-      spec: BinSpec,
-      legacyLogOffset100: Boolean = false): DataFrame =
-    fold(values.sparkSession, spec.method, Some(spec), clampToZero = false, legacyLogOffset100)(
-      valueCodes(values, spec.method, legacyLogOffset100))
-
   /** Bin-code counts of one read of a source, merged and collected: at
     * most one `(code, count)` pair per code seen, and the min and max of
     * its valid values, coded or not — (0.0, 0.0) without one, as in
@@ -159,6 +112,31 @@ object HistogramOps {
     */
   final case class Codes(counts: Array[(Int, Long)], min: Double, max: Double, valid: Boolean)
 
+  /** A histogram folded on the driver: its spec and its dense bin
+    * counts, `counts(b)` counting bin `spec.lo + b`.
+    */
+  final case class Folded(spec: BinSpec, counts: Array[Long]) {
+    require(counts.length == spec.bins, s"${counts.length} counts for ${spec.bins} bins")
+
+    /** The `(bin: int, cnt: long)` relation of every bin, in bin order: a
+      * local relation, so reading it runs no scan.
+      */
+    def binCounts(spark: SparkSession): DataFrame = {
+      val rows = java.util.Arrays.asList(counts.indices.map(b => Row(spec.lo + b, counts(b))): _*)
+      val schema = StructType(Seq(
+        StructField("bin", IntegerType, nullable = false),
+        StructField("cnt", LongType, nullable = false)))
+      spark.createDataFrame(rows, schema)
+    }
+
+    /** The `(value: double, cnt: long)` histogram in value order — the
+      * reference's `histogram.csv` relation
+      * (compute_histogram/main.py:110-124); `value` is [[binEdge]].
+      */
+    def histogram(spark: SparkSession): DataFrame =
+      binCounts(spark).select(binEdge(col("bin"), spec).as("value"), col("cnt"))
+  }
+
   /** The one histogram fold — the reference's worker/driver split
     * (per-worker passes, driver-side `_add_histogram` fold and
     * `np.histogram`, compute_histogram/main.py:93-124, 244-249). Workers
@@ -167,23 +145,23 @@ object HistogramOps {
     * outside it and densifies ([[BinSpec.dense]]).
     *
     * `codes(offset, spec)` reads the source once, coding with `offset`;
-    * `spec` is the spec when already known, so the source may drop codes
-    * outside it. The first read codes with offset 0 unless `bounds` is
-    * given: that is the derived offset whenever the min is > 0, and linear
-    * and the legacy `+100` code have no offset to derive. A log spec whose
+    * `spec` is the spec when already known: the source may drop the codes
+    * outside it, and need report no min, max or validity. The first read
+    * codes with offset 0 unless `bounds` is given: that is the derived
+    * offset whenever the min is > 0, and linear and the legacy `+100` code
+    * have no offset to derive. A log spec whose
     * derived offset differs (min ≤ 0, also after `clampToZero`) needs the
     * min before any code: a second read with that offset, logged as the
     * `histogramSecondPass` route. With derived bounds every valid value
-    * has a code under the spec's offset; a read that says otherwise
-    * throws.
+    * has a code under the spec's offset (its min and max have one, and
+    * codes rise with v); a read that says otherwise throws.
     */
   def fold(
-      spark: SparkSession,
       method: BinMethod,
       bounds: Option[BinSpec],
       clampToZero: Boolean,
       legacyLogOffset100: Boolean)(
-      codes: (Double, Option[BinSpec]) => Codes): DataFrame = {
+      codes: (Double, Option[BinSpec]) => Codes): Folded = {
     val offset = bounds.fold(0.0)(_.offset)
     val first = codes(offset, bounds)
     val spec = bounds.getOrElse {
@@ -201,48 +179,53 @@ object HistogramOps {
       } else first
     if (bounds.isEmpty && !coded.valid)
       throw new IllegalStateException(s"a valid value has no ${method.name} code under $spec")
-    histogramFromCounts(spark, spec, spec.dense(coded.counts))
+    Folded(spec, spec.dense(coded.counts))
   }
 
-  /** The DataFrame code source of [[fold]]: one `groupBy(code)` aggregate
-    * of count, min and max over `values` (F1-normalized), collected. The
-    * values with no [[code]] group under a null code and still count in
-    * the min and max. A known `spec` keeps only its codes (and the null
-    * one), so at most `bins + 1` rows reach the driver.
+  /** The one merge of a code source's rows ([[CodeFold.Schema]]): one
+    * `groupBy(code)` aggregate of the counts, min, max and `codes_valid`,
+    * collected. The stats rows group under the null code; without one
+    * (no valid value) the min and max are (0.0, 0.0), as in [[minMax]].
+    */
+  def mergeCodes(rows: DataFrame): Codes = {
+    val merged = rows
+      .groupBy(col("code"))
+      .agg(sum(col("cnt")), min(col("min_value")), max(col("max_value")), bool_and(col("codes_valid")))
+      .collect()
+    val (stats, codes) = merged.partition(_.isNullAt(0))
+    val counts = codes.map(r => r.getInt(0) -> r.getLong(1))
+    stats.headOption match {
+      case Some(r) => Codes(counts, r.getDouble(2), r.getDouble(3), r.getBoolean(4))
+      case None    => Codes(counts, 0.0, 0.0, valid = true)
+    }
+  }
+
+  /** The DataFrame code source of [[fold]]: each partition of `values`
+    * (F1-normalized) folds its values with one [[CodeFold]], a run of
+    * 4,096 at a time, and emits the fold's rows, as a raster
+    * `mode=codes` reader does; [[mergeCodes]] merges them. A known `spec`
+    * keeps only its codes, so a partition emits at most `bins + 1` code
+    * rows.
     */
   def valueCodes(values: DataFrame, method: BinMethod, legacyLogOffset100: Boolean)(
       offset: Double,
-      spec: Option[BinSpec]): Codes = {
-    val coded = values.select(
-      code(col("value"), method, offset, legacyLogOffset100).as("code"), col("value"))
-    val kept = spec.fold(coded)(s => coded.filter(col("code").isNull || inRange(col("code"), s.lo, s.hi)))
-    val rows = kept
-      .groupBy(col("code"))
-      .agg(count(lit(1)), min(col("value")), max(col("value")))
-      .collect()
-    val (noCode, withCode) = rows.partition(_.isNullAt(0))
-    val legacyLog = method == BinMethod.Log && legacyLogOffset100
-    Codes(
-      withCode.map(r => r.getInt(0) -> r.getLong(1)),
-      rows.iterator.map(_.getDouble(2)).reduceOption(_ min _).getOrElse(0.0),
-      rows.iterator.map(_.getDouble(3)).reduceOption(_ max _).getOrElse(0.0),
-      noCode.forall(r => legacyLog && r.getDouble(3) + 100 <= 0))
-  }
-
-  /** The `(value, cnt)` histogram of dense bin counts already on the
-    * driver (`counts(b)` counts bin `spec.lo + b`), as [[fold]] returns
-    * it. A local relation in bin order, so value order: writing or
-    * counting it runs no scan. `value` is [[binEdge]].
-    */
-  private def histogramFromCounts(spark: SparkSession, spec: BinSpec, counts: Array[Long]): DataFrame = {
-    require(counts.length == spec.bins, s"${counts.length} counts for ${spec.bins} bins")
-    val rows = java.util.Arrays.asList(counts.indices.map(b => Row(spec.lo + b, counts(b))): _*)
-    val schema = StructType(Seq(
-      StructField("bin", IntegerType, nullable = false),
-      StructField("count", LongType, nullable = false)))
-    spark.createDataFrame(rows, schema)
-      .select(binEdge(col("bin"), spec).as("value"), col("count").as("cnt"))
-  }
+      spec: Option[BinSpec]): Codes =
+    mergeCodes(
+      values.select(col("value")).as(Encoders.scalaDouble).mapPartitions { vs =>
+        val acc = new CodeFold(method, offset, legacyLogOffset100, spec)
+        val run = new Array[Double](4096)
+        var len = 0
+        while (vs.hasNext) {
+          run(len) = vs.next()
+          len += 1
+          if (len == run.length) {
+            acc.foldRun(run, len)
+            len = 0
+          }
+        }
+        acc.foldRun(run, len)
+        acc.rows
+      }(Encoders.row(CodeFold.Schema)))
 
   /** S5 — CSV sink with the reference's `"%1.2f, %d"` row format, written as
     * exactly ONE file named `histogram.csv` under `path`, matching the

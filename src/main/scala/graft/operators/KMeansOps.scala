@@ -78,20 +78,18 @@ object KMeansOps {
     nConfirmed > maxFullFit && nConfirmed > sampleTarget(k)
 
   /** Deterministic hash-rate training sample over a quantized corpus:
-    * keep vectors whose portable hash lands in a 1-in-`every` residue
-    * class, `every = ⌊n / sampleTarget(k)⌋` — ONE codegen filter over the
-    * (already persisted) corpus, no top-k heap, no global sort, expected
-    * size ~[[sampleTarget]]. Membership depends only on `vec_id` and the
-    * confirmed count, so the routed fit is reproducible cross-run and
-    * cross-engine.
+    * keep a vector when its portable hash mod `n` falls below
+    * [[sampleTarget]] — ONE codegen filter over the (already persisted)
+    * corpus, no top-k heap, no global sort, expected size
+    * `min(n, sampleTarget(k))` for every `n`. Membership depends only on
+    * `vec_id` and the confirmed count, so the routed fit is reproducible
+    * cross-run and cross-engine.
     */
-  def trainingSample(vecs: DataFrame, k: Int, nConfirmed: Long): DataFrame = {
-    val every = math.max(1L, nConfirmed / sampleTarget(k))
+  def trainingSample(vecs: DataFrame, k: Int, nConfirmed: Long): DataFrame =
     vecs.filter(
       pmod(
         PortableHash.hash60(concat(lit("kms:"), col("vec_id").cast("string"))),
-        lit(every)) === 0)
-  }
+        lit(math.max(1L, nConfirmed))) < sampleTarget(k))
 
   /** Quantized corpus `(vec_id, vi: array<double> of exact micro-ints,
     * vv = <vi,vi>)`, persisted (read by the training collect and again by

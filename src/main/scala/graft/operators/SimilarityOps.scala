@@ -344,7 +344,7 @@ object SimilarityOps {
     // Corpus assignment is keep=1, and the rank-window formulation sorts
     // N·nlist rows CARRYING both embedding arrays — with nlist ~ √N that
     // is an O(N^1.5) fat sort (measured 11 s at 32k vectors,
-    // tools/EmbedScaleStress). Arg-min instead: thin (id, cent, score)
+    // PERF.md "Round 2: embedding ops scale-up"). Arg-min instead: thin (id, cent, score)
     // rows into a map-side-combinable min(struct) — identical semantics
     // (max rounded cos, centroid-id tie-break; the 2.0 sentinel mirrors
     // the window's NULLS LAST for null cosines) — then re-attach vectors
@@ -512,7 +512,7 @@ object SimilarityOps {
     * at ~bands·2^−r. At LOW thresholds the trade is real and measured:
     * on the 64-dim synthetic corpus at minCos 0.4, r=6/b=20 retains
     * ~0.76 of true pairs while evaluating ~28 % of the n²/2 cosines
-    * (EmbedScaleStress reports both); production embeddings (d ≥ 256,
+    * (PERF.md "Round 12: embedding-dedup size route" reports both); production embeddings (d ≥ 256,
     * near-dups at cos ≥ 0.9) sit far into the favorable regime. The exact
     * blocked kernel ([[nearDupPairs]]) remains the verify/small-n path.
     */
@@ -626,7 +626,8 @@ object SimilarityOps {
     * the background rate is as low as that allows:
     *  - minCos ≥ 0.9 → 12×10: recall 0.94 at exactly 0.9 (0.99 at 0.95),
     *    background ~1.2 % — the production near-dup regime
-    *    EmbedScaleStress measures at >200× under the exact kernel.
+    *    PERF.md round 12 (embedding-dedup size route) measured at >200×
+    *    under the exact kernel.
     *  - 0.7 ≤ minCos < 0.9 → 16×8: recall 0.80 at exactly 0.7 / 0.94 at
     *    0.8, background ~6.3 %.
     *  - minCos < 0.7 → 20×6: recall 0.93 at 0.6 down to 0.73 at 0.4,
@@ -649,7 +650,7 @@ object SimilarityOps {
     * corpus can never enter the Θ(n²) path by default. The routed output
     * is the LSH-verified SUBSET of the exact pairs (identical rows where
     * emitted; the recall trade is documented and measured in the
-    * nearDupPairsLsh scaladoc / EmbedScaleStress). Passing `blocks > 0`
+    * nearDupPairsLsh scaladoc / PERF.md round 12). Passing `blocks > 0`
     * is an explicit exact-path override and always runs blocked-exact.
     *
     * The route is CONFIRMED by an exact count before it fires: Catalyst's

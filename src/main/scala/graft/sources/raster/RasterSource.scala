@@ -11,12 +11,13 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.core.BinMethod
+import graft.core.{BinMethod, BinSpec, CodeFold}
 
 /** DataSource V2 raster-tile source — the faithful Spark mapping of the
   * reference's tile scan (S3: `read_source`, reference:
@@ -52,7 +53,8 @@ import graft.core.BinMethod
   * `mode=codes` and `mode=stats` aggregate INSIDE the reader (the
   * reference's own worker functions as scan modes — see
   * [[RasterAggScans]]); `codes` takes `binMethod`/`binOffset`/
-  * `legacyLogOffset100`.
+  * `legacyLogOffset100`, and keeps only the codes of a `code` range
+  * filtered on it ([[RasterSource.codeRange]]).
   *
   * `tileListPath` is the scale path for large tile sets (the reference's
   * bio_*_list.txt shape, S4): the list file is read once at PLAN time
@@ -92,22 +94,22 @@ object RasterSource {
       StructField("max_value", DoubleType, nullable = false),
       StructField("n_valid", LongType, nullable = false)))
 
-  /** `mode=codes` schema: a partition's sparse `(code, cnt)` rows, then
-    * its one stats row; each row leaves the other kind's columns null.
-    */
-  val CodesSchema: StructType = StructType(
-    Seq(StructField("code", IntegerType),
-      StructField("cnt", LongType),
-      StructField("min_value", DoubleType),
-      StructField("max_value", DoubleType),
-      StructField("n_valid", LongType),
-      StructField("codes_valid", BooleanType)))
-
   def schemaFor(mode: String): StructType = mode match {
     case "values" => Schema
-    case "codes"  => CodesSchema
+    case "codes"  => CodeFold.Schema
     case "stats"  => StatsSchema
     case other    => throw new IllegalArgumentException(s"Unknown raster scan mode $other")
+  }
+
+  /** The `[lo, hi]` range that pushed `filters` bound a `mode=codes`
+    * scan's `code` to, when they bound both ends. Spark still applies every
+    * filter to the rows the scan returns; the range only keeps the other
+    * codes out of the readers' folds.
+    */
+  def codeRange(filters: Seq[Filter]): Option[(Int, Int)] = {
+    val lo = filters.collect { case GreaterThanOrEqual("code", v: Int) => v }
+    val hi = filters.collect { case LessThanOrEqual("code", v: Int) => v }
+    for (l <- lo.maxOption; h <- hi.minOption if l <= h) yield (l, h)
   }
 
   /** Read a one-URI-per-line tile list through the Hadoop filesystem (any
@@ -199,23 +201,34 @@ final class RasterScanBuilder(
     mode: String,
     properties: util.Map[String, String])
     extends ScanBuilder
-    with SupportsPushDownRequiredColumns {
+    with SupportsPushDownRequiredColumns
+    with SupportsPushDownFilters {
   private var required: StructType = RasterSource.schemaFor(mode)
+  private var codeRange: Option[(Int, Int)] = None
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     // Catalyst hands us the projected schema; empty projection (count(*))
     // keeps zero columns and the reader emits empty rows
     required = requiredSchema
 
+  // every filter stays for Spark to apply after the scan
+  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    if (mode == "codes") codeRange = RasterSource.codeRange(filters.toSeq)
+    filters
+  }
+
+  override def pushedFilters(): Array[Filter] = Array.empty
+
   override def build(): Scan =
-    new RasterScan(tiles, required, mode, properties)
+    new RasterScan(tiles, required, mode, properties, codeRange)
 }
 
 final class RasterScan(
     tiles: Configuration => Array[String],
     required: StructType,
     mode: String,
-    properties: util.Map[String, String])
+    properties: util.Map[String, String],
+    codeRange: Option[(Int, Int)])
     extends Scan
     with Batch {
   override def readSchema(): StructType = required
@@ -245,7 +258,9 @@ final class RasterScan(
     val legacy = Option(properties.get("legacyLogOffset100")).exists(_.toBoolean)
     mode match {
       case "values" => new RasterReaderFactory(required, conf)
-      case "codes"  => new RasterCodesReaderFactory(required, method, offset, legacy, conf)
+      case "codes" =>
+        val spec = codeRange.map { case (lo, hi) => BinSpec(lo, hi, offset, method) }
+        new RasterCodesReaderFactory(required, method, offset, legacy, spec, conf)
       case "stats"  => new RasterStatsReaderFactory(required, conf)
     }
   }

@@ -101,11 +101,9 @@ class HistogramSpec extends SparkSpec {
       spark.read.parquet(s"${TestSpark.sf0001}/lineitem.parquet"),
       "l_quantity")
     val n = values.count()
-    val spec = {
-      val (mn, mx) = HistogramOps.minMax(values)
-      BinSpec.derive(mn, mx, BinMethod.Linear)
-    }
-    val histo = HistogramOps.histogram(values, spec)
+    val (mn, mx) = HistogramOps.minMax(values)
+    val spec = BinSpec.derive(mn, mx, BinMethod.Linear)
+    val histo = HistogramRunner.run(values, HistogramConfig("value", minValue = Some(mn), maxValue = Some(mx)))
     assert(histo.agg(sum("cnt")).head().getLong(0) == n) // linear pad → nothing dropped
     assert(histo.count() == spec.bins.toLong) // dense: one row per bin
   }
@@ -121,15 +119,19 @@ class HistogramSpec extends SparkSpec {
     assert(got == Seq(123, -123, 99, -99))
   }
 
-  test("dense-vector aggregator histogram == group-by histogram") {
-    val values = HistogramOps.validValues(
-      spark.read.parquet(s"${TestSpark.sf0001}/lineitem.parquet"),
-      "l_quantity")
-    val (mn, mx) = HistogramOps.minMax(values)
-    val spec = BinSpec.derive(mn, mx, BinMethod.Linear)
-    val a = HistogramOps.histogram(values, spec).collect().toSeq
-    val b = HistogramOps.histogramDense(values, spec).collect().toSeq
-    assert(a == b)
+  // 1.3086551410464666 sits on a log code boundary: Math.log puts its
+  // code at 268 and StrictMath.log (Spark's log) at 269
+  private val logPair = Seq(1.0, 1.3086551410464666)
+
+  test("log codes and log bin bounds use one log: no value at a code boundary drops") {
+    val histo = HistogramRunner.run(logPair.toDF("value"), HistogramConfig("value", BinMethod.Log))
+    assert(histo.agg(sum("cnt")).head().getLong(0) == 2L)
+  }
+
+  test("the streaming bin state under a derived log spec keeps every value") {
+    val spec = BinSpec.derive(logPair.min, logPair.max, BinMethod.Log)
+    val state = graft.streaming.StreamingQuantiles.binCounts(logPair.toDF("value"), spec)
+    assert(state.agg(sum("cnt")).head().getLong(0) == 2L)
   }
 
   test("deciles DataFrame form == SQL-verbatim form") {
@@ -137,7 +139,7 @@ class HistogramSpec extends SparkSpec {
       spark.read.parquet(s"${TestSpark.sf0001}/lineitem.parquet"),
       "l_quantity")
     val (mn, mx) = HistogramOps.minMax(values)
-    val histo = HistogramOps.histogram(values, BinSpec.derive(mn, mx, BinMethod.Linear))
+    val histo = HistogramRunner.run(values, HistogramConfig("value", minValue = Some(mn), maxValue = Some(mx)))
     val a = PercentileOps.deciles(histo).collect().toSeq
     val b = PercentileOps.decilesSql(spark, histo).collect().toSeq
     assert(a == b)

@@ -205,12 +205,11 @@ class KMeansSpec extends SparkSpec {
     assert(count("fitCentroids.sampledFit") == before + 1, "route must fire and announce itself")
     // manual twin: the UNROUTED full fit on exactly the hash-sample subset
     // must be bit-identical (quantize and the hash filter commute)
-    val every = math.max(1L, n.toLong / KMeansOps.sampleTarget(k))
-    assert(every >= 2, "fixture must actually subsample")
+    assert(KMeansOps.sampleTarget(k) < n, "fixture must actually subsample")
     val subset = emb.filter(
       pmod(
         PortableHash.hash60(concat(lit("kms:"), col("vec_id").cast("string"))),
-        lit(every)) === 0)
+        lit(n.toLong)) < KMeansOps.sampleTarget(k))
     val nSub = subset.count()
     assert(nSub > 0 && nSub < n)
     val manual = KMeansOps
@@ -224,6 +223,13 @@ class KMeansSpec extends SparkSpec {
     KMeansOps.fitCentroids(emb, k, iters = 1).count()
     DedupOps.releaseShingleCaches()
     assert(count("fitCentroids.sampledFit") == quiet)
+  }
+
+  test("the training sample keeps its target size when n is under twice the target") {
+    // 1 in ⌊400 / 256⌋ = 1 would keep every vector
+    val vecs = spark.range(400).select(col("id").as("vec_id"))
+    val kept = KMeansOps.trainingSample(vecs, 1, 400L).count()
+    assert(math.abs(kept - KMeansOps.sampleTarget(1)) <= 40, s"kept $kept of 400")
   }
 
   test("driver fold equals the distributed Lloyd rounds bit for bit") {

@@ -21,9 +21,7 @@ class ObserveSpec extends SparkSpec {
         sum((col("value") * 100).cast("bigint")).as("cents_sum"))
     // the histogram's one aggregate is the action — metrics accumulate
     // during it, and the Observation reads them from that executed query
-    graft.operators.HistogramOps.histogram(
-      observed,
-      graft.core.BinSpec.derive(1.0, 50.0, graft.core.BinMethod.Linear))
+    HistogramRunner.run(observed, HistogramConfig("value", minValue = Some(1.0), maxValue = Some(50.0)))
     val m = ingest.get
     val expectValid = li.filter(col("l_quantity").isNotNull && !isnan(col("l_quantity"))).count()
     assert(m("n_valid") == expectValid)

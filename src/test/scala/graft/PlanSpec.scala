@@ -108,6 +108,21 @@ class PlanSpec extends SparkSpec {
     finally spark.sparkContext.removeSparkListener(counter)
   }
 
+  test("hist_cut_bounds: one lineitem scan — the fold gives both the spec and the bin state") {
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD")) scans.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      SparkEntry.queries("hist_cut_bounds")(spark, TestSpark.sf0001).collect()
+      ListenerBusDrain(spark.sparkContext)
+      assert(scans.get == 1, s"${scans.get} parquet scan stages")
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
+
   test("q3: dims broadcast, timestamp predicates pushed, top-k avoids global sort") {
     val p = plan("q3_top_orders")
     assert(p.contains("BroadcastHashJoin"))

@@ -28,7 +28,7 @@ import graft.operators.DedupOps
   *     documented distributed window shape. A whitelisted query still
   *     may not carry an UNPARTITIONED window over raw data.
   *
-  * SkewStress measured why this rule exists: windows, not aggregations,
+  * PERF.md "Round 12: hot-key skew evidence" measured why this rule exists: windows, not aggregations,
   * are where unbounded cardinality and skew bite (a window partition
   * sorts in ONE task; an aggregation combines map-side).
   */

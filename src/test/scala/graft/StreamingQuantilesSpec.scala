@@ -106,4 +106,42 @@ class StreamingQuantilesSpec extends SparkSpec {
       }
     }
   }
+
+  test("cut readouts on degenerate inputs: hist_cut_bounds and group_cut_bounds pinned to DuckDB") {
+    import org.apache.spark.sql.Row
+    val inf = Double.PositiveInfinity
+    // (j, boundary_rank, bin, err_lo, err_hi) as DuckDB 1.0.0 returns them
+    // for each query's oracle SQL over the same rows
+    def cuts(ranks: Seq[Long], bin: Int): Seq[Row] =
+      ranks.zipWithIndex.map { case (t, i) => Row(i + 1, t, bin, bin / 100.0, (bin + 1) / 100.0) }
+    val values: Seq[(String, Seq[java.lang.Double], Seq[Row])] = Seq(
+      ("empty", Seq.empty, Seq.empty),
+      ("all-null", Seq(null, Double.NaN, null), Seq.empty),
+      ("one row", Seq(7.0), cuts(Seq.fill(9)(1L), 700)),
+      ("all-equal", Seq.fill(5)(2.5), cuts(Seq(1L, 2L, 3L, 4L, 5L, 5L, 5L, 5L, 5L), 250)))
+    for ((name, vs, want) <- values) {
+      val df = vs.map(v => Tuple1(Option(v).map(_.doubleValue))).toDF("q")
+      assert(CoreQueries.cutBounds(df, "q").collect().toSeq == want, s"hist_cut_bounds, $name")
+    }
+    val events: Seq[(String, Seq[(String, java.lang.Double)], Seq[Row])] = Seq(
+      ("empty", Seq.empty, Seq.empty),
+      ("all-null", Seq(("a", null), ("b", Double.NaN)), Seq.empty),
+      ("one row", Seq(("a", 7.0)), cuts(Seq(1L, 1L, 1L), 700).map(r => Row.fromSeq("a" +: r.toSeq))),
+      ("all-equal", Seq.fill(3)(("a", 2.5: java.lang.Double)) ++ Seq.fill(2)(("b", 2.5: java.lang.Double)),
+        cuts(Seq(1L, 2L, 3L), 250).map(r => Row.fromSeq("a" +: r.toSeq)) ++
+          cuts(Seq(1L, 2L, 2L), 250).map(r => Row.fromSeq("b" +: r.toSeq))))
+    for ((name, es, want) <- events) {
+      val df = es.map { case (t, v) => (t, Option(v).map(_.doubleValue)) }.toDF("event_type", "value")
+      assert(ProfileQueries.groupCutBounds(df).collect().toSeq == want, s"group_cut_bounds, $name")
+    }
+    // ±Inf has no bin code: derive names it, where DuckDB's cast fails
+    for (v <- Seq(inf, -inf)) {
+      val e = intercept[IllegalArgumentException](
+        CoreQueries.cutBounds(Seq(1.0, v).toDF("q"), "q").collect())
+      assert(e.getMessage.contains("Infinity"), e.getMessage)
+      val g = intercept[IllegalArgumentException](
+        ProfileQueries.groupCutBounds(Seq(("a", 1.0), ("b", v)).toDF("event_type", "value")).collect())
+      assert(g.getMessage.contains("Infinity"), g.getMessage)
+    }
+  }
 }

@@ -661,7 +661,7 @@ class GeoTiffSpec extends graft.SparkSpec {
           }
           // the codes reader's rows, binned through the spec as runPushed does
           val rows = drain(new RasterCodesPartitionReader(
-            Seq(uri), RasterSource.CodesSchema, method, spec.offset, legacy, 0, conf))
+            Seq(uri), graft.core.CodeFold.Schema, method, spec.offset, legacy, 0, conf))
           val codes = rows.filterNot(_.isNullAt(0)).map(r => r.getInt(0) -> r.getLong(1))
           val got = codes.foldLeft(Map.empty[Int, Long]) { case (m, (c, cnt)) =>
             val b = spec.binIndex(c)
@@ -699,7 +699,7 @@ class GeoTiffSpec extends graft.SparkSpec {
       org.apache.spark.sql.catalyst.InternalRow]] = Seq(
       () => new RasterStatsPartitionReader(uri, RasterSource.StatsSchema, 0, conf),
       () => new RasterCodesPartitionReader(
-        Seq(uri), RasterSource.CodesSchema, spec.method, spec.offset, false, 0, conf))
+        Seq(uri), graft.core.CodeFold.Schema, spec.method, spec.offset, false, 0, conf))
     def drive(r: org.apache.spark.sql.connector.read.PartitionReader[
         org.apache.spark.sql.catalyst.InternalRow]): Unit = {
       intercept[java.io.IOException](r.next())

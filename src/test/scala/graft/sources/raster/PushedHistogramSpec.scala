@@ -132,6 +132,35 @@ class PushedHistogramSpec extends graft.SparkSpec {
     assert(pushed.map(_.getLong(1)).sum == i16Pix.count(_ + 100 >= 1).toLong)
   }
 
+  test("both bounds: each codes scan partition returns at most bins + 1 code rows for data wider than them") {
+    // ~1,700 distinct codes: the int16 tile's ~800 (a value table) and the
+    // float32 tile's ~900 (runs of doubles), against 420 bins
+    val tileList = list("wide.txt", Seq(i16, f32Pos))
+    val cfg = HistogramConfig("value", BinMethod.Linear, minValue = Some(100.0), maxValue = Some(104.0))
+    val bins = graft.core.BinSpec.derive(100.0, 104.0, BinMethod.Linear).bins
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val rowCounter = new SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(rowCounter)
+    val pushed =
+      try {
+        val rows = HistogramRunner.runPushed(spark, tileList, cfg).collect().toSeq
+        ListenerBusDrain(spark.sparkContext)
+        rows
+      } finally spark.sparkContext.removeSparkListener(rowCounter)
+    // each pack returns ≤ bins + 1 code rows and its one stats row
+    val packs = plan("codes", Seq(i16, f32Pos)).length
+    assert(read.get <= packs * (bins + 2L), s"${read.get} rows read from $packs packs for $bins bins")
+    val values = HistogramRunner.run(
+      spark.read.format("graft.sources.raster.RasterSource").option("tileListPath", tileList).load(),
+      cfg).collect().toSeq
+    assert(pushed == values)
+    assert(pushed.map(_.getLong(1)).sum > 0)
+  }
+
   private def plan(mode: String, tiles: Seq[String], listPath: String = ""): Seq[Seq[String]] =
     new RasterTable(tiles.mkString(","), listPath, mode, new java.util.HashMap[String, String]())
       .newScanBuilder(CaseInsensitiveStringMap.empty()).build().toBatch
