@@ -16,7 +16,7 @@ import graft.functions.CosineSimilarity
   *
   * and injects [[graft.plans.KernelRewrite]] into the optimizer, so even
   * the textbook HOF formulation (`aggregate(zip_with(...))`) silently runs
-  * on the fused codegen kernels (gate: `spark.graft.kernelRewrite`), and
+  * on the fused codegen kernels, and
   * injects the [[graft.core.CollapseSmallStages]] planner strategy, so a
   * small shuffle stage reaches its downstream windows and sorts as one
   * partition without another exchange.

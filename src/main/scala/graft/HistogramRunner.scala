@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, max, min}
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 import graft.core.{BinMethod, BinSpec}
 import graft.operators.HistogramOps
@@ -28,22 +30,16 @@ final case class HistogramConfig(
 
 object HistogramRunner {
 
-  /** Run the configured pipeline. `minmaxOnly` returns the 1-row stats
-    * relation; otherwise the dense `(value, cnt)` histogram of [[fold]]:
-    * one aggregate reads `df` once (twice for log with a min ≤ 0), and the
-    * histogram comes back as a local relation.
+  /** Run the configured pipeline. `minmaxOnly` returns the one-row
+    * `(min_value, max_value)` relation of the valid values ([[minMaxOnly]]);
+    * otherwise the dense `(value, cnt)` histogram of [[fold]]: one
+    * aggregate reads `df` once (twice for log with a min ≤ 0). Either comes
+    * back as a local relation.
     */
   def run(df: DataFrame, cfg: HistogramConfig): DataFrame =
-    if (cfg.minmaxOnly) {
-      import org.apache.spark.sql.functions._
-      val base = HistogramOps.validValues(df, cfg.valueCol)
-        .agg(min(col("value")).as("min_value"), max(col("value")).as("max_value"))
-      if (cfg.clampToZero)
-        base.select(
-          least(col("min_value"), lit(0.0)).as("min_value"),
-          greatest(col("max_value"), lit(0.0)).as("max_value"))
-      else base
-    } else fold(df, cfg).histogram(df.sparkSession)
+    if (cfg.minmaxOnly)
+      minMaxOnly(HistogramOps.validValues(df, cfg.valueCol).agg(min(col("value")), max(col("value"))), cfg)
+    else fold(df, cfg).histogram(df.sparkSession)
 
   /** [[HistogramOps.fold]] of `df`'s valid `cfg.valueCol` values over the
     * DataFrame code source ([[HistogramOps.valueCodes]]): the spec and the
@@ -68,27 +64,43 @@ object HistogramRunner {
     * a min ≤ 0. A `mode=codes` scan bins each packed partition of tiles
     * inside the reader, and Spark merges the sparse `(code, cnt)` rows and
     * the partitions' stats rows in one aggregate: one read of each tile,
-    * and only codes cross the scan boundary. Output is bit-identical to
-    * [[run]] over the raw `mode=values` scan (RasterAggSpec pins it).
+    * and only codes cross the scan boundary. `minmaxOnly` filters the scan
+    * to `code IS NULL`, its stats rows: the readers count no code, and one
+    * row per pack crosses. Output is bit-identical to [[run]] over the raw
+    * `mode=values` scan (RasterAggSpec pins it).
     */
   def runPushed(spark: SparkSession, tileListPath: String, cfg: HistogramConfig): DataFrame =
-    foldCodes(cfg)(scanCodes(spark, tileListPath, cfg)).histogram(spark)
+    if (cfg.minmaxOnly)
+      minMaxOnly(
+        codeScan(spark, tileListPath, cfg, 0.0).filter(col("code").isNull)
+          .agg(min(col("min_value")), max(col("max_value"))),
+        cfg)
+    else foldCodes(cfg)(scanCodes(spark, tileListPath, cfg)).histogram(spark)
 
   // perfbench's TilePipeline is the only caller left; it passes 0L
   @deprecated("the pixel count is unused: call runPushed(spark, tileListPath, cfg)", "0.1.0")
   def runPushed(spark: SparkSession, tileListPath: String, pixelsPerTile: Long, cfg: HistogramConfig): DataFrame =
     runPushed(spark, tileListPath, cfg)
 
-  /** The raster code source of [[HistogramOps.fold]]: one `mode=codes`
-    * scan, merged by [[HistogramOps.mergeCodes]]. A known `spec` filters
-    * the rows to its codes, and the filter reaches the readers
-    * (`RasterSource.codeRange`): their folds keep only those codes.
+  private val MinMaxSchema = StructType(Seq(
+    StructField("min_value", DoubleType, nullable = false),
+    StructField("max_value", DoubleType, nullable = false)))
+
+  /** The `--minmax_only` answer from `agg`, a one-row `(min, max)`
+    * aggregate: collected, (0.0, 0.0) without a valid value
+    * ([[HistogramOps.collectMinMax]]), after `clampToZero`, as a one-row
+    * `(min_value, max_value)` local relation.
     */
-  private def scanCodes(spark: SparkSession, tileListPath: String, cfg: HistogramConfig)(
-      offset: Double,
-      spec: Option[BinSpec]): HistogramOps.Codes = {
-    import org.apache.spark.sql.functions.col
-    val scan = spark.read
+  private def minMaxOnly(agg: DataFrame, cfg: HistogramConfig): DataFrame = {
+    val (mn, mx) = HistogramOps.clamped(HistogramOps.collectMinMax(agg), cfg.clampToZero)
+    agg.sparkSession.createDataFrame(java.util.List.of(Row(mn, mx)), MinMaxSchema)
+  }
+
+  /** The rows of one `mode=codes` scan of `tileListPath`'s tiles, coded
+    * with `offset`.
+    */
+  private def codeScan(spark: SparkSession, tileListPath: String, cfg: HistogramConfig, offset: Double): DataFrame =
+    spark.read
       .format("graft.sources.raster.RasterSource")
       .option("tileListPath", tileListPath)
       .option("mode", "codes")
@@ -96,6 +108,16 @@ object HistogramRunner {
       .option("binOffset", offset.toString)
       .option("legacyLogOffset100", cfg.legacyLogOffset100.toString)
       .load()
+
+  /** The raster code source of [[HistogramOps.fold]]: one [[codeScan]],
+    * merged by [[HistogramOps.mergeCodes]]. A known `spec` filters the rows
+    * to its codes, and the filter reaches the readers
+    * (`RasterSource.codeRange`): their folds keep only those codes.
+    */
+  private def scanCodes(spark: SparkSession, tileListPath: String, cfg: HistogramConfig)(
+      offset: Double,
+      spec: Option[BinSpec]): HistogramOps.Codes = {
+    val scan = codeScan(spark, tileListPath, cfg, offset)
     HistogramOps.mergeCodes(spec.fold(scan)(s => scan.filter(col("code").between(s.lo, s.hi))))
   }
 
@@ -152,21 +174,16 @@ object HistogramRunner {
       HistogramConfig(valueCol, method.getOrElse(BinMethod.Linear), minV, maxV, minmaxOnly))
   }
 
-  /** Session configs for a CLI run. E2 (retry/backoff): the reference
-    * wraps every tile read in a 7-attempt exponential-backoff retry
-    * (main.py:229-236 — stop_max_attempt_number=7, 1 s base, 5 min cap);
-    * Spark's equivalent resilience is task re-execution plus the S3A
-    * connector's own retry policy, so the CLI session pins
-    * `spark.task.maxFailures=7` (on [[master]] for the local CLI) and
-    * the matching S3A retry knobs instead of hand-rolling a retry loop in
-    * engine code (SURVEY §2.8).
+  /** Session configs for a CLI run: the mains' [[SparkEntry.localConfigs]]
+    * plus E2 (retry/backoff). The reference wraps every tile read in a
+    * 7-attempt exponential-backoff retry (main.py:229-236 —
+    * stop_max_attempt_number=7, 1 s base, 5 min cap); Spark's equivalent
+    * resilience is task re-execution plus the S3A connector's own retry
+    * policy, so the CLI session pins `spark.task.maxFailures=7` (on
+    * [[master]] for the local CLI) and the matching S3A retry knobs instead
+    * of hand-rolling a retry loop in engine code (SURVEY §2.8).
     */
-  def sessionConfigs(workers: Int): Map[String, String] = Map(
-    "spark.sql.shuffle.partitions" -> workers.toString,
-    "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.ansi.enabled" -> "false",
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.ui.enabled" -> "false",
+  def sessionConfigs(workers: Int): Map[String, String] = SparkEntry.localConfigs(workers) ++ Map(
     "spark.task.maxFailures" -> "7",
     "spark.hadoop.fs.s3a.retry.limit" -> "7",
     "spark.hadoop.fs.s3a.retry.interval" -> "1s",
@@ -196,11 +213,7 @@ object HistogramRunner {
     // getOrCreate: under a test harness an active session is reused (and
     // NOT stopped on exit); standalone, the builder owns its session
     val preExisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = sessionConfigs(cli.workers)
-      .foldLeft(SparkSession.builder().master(master(cli.workers))) {
-        case (b, (k, v)) => b.config(k, v)
-      }
-      .getOrCreate()
+    val spark = SparkEntry.session(master(cli.workers), sessionConfigs(cli.workers))
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(spark)
     runCli(spark, cli)
@@ -208,43 +221,26 @@ object HistogramRunner {
   }
 
   /** The CLI body against a given session (spec-driveable). Returns the
-    * result as a local relation (stats row for `--minmax_only`, else the
-    * written histogram), so reading it starts no scan.
+    * result, a local relation (the min/max row for `--minmax_only`, else
+    * the written histogram), so reading it starts no scan.
     * A `.txt` tile list takes the pushed scan unless `SPARK_GRAFT_PUSHED=0`.
     */
   def runCli(spark: SparkSession, cli: CliArgs): DataFrame =
     runCli(spark, cli, pushed = !sys.env.get("SPARK_GRAFT_PUSHED").contains("0"))
 
   /** [[runCli]] with the scan path of a `.txt` tile list given: `pushed`
-    * bins inside the raster scan ([[runPushed]]; `--minmax_only` reads the
-    * per-tile `mode=stats` rows), otherwise the `mode=values` scan feeds
-    * [[run]]. Other sources ignore it.
+    * aggregates inside the raster scan ([[runPushed]]), otherwise the
+    * `mode=values` scan feeds [[run]]. Other sources ignore it.
     */
   def runCli(spark: SparkSession, cli: CliArgs, pushed: Boolean): DataFrame = {
     val path = cli.source
     val tileList = path.endsWith(".txt")
-    val histo0 =
-      if (tileList && pushed && cli.cfg.minmaxOnly) {
-        // stats-pushed minmax: one row per tile crosses the scan boundary
-        import org.apache.spark.sql.functions._
-        val stats = spark.read
-          .format("graft.sources.raster.RasterSource")
-          .option("tileListPath", path)
-          .option("mode", "stats")
-          .load()
-          .agg(min(col("min_value")).as("min_value"), max(col("max_value")).as("max_value"))
-        if (cli.cfg.clampToZero)
-          stats.select(
-            least(col("min_value"), lit(0.0)).as("min_value"),
-            greatest(col("max_value"), lit(0.0)).as("max_value"))
-        else stats
-      } else if (tileList && pushed) {
-        // default for tile lists: the tiles are binned INSIDE the scan
-        // (mode=codes readers) — codes, not pixels, cross the scan
-        // boundary (perfbench: the tile_pushed job reads ~0.001 scan rows
-        // per pixel, tile_values one per pixel)
-        runPushed(spark, path, cli.cfg)
-      } else {
+    val result =
+      // a pushed tile list bins INSIDE the scan: codes, not pixels, cross
+      // the scan boundary (perfbench: the tile_pushed job reads ~0.001
+      // scan rows per pixel, tile_values one per pixel)
+      if (tileList && pushed) runPushed(spark, path, cli.cfg)
+      else {
         val source =
           if (tileList) {
             // the list path streams straight into the DSv2 scan's partition
@@ -258,18 +254,14 @@ object HistogramRunner {
           } else Tables.parquet(spark, path)
         run(source, cli.cfg)
       }
-    // one stats row or at most `bins` rows, held on the driver: the CSV
-    // write, the bin count and the caller's own reads then run no scan
-    // again (a histogram is local already)
-    val rows = histo0.collect()
-    val held = spark.createDataFrame(java.util.Arrays.asList(rows: _*), histo0.schema)
+    val rows = result.collect()
     if (cli.cfg.minmaxOnly)
       // the reference's click.echo surface (main.py:51-52)
       println(s"MIN_VALUE=${rows.head.getDouble(0)} MAX_VALUE=${rows.head.getDouble(1)}")
     else {
-      HistogramOps.writeCsv(held, cli.outDir)
+      HistogramOps.writeCsv(result, cli.outDir)
       println(s"HISTOGRAM_BINS=${rows.length} OUT=${cli.outDir}")
     }
-    held
+    result
   }
 }

@@ -34,6 +34,25 @@ object SparkEntry {
     spark
   }
 
+  /** The confs of every main's local session: `cores` shuffle partitions,
+    * UTC, non-ANSI casts, nanosecond parquet timestamps read as longs (see
+    * [[tune]]) and no UI.
+    */
+  def localConfigs(cores: Int): Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> cores.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.ui.enabled" -> "false")
+
+  /** A `local[cores]` session with [[localConfigs]], or the active one. */
+  def localSession(cores: Int): SparkSession = session(s"local[$cores]", localConfigs(cores))
+
+  /** A session on `master` with `configs`, or the active one. */
+  def session(master: String, configs: Map[String, String]): SparkSession =
+    configs.foldLeft(SparkSession.builder().master(master)) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("hist_deciles")(spark, "/root/testdata/sf0.001")

@@ -16,12 +16,19 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * oracle-green `knn_cosine`).
   *
   * Null if either input is null; mismatched lengths use the common prefix.
+  * `nullOnNullElement` also makes it null when either array holds a null
+  * element, as the higher-order-function dot is (`KernelRewrite` sets it);
+  * otherwise elements are read unchecked (the embedding contract: none is
+  * null).
   */
-case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
+case class DotProduct(left: Expression, right: Expression, nullOnNullElement: Boolean = false)
+    extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "graft_dot"
+  override protected def stringArgs: Iterator[Any] =
+    if (nullOnNullElement) super.stringArgs else Iterator(left, right)
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -30,6 +37,7 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
     var dot = 0.0
     var i = 0
     while (i < n) {
+      if (nullOnNullElement && (x.isNullAt(i) || y.isNullAt(i))) return null
       dot += x.getDouble(i) * y.getDouble(i)
       i += 1
     }
@@ -44,10 +52,14 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
         val n = ctx.freshName("n")
         val dot = ctx.freshName("dot")
         val i = ctx.freshName("i")
+        val nullCheck =
+          if (nullOnNullElement) s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
+          else ""
         s"""
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |double $dot = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
+         |  $nullCheck
          |  $dot += $a.getDouble($i) * $b.getDouble($i);
          |}
          |${ev.value} = $dot;

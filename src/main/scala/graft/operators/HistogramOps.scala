@@ -39,10 +39,23 @@ object HistogramOps {
     * final combine — what the reference does manually in
     * compute_histogram/main.py:127-149); (0.0, 0.0) on empty input.
     */
-  def minMax(values: DataFrame): (Double, Double) = {
-    val row = values.agg(min(col("value")), max(col("value"))).head()
+  def minMax(values: DataFrame): (Double, Double) =
+    collectMinMax(values.agg(min(col("value")), max(col("value"))))
+
+  /** The `(min, max)` of a one-row aggregate whose min is null when it saw
+    * no valid value: (0.0, 0.0) then, as in [[Codes]] — the reference's
+    * zero-initialized output (compute_histogram/main.py:131-132).
+    */
+  def collectMinMax(agg: DataFrame): (Double, Double) = {
+    val row = agg.head()
     if (row.isNullAt(0)) (0.0, 0.0) else (row.getDouble(0), row.getDouble(1))
   }
+
+  /** `(min, max)`, widened to take in 0 under `clampToZero` — the
+    * reference's zero-initialized accumulators (main.py:131-132).
+    */
+  def clamped(minMax: (Double, Double), clampToZero: Boolean): (Double, Double) =
+    if (clampToZero) (math.min(minMax._1, 0.0), math.max(minMax._2, 0.0)) else minMax
 
   /** P1/P2 — a value's integer bin code under `spec`'s method and
     * offset, or null where it has none: the Column twin of [[CodeFold]],
@@ -94,14 +107,6 @@ object HistogramOps {
 
   def clampToLastBin(code: Column, hi: Int): Column =
     when(code === lit(hi), lit(hi - 1)).otherwise(code)
-
-  /** A4 — element-wise merge of two dense histograms
-    * (reference `_add_histogram`, compute_histogram/main.py:244-245).
-    * Associative/commutative — exactly the property that makes the histogram
-    * distributable and streamable.
-    */
-  def merge(h1: DataFrame, h2: DataFrame): DataFrame =
-    h1.union(h2).groupBy(col("bin")).agg(sum(col("count")).as("count"))
 
   /** Bin-code counts of one read of a source, merged and collected: at
     * most one `(code, count)` pair per code seen, and the min and max of
@@ -165,8 +170,7 @@ object HistogramOps {
     val offset = bounds.fold(0.0)(_.offset)
     val first = codes(offset, bounds)
     val spec = bounds.getOrElse {
-      val (a, b) = (first.min, first.max)
-      val (mn, mx) = if (clampToZero) (math.min(a, 0.0), math.max(b, 0.0)) else (a, b)
+      val (mn, mx) = clamped((first.min, first.max), clampToZero)
       BinSpec.derive(mn, mx, method)
     }
     val coded =
@@ -182,10 +186,13 @@ object HistogramOps {
     Folded(spec, spec.dense(coded.counts))
   }
 
-  /** The one merge of a code source's rows ([[CodeFold.Schema]]): one
-    * `groupBy(code)` aggregate of the counts, min, max and `codes_valid`,
-    * collected. The stats rows group under the null code; without one
-    * (no valid value) the min and max are (0.0, 0.0), as in [[minMax]].
+  /** A4 — the one merge of a code source's rows ([[CodeFold.Schema]]),
+    * the reference's `_add_histogram` (compute_histogram/main.py:244-245):
+    * one `groupBy(code)` aggregate of the counts, min, max and
+    * `codes_valid`, collected. Associative and commutative — the property
+    * that makes the histogram distributable. The stats rows group under the
+    * null code; without one (no valid value) the min and max are
+    * (0.0, 0.0), as in [[minMax]].
     */
   def mergeCodes(rows: DataFrame): Codes = {
     val merged = rows

@@ -23,12 +23,11 @@ import graft.functions.{CosineSimilarity, DotProduct}
   * left-to-right — bit-identical sums to the HOF chain (KernelSpec pins
   * equality).
   *
-  * Contract (the same one GraftFunctions.dot/cosine document): inputs are
-  * equal-length `array<double>` with non-null elements — the embedding
-  * shape. On ragged pairs the HOF chain yields NULL while the kernel dots
-  * the common prefix, so the rewrite is gated on
-  * `spark.graft.kernelRewrite` (default on) for sessions that need
-  * NULL-propagating raggedness semantics.
+  * The HOF chain yields NULL on a ragged pair or a null element. The
+  * rewritten form does too: a length guard for the first, the kernels'
+  * `nullOnNullElement` for the second (set only when an array's type
+  * admits null elements). Direct `graft_dot`/`graft_cosine` calls keep the
+  * embedding contract (GraftFunctions.dot/cosine): non-null elements.
   */
 object KernelRewrite extends Rule[LogicalPlan] {
 
@@ -74,53 +73,43 @@ object KernelRewrite extends Rule[LogicalPlan] {
     }
   }
 
-  private def enabled: Boolean =
-    conf.getConfString("spark.graft.kernelRewrite", "true").toBoolean
-
   /** The HOF chain yields NULL for ragged pairs (zip_with pads the short
     * side with nulls, the products go null, the sum goes null) while the
     * raw kernel dots the common prefix — so the rewrite guards with a
     * length check that reproduces the NULL. Same-expression pairs
     * (dot(a, a)) skip the guard: lengths are trivially equal.
     */
-  private def guardedDot(a: Expression, b: Expression): Expression =
-    if (a.semanticEquals(b)) DotProduct(a, b)
-    else
-      If(
-        EqualTo(Size(a), Size(b)),
-        DotProduct(a, b),
-        Literal(null, DoubleType))
+  private def guarded(a: Expression, b: Expression, kernel: Expression): Expression =
+    if (a.semanticEquals(b)) kernel
+    else If(EqualTo(Size(a), Size(b)), kernel, Literal(null, DoubleType))
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else {
-      // pass 1: HOF dot products → guarded DotProduct
-      val dotted = plan.transformAllExpressions { case HofDot(a, b) =>
-        guardedDot(a, b)
-      }
-      // pass 2: the normalized-dot quotient → CosineSimilarity (guarded
-      // the same way; the self-dots in the denominator are never ragged)
-      dotted.transformAllExpressions {
-        case Divide(
-              GuardedDot(a, b),
-              Multiply(Sqrt(GuardedDot(a2, a3)), Sqrt(GuardedDot(b2, b3)), _),
-              _)
-            if a.semanticEquals(a2) && a.semanticEquals(a3) &&
-              b.semanticEquals(b2) && b.semanticEquals(b3) =>
-          if (a.semanticEquals(b)) CosineSimilarity(a, b)
-          else
-            If(
-              EqualTo(Size(a), Size(b)),
-              CosineSimilarity(a, b),
-              Literal(null, DoubleType))
-      }
+  /** Whether either array's type admits a null element. */
+  private def mayHoldNull(a: Expression, b: Expression): Boolean =
+    Seq(a, b).exists(_.dataType.asInstanceOf[ArrayType].containsNull)
+
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    // pass 1: HOF dot products → guarded DotProduct
+    val dotted = plan.transformAllExpressions { case HofDot(a, b) =>
+      guarded(a, b, DotProduct(a, b, mayHoldNull(a, b)))
     }
+    // pass 2: the normalized-dot quotient → CosineSimilarity (guarded
+    // the same way; the self-dots in the denominator are never ragged)
+    dotted.transformAllExpressions {
+      case Divide(
+            GuardedDot(a, b),
+            Multiply(Sqrt(GuardedDot(a2, a3)), Sqrt(GuardedDot(b2, b3)), _),
+            _)
+          if a.semanticEquals(a2) && a.semanticEquals(a3) &&
+            b.semanticEquals(b2) && b.semanticEquals(b3) =>
+        guarded(a, b, CosineSimilarity(a, b, mayHoldNull(a, b)))
+    }
+  }
 
   /** Matches a (possibly length-guarded) rewritten dot product. */
   private object GuardedDot {
     def unapply(e: Expression): Option[(Expression, Expression)] = e match {
-      case DotProduct(a, b) => Some((a, b))
-      case If(_, DotProduct(a, b), Literal(null, _)) => Some((a, b))
+      case DotProduct(a, b, _) => Some((a, b))
+      case If(_, DotProduct(a, b, _), Literal(null, _)) => Some((a, b))
       case _ => None
     }
   }

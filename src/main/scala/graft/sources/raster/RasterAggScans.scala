@@ -7,39 +7,34 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.{BinMethod, BinSpec, CodeFold}
 
-/** AGGREGATED scan modes for the raster source — the source-level twin of
+/** The AGGREGATED raster scan, `mode=codes` — the source-level twin of
   * the reference's worker functions, which never ship raw pixels to the
-  * driver either:
-  *
-  *  - `mode=codes`: the one-scan histogram. Each input partition (a pack
-  *    of tiles) emits the rows of one [[graft.core.CodeFold]] over all its
-  *    tiles: sparse `(code, cnt)` rows, then one stats row `(min_value,
-  *    max_value, n_valid, codes_valid)`. The linear code, the legacy
-  *    `+100` log code and the log code of offset 0 do not depend on the
-  *    global min/max, so the driver derives the bin spec from the stats
-  *    rows and applies it to the merged codes (`HistogramRunner.runPushed`):
-  *    every pixel is decoded once, where the reference reads each tile
-  *    twice (compute_histogram/main.py:127-149, then :182-201). A code
-  *    range pushed into the scan ([[RasterSource.codeRange]]) is the known
-  *    spec: the fold keeps only its codes;
-  *  - `mode=stats`: one `(tile_uri, min_value, max_value, n_valid)` row
-  *    per tile (reference `get_min_max`, main.py:206-219), for
-  *    `--minmax_only`.
+  * driver either. Each input partition (a pack of tiles) emits the rows of
+  * one [[graft.core.CodeFold]] over all its tiles: sparse `(code, cnt)`
+  * rows, then one stats row `(min_value, max_value, n_valid,
+  * codes_valid)`. The linear code, the legacy `+100` log code and the log
+  * code of offset 0 do not depend on the global min/max, so the driver
+  * derives the bin spec from the stats rows and applies it to the merged
+  * codes (`HistogramRunner.runPushed`): every pixel is decoded once, where
+  * the reference reads each tile twice (compute_histogram/main.py:127-149,
+  * then :182-201). A code range pushed into the scan
+  * ([[RasterSource.codeRange]]) is the known spec: the fold keeps only its
+  * codes. A pushed `code IS NULL` reads the stats rows alone, one per
+  * pack, and the fold counts no codes: that is `--minmax_only`'s min/max
+  * pass (reference `get_min_max`, main.py:206-219).
   *
   * Spark's DSv2 aggregate pushdown (`SupportsPushDownAggregates`) cannot
-  * express these (it pushes MIN/MAX/COUNT of plain columns, not a grouped
-  * aggregation of a quantize EXPRESSION), so the modes are explicit scan
-  * options; `RasterAggSpec` pins bit-equality with the raw-pixel path.
+  * express this (it pushes MIN/MAX/COUNT of plain columns, not a grouped
+  * aggregation of a quantize EXPRESSION), so it is an explicit scan mode;
+  * `RasterAggSpec` pins bit-equality with the raw-pixel path.
   *
-  * Both modes fold with `CodeFold`, the same kernel that counts a
-  * DataFrame's codes (`HistogramOps.valueCodes`); the driver merges and
-  * folds both sources' rows alike (`HistogramOps.mergeCodes`,
-  * `HistogramOps.fold`).
+  * `CodeFold` is the same kernel that counts a DataFrame's codes
+  * (`HistogramOps.valueCodes`); the driver merges and folds both sources'
+  * rows alike (`HistogramOps.mergeCodes`, `HistogramOps.fold`).
   */
 object RasterAggScans {
 
@@ -67,127 +62,28 @@ object RasterAggScans {
     else while (blocks.nextBlock()) acc.foldRun(blocks.doubles, blocks.count)
 }
 
-/** A reader that folds its tiles into `acc`, one after the other, on its
-  * first `next()`. Each tile is closed as soon as its fold ends, and by
-  * `close()` if the fold threw, so a corrupt or truncated tile leaves no
-  * file open.
-  */
-abstract class TileFoldReader(tiles: Seq[String], overview: Int, conf: Configuration, protected val acc: CodeFold)
-    extends PartitionReader[InternalRow] {
-  private var open: GeoTiff.SampleBlocks = _
-  private var folded = false
-
-  protected final def foldOnce(): Unit =
-    if (!folded) {
-      folded = true
-      tiles.foreach { t =>
-        open = RasterDecode.blocks(t, overview, conf)
-        RasterAggScans.fold(acc, open)
-        close()
-      }
-    }
-
-  override def close(): Unit =
-    if (open != null) {
-      val b = open
-      open = null
-      b.close()
-    }
-}
-/** The rows of one reader per tile of a packed partition, tile after
-  * tile; each reader is closed before the next one opens.
-  */
-final class TileChainReader(tiles: Seq[String], reader: String => PartitionReader[InternalRow])
-    extends PartitionReader[InternalRow] {
-  private val rest = tiles.iterator
-  private var cur: PartitionReader[InternalRow] = _
-
-  override def next(): Boolean = {
-    while (cur == null || !cur.next()) {
-      close()
-      if (!rest.hasNext) return false
-      cur = reader(rest.next())
-    }
-    true
-  }
-
-  override def get(): InternalRow = cur.get()
-
-  override def close(): Unit =
-    if (cur != null) {
-      val r = cur
-      cur = null
-      r.close()
-    }
-}
-
-final class RasterStatsReaderFactory(
-    required: StructType,
-    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[RasterInputPartition]
-    new TileChainReader(
-      p.tiles,
-      new RasterStatsPartitionReader(_, required, p.overview, conf.value.value))
-  }
-}
-
-/** One (tile_uri, min_value, max_value, n_valid) row per tile. Tiles with
-  * zero valid pixels emit NO row — min/max of an empty tile is undefined,
-  * matching the reference's `None`-and-filter (main.py:139-140, 211-219)
-  * and Spark's null-skipping agg semantics downstream.
-  */
-final class RasterStatsPartitionReader(
-    tileUri: String,
-    required: StructType,
-    overview: Int,
-    conf: Configuration)
-    extends TileFoldReader(
-      Seq(tileUri), overview, conf, new CodeFold(BinMethod.Linear, 0.0, false, withCodes = false)) {
-  private var done = false
-
-  override def next(): Boolean = {
-    if (done) return false
-    foldOnce()
-    done = true
-    acc.n > 0
-  }
-
-  override def get(): InternalRow = {
-    val row = new GenericInternalRow(required.length)
-    var j = 0
-    while (j < required.length) {
-      row.update(
-        j,
-        required.fields(j).name match {
-          case "tile_uri"  => UTF8String.fromString(tileUri)
-          case "min_value" => acc.min
-          case "max_value" => acc.max
-          case "n_valid"   => acc.n
-        })
-      j += 1
-    }
-    row
-  }
-}
-
 final class RasterCodesReaderFactory(
     required: StructType,
     method: BinMethod,
     offset: Double,
     legacyLogOffset100: Boolean,
     spec: Option[BinSpec],
+    withCodes: Boolean,
     conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[RasterInputPartition]
     new RasterCodesPartitionReader(
-      p.tiles, required, method, offset, legacyLogOffset100, p.overview, conf.value.value, spec)
+      p.tiles, required, method, offset, legacyLogOffset100, p.overview, conf.value.value, spec, withCodes)
   }
 }
 
 /** One partition's codes: the rows of its tiles' [[CodeFold]]
   * ([[CodeFold.rows]]), pruned to `required`. A known `spec` keeps only
-  * its codes.
+  * its codes; without `withCodes` the fold counts none, and the stats row
+  * is the only row (there is none without a valid value). The tiles are folded one after the other on the first
+  * `next()`. Each tile is closed as soon as its fold ends, and by
+  * `close()` if the fold threw, so a corrupt or truncated tile leaves no
+  * file open.
   */
 final class RasterCodesPartitionReader(
     tiles: Seq[String],
@@ -197,16 +93,23 @@ final class RasterCodesPartitionReader(
     legacyLogOffset100: Boolean,
     overview: Int,
     conf: Configuration,
-    spec: Option[BinSpec] = None)
-    extends TileFoldReader(tiles, overview, conf, new CodeFold(method, offset, legacyLogOffset100, spec)) {
+    spec: Option[BinSpec] = None,
+    withCodes: Boolean = true)
+    extends PartitionReader[InternalRow] {
 
+  private val acc = new CodeFold(method, offset, legacyLogOffset100, spec, withCodes)
   private val pick = required.fieldNames.map(CodeFold.Schema.fieldIndex)
+  private var open: GeoTiff.SampleBlocks = _
   private var rows: Iterator[Row] = _
   private var row: Row = _
 
   override def next(): Boolean = {
     if (rows == null) {
-      foldOnce()
+      tiles.foreach { t =>
+        open = RasterDecode.blocks(t, overview, conf)
+        RasterAggScans.fold(acc, open)
+        close()
+      }
       rows = acc.rows
     }
     val more = rows.hasNext
@@ -215,4 +118,11 @@ final class RasterCodesPartitionReader(
   }
 
   override def get(): InternalRow = new GenericInternalRow(pick.map(row.get))
+
+  override def close(): Unit =
+    if (open != null) {
+      val b = open
+      open = null
+      b.close()
+    }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, LessThanOrEqual}
+import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, IsNull, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,8 +25,8 @@ import graft.core.{BinMethod, BinSpec, CodeFold}
   * becomes exactly one input partition, band-1 pixels stream out as
   * `value` rows, NaN marks nodata (filtered by F1 downstream, never here —
   * scan semantics match the reference, which reads raw pixels and strips
-  * NaN as a separate step). The aggregating modes pack tiles into input
-  * partitions ([[RasterSource.pack]]).
+  * NaN as a separate step). `mode=codes` packs tiles into input partitions
+  * ([[RasterSource.pack]]).
   *
   * Pixel DECODE: every tile URI opens through the Hadoop filesystem with
   * the scan's one Hadoop configuration, broadcast by
@@ -36,8 +36,8 @@ import graft.core.{BinMethod, BinSpec, CodeFold}
   * 8-64 bit, GDAL_NODATA→NaN) validated against the JDK ImageIO TIFF
   * encoder in `GeoTiffSpec`. It decodes one block at a time into reusable
   * primitive buffers; `mode=values` reads them through the per-pixel
-  * [[GeoTiff.BlockCursor]], the aggregating modes fold them directly. A
-  * scheme with no Hadoop `FileSystem` on the classpath fails at read with
+  * [[GeoTiff.BlockCursor]], `mode=codes` folds them directly. A scheme
+  * with no Hadoop `FileSystem` on the classpath fails at read with
   * Hadoop's own error ([[RasterDecode]]).
   *
   * Usage:
@@ -45,16 +45,18 @@ import graft.core.{BinMethod, BinSpec, CodeFold}
   *   spark.read.format("graft.sources.raster.RasterSource")
   *     .option("tiles", "s3a://b/a.tif,s3a://b/b.tif")   // inline list, OR:
   *     .option("tileListPath", "s3a://b/tiles.txt")     // one URI per line
-  *     .option("mode", "values")           // values (default) | codes | stats
+  *     .option("mode", "values")           // values (default) | codes
   *     .option("overview", "1")            // COG pyramid IFD (default 0 = full)
   *     .load()
   * }}}
   *
-  * `mode=codes` and `mode=stats` aggregate INSIDE the reader (the
-  * reference's own worker functions as scan modes — see
-  * [[RasterAggScans]]); `codes` takes `binMethod`/`binOffset`/
-  * `legacyLogOffset100`, and keeps only the codes of a `code` range
-  * filtered on it ([[RasterSource.codeRange]]).
+  * `mode=codes` aggregates INSIDE the reader (the reference's own worker
+  * functions as a scan mode — see [[RasterAggScans]]) and takes
+  * `binMethod`/`binOffset`/`legacyLogOffset100`. Filters on `code` pushed
+  * into it narrow the fold ([[RasterSource.codeRange]]): a `code` range
+  * keeps only those codes, and `code IS NULL` keeps only the stats rows,
+  * so the readers count no codes at all. Spark still applies every filter
+  * to the rows the scan returns, so the rows do not depend on the push.
   *
   * `tileListPath` is the scale path for large tile sets (the reference's
   * bio_*_list.txt shape, S4): the list file is read once at PLAN time
@@ -87,17 +89,9 @@ object RasterSource {
     Seq(StructField("tile_uri", StringType, nullable = false),
       StructField("value", DoubleType, nullable = false)))
 
-  /** `mode=stats` schema: one aggregated row per tile. */
-  val StatsSchema: StructType = StructType(
-    Seq(StructField("tile_uri", StringType, nullable = false),
-      StructField("min_value", DoubleType, nullable = false),
-      StructField("max_value", DoubleType, nullable = false),
-      StructField("n_valid", LongType, nullable = false)))
-
   def schemaFor(mode: String): StructType = mode match {
     case "values" => Schema
     case "codes"  => CodeFold.Schema
-    case "stats"  => StatsSchema
     case other    => throw new IllegalArgumentException(s"Unknown raster scan mode $other")
   }
 
@@ -205,6 +199,7 @@ final class RasterScanBuilder(
     with SupportsPushDownFilters {
   private var required: StructType = RasterSource.schemaFor(mode)
   private var codeRange: Option[(Int, Int)] = None
+  private var withCodes = true
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     // Catalyst hands us the projected schema; empty projection (count(*))
@@ -213,14 +208,18 @@ final class RasterScanBuilder(
 
   // every filter stays for Spark to apply after the scan
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    if (mode == "codes") codeRange = RasterSource.codeRange(filters.toSeq)
+    if (mode == "codes") {
+      codeRange = RasterSource.codeRange(filters.toSeq)
+      // only the stats rows pass `code IS NULL`
+      withCodes = !filters.contains(IsNull("code"))
+    }
     filters
   }
 
   override def pushedFilters(): Array[Filter] = Array.empty
 
   override def build(): Scan =
-    new RasterScan(tiles, required, mode, properties, codeRange)
+    new RasterScan(tiles, required, mode, properties, codeRange, withCodes)
 }
 
 final class RasterScan(
@@ -228,7 +227,8 @@ final class RasterScan(
     required: StructType,
     mode: String,
     properties: util.Map[String, String],
-    codeRange: Option[(Int, Int)])
+    codeRange: Option[(Int, Int)],
+    withCodes: Boolean)
     extends Scan
     with Batch {
   override def readSchema(): StructType = required
@@ -260,13 +260,12 @@ final class RasterScan(
       case "values" => new RasterReaderFactory(required, conf)
       case "codes" =>
         val spec = codeRange.map { case (lo, hi) => BinSpec(lo, hi, offset, method) }
-        new RasterCodesReaderFactory(required, method, offset, legacy, spec, conf)
-      case "stats"  => new RasterStatsReaderFactory(required, conf)
+        new RasterCodesReaderFactory(required, method, offset, legacy, spec, withCodes, conf)
     }
   }
 }
 
-/** The tiles one task reads: one in `mode=values`, a pack otherwise. */
+/** The tiles one task reads: one in `mode=values`, a pack in `mode=codes`. */
 final case class RasterInputPartition(tiles: Seq[String], overview: Int = 0)
     extends InputPartition
 
@@ -274,9 +273,9 @@ final class RasterReaderFactory(required: StructType, conf: Broadcast[Serializab
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[RasterInputPartition]
-    new TileChainReader(
-      p.tiles,
-      new RasterPartitionReader(_, required, p.overview, conf.value.value))
+    // a values partition holds one tile (RasterScan.planInputPartitions)
+    val Seq(tile) = p.tiles
+    new RasterPartitionReader(tile, required, p.overview, conf.value.value)
   }
 }
 

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Regenerates PLANS.md: the formatted physical plans of the flagship
@@ -76,14 +75,7 @@ object DumpPlans {
     "uplift_qini" -> "Qini uplift curve: one per-user aggregation (treatment hash, outcome flag, capped engagement score), one map-side-combinable per-score sufficient-stats aggregation, and the cumulative windows ride the <= 33-row score relation — no global rank of raw units.")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession
-      .builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftFunctions.register(spark)
     val sb = new StringBuilder

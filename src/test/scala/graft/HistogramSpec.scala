@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.{BinMethod, BinSpec}
+import org.apache.spark.sql.Row
+
+import graft.core.{BinMethod, BinSpec, CodeFold}
 import graft.operators.{HistogramOps, PercentileOps}
 
 /** Golden fixtures ported verbatim from the reference unit tests
@@ -33,13 +35,15 @@ class HistogramSpec extends SparkSpec {
     // reference test/test_histogram.py:23-28
     val h1 = Seq(0L, 1L, 2L, 3L, 2L, 1L, 0L, 0L, 0L)
     val h2 = Seq(1L, 2L, 1L, 2L, 0L, 0L, 1L, 1L, 1L)
-    val df1 = h1.zipWithIndex.map { case (c, b) => (b, c) }.toDF("bin", "count")
-    val df2 = h2.zipWithIndex.map { case (c, b) => (b, c) }.toDF("bin", "count")
+    // two code-row sets (CodeFold.Schema), one per histogram, code = bin
+    def codeRows(h: Seq[Long]) = spark.createDataFrame(
+      java.util.Arrays.asList(h.zipWithIndex.map { case (c, b) => Row(b, c, null, null, null, null) }: _*),
+      CodeFold.Schema)
     val merged = HistogramOps
-      .merge(df1, df2)
-      .orderBy("bin")
-      .collect()
-      .map(_.getLong(1))
+      .mergeCodes(codeRows(h1).union(codeRows(h2)))
+      .counts
+      .sortBy(_._1)
+      .map(_._2)
       .toSeq
     assert(merged == Seq(1L, 3L, 3L, 5L, 2L, 1L, 1L, 1L, 1L))
   }

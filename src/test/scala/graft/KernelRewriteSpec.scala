@@ -45,14 +45,6 @@ class KernelRewriteSpec extends SparkSpec {
     assert(collectDoubles(rewritten) == collectDoubles(analyzed))
   }
 
-  test("rewrite respects the spark.graft.kernelRewrite gate") {
-    val analyzed = fixture.select(expr(HofDotSql)).queryExecution.analyzed
-    spark.conf.set("spark.graft.kernelRewrite", "false")
-    try assert(KernelRewrite(analyzed) eq analyzed)
-    finally spark.conf.unset("spark.graft.kernelRewrite")
-    assert(KernelRewrite(analyzed).toString.contains("graft_dot"))
-  }
-
   test("ragged pairs keep the HOF's NULL semantics after the rewrite") {
     val ragged = Seq(
       (Array(1.0, 2.0, 3.0), Array(1.0, 1.0)), // ragged → NULL
@@ -67,6 +59,28 @@ class KernelRewriteSpec extends SparkSpec {
       .executeCollect()
     assert(rows(0).isNullAt(0), "ragged pair must stay NULL under the kernel rewrite")
     assert(rows(1).getDouble(0) == 11.0)
+  }
+
+  test("a null element keeps the HOF's NULL semantics after the rewrite") {
+    val withNull = Seq(
+      (Seq(Some(1.0), None, Some(3.0)), Seq(1.0, 1.0, 1.0)), // null element → NULL
+      (Seq(Some(1.0), Some(2.0)), Seq(3.0, 4.0))) // no null → 11.0
+      .toDF("a", "b")
+    val dot = withNull.select(expr(HofDotSql).as("dot"))
+    val cos = withNull.select(
+      (expr(HofDotSql) / (sqrt(expr(dotSql("a", "a"))) * sqrt(expr(dotSql("b", "b"))))).as("cos"))
+    for ((df, kernel) <- Seq((dot, "graft_dot"), (cos, "graft_cosine"))) {
+      val analyzed = df.queryExecution.analyzed
+      val rewritten = KernelRewrite(analyzed)
+      assert(rewritten.toString.contains(kernel), s"no kernel in:\n$rewritten")
+      def rows(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+        spark.sessionState.executePlan(plan).executedPlan.executeCollect()
+          .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq
+      val hof = rows(analyzed)
+      assert(hof.head.isEmpty, s"$kernel: the HOF is NULL on a null element")
+      assert(hof(1).nonEmpty)
+      assert(rows(rewritten) == hof, kernel)
+    }
   }
 
   test("non-product / non-sum lambdas are left alone") {

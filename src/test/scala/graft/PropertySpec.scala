@@ -1,10 +1,12 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.rng.Seed
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import graft.core.{BinMethod, BinSpec}
+import graft.core.{BinMethod, BinSpec, CodeFold}
 import graft.operators.HistogramOps
 
 /** ScalaCheck properties (SURVEY §5.2.3) — run through scalacheck's own
@@ -14,9 +16,12 @@ import graft.operators.HistogramOps
 class PropertySpec extends SparkSpec {
   import spark.implicits._
 
+  // a fresh seed per run, named on failure so the failing case replays
+  // through `Seed.fromBase64`
   private def check(p: Prop, n: Int = 30): Unit = {
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(n), p)
-    assert(res.passed, res.status.toString)
+    val seed = Seed.random()
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(n).withInitialSeed(seed), p)
+    assert(res.passed, s"${res.status} (seed ${seed.toBase64})")
   }
 
   test("BinSpec: derive is total and bins == hi - lo on sane ranges") {
@@ -44,10 +49,14 @@ class PropertySpec extends SparkSpec {
   test("merge is commutative and preserves mass") {
     val gen = Gen.listOfN(10, Gen.chooseNum(0L, 20L))
     check(Prop.forAll(gen, gen) { (h1: List[Long], h2: List[Long]) =>
-      def df(h: List[Long]) =
-        h.zipWithIndex.map { case (c, b) => (b, c) }.toDF("bin", "count")
-      val ab = HistogramOps.merge(df(h1), df(h2)).orderBy("bin").collect().map(_.getLong(1)).toSeq
-      val ba = HistogramOps.merge(df(h2), df(h1)).orderBy("bin").collect().map(_.getLong(1)).toSeq
+      // a code-row set (CodeFold.Schema) per histogram: code = bin
+      def rows(h: List[Long]) = spark.createDataFrame(
+        java.util.Arrays.asList(h.zipWithIndex.map { case (c, b) => Row(b, c, null, null, null, null) }: _*),
+        CodeFold.Schema)
+      def merged(x: List[Long], y: List[Long]) =
+        HistogramOps.mergeCodes(rows(x).union(rows(y))).counts.sortBy(_._1).map(_._2).toSeq
+      val ab = merged(h1, h2)
+      val ba = merged(h2, h1)
       ab == ba && ab.sum == h1.sum + h2.sum
     }, n = 10)
   }

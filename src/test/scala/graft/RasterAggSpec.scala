@@ -7,9 +7,8 @@ import graft.core.BinMethod
 import graft.operators.HistogramOps
 import graft.sources.raster.LocalS3FileSystem
 
-/** The aggregated raster scan modes (`stats` / `codes`) must be
-  * bit-identical to the raw-pixel path composed with the engine
-  * operators — the pushdown changes WHERE the work runs, never the
+/** The aggregated raster scan (`mode=codes`) must be bit-identical to
+  * the raw-pixel path composed with the engine operators — the pushdown changes WHERE the work runs, never the
   * answer. The tiles are the reference's `s3://gfw-data/bio/...` URIs,
   * served by [[LocalS3FileSystem]] from float32 tiles with every 97th
   * sample NaN.
@@ -27,20 +26,27 @@ class RasterAggSpec extends SparkSpec with BeforeAndAfterAll {
     LocalS3FileSystem.delete(small)
   }
 
-  private def load(mode: String, extra: Map[String, String] = Map.empty) = {
+  private def load(mode: String, extra: Map[String, String] = Map.empty, only: String = tiles) = {
     val base = spark.read
       .format("graft.sources.raster.RasterSource")
-      .option("tiles", tiles)
+      .option("tiles", only)
       .option("mode", mode)
     extra.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load()
   }
 
-  test("stats mode == raw scan min/max/count per tile") {
-    val pushed = load("stats")
-      .select("tile_uri", "min_value", "max_value", "n_valid")
-      .collect()
-      .map(r => (r.getString(0), (r.getDouble(1), r.getDouble(2), r.getLong(3))))
-      .toMap
+  test("codes scan stats rows == raw scan min/max/count per tile") {
+    // one tile per scan: its one stats row, with and without the codes
+    val pushed = tiles.split(",").map { t =>
+      val codes = load("codes", only = t)
+      val withCodes = codes.collect().filter(_.isNullAt(0))
+      val statsOnly = codes.filter(col("code").isNull).select("min_value", "max_value", "n_valid").collect()
+      assert(withCodes.length == 1 && statsOnly.length == 1, t)
+      val r = statsOnly.head
+      assert(withCodes.head.getAs[Double]("min_value") == r.getDouble(0), t)
+      assert(withCodes.head.getAs[Double]("max_value") == r.getDouble(1), t)
+      assert(withCodes.head.getAs[Long]("n_valid") == r.getLong(2), t)
+      t -> (r.getDouble(0), r.getDouble(1), r.getLong(2))
+    }.toMap
     val raw = HistogramOps
       .validValues(load("values").withColumnRenamed("value", "v"), "v")
       .select(col("value"))

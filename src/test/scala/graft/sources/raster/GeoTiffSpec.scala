@@ -285,7 +285,7 @@ class GeoTiffSpec extends graft.SparkSpec {
 
   // ---- end-to-end through the DataSource V2 scan ----------------------
 
-  test("DSv2 values/stats/codes modes real-decode a file:// GeoTIFF") {
+  test("DSv2 values and codes modes real-decode a file:// GeoTIFF") {
     val pix = rnd(11, 60 * 44, 0, 256)
     val tif = java.io.File.createTempFile("graft-geotiff", ".tif")
     tif.deleteOnExit()
@@ -299,8 +299,9 @@ class GeoTiffSpec extends graft.SparkSpec {
     val got = values.select(col("value")).collect().map(_.getDouble(0)).toVector
     assert(got == pix.map(_.toDouble).toVector)
 
+    // the stats-only read: `code IS NULL` pushed into the codes scan
     val stats = spark.read.format("graft.sources.raster.RasterSource")
-      .option("tiles", uri).option("mode", "stats").load().collect()
+      .option("tiles", uri).option("mode", "codes").load().filter(col("code").isNull).collect()
     assert(stats.length == 1)
     assert(stats(0).getAs[Double]("min_value") == pix.min.toDouble)
     assert(stats(0).getAs[Double]("max_value") == pix.max.toDouble)
@@ -639,8 +640,11 @@ class GeoTiffSpec extends graft.SparkSpec {
       values.foreach { v =>
         if (!v.isNaN) { if (v < mn) mn = v; if (v > mx) mx = v; valid += 1 }
       }
-      val stats = drain(new RasterStatsPartitionReader(uri, RasterSource.StatsSchema, 0, conf))
-        .map(r => (r.getDouble(1), r.getDouble(2), r.getLong(3)))
+      // the stats-only codes reader: its rows are all stats rows
+      val statsOnly = drain(new RasterCodesPartitionReader(
+        Seq(uri), graft.core.CodeFold.Schema, BinMethod.Linear, 0.0, false, 0, conf, withCodes = false))
+      val stats = statsOnly.map(r => (r.getDouble(2), r.getDouble(3), r.getLong(4)))
+      val statsOnlyOk = statsOnly.forall(_.isNullAt(0))
       val statsOk = stats == (if (valid == 0) Vector.empty else Vector((mn, mx, valid)))
       val (a, b) = if (valid == 0) (0.0, 0.0) else (mn, mx)
       val histsOk = Seq((BinMethod.Linear, false), (BinMethod.Log, false), (BinMethod.Log, true)).forall {
@@ -672,7 +676,7 @@ class GeoTiffSpec extends graft.SparkSpec {
             got == want && statsRow == stats
       }
       java.nio.file.Files.delete(f)
-      nanEq(values, expected) && statsOk && histsOk
+      nanEq(values, expected) && statsOk && statsOnlyOk && histsOk
     }, n = 120)
     finally java.nio.file.Files.delete(dir)
     // the 16-bit value table (65,536 counters) is exercised, signed and not
@@ -697,7 +701,8 @@ class GeoTiffSpec extends graft.SparkSpec {
     val spec = BinSpec.derive(0.0, 255.0, BinMethod.Linear)
     val readers: Seq[() => org.apache.spark.sql.connector.read.PartitionReader[
       org.apache.spark.sql.catalyst.InternalRow]] = Seq(
-      () => new RasterStatsPartitionReader(uri, RasterSource.StatsSchema, 0, conf),
+      () => new RasterCodesPartitionReader(
+        Seq(uri), graft.core.CodeFold.Schema, spec.method, spec.offset, false, 0, conf, withCodes = false),
       () => new RasterCodesPartitionReader(
         Seq(uri), graft.core.CodeFold.Schema, spec.method, spec.offset, false, 0, conf))
     def drive(r: org.apache.spark.sql.connector.read.PartitionReader[

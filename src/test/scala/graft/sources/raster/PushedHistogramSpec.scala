@@ -65,6 +65,22 @@ class PushedHistogramSpec extends graft.SparkSpec {
 
   private var outs = 0
 
+  /** `f`'s result and the rows the scans it ran read. */
+  private def rowsRead[T](f: => T): (T, Long) = {
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val rowCounter = new SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(rowCounter)
+    try {
+      val out = f
+      ListenerBusDrain(spark.sparkContext)
+      (out, read.get)
+    } finally spark.sparkContext.removeSparkListener(rowCounter)
+  }
+
   /** `runCli` over `tileList`: its `histogram.csv` (empty for
     * `--minmax_only`), the returned rows and the raster scans it ran,
     * collecting the returned relation included.
@@ -138,27 +154,55 @@ class PushedHistogramSpec extends graft.SparkSpec {
     val tileList = list("wide.txt", Seq(i16, f32Pos))
     val cfg = HistogramConfig("value", BinMethod.Linear, minValue = Some(100.0), maxValue = Some(104.0))
     val bins = graft.core.BinSpec.derive(100.0, 104.0, BinMethod.Linear).bins
-    val read = new java.util.concurrent.atomic.AtomicLong
-    val rowCounter = new SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(rowCounter)
-    val pushed =
-      try {
-        val rows = HistogramRunner.runPushed(spark, tileList, cfg).collect().toSeq
-        ListenerBusDrain(spark.sparkContext)
-        rows
-      } finally spark.sparkContext.removeSparkListener(rowCounter)
+    val (pushed, read) = rowsRead(HistogramRunner.runPushed(spark, tileList, cfg).collect().toSeq)
     // each pack returns ≤ bins + 1 code rows and its one stats row
     val packs = plan("codes", Seq(i16, f32Pos)).length
-    assert(read.get <= packs * (bins + 2L), s"${read.get} rows read from $packs packs for $bins bins")
+    assert(read <= packs * (bins + 2L), s"$read rows read from $packs packs for $bins bins")
     val values = HistogramRunner.run(
       spark.read.format("graft.sources.raster.RasterSource").option("tileListPath", tileList).load(),
       cfg).collect().toSeq
     assert(pushed == values)
     assert(pushed.map(_.getLong(1)).sum > 0)
+  }
+
+  test("--minmax_only pushed reads one stats row per pack in one scan, no code row") {
+    val tiles = Seq(u8, i16, f32Pos, f32Neg)
+    val tileList = list("packed.txt", tiles)
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    spark.conf.set("spark.sql.files.minPartitionNum", "2")
+    try {
+      val packs = plan("codes", tiles)
+      assert(packs.exists(_.size > 1) && packs.length < tiles.length, packs.toString)
+      val cfg = HistogramConfig("value", BinMethod.Linear, minmaxOnly = true)
+      spark.sparkContext.addSparkListener(scanCounter)
+      val ((_, rows, n), read) =
+        try rowsRead(cli(tileList, cfg, pushed = true))
+        finally spark.sparkContext.removeSparkListener(scanCounter)
+      assert(n == 1, s"$n raster scans")
+      // every pack holds a valid value: one stats row each, and no code row
+      assert(read == packs.length, s"$read rows read from ${packs.length} packs")
+      assert(rows == cli(tileList, cfg, pushed = false)._2)
+    } finally {
+      spark.conf.unset("spark.sql.files.openCostInBytes")
+      spark.conf.unset("spark.sql.files.minPartitionNum")
+    }
+  }
+
+  test("--minmax_only with no valid value reports the (0.0, 0.0) fallback on every path") {
+    val allNodata = write("nodata.tif", buildTiff(Array.fill(16 * 12)(-9999.0), 16, 12, 32, 3, comp = 8,
+      predictor = 3, tile = Some((16, 16)), nodata = Some("-9999")))
+    val tileList = list("nodata.txt", Seq(allNodata))
+    val empty = dir.resolve("empty.parquet").toString
+    import spark.implicits._
+    Seq.empty[Double].toDF("value").write.parquet(empty)
+    for (clamp <- Seq(false, true)) {
+      val cfg = HistogramConfig("value", minmaxOnly = true, clampToZero = clamp)
+      for ((name, source, pushed) <- Seq(
+          ("pushed tile list", tileList, true), ("values tile list", tileList, false), ("empty parquet", empty, true))) {
+        val (_, rows, _) = cli(source, cfg, pushed)
+        assert(rows == Seq(Row(0.0, 0.0)), s"$name, clampToZero = $clamp")
+      }
+    }
   }
 
   private def plan(mode: String, tiles: Seq[String], listPath: String = ""): Seq[Seq[String]] =
@@ -186,13 +230,11 @@ class PushedHistogramSpec extends graft.SparkSpec {
     spark.conf.set("spark.sql.files.maxPartitionBytes", "131072")
     spark.conf.set("spark.sql.files.openCostInBytes", "8192")
     try {
-      for (mode <- Seq("codes", "stats")) {
-        val packs = plan(mode, tiles)
-        assert(packs.flatten.sorted == tiles.sorted, s"$mode: every tile in exactly one partition")
-        val want = sparkPacks(tiles.zip(sizes.map(_.toLong)))
-        assert(want.size > 1 && want.size < tiles.size)
-        assert(packs.map(_.map(t => new HPath(t).toString).toSet) == want, mode)
-      }
+      val packs = plan("codes", tiles)
+      assert(packs.flatten.sorted == tiles.sorted, "every tile in exactly one partition")
+      val want = sparkPacks(tiles.zip(sizes.map(_.toLong)))
+      assert(want.size > 1 && want.size < tiles.size)
+      assert(packs.map(_.map(t => new HPath(t).toString).toSet) == want)
       val values = plan("values", tiles)
       assert(values == tiles.map(Seq(_)))
       // a tile on a scheme with no FileSystem weighs the open cost alone
